@@ -307,9 +307,9 @@ class NearDupIndex:
                 "band_hash", "band_idx", *key, "sig",
             )
         )
-        idx_m = self.table.manifest()
+        # pinned to ``im`` like ``oldb``: ``probe`` holds im's bucket ids
         old_loser_bands = (
-            self.table.read(version=idx_m["version"], buckets=probe)
+            self.table.read(version=im["version"], buckets=probe)
             .withColumn("__id", F.concat_ws("\x00", *key))
             .join(losers, "__id", "semi")
             .select(
@@ -327,7 +327,7 @@ class NearDupIndex:
             candidate_pairs=n_pairs,
             removed=removed,
             index_buckets_probed=len(probe),
-            index_buckets_total=idx_m["n_buckets"],
+            index_buckets_total=im["n_buckets"],
             corpus_merge=corpus_stats,
             index_merge=idx_stats,
         )

@@ -55,8 +55,10 @@ bottleneck, and in this sandbox the shared memory bus plays that role
 from __future__ import annotations
 
 import base64
+import datetime
 import json
 import os
+import struct
 import time
 import uuid
 from contextlib import contextmanager
@@ -68,6 +70,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from go_bqloader_spark.lake.fsio import LocalFS
+from go_bqloader_spark.lake.sparkhash import spark_xxhash64
 from go_bqloader_spark.operators.merge import lww_dedup, salted_lww_dedup
 
 SEQ_COL = "_seq"
@@ -91,6 +94,64 @@ _DDL_TO_SPARK = {
 
 def _spark_type(ddl: str) -> T.DataType:
     return _DDL_TO_SPARK[ddl]
+
+
+def _fields_schema(fields: list[dict[str, Any]]) -> T.StructType:
+    return T.StructType([T.StructField(f["name"], _spark_type(f["type"])) for f in fields])
+
+
+def _hash_ddl(ddl: str, floats: bool) -> str:
+    """The canonical width a key column is hashed at. xxhash64 is width-
+    sensitive (the hash of 5 as int differs from 5 as bigint), so integers
+    always hash as bigint, and Bloom positions (``floats``) hash floats as
+    double: the allowed widenings then keep every stored hash valid."""
+    if ddl in ("int", "bigint"):
+        return "bigint"
+    if floats and ddl in ("float", "double"):
+        return "double"
+    return ddl
+
+
+# the Python types a point value may have, per column type: the same
+# exact-type rule createDataFrame applies (bool is not an int, int is not
+# a float)
+_POINT_PY_TYPES = {
+    "string": (str,),
+    "binary": (bytes, bytearray),
+    "timestamp": (datetime.datetime,),
+    "bigint": (int,),
+    "int": (int,),
+    "double": (float,),
+    "float": (float,),
+    "date": (datetime.date, datetime.datetime),
+    "boolean": (bool,),
+}
+_INT_RANGES = {"int": 31, "bigint": 63}
+
+
+def _point_internal(col: str, ddl: str, v: Any) -> Any:
+    """``v`` as Spark's internal value of ``ddl`` (epoch days / micros,
+    float32 precision for floats); ValueError naming ``col`` if ``v``
+    cannot be a value of that column."""
+    if v is None:
+        return None
+    if type(v) not in _POINT_PY_TYPES[ddl]:
+        raise ValueError(
+            f"point value for column {col} ({ddl}) must be "
+            f"{' or '.join(t.__name__ for t in _POINT_PY_TYPES[ddl])}, "
+            f"got {type(v).__name__} {v!r}"
+        )
+    if ddl in _INT_RANGES and not -(1 << _INT_RANGES[ddl]) <= v < 1 << _INT_RANGES[ddl]:
+        raise ValueError(f"point value for column {col} ({ddl}) out of range: {v}")
+    v = _spark_type(ddl).toInternal(v)
+    if ddl == "float":
+        # the value a FloatType column holds; past float32's range the
+        # JVM's narrowing gives an infinity
+        try:
+            v = struct.unpack("<f", struct.pack("<f", v))[0]
+        except OverflowError:
+            v = float("inf") if v > 0 else float("-inf")
+    return v
 
 
 @contextmanager
@@ -538,9 +599,7 @@ class LakeTable:
         return m["schemas"][str(m["schema_version"])]
 
     def spark_schema(self, m: dict[str, Any] | None = None) -> T.StructType:
-        return T.StructType(
-            [T.StructField(f["name"], _spark_type(f["type"])) for f in self.schema_fields(m)]
-        )
+        return _fields_schema(self.schema_fields(m))
 
     def add_column(self, name: str, ddl_type: str) -> None:
         m = self.manifest()
@@ -725,11 +784,15 @@ class LakeTable:
 
     # ----------------------------------------------------- key bloom filters
     # Two probe positions per key (k=2), derived from xxhash64 over the
-    # typed key columns with distinct seeds — the SAME expression computes
-    # the write-side filter and the read-side probe (the probe runs a
-    # 1-row Spark job), so there is no cross-engine canonicalization to
-    # drift. collect_set is bounded by bloom_bits distinct positions per
-    # file, so the aggregation state is O(bits), not O(rows).
+    # typed key columns with distinct seeds. The write side builds each
+    # file's filter with the Spark expression below; a point read computes
+    # the key's positions on the driver (_point_probe, sparkhash.py), so
+    # the two must agree bit for bit — a probe that hashes a key
+    # differently reads as "absent" and drops the file holding it.
+    # tests/test_point_read.py checks the driver hash against these
+    # expressions for every column type. collect_set is bounded by
+    # bloom_bits distinct positions per file, so the aggregation state is
+    # O(bits), not O(rows).
     _BLOOM_SEEDS = (0x51ED, 0x00C0FFEE)
 
     def _bloom_bits(self, m: dict[str, Any]) -> int:
@@ -744,14 +807,7 @@ class LakeTable:
     def _bloom_pos_exprs(self, m: dict[str, Any]) -> list[F.Column]:
         bits = self._bloom_bits(m)
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
-        cols = []
-        for k in m["key"]:
-            c = F.col(k)
-            if types.get(k) in ("int", "bigint"):
-                c = c.cast("bigint")
-            elif types.get(k) in ("float", "double"):
-                c = c.cast("double")
-            cols.append(c)
+        cols = [F.col(k).cast(_hash_ddl(types[k], True)) for k in m["key"]]
         return [
             F.pmod(F.xxhash64(*cols, F.lit(s)), F.lit(bits)).cast("long")
             for s in self._BLOOM_SEEDS
@@ -790,33 +846,36 @@ class LakeTable:
         return all(ba[p >> 3] & (1 << (p & 7)) for p in positions)
 
     def _point_probe(self, m: dict[str, Any], point: dict[str, Any]):
-        """One 1-row Spark job computes the point key's bucket AND its
-        Bloom probe positions with the exact write-side expressions."""
+        """The point key's bucket and Bloom probe positions, hashed on the
+        driver with no Spark job. The values are what ``_bucket_expr`` and
+        ``_bloom_pos_exprs`` compute for the key's row: each value is
+        converted to Spark's internal form of its column type, cast to the
+        same canonical hash width, and hashed by ``spark_xxhash64``, which
+        reproduces Spark's ``xxhash64`` bit for bit (a mismatch would prune
+        away the file that holds the key; tests/test_point_read.py checks
+        the equivalence). Returns ``(bucket or None, positions)``."""
         if sorted(point) != sorted(m["key"]):
             raise ValueError(
                 f"point lookup needs the full key {m['key']}; got {sorted(point)}"
             )
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
-        ddl = ", ".join(f"{k} {types[k]}" for k in m["key"])
-        one = self.spark.createDataFrame(
-            [tuple(point[k] for k in m["key"])], ddl
-        )
+        vals = {k: _point_internal(k, types[k], point[k]) for k in m["key"]}
         # the bucket is computable only when the bucket column is part of
         # the key (the normal CDC layout); otherwise fall back to
         # bloom-only pruning across all buckets
-        has_bucket = m["bucket_col"] in m["key"]
-        sel = [self._bucket_expr(m).alias("__b")] if has_bucket else []
-        if self._bloom_bits(m):
-            sel += [
-                e.alias(f"__p{i}") for i, e in enumerate(self._bloom_pos_exprs(m))
+        bucket = None
+        bc = m["bucket_col"]
+        if bc in m["key"]:
+            h = spark_xxhash64([(_hash_ddl(types[bc], False), vals[bc])])
+            bucket = h % m["n_buckets"]
+        positions = []
+        bits = self._bloom_bits(m)
+        if bits:
+            cols = [(_hash_ddl(types[k], True), vals[k]) for k in m["key"]]
+            positions = [
+                spark_xxhash64([*cols, ("int", s)]) % bits for s in self._BLOOM_SEEDS
             ]
-        if not sel:
-            return None, []
-        r = one.select(*sel).collect()[0]
-        positions = (
-            [r["__p0"], r["__p1"]] if self._bloom_bits(m) else []
-        )
-        return (int(r["__b"]) if has_bucket else None), positions
+        return bucket, positions
 
     def _read_raw(
         self,
@@ -844,7 +903,9 @@ class LakeTable:
         parts = []
         for sv, paths in groups.items():
             file_fields = {f["id"]: f for f in m["schemas"][sv]}
-            df = self.spark.read.parquet(*paths)
+            # the manifest records each schema version's file columns, so
+            # the read needs no schema-inference job over the footers
+            df = self.spark.read.schema(_fields_schema(m["schemas"][sv])).parquet(*paths)
             cols = []
             for f in current:
                 old = file_fields.get(f["id"])
@@ -902,14 +963,19 @@ class LakeTable:
         table, not a superset.
 
         ``point={key_col: value, ...}`` (full key tuple) is the point
-        lookup: one tiny Spark job maps the key to its bucket and Bloom
-        probe positions, the scan is pruned to that ONE bucket and (when
-        the table was created with ``bloom_bits``) to the files whose
-        Bloom may contain the key, then the exact key-equality filter and
-        the usual LWW resolve run over the survivors. On a 10^5-file
-        table this reads a handful of files instead of a bucket's worth;
-        without blooms it still prunes to the bucket. Mutually exclusive
-        with ``buckets``/``zones``."""
+        lookup. The driver hashes the key to its bucket and Bloom probe
+        positions with a pure-Python copy of Spark's ``xxhash64`` (see
+        ``_point_probe``; it must match the Spark expressions that wrote
+        the buckets and filters bit for bit, and tests/test_point_read.py
+        checks that it does). The scan is pruned to that ONE bucket and
+        (when the table was created with ``bloom_bits``) to the files
+        whose Bloom may contain the key. The exact key-equality filter
+        leaves only versions of that one key, so LWW resolution is a
+        top-1 by ``_seq`` with no shuffle: collecting the result is one
+        Spark job. On a 10^5-file table this reads a handful of files
+        instead of a bucket's worth; without blooms it still prunes to
+        the bucket. A value of the wrong Python type for its column
+        raises ValueError. Mutually exclusive with ``buckets``/``zones``."""
         m = self.manifest(version)
         bloom_positions: list[int] | None = None
         if point is not None:
@@ -941,12 +1007,17 @@ class LakeTable:
                 if hi is not None:
                     raw = raw.filter(e <= hi)
         if self._needs_resolve(m, buckets):
-            w = W.partitionBy(*m["key"]).orderBy(F.col(SEQ_COL).desc())
-            raw = (
-                raw.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            if point is not None:
+                # every row left is a version of the one key: the newest
+                # wins, a top-1 with no exchange
+                raw = raw.orderBy(F.col(SEQ_COL).desc()).limit(1)
+            else:
+                w = W.partitionBy(*m["key"]).orderBy(F.col(SEQ_COL).desc())
+                raw = (
+                    raw.withColumn("__rn", F.row_number().over(w))
+                    .filter(F.col("__rn") == 1)
+                    .drop("__rn")
+                )
         if not include_deleted:
             raw = raw.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(
                 DELETED_COL
@@ -963,9 +1034,7 @@ class LakeTable:
         # cast is free (fits the codegen'd hash call) and makes the
         # int->bigint promotion hash-invariant from table creation.
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
-        col = F.col(m["bucket_col"])
-        if types.get(m["bucket_col"]) in ("int", "bigint"):
-            col = col.cast("bigint")
+        col = F.col(m["bucket_col"]).cast(_hash_ddl(types[m["bucket_col"]], False))
         return F.pmod(F.xxhash64(col), F.lit(m["n_buckets"])).cast("int")
 
     @staticmethod
@@ -1220,7 +1289,10 @@ class LakeTable:
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
         if any(types.get(c) not in self._FOOTER_ZONE_TYPES for c in zone_cols):
             return None
-        import pyarrow.parquet as pq
+        try:
+            import pyarrow.parquet as pq
+        except ImportError:
+            return None
 
         stats_rows: list[tuple] = []
         zones: dict[int, dict[str, list]] = {}
@@ -1251,11 +1323,18 @@ class LakeTable:
                         return None
                     mx_seq = sst.max if mx_seq is None else max(mx_seq, sst.max)
                     for c in zone_cols:
-                        zst = g.column(idx[c]).statistics
+                        cc = g.column(idx[c])
+                        zst = cc.statistics
                         if zst is None:
                             return None
                         if not zst.has_min_max:
-                            continue  # all-null chunk: Spark min/max skip nulls too
+                            # an all-null chunk has no bounds (Spark's
+                            # min/max skip nulls too); a chunk with values
+                            # but no min/max would make the bounds too
+                            # narrow and zone pruning drop matching files
+                            if zst.has_null_count and zst.null_count == cc.num_values:
+                                continue
+                            return None
                         lo, hi = zst.min_raw, zst.max_raw
                         cur = zb[c]
                         cur[0] = lo if cur[0] is None else min(cur[0], lo)

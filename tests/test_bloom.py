@@ -166,34 +166,25 @@ def test_blooms_survive_rebucket(spark, tmp_path):
 
 
 def test_bloom_has_no_false_negatives_across_all_keys(spark, tmp_path):
-    """THE correctness property: for EVERY live key, the entry that holds
-    it must pass _bloom_may_contain for that key's probe positions —
+    """THE correctness property: for EVERY stored key, the entry that
+    holds it must pass _bloom_may_contain for that key's probe positions —
     false positives only cost extra reads, a false negative would silently
-    drop rows from point lookups. Verified key-by-key in one job: compute
-    every key's (bucket, positions) with the write-side expressions, then
-    check the manifest bitsets in Python."""
+    drop rows from point lookups. Every key is probed through
+    _point_probe, the driver-side hash point reads use, and its bucket and
+    positions are checked against the manifest bitsets the Spark write
+    side recorded."""
     t = _mk(spark, tmp_path, n_buckets=4, bloom_bits=1024)  # small: forces
     # saturated, collision-heavy filters — the worst case for negatives
     changes = gen_changes(spark, n_events=4000, n_urls=500, n_hosts=20, seed=21)
     for i in range(3):
         t.merge(changes.filter(F.pmod("seq", F.lit(3)) == i), batch_key=("b", i))
     m = t.manifest()
-    p0, p1 = t._bloom_pos_exprs(m)
-    rows = (
-        t.read(include_deleted=True)
-        .select(
-            t._bucket_expr(m).alias("b"),
-            p0.alias("p0"),
-            p1.alias("p1"),
-        )
-        .collect()
-    )
+    rows = t.read(include_deleted=True).select("url", "warc_ts").collect()
     assert rows
     misses = 0
     for r in rows:
-        entries = m["buckets"][str(r["b"])]
-        if not any(
-            t._bloom_may_contain(e, [r["p0"], r["p1"]]) for e in entries
-        ):
+        b, positions = t._point_probe(m, _point_of(r))
+        entries = m["buckets"].get(str(b), [])
+        if not any(t._bloom_may_contain(e, positions) for e in entries):
             misses += 1
     assert misses == 0

@@ -5,6 +5,9 @@ reference's fake-boundary golden E2E tests
 (``/root/reference/bqloader_test.go:13-77``).
 """
 
+import sys
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -996,3 +999,94 @@ def test_footer_stats_all_null_zone_col(spark, tmp_path):
     for es in m["buckets"].values():
         for e in es:
             assert "zones" not in e or "warc_ts" not in (e.get("zones") or {})
+
+
+class _NoMinMaxChunk:
+    """A column chunk whose statistics kept their null count but lost
+    min/max, as from a writer that drops or truncates them."""
+
+    def __init__(self, chunk):
+        self.num_values = chunk.num_values
+        self.statistics = SimpleNamespace(
+            has_min_max=False, has_null_count=True,
+            null_count=chunk.statistics.null_count,
+        )
+
+
+class _StrippedMetadata:
+    def __init__(self, md, col):
+        self._md, self._col = md, col
+        self.schema, self.num_columns = md.schema, md.num_columns
+        self.num_row_groups = md.num_row_groups
+
+    def row_group(self, rg):
+        g = self._md.row_group(rg)
+        col = self._col
+        return SimpleNamespace(
+            num_rows=g.num_rows,
+            column=lambda i: _NoMinMaxChunk(g.column(i)) if i == col else g.column(i),
+        )
+
+
+def test_footer_zones_fall_back_when_a_chunk_lacks_min_max(spark, tmp_path, monkeypatch):
+    """A zone chunk that holds values but has no min/max must send the
+    merge to the Spark read-back. Skipping it like an all-null chunk
+    records bounds narrower than the data, and read(zones=...) then drops
+    files holding matching rows. pyarrow and Spark never write such an
+    integer chunk (with statistics off there are none at all, which
+    already falls back), so the metadata reader strips one file's bounds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [("url", "string"), ("n", "bigint")],
+        key=["url", "n"], n_buckets=1,
+    )
+    m = t.manifest()
+    bdir = tmp_path / "out" / "b=0"
+    bdir.mkdir(parents=True)
+    for name, ns in (("low", [1, 2]), ("high", [100, 200])):
+        pq.write_table(
+            pa.table({
+                "url": ["x", "y"],
+                "n": pa.array(ns, pa.int64()),
+                "_seq": pa.array([1, 2], pa.int64()),
+                "_deleted": pa.array([None, True], pa.bool_()),
+            }),
+            str(bdir / f"{name}.parquet"),
+        )
+    out = str(tmp_path / "out")
+    stats, zones = t._footer_stats_zones(out, {0}, m, ["n"])
+    assert stats == [(0, 2, 2, 2)] and zones == {0: {"n": [1, 200]}}
+
+    real = pq.read_metadata
+
+    def read_metadata(path):
+        md = real(path)
+        if not path.endswith("high.parquet"):
+            return md
+        names = [md.schema.column(i).name for i in range(md.num_columns)]
+        return _StrippedMetadata(md, names.index("n"))
+
+    monkeypatch.setattr(pq, "read_metadata", read_metadata)
+    assert t._footer_stats_zones(out, {0}, m, ["n"]) is None
+
+
+def test_mor_merge_without_pyarrow_uses_spark_readback(spark, tmp_path, changes, monkeypatch):
+    """With pyarrow.parquet missing, the footer path steps aside instead of
+    failing the merge; the Spark read-back yields the same stats, zones
+    and rows."""
+    ref = LakeTable.create(spark, str(tmp_path / "ref"), PAGE_COLS, n_buckets=4)
+    s_ref = ref.merge(changes, batch_key=("q", 0))
+    monkeypatch.setitem(sys.modules, "pyarrow.parquet", None)
+    t = LakeTable.create(spark, str(tmp_path / "t"), PAGE_COLS, n_buckets=4)
+    s = t.merge(changes, batch_key=("q", 0))
+    assert (s.rows_upserted, s.rows_deleted, s.max_seq) == (
+        s_ref.rows_upserted, s_ref.rows_deleted, s_ref.max_seq
+    )
+
+    def zmap(tbl):
+        return {b: [e.get("zones") for e in es] for b, es in tbl.manifest()["buckets"].items()}
+
+    assert zmap(t) == zmap(ref) and any(any(z) for z in zmap(t).values())
+    assert _sorted_state(t.read()) == _sorted_state(ref.read())

@@ -278,3 +278,51 @@ def test_sweep_races_concurrent_rebucket(spark, tmp_path, monkeypatch):
     assert _live_urls(inc) == _live_urls(ref) == sorted(urls)
     r2 = idx.update(batch_id=1)
     assert r2.new_docs == 0 and r2.removed == 0
+
+
+def test_loser_band_sweep_races_concurrent_index_rebucket(spark, tmp_path, monkeypatch):
+    """The index-side twin of the race above: the INDEX table is
+    rebucketed (8 -> 16) after the sweep computed its probe bucket ids
+    from snapshot ``im``. The old losers' band tombstones must be read at
+    ``im`` too: read at a re-read manifest, the 16-bucket layout is
+    pruned with 8-bucket ids and about half of the 32 loser band rows are
+    never tombstoned, so the losers stay in the index."""
+    rows_old, rows_new = [], []
+    for i in range(8):  # 8 token-disjoint families -> 8 old losers
+        fam = " ".join(f"fam{i}tok{j}" for j in range(16))
+        rows_old.append((i + 1, f"u/f{i}b", fam))
+        rows_new.append((100 + i, f"u/f{i}a", fam))  # smaller key wins
+
+    inc = _corpus(spark, tmp_path, "inc")
+    idx = NearDupIndex.create(spark, str(tmp_path / "idx"), inc, n_buckets=8)
+    inc.merge(_batch(spark, rows_old), batch_key=("feed", 0))
+    assert idx.update(batch_id=0).removed == 0
+    inc.merge(_batch(spark, rows_new), batch_key=("feed", 1))
+
+    other = LakeTable(spark, str(tmp_path / "idx"))  # independent handle
+    state = {"armed": False}
+    orig_manifest = idx.table.manifest
+
+    def manifest(version=None):
+        # the first LATEST read of the index after the corpus sweep
+        # decided its losers: another writer rebuckets just before it
+        if state["armed"] and version is None:
+            state["armed"] = False
+            other.rebucket(16)
+        return orig_manifest(version)
+
+    orig_vdp = NearDupIndex._victim_deletes_pruned
+
+    def vdp_then_arm(self, cm, losers, allb):
+        state["armed"] = True
+        return orig_vdp(self, cm, losers, allb)
+
+    monkeypatch.setattr(idx.table, "manifest", manifest)
+    monkeypatch.setattr(NearDupIndex, "_victim_deletes_pruned", vdp_then_arm)
+    r = idx.update(batch_id=1)
+
+    assert not state["armed"] and idx.table.manifest()["n_buckets"] == 16
+    assert r.removed == 8
+    assert _live_urls(inc) == sorted(u for _, u, _ in rows_new)
+    idx_urls = {r2["url"] for r2 in idx.table.read().select("url").collect()}
+    assert idx_urls == {u for _, u, _ in rows_new}
