@@ -10,7 +10,8 @@ Subcommands (argv[1]):
   one batch (idempotent by ledger key)
 - ``compact  <table_path> [--expire-tombstones]`` — fold MoR deltas
 - ``expire   <table_path> [keep_n]`` — truncate snapshot history + GC
-  unreferenced data files (lineage metrics spill to ``_lineage/``)
+  unreferenced data files (expired snapshots' lineage metrics spill to
+  ``_lineage/`` as JSON lines, written on the driver)
 - ``status   <table_path>`` — version, history, watermarks, entry counts
 - ``gen      <out_dir> <n_events> [n_batches]`` — stage a deterministic
   synthetic change feed (seed 42)

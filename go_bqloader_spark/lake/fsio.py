@@ -9,8 +9,10 @@ Only the local implementation ships in this repo; an S3/GCS implementation
 plugs in here without touching table logic.
 
 Data files themselves are written by Spark (``df.write.parquet``) straight
-to the store — this seam covers only manifest/pointer/GC operations, which
-are tiny and driver-side.
+to the store — this seam covers only manifest/pointer/GC operations and the
+lineage spill (``expire_snapshots`` writes expired manifests' metrics rows
+as JSON lines under ``_lineage/`` with ``write_atomic``), which are small
+and driver-side.
 """
 
 from __future__ import annotations

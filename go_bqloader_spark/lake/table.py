@@ -46,7 +46,13 @@ interface (SURVEY.md §7 names this exact fallback):
 Shuffle budget per merge: mor moves the wide payload across the memory bus
 exactly ONCE (a single exchange on bucket; dedup is a within-partition sort
 + lag filter because bucket = f(url) already co-locates every key). cow
-adds the affected-bucket read-back and a key-window. The engine is
+adds the affected-bucket read-back and a key-window. ``compact()`` and
+``rebucket()`` pay the same single exchange: they read the raw files, hash
+rows onto their (new) bucket and keep the first row per key inside each
+bucket partition (``_first_per_key``, shared with the mor merge), so the
+rewrite is one exchange where a key-window read plus a bucket repartition
+would be two, and every rewritten file comes out key-sorted. Plain scans
+still resolve with the key-window. The engine is
 bandwidth-frugal by design — at cluster scale network bytes are the merge
 bottleneck, and in this sandbox the shared memory bus plays that role
 (measured: ~5 GB/s aggregate; see BENCH/BASELINE.md).
@@ -59,6 +65,7 @@ import datetime
 import json
 import os
 import struct
+import threading
 import time
 import uuid
 from contextlib import contextmanager
@@ -154,6 +161,12 @@ def _point_internal(col: str, ddl: str, v: Any) -> Any:
     return v
 
 
+# per session (by id): [_no_aqe users in flight, the setting the first
+# of them saved]
+_aqe_lock = threading.Lock()
+_aqe_users: dict[int, list] = {}
+
+
 @contextmanager
 def _no_aqe(spark: SparkSession):
     """Run an action without adaptive query execution, restoring the
@@ -165,13 +178,47 @@ def _no_aqe(spark: SparkSession):
     (skew-join handling, partition coalescing); only the merge-path
     actions opt out. The toggle is a session conf, so a concurrent
     writer thread may briefly plan its own query without AQE — a
-    performance-only effect, never a correctness one."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    performance-only effect, never a correctness one.
+
+    Overlapping users of one session (two merges on different threads)
+    share one save: the first to enter saves the caller's setting, the
+    last to leave restores it. Saving per user would let the second save
+    the first's "false" and restore it last, leaving AQE off for the
+    session."""
+    with _aqe_lock:
+        state = _aqe_users.get(id(spark))
+        if state is None:
+            state = _aqe_users[id(spark)] = [
+                0, spark.conf.get("spark.sql.adaptive.enabled", "true")
+            ]
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        state[0] += 1
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        with _aqe_lock:
+            state[0] -= 1
+            if state[0] == 0:
+                del _aqe_users[id(spark)]
+                spark.conf.set("spark.sql.adaptive.enabled", state[1])
+
+
+def _first_per_key(
+    rows: DataFrame, part: str, key: list[str], order: list[F.Column]
+) -> DataFrame:
+    """The first row of each key within each ``part`` partition, in
+    ``order`` (which must keep a key's rows adjacent and put the row to
+    keep first, e.g. ``[*key, seq desc]``). ``rows`` must already be
+    hash-partitioned on ``part`` and every key must live in one ``part``
+    value (bucket = f(bucket column), a key column): the window then sorts
+    within partitions and adds no exchange, and a row is a key's first
+    when it heads its partition or its key differs from the previous
+    row's (``lag`` + ``eqNullSafe``, so NULL key parts compare equal)."""
+    w = W.partitionBy(part).orderBy(*order)
+    first = F.lag(F.lit(True)).over(w).isNull()
+    for k in key:
+        first = first | ~F.lag(k).over(w).eqNullSafe(F.col(k))
+    return rows.withColumn("__first", first).filter(F.col("__first")).drop("__first")
 
 
 class CommitConflict(RuntimeError):
@@ -204,20 +251,6 @@ class LakeTable:
 
     # auto-compact a query's ledger once it holds this many batch entries
     LEDGER_HORIZON = 256
-    # Per-bucket merge stats: 0 (default) = derive them AFTER the write by
-    # scanning only the narrow (b, _seq, _deleted) columns of the freshly
-    # written parquet — a column-pruned second job that never touches the
-    # wide payload. Raising this enables the alternative path where stats
-    # ride the write job via an Observation (3 conditional aggregates per
-    # bucket) for tables up to that many buckets. MEASURED (round 3,
-    # interleaved A/B at the bench workload, 2M events / 8 batches /
-    # local[32]): Observation 18.6 s median vs read-back 9.4 s at 64
-    # buckets, and still no win at 16 (the 3N-expression eval per output
-    # row dwarfs the narrow second scan) — hence 0. Observation stats also
-    # ride Spark accumulators, which can double-count under task retries /
-    # speculative execution; the read-back counts are exact, so keep the
-    # default wherever lineage metrics must be trustworthy.
-    _OBS_MAX_BUCKETS = int(os.environ.get("GBS_OBS_MAX_BUCKETS", "0"))
 
     def __init__(self, spark: SparkSession, path: str, fs=None):
         self.spark = spark
@@ -257,9 +290,10 @@ class LakeTable:
         maps can do — a hash-distributed key inside one bucket spans the
         whole zone range, but its Bloom still excludes most files. Costs:
         ~``bloom_bits/6`` bytes of manifest per live file entry, and MoR
-        merges take a narrow read-back pass instead of the Observation
-        fast path. False-positive rate for a file with n distinct keys is
-        ``(1 - exp(-2n/bits))^2`` — size bits ≳ 10n for ~3%.
+        merges take a narrow read-back pass instead of reading their
+        stats from parquet footers. False-positive rate for a file with n
+        distinct keys is ``(1 - exp(-2n/bits))^2`` — size bits ≳ 10n for
+        ~3%.
         """
         assert write_mode in ("mor", "cow")
         key = key or ["url", "warc_ts"]
@@ -1154,19 +1188,16 @@ class LakeTable:
             # comparison radix-style — without it the sorter walks the
             # long shared "https://host..." url prefixes byte by byte
             kh = F.xxhash64(*[F.col(k) for k in key])
-            w = W.partitionBy("__b").orderBy(kh, *key, F.col("seq").desc())
-            first_of_key = ~F.lag(key[0]).over(w).eqNullSafe(F.col(key[0]))
-            for k in key[1:]:
-                first_of_key = first_of_key | ~F.lag(k).over(w).eqNullSafe(F.col(k))
+            winners = _first_per_key(
+                bucketed, "__b", key, [kh, *key, F.col("seq").desc()]
+            )
             # _deleted is stored TRUE-or-NULL (NULL = live) in delta files:
             # the parquet footer's exact per-chunk null_count then yields
             # the tombstone count without any read-back job (see
             # _footer_stats_zones). _read_raw normalizes NULL back to
             # false, so every reader sees the same values as before.
             out_rows = (
-                bucketed.withColumn("__first", F.coalesce(first_of_key, F.lit(True)))
-                .filter(F.col("__first"))
-                .select(
+                winners.select(
                     *data_cols,
                     F.col("seq").alias(SEQ_COL),
                     F.when(F.col("op") == "D", F.lit(True)).alias(DELETED_COL),
@@ -1346,6 +1377,58 @@ class LakeTable:
                     zones[b] = z
         return stats_rows, zones
 
+    def _new_data_dir(self, m: dict[str, Any], suffix: str) -> str:
+        """A fresh table-relative data dir for the commit after ``m``; the
+        c%08d prefix is the version it is written FOR (expire_snapshots'
+        in-flight guard reads it)."""
+        return os.path.join(
+            "data", f"c{m['version'] + 1:08d}_{uuid.uuid4().hex[:12]}{suffix}"
+        )
+
+    def _written_buckets(self, out_dir: str) -> set[int]:
+        return {
+            int(d.split("=", 1)[1]) for d in self.fs.listdir(out_dir) if d.startswith("b=")
+        }
+
+    @staticmethod
+    def _entry(
+        m: dict[str, Any], rel: str, b: int, zones: dict[int, dict], blooms: dict[int, str]
+    ) -> dict[str, Any]:
+        entry = {"path": os.path.join(rel, f"b={b}"), "schema_version": m["schema_version"]}
+        if b in zones:
+            entry["zones"] = zones[b]
+        if b in blooms:
+            entry["bloom"] = blooms[b]
+        return entry
+
+    def _readback(
+        self,
+        m: dict[str, Any],
+        out_dir: str,
+        zone_cols: list[str],
+        aggs: list[F.Column],
+    ) -> tuple[list, dict[int, dict[str, list]], dict[int, str]]:
+        """Per-bucket ``aggs``, zone bounds and (Bloom tables) key Blooms of
+        the files just written to ``out_dir`` under ``m``'s current schema:
+        one narrow pass that reads only the columns the aggregates use.
+        The read takes the manifest's schema plus the ``b`` partition
+        column, so it needs no schema-inference job. Returns ``(rows,
+        zones, blooms)``."""
+        bloom_on = self._bloom_bits(m) > 0
+        aggs = [
+            *aggs,
+            *self._zone_aggs(m, zone_cols),
+            *(self._bloom_aggs(m) if bloom_on else []),
+        ]
+        if not aggs:
+            return [], {}, {}
+        schema = self.spark_schema(m).add("b", T.IntegerType())
+        agged = self.spark.read.schema(schema).parquet(out_dir).groupBy("b").agg(*aggs)
+        with _no_aqe(self.spark):
+            rows = agged.collect()
+        blooms = self._blooms_from_rows(m, rows) if bloom_on else {}
+        return rows, self._zones_from_rows(rows, zone_cols), blooms
+
     def _finish_merge(
         self,
         m: dict[str, Any],
@@ -1359,14 +1442,14 @@ class LakeTable:
         """Write ``out_rows`` (cols: data..., _seq, _deleted, b), derive
         lineage stats, and commit the manifest atomically.
 
-        For the mor fast path, per-bucket stats ride the WRITE job itself
-        via an ``Observation`` (conditional aggregates per bucket) — one
-        Spark job per merge, no second pass and no persist/cache of the
-        wide winner rows. Tables with more than ``_OBS_MAX_BUCKETS``
-        buckets fall back to a narrow column-pruned read-back of the
-        freshly written files."""
-        commit_id = uuid.uuid4().hex[:12]
-        rel = os.path.join("data", f"c{m['version'] + 1:08d}_{commit_id}")
+        The mor path (``stats_rows`` None) reads its per-bucket stats and
+        zone bounds from the parquet footers just written — no second
+        Spark job. Bloom tables, a non-local FS seam or footers without
+        the needed statistics take ONE narrow read-back of the written
+        files instead (``_readback``), which also builds the Blooms; cow
+        brings its stats from its narrow pre-pass and reads back only
+        zones and Blooms."""
+        rel = self._new_data_dir(m, "")
         out_dir = os.path.join(self.path, rel)
 
         zone_cols = self._zone_cols(m)
@@ -1382,116 +1465,41 @@ class LakeTable:
             types = {f["name"]: f["type"] for f in self.schema_fields(m)}
             zone_cols = [c for c in zone_cols if types[c] != "string"]
         zones: dict[int, dict[str, list]] = {}
-        # True once zones were derived for this commit (footer path): an
-        # empty zones dict then means "genuinely no bounds" (all-null zone
-        # cols), not "not computed yet" — skips the dedicated read-back
-        zones_done = False
         blooms: dict[int, str] = {}
         bloom_on = self._bloom_bits(m) > 0
-        obs = None
-        # blooms need a collect_set per file — they force the narrow
-        # read-back path (documented cost in create()); without them the
-        # Observation rides the write job itself
-        if stats_rows is None and m["n_buckets"] <= self._OBS_MAX_BUCKETS and not bloom_on:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            aggs = []
-            for b in range(m["n_buckets"]):
-                cond = F.col("b") == b
-                aggs.append(F.max(F.when(cond, F.col(SEQ_COL))).alias(f"mx{b}"))
-                aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"n{b}"))
-                aggs.append(
-                    F.sum(
-                        F.when(cond, F.col(DELETED_COL).cast("long")).otherwise(0)
-                    ).alias(f"dl{b}")
-                )
-            out_rows = out_rows.observe(obs, *aggs)
         with _no_aqe(self.spark):
             out_rows.write.partitionBy("b").mode("overwrite").parquet(out_dir)
 
-        written = {
-            int(d.split("=", 1)[1]) for d in self.fs.listdir(out_dir) if d.startswith("b=")
-        }
-        if stats_rows is None:
-            if not written:  # empty mor batch: nothing written, no-op commit
-                return self._commit_noop(m, batch_key, commit_retries=commit_retries)
-            if obs is not None:
-                vals = obs.get
-                stats_rows = [
-                    (b, vals[f"mx{b}"], vals[f"n{b}"] - (vals[f"dl{b}"] or 0), vals[f"dl{b}"] or 0)
-                    for b in range(m["n_buckets"])
-                    if vals[f"n{b}"]
-                ]
-            else:
-                # lineage stats + zone bounds straight from the parquet
-                # footers just written — a driver-side metadata pass, no
-                # second Spark job (the footer seam is local-FS only; an
-                # object-store fs would add a ranged-GET footer method)
-                footer = None
-                if not bloom_on and type(self.fs) is LocalFS:
-                    footer = self._footer_stats_zones(out_dir, written, m, zone_cols)
-                if footer is not None:
-                    stats_rows, zones = footer
-                    zones_done = True
-                else:
-                    # fallback: one narrow column-pruned read-back computes
-                    # the lineage stats AND the zone-map bounds AND the key
-                    # blooms (same pass, same files)
-                    back_cols = dict.fromkeys(
-                        ["b", SEQ_COL, DELETED_COL, *zone_cols]
-                        + (m["key"] if bloom_on else [])
-                    )
-                    back = self.spark.read.parquet(out_dir).select(*back_cols)
-                    agged = back.groupBy("b").agg(
-                        F.max(SEQ_COL).alias("applied_max_seq"),
-                        F.count(F.lit(1)).alias("n"),
-                        # coalesce: with the TRUE-or-NULL tombstone
-                        # coding a delete-free bucket sums NULL, not 0
-                        F.coalesce(
-                            F.sum(F.col(DELETED_COL).cast("long")), F.lit(0)
-                        ).alias("rows_deleted"),
-                        *self._zone_aggs(m, zone_cols),
-                        *(self._bloom_aggs(m) if bloom_on else []),
-                    )
-                    with _no_aqe(self.spark):
-                        collected = agged.collect()
-                    if bloom_on:
-                        blooms = self._blooms_from_rows(m, collected)
-                    stats_rows = [
-                        (
-                            int(r["b"]),
-                            r["applied_max_seq"],
-                            r["n"] - r["rows_deleted"],
-                            r["rows_deleted"],
-                        )
-                        for r in collected
-                    ]
-                    zones = self._zones_from_rows(collected, zone_cols)
+        written = self._written_buckets(out_dir)
         if affected is None:
             affected = sorted(written)
-        if not written and not affected:
+        if not written and not affected:  # empty mor batch: no-op commit
             return self._commit_noop(m, batch_key, commit_retries=commit_retries)
-        if written and (
-            (not zones_done and not zones and zone_cols) or (bloom_on and not blooms)
-        ):
-            # cow / Observation paths: dedicated narrow zone+bloom read-back
-            sel = dict.fromkeys(
-                ["b", *zone_cols] + (m["key"] if bloom_on else [])
-            )
-            rows = (
-                self.spark.read.parquet(out_dir)
-                .select(*sel)
-                .groupBy("b")
-                .agg(
-                    *self._zone_aggs(m, zone_cols),
-                    *(self._bloom_aggs(m) if bloom_on else []),
-                )
-                .collect()
-            )
-            zones = self._zones_from_rows(rows, zone_cols)
-            if bloom_on:
-                blooms = self._blooms_from_rows(m, rows)
+        footer = None
+        # the footer seam is local-FS only; an object-store fs would add a
+        # ranged-GET footer method. Blooms need a collect_set per file,
+        # which footers do not hold (documented cost in create())
+        if stats_rows is None and not bloom_on and type(self.fs) is LocalFS:
+            footer = self._footer_stats_zones(out_dir, written, m, zone_cols)
+        if footer is not None:
+            stats_rows, zones = footer
+        elif written:
+            stat_aggs = [] if stats_rows is not None else [
+                F.max(SEQ_COL).alias("applied_max_seq"),
+                F.count(F.lit(1)).alias("n"),
+                # coalesce: with the TRUE-or-NULL tombstone coding a
+                # delete-free bucket sums NULL, not 0
+                F.coalesce(F.sum(F.col(DELETED_COL).cast("long")), F.lit(0)).alias(
+                    "rows_deleted"
+                ),
+            ]
+            back, zones, blooms = self._readback(m, out_dir, zone_cols, stat_aggs)
+            if stats_rows is None:
+                stats_rows = [
+                    (int(r["b"]), r["applied_max_seq"], r["n"] - r["rows_deleted"],
+                     r["rows_deleted"])
+                    for r in back
+                ]
 
         rows_upserted = sum(r[2] for r in stats_rows)
         rows_deleted = sum(r[3] for r in stats_rows)
@@ -1508,15 +1516,9 @@ class LakeTable:
                 # under (m, not base): after a rebase past a concurrent
                 # schema commit, readers still resolve these files against
                 # the schema their parquet footers actually carry
-                entry = {
-                    "path": os.path.join(rel, f"b={b}"),
-                    "schema_version": m["schema_version"],
-                }
-                if b in zones:
-                    entry["zones"] = zones[b]
-                if b in blooms:
-                    entry["bloom"] = blooms[b]
-                new_buckets.setdefault(str(b), []).append(entry)
+                new_buckets.setdefault(str(b), []).append(
+                    self._entry(m, rel, b, zones, blooms)
+                )
 
             ledger, floors = self._advance_ledger(base, batch_key, max_seq)
             # roll the per-bucket applied-seq watermark forward so resume
@@ -1642,62 +1644,11 @@ class LakeTable:
         ]
         if not targets:
             return 0
-        resolved = self.read(buckets=targets, include_deleted=True)
-        if expire_tombstones:
-            resolved = resolved.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        resolved = resolved.withColumn("b", self._bucket_expr(m))
-
-        commit_id = uuid.uuid4().hex[:12]
-        rel = os.path.join("data", f"c{m['version'] + 1:08d}_{commit_id}_compact")
-        out_dir = os.path.join(self.path, rel)
-        # read-optimized rewrite: key-sort within each bucket file so
-        # parquet row-group min/max on the key columns are tight and
-        # zone-filtered reads (`read(zones=...)` → pushed parquet
-        # predicates) skip row groups, not just whole buckets. The merge
-        # hot path deliberately sorts by key-HASH (radix-fast, but
-        # key-random row groups); compaction is the offline place to pay
-        # for key clustering — same split as Iceberg's sort-order rewrite.
-        (
-            resolved.repartition(max(len(targets), 1), F.col("b"))
-            .sortWithinPartitions("b", *m["key"])
-            .write.partitionBy("b")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        written = {
-            int(d.split("=", 1)[1]) for d in self.fs.listdir(out_dir) if d.startswith("b=")
+        entries, _ = self._rewrite(m, targets, m, "_compact", expire_tombstones)
+        new_buckets = {
+            b: list(es) for b, es in m["buckets"].items() if int(b) not in targets
         }
-        zone_cols = self._zone_cols(m)
-        zones: dict[int, dict[str, list]] = {}
-        blooms: dict[int, str] = {}
-        bloom_on = self._bloom_bits(m) > 0
-        if (zone_cols or bloom_on) and written:
-            sel = dict.fromkeys(
-                ["b", *zone_cols] + (m["key"] if bloom_on else [])
-            )
-            rows = (
-                self.spark.read.parquet(out_dir)
-                .select(*sel)
-                .groupBy("b")
-                .agg(
-                    *self._zone_aggs(m, zone_cols),
-                    *(self._bloom_aggs(m) if bloom_on else []),
-                )
-                .collect()
-            )
-            zones = self._zones_from_rows(rows, zone_cols)
-            if bloom_on:
-                blooms = self._blooms_from_rows(m, rows)
-        new_buckets = {b: list(entries) for b, entries in m["buckets"].items()}
-        for b in targets:
-            new_buckets.pop(str(b), None)
-        for b in sorted(written):
-            entry = {"path": os.path.join(rel, f"b={b}"), "schema_version": m["schema_version"]}
-            if b in zones:
-                entry["zones"] = zones[b]
-            if b in blooms:
-                entry["bloom"] = blooms[b]
-            new_buckets[str(b)] = [entry]
+        new_buckets.update(entries)
         m2 = dict(
             m,
             version=m["version"] + 1,
@@ -1709,12 +1660,69 @@ class LakeTable:
         self._write_manifest(m2, expected_parent=m["version"])
         return len(targets)
 
+    def _rewrite_rows(
+        self, m: dict[str, Any], buckets: list[int] | None, m_out: dict[str, Any]
+    ) -> DataFrame | None:
+        """The LWW-resolved rows (tombstones included) of ``buckets`` (None
+        = all) of snapshot ``m``, with their bucket id ``b`` under
+        ``m_out``'s layout. One exchange: the raw files are hash-
+        partitioned on ``b``, then ``_first_per_key`` keeps each key's
+        newest row within its bucket, as the mor merge does. Rows leave
+        sorted by (b, key), so every rewritten file is key-sorted and its
+        row-group min/max on the key columns are tight (zone reads push
+        predicates down and skip row groups, not just buckets) — the
+        offline counterpart of the merge's key-HASH sort, like Iceberg's
+        sort-order rewrite. None when the buckets hold no files."""
+        raw = self._read_raw(m, buckets)
+        if raw is None:
+            return None
+        n = m_out["n_buckets"] if buckets is None else len(buckets)
+        rows = raw.withColumn("b", self._bucket_expr(m_out)).repartition(
+            max(n, 1), F.col("b")
+        )
+        key = m["key"]
+        return _first_per_key(
+            rows, "b", key, [*(F.col(k) for k in key), F.col(SEQ_COL).desc()]
+        )
+
+    def _rewrite(
+        self,
+        m: dict[str, Any],
+        buckets: list[int] | None,
+        m_out: dict[str, Any],
+        suffix: str,
+        expire_tombstones: bool = False,
+        aggs: tuple[F.Column, ...] = (),
+    ) -> tuple[dict[str, list], list]:
+        """Write ``_rewrite_rows`` as one file per bucket of ``m_out``'s
+        layout. Returns the new ``{bucket: [entry]}`` map (zone bounds and
+        Blooms from one read-back, which also computes ``aggs`` per
+        bucket) and the read-back rows."""
+        rel = self._new_data_dir(m, suffix)
+        out_dir = os.path.join(self.path, rel)
+        rows = self._rewrite_rows(m, buckets, m_out)
+        written: set[int] = set()
+        if rows is not None:
+            if expire_tombstones:
+                rows = rows.filter(~F.col(DELETED_COL))
+            # a fixed-shape plan like the merge write: AQE only re-plans
+            with _no_aqe(self.spark):
+                rows.write.partitionBy("b").mode("overwrite").parquet(out_dir)
+            written = self._written_buckets(out_dir)
+        back, zones, blooms = [], {}, {}
+        if written:
+            back, zones, blooms = self._readback(
+                m, out_dir, self._zone_cols(m), list(aggs)
+            )
+        entries = {str(b): [self._entry(m, rel, b, zones, blooms)] for b in sorted(written)}
+        return entries, back
+
     def rebucket(self, n_buckets: int) -> int:
         """Partition evolution: change the bucket count in ONE atomic
         commit (full rewrite — bucket membership is ``pmod(xxhash64(url),
         n)``, so every row can move). Re-derives the per-bucket watermark
         map under the new bucketing in the same narrow pass that computes
-        the new lineage stats, so ``resume_watermarks()`` stays O(1) and
+        the new zone bounds, so ``resume_watermarks()`` stays O(1) and
         correct across the evolution. Use when the table outgrows its
         bucket count (hot buckets, oversized files) — the CDC analog of
         Iceberg's partition-spec evolution, except eager: this format
@@ -1724,53 +1732,10 @@ class LakeTable:
         m = self.manifest()
         if n_buckets == m["n_buckets"]:
             return 0
-        resolved = self.read(include_deleted=True)
-        m_new = dict(m, n_buckets=n_buckets)
-        rows = resolved.withColumn("b", self._bucket_expr(m_new))
-
-        commit_id = uuid.uuid4().hex[:12]
-        rel = os.path.join("data", f"c{m['version'] + 1:08d}_{commit_id}_rebucket")
-        out_dir = os.path.join(self.path, rel)
-        (
-            rows.repartition(max(n_buckets, 1), F.col("b"))
-            .sortWithinPartitions("b", *m["key"])  # key-clustered row
-            # groups, same rationale as compact()
-            .write.partitionBy("b")
-            .mode("overwrite")
-            .parquet(out_dir)
+        new_buckets, back = self._rewrite(
+            m, None, dict(m, n_buckets=n_buckets), "_rebucket",
+            aggs=(F.max(SEQ_COL).alias("__wm"),),
         )
-        written = {
-            int(d.split("=", 1)[1])
-            for d in self.fs.listdir(out_dir)
-            if d.startswith("b=")
-        }
-        zone_cols = self._zone_cols(m)
-        bloom_on = self._bloom_bits(m) > 0
-        back = (
-            self.spark.read.parquet(out_dir)
-            .select(
-                *dict.fromkeys(
-                    ["b", SEQ_COL, *zone_cols] + (m["key"] if bloom_on else [])
-                )
-            )
-            .groupBy("b")
-            .agg(
-                F.max(SEQ_COL).alias("__wm"),
-                *self._zone_aggs(m, zone_cols),
-                *(self._bloom_aggs(m) if bloom_on else []),
-            )
-            .collect()
-        )
-        zones = self._zones_from_rows(back, zone_cols)
-        blooms = self._blooms_from_rows(m, back) if bloom_on else {}
-        new_buckets: dict[str, list] = {}
-        for b in sorted(written):
-            entry = {"path": os.path.join(rel, f"b={b}"), "schema_version": m["schema_version"]}
-            if b in zones:
-                entry["zones"] = zones[b]
-            if b in blooms:
-                entry["bloom"] = blooms[b]
-            new_buckets[str(b)] = [entry]
         m2 = dict(
             m,
             version=m["version"] + 1,
@@ -1782,7 +1747,7 @@ class LakeTable:
             summary={"operation": "rebucket", "n_buckets": n_buckets},
         )
         self._write_manifest(m2, expected_parent=m["version"])
-        return len(written)
+        return len(new_buckets)
 
     # -------------------------------------------------------------- metrics
     _METRICS_SCHEMA = (
@@ -1790,20 +1755,36 @@ class LakeTable:
         "applied_max_seq bigint, rows_upserted bigint, rows_deleted bigint"
     )
 
+    _METRICS_COLS = tuple(c.split()[0] for c in _METRICS_SCHEMA.split(", "))
+
     def metrics(self) -> DataFrame:
         """Lineage/metrics table: one row per (commit, bucket). Recent rows
         ride in the manifest chain (committed atomically with each merge);
-        rows whose manifests were expired live in the parquet spill table
-        under ``_lineage/`` — the union is the complete history."""
-        rows = []
-        for m in self._walk_chain():
-            rows.extend(tuple(r) for r in m.get("metrics", []))
+        rows whose manifests were expired live in the spill under
+        ``_lineage/``, and the union is the complete history.
+
+        The spill is JSON lines, one object per row with the
+        ``_METRICS_SCHEMA`` fields, one ``v<lo>_v<hi>.json`` file per
+        expiry (``lo``..``hi`` = the expired versions it holds), read with
+        that fixed schema. Tables expired by earlier releases also hold
+        ``*.parquet`` spill files of the same schema; they are read too.
+        Spilled rows of versions the chain still holds (an expiry that
+        stopped between its spill and its manifest deletes) are counted
+        once, from the chain."""
+        chain = list(self._walk_chain())
+        rows = [tuple(r) for m in chain for r in m.get("metrics", [])]
         df = self.spark.createDataFrame(rows, self._METRICS_SCHEMA)
         spill = os.path.join(self.path, _LINEAGE)
-        if self.fs.exists(spill) and any(
-            f.endswith(".parquet") for f in self.fs.listdir(spill)
-        ):
-            df = self.spark.read.schema(self._METRICS_SCHEMA).parquet(spill).unionByName(df)
+        files = self.fs.listdir(spill)
+        js = [os.path.join(spill, f) for f in files if f.endswith(".json")]
+        pq = [os.path.join(spill, f) for f in files if f.endswith(".parquet")]
+        parts = []
+        if js:
+            parts.append(self.spark.read.schema(self._METRICS_SCHEMA).json(js))
+        if pq:
+            parts.append(self.spark.read.schema(self._METRICS_SCHEMA).parquet(*pq))
+        for p in parts:
+            df = p.filter(F.col("commit_version") < chain[-1]["version"]).unionByName(df)
         return df
 
     def resume_watermarks(self) -> dict[int, int]:
@@ -1846,11 +1827,16 @@ class LakeTable:
         """Truncate the manifest chain to the newest ``keep_n`` snapshots
         and GC data files no retained snapshot references.
 
-        Expired manifests' lineage metrics are spilled to the parquet
-        ``_lineage/`` table first, so ``metrics()`` stays complete. Without
-        expiry an endless-tail deployment accumulates one manifest + delta
-        files per batch forever; with it, metadata and storage are bounded
-        by ``keep_n`` + live data. Time travel below the horizon is gone —
+        Expired manifests' lineage metrics are spilled first, so
+        ``metrics()`` stays complete: JSON lines written on the driver
+        through the FS seam (``write_atomic``, like every other metadata
+        write; no Spark job), one ``_lineage/v<lo>_v<hi>.json`` file named
+        after the versions it holds. A retry after a crash between the
+        spill and the manifest deletes skips versions an existing spill
+        file already holds, so no row is spilled twice. Without expiry an
+        endless-tail deployment accumulates one manifest + delta files per
+        batch forever; with it, metadata and storage are bounded by
+        ``keep_n`` + live data. Time travel below the horizon is gone —
         that is the point."""
         chain = list(self._walk_chain())
         if len(chain) <= keep_n:
@@ -1860,13 +1846,28 @@ class LakeTable:
                     "group_files_removed": 0}
         retained, expired = chain[:keep_n], chain[keep_n:]
 
-        rows = [tuple(r) for m in expired for r in m.get("metrics", [])]
+        # the chain's versions are contiguous (parent = version - 1) and
+        # each expiry spills the oldest ones, so the spill files cover a
+        # prefix of the history: everything up to the highest spilled
+        # version is already there
+        spill = os.path.join(self.path, _LINEAGE)
+        spilled = max(
+            (int(f[:-5].rsplit("_v", 1)[1]) for f in self.fs.listdir(spill)
+             if f.startswith("v") and f.endswith(".json")),
+            default=-1,
+        )
+        todo = [m for m in expired if m["version"] > spilled]
+        rows = [r for m in reversed(todo) for r in m.get("metrics", [])]
         if rows:
-            spill = os.path.join(self.path, _LINEAGE)
             self.fs.makedirs(spill)
-            self.spark.createDataFrame(rows, self._METRICS_SCHEMA).coalesce(
-                1
-            ).write.mode("append").parquet(spill)
+            self.fs.write_atomic(
+                os.path.join(
+                    spill, f"v{todo[-1]['version']:08d}_v{todo[0]['version']:08d}.json"
+                ),
+                "".join(
+                    json.dumps(dict(zip(self._METRICS_COLS, r))) + "\n" for r in rows
+                ),
+            )
 
         referenced = {
             e["path"]

@@ -19,3 +19,22 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(tag, fn)`` runs ``fn`` with every Spark job it starts
+    tagged ``tag`` and returns ``(fn's result, number of those jobs)``."""
+
+    def run(tag, fn):
+        sc = spark.sparkContext
+        sc.addJobTag(tag)
+        try:
+            out = fn()
+        finally:
+            sc.removeJobTag(tag)
+        jsc = sc._jsc.sc()  # noqa: SLF001
+        jsc.listenerBus().waitUntilEmpty()
+        return out, len(jsc.statusTracker().getJobIdsForTag(tag))
+
+    return run

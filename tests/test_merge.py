@@ -559,31 +559,6 @@ def test_expire_snapshots_spares_inflight_commit_dirs(spark, tmp_path):
     assert os.path.exists(os.path.join(rebasing, "b=0"))
 
 
-def test_observation_stats_path_matches_readback(spark, tmp_path):
-    """The optional Observation stats path (GBS_OBS_MAX_BUCKETS > 0; off by
-    default after the round-3 A/B) must produce the same per-bucket
-    lineage metrics and watermarks as the default narrow read-back."""
-    results = {}
-    for arm, obs_max in (("readback", 0), ("obs", 256)):
-        old = LakeTable._OBS_MAX_BUCKETS
-        LakeTable._OBS_MAX_BUCKETS = obs_max
-        try:
-            t = LakeTable.create(
-                spark, str(tmp_path / f"tbl_{arm}"), PAGE_COLS,
-                key=["url", "warc_ts"], n_buckets=4,
-            )
-            for i in range(2):
-                t.merge(_tiny_batch(spark, i), batch_key=("q", i))
-            results[arm] = (
-                sorted(map(tuple, t.metrics().collect())),
-                t.resume_watermarks(),
-                sorted(map(tuple, t.read().collect())),
-            )
-        finally:
-            LakeTable._OBS_MAX_BUCKETS = old
-    assert results["obs"] == results["readback"]
-
-
 @pytest.mark.parametrize("mode", MODES)
 def test_near_dup_rewrite_maintenance(spark, tmp_path, mode):
     """Ingest → near-dup cluster → keep-representatives, end-to-end through

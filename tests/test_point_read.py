@@ -171,24 +171,12 @@ def test_point_value_of_wrong_type_names_the_column(spark, tmp_path, ddl, value)
         t.read(point={"url": "https://a/", "kk": value})
 
 
-def _job_count(spark, tag, fn):
-    sc = spark.sparkContext
-    sc.addJobTag(tag)
-    try:
-        out = fn()
-    finally:
-        sc.removeJobTag(tag)
-    jsc = sc._jsc.sc()  # noqa: SLF001
-    jsc.listenerBus().waitUntilEmpty()
-    return out, len(jsc.statusTracker().getJobIdsForTag(tag))
-
-
 def _batch(spark, rows, ddl):
     return spark.createDataFrame(rows, "op string, seq bigint, " + ddl)
 
 
 @pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_point_read_is_one_spark_job(spark, tmp_path, mode):
+def test_point_read_is_one_spark_job(spark, spark_jobs, tmp_path, mode):
     t = LakeTable.create(
         spark, str(tmp_path / "t"), [("url", "string"), ("n", "int")],
         key=["url"], n_buckets=2, bloom_bits=1024, write_mode=mode,
@@ -205,8 +193,8 @@ def test_point_read_is_one_spark_job(spark, tmp_path, mode):
     # whose Blooms prune every file needs no job at all
     cases = [("u/3", [300], {1}), ("u/4", [], {1}), ("u/5", [5], {1}), ("u/x", [], {0, 1})]
     for i, (url, want, want_jobs) in enumerate(cases):
-        rows, jobs = _job_count(
-            spark, f"point-{mode}-{i}", lambda: t.read(point={"url": url}).collect()
+        rows, jobs = spark_jobs(
+            f"point-{mode}-{i}", lambda: t.read(point={"url": url}).collect()
         )
         assert [r["n"] for r in rows] == want
         assert jobs in want_jobs, (url, jobs)
