@@ -1,13 +1,12 @@
 """Spark's ``xxhash64`` on the driver, in pure Python.
 
-Point lookups hash one key to find its bucket and its Bloom probe
-positions. Computing that with ``F.xxhash64`` costs a Spark job per
-lookup; :func:`spark_xxhash64` returns the same 64-bit value without one.
-It must match Spark bit for bit: the stored buckets and Bloom filters were
-written by the Spark expression, and a probe that hashes one key
-differently prunes away the file that holds it. ``tests/test_point_read.py``
-checks the equivalence against Spark for every column type the lake
-supports.
+Point lookups hash one key to find its bucket. Computing that with
+``F.xxhash64`` costs a Spark job per lookup; :func:`spark_xxhash64`
+returns the same 64-bit value without one. It must match Spark bit for
+bit: the stored buckets were written by the Spark expression, and a probe
+that hashes one key differently reads a bucket that does not hold it.
+``tests/test_point_read.py`` checks the equivalence against Spark for
+every column type the lake supports.
 
 Spark's ``XxHash64(c1, c2, ...)`` starts from seed 42 and folds each
 non-null value into the running hash, used as the next value's seed. Each

@@ -60,7 +60,6 @@ bottleneck, and in this sandbox the shared memory bus plays that role
 
 from __future__ import annotations
 
-import base64
 import datetime
 import json
 import os
@@ -107,16 +106,12 @@ def _fields_schema(fields: list[dict[str, Any]]) -> T.StructType:
     return T.StructType([T.StructField(f["name"], _spark_type(f["type"])) for f in fields])
 
 
-def _hash_ddl(ddl: str, floats: bool) -> str:
-    """The canonical width a key column is hashed at. xxhash64 is width-
-    sensitive (the hash of 5 as int differs from 5 as bigint), so integers
-    always hash as bigint, and Bloom positions (``floats``) hash floats as
-    double: the allowed widenings then keep every stored hash valid."""
-    if ddl in ("int", "bigint"):
-        return "bigint"
-    if floats and ddl in ("float", "double"):
-        return "double"
-    return ddl
+def _hash_ddl(ddl: str) -> str:
+    """The canonical width a bucket column is hashed at. xxhash64 is
+    width-sensitive (the hash of 5 as int differs from 5 as bigint), so
+    integers always hash as bigint: widening int to bigint then keeps every
+    stored bucket valid."""
+    return "bigint" if ddl in ("int", "bigint") else ddl
 
 
 # the Python types a point value may have, per column type: the same
@@ -283,17 +278,19 @@ class LakeTable:
         per row — LWW tiebreaker + per-row lineage watermark) and
         ``_deleted`` (tombstone marker).
 
-        ``bloom_bits`` > 0 additionally stores a per-data-file Bloom
-        filter over the FULL key tuple in the manifest (``bloom_bits``
-        bits, 2 hash probes), enabling planning-time file pruning for
-        point lookups (``read(point=...)``) beyond what the min/max zone
-        maps can do — a hash-distributed key inside one bucket spans the
-        whole zone range, but its Bloom still excludes most files. Costs:
-        ~``bloom_bits/6`` bytes of manifest per live file entry, and MoR
-        merges take a narrow read-back pass instead of reading their
-        stats from parquet footers. False-positive rate for a file with n
-        distinct keys is ``(1 - exp(-2n/bits))^2`` — size bits ≳ 10n for
-        ~3%.
+        ``bloom_bits`` > 0 has the parquet writer build a Bloom filter on
+        every KEY column of each file the merge, ``compact`` and
+        ``rebucket`` write, capped at ``bloom_bits/8`` bytes per column
+        chunk (the default cap grew a 125-row delta file from 10 KB to
+        1 MB). Spark's scan tests a point lookup's pushed key equality
+        against them per row group, so ``read(point=...)`` skips the row
+        groups of a file whose zone range holds the key but whose rows do
+        not — a hash-distributed key inside one bucket spans the whole
+        range. parquet-mr writes no Bloom for a fully dictionary-encoded
+        chunk; its dictionary filter answers the same equality there. The
+        filters are built inside the write job, so merges still take
+        their stats from the footers with no read-back. ``bloom`` fields
+        that older versions stored on manifest entries are ignored.
         """
         assert write_mode in ("mor", "cow")
         key = key or ["url", "warc_ts"]
@@ -333,7 +330,7 @@ class LakeTable:
             # values, so pruning on them can never split a key across
             # kept/skipped files and MoR LWW resolution stays exact.
             "zone_cols": [c for c in key],
-            # per-file key Bloom filters (0 = disabled): see create() doc
+            # parquet key Bloom cap in bits (0 = none): see create() doc
             "bloom_bits": int(bloom_bits),
             # bound on live entry-group files per manifest (0 = never
             # coalesce): when a commit's pruned group list exceeds this,
@@ -372,9 +369,8 @@ class LakeTable:
     # group files that are still live. Commit metadata is therefore
     # O(delta + #groups), not O(table): a steady-state MoR append writes
     # one entry per touched bucket instead of re-serializing every
-    # accumulated entry (with its zone bounds and Bloom blob) on every
-    # commit — the same reason Iceberg splits snapshots into manifest
-    # files. Readers fold the groups in order (replaces drop earlier
+    # accumulated entry (with its zone bounds) on every commit — the same
+    # reason Iceberg splits snapshots into manifest files. Readers fold the groups in order (replaces drop earlier
     # entries for a bucket, adds append) and the resolved map is cached
     # per version; group files are cached by name and shared across
     # versions. Compaction/rebucket replace whole buckets, after which
@@ -695,16 +691,6 @@ class LakeTable:
                         f"{sorted(self._BUCKET_SAFE_WIDENINGS)} is "
                         "hash-invariant"
                     )
-                if self._bloom_bits(m) and name in m["key"] and \
-                        (f["type"], new_type) not in self._BLOOM_SAFE_WIDENINGS:
-                    raise ValueError(
-                        f"cannot widen bloom'd key column {f['type']} -> "
-                        f"{new_type}: stored Bloom filters hashed the old "
-                        "width, so probes would false-negative and point "
-                        f"reads would MISS rows; only "
-                        f"{sorted(self._BLOOM_SAFE_WIDENINGS)} keeps the "
-                        "probe hash stable"
-                    )
                 f["type"] = new_type
                 break
         else:
@@ -816,107 +802,32 @@ class LakeTable:
                 return False
         return True
 
-    # ----------------------------------------------------- key bloom filters
-    # Two probe positions per key (k=2), derived from xxhash64 over the
-    # typed key columns with distinct seeds. The write side builds each
-    # file's filter with the Spark expression below; a point read computes
-    # the key's positions on the driver (_point_probe, sparkhash.py), so
-    # the two must agree bit for bit — a probe that hashes a key
-    # differently reads as "absent" and drops the file holding it.
-    # tests/test_point_read.py checks the driver hash against these
-    # expressions for every column type. collect_set is bounded by
-    # bloom_bits distinct positions per file, so the aggregation state is
-    # O(bits), not O(rows).
-    _BLOOM_SEEDS = (0x51ED, 0x00C0FFEE)
-
-    def _bloom_bits(self, m: dict[str, Any]) -> int:
-        return int(m.get("bloom_bits", 0) or 0)
-
-    # widenings of a bloom'd KEY column that keep the probe hash stable
-    # under the canonical casts below (int/bigint hash at bigint width,
-    # float/double at double width — xxhash64 is width-sensitive, the
-    # same trap as _bucket_expr / ADVICE r4)
-    _BLOOM_SAFE_WIDENINGS = {("int", "bigint"), ("float", "double")}
-
-    def _bloom_pos_exprs(self, m: dict[str, Any]) -> list[F.Column]:
-        bits = self._bloom_bits(m)
-        types = {f["name"]: f["type"] for f in self.schema_fields(m)}
-        cols = [F.col(k).cast(_hash_ddl(types[k], True)) for k in m["key"]]
-        return [
-            F.pmod(F.xxhash64(*cols, F.lit(s)), F.lit(bits)).cast("long")
-            for s in self._BLOOM_SEEDS
-        ]
-
-    def _bloom_aggs(self, m: dict[str, Any]) -> list[F.Column]:
-        p0, p1 = self._bloom_pos_exprs(m)
-        return [
-            F.collect_set(p0).alias("__bl0"),
-            F.collect_set(p1).alias("__bl1"),
-        ]
-
-    def _blooms_from_rows(self, m: dict[str, Any], rows) -> dict[int, str]:
-        bits = self._bloom_bits(m)
-        out: dict[int, str] = {}
-        for r in rows:
-            positions = set(r["__bl0"] or []) | set(r["__bl1"] or [])
-            if not positions:
-                continue
-            ba = bytearray((bits + 7) // 8)
-            for p in positions:
-                ba[p >> 3] |= 1 << (p & 7)
-            out[int(r["b"])] = base64.b64encode(bytes(ba)).decode()
-        return out
-
-    @staticmethod
-    def _bloom_may_contain(entry: dict[str, Any], positions: list[int]) -> bool:
-        """False only when the file PROVABLY lacks the key. Entries
-        without a filter (legacy files, disabled tables) are kept —
-        like zone maps, pruning is an optimization, never a correctness
-        filter."""
-        enc = entry.get("bloom")
-        if not enc:
-            return True
-        ba = base64.b64decode(enc)
-        return all(ba[p >> 3] & (1 << (p & 7)) for p in positions)
-
-    def _point_probe(self, m: dict[str, Any], point: dict[str, Any]):
-        """The point key's bucket and Bloom probe positions, hashed on the
-        driver with no Spark job. The values are what ``_bucket_expr`` and
-        ``_bloom_pos_exprs`` compute for the key's row: each value is
-        converted to Spark's internal form of its column type, cast to the
-        same canonical hash width, and hashed by ``spark_xxhash64``, which
-        reproduces Spark's ``xxhash64`` bit for bit (a mismatch would prune
-        away the file that holds the key; tests/test_point_read.py checks
-        the equivalence). Returns ``(bucket or None, positions)``."""
+    def _point_probe(self, m: dict[str, Any], point: dict[str, Any]) -> int | None:
+        """The point key's bucket, hashed on the driver with no Spark job,
+        or None when the bucket column is not part of the key (the read
+        then spans every bucket). The value is what ``_bucket_expr``
+        computes for the key's row: the bucket value is converted to
+        Spark's internal form of its column type, cast to the same
+        canonical hash width, and hashed by ``spark_xxhash64``, which
+        reproduces Spark's ``xxhash64`` bit for bit (a mismatch would read
+        the wrong bucket and miss the key; tests/test_point_read.py checks
+        the equivalence). Every key value is type-checked the same way."""
         if sorted(point) != sorted(m["key"]):
             raise ValueError(
                 f"point lookup needs the full key {m['key']}; got {sorted(point)}"
             )
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
         vals = {k: _point_internal(k, types[k], point[k]) for k in m["key"]}
-        # the bucket is computable only when the bucket column is part of
-        # the key (the normal CDC layout); otherwise fall back to
-        # bloom-only pruning across all buckets
-        bucket = None
         bc = m["bucket_col"]
-        if bc in m["key"]:
-            h = spark_xxhash64([(_hash_ddl(types[bc], False), vals[bc])])
-            bucket = h % m["n_buckets"]
-        positions = []
-        bits = self._bloom_bits(m)
-        if bits:
-            cols = [(_hash_ddl(types[k], True), vals[k]) for k in m["key"]]
-            positions = [
-                spark_xxhash64([*cols, ("int", s)]) % bits for s in self._BLOOM_SEEDS
-            ]
-        return bucket, positions
+        if bc not in m["key"]:
+            return None
+        return spark_xxhash64([(_hash_ddl(types[bc]), vals[bc])]) % m["n_buckets"]
 
     def _read_raw(
         self,
         m: dict[str, Any],
         buckets: list[int] | None,
         zones: dict[str, tuple] | None = None,
-        bloom_positions: list[int] | None = None,
     ) -> DataFrame | None:
         """Union all data files (schema-reconciled), no LWW resolution."""
         current = self.schema_fields(m)
@@ -926,8 +837,6 @@ class LakeTable:
                 continue
             for e in entries:
                 if zones and not self._zone_overlaps(e, zones):
-                    continue
-                if bloom_positions and not self._bloom_may_contain(e, bloom_positions):
                     continue
                 groups.setdefault(str(e["schema_version"]), []).append(
                     os.path.join(self.path, e["path"])
@@ -997,25 +906,22 @@ class LakeTable:
         table, not a superset.
 
         ``point={key_col: value, ...}`` (full key tuple) is the point
-        lookup. The driver hashes the key to its bucket and Bloom probe
-        positions with a pure-Python copy of Spark's ``xxhash64`` (see
-        ``_point_probe``; it must match the Spark expressions that wrote
-        the buckets and filters bit for bit, and tests/test_point_read.py
-        checks that it does). The scan is pruned to that ONE bucket and
-        (when the table was created with ``bloom_bits``) to the files
-        whose Bloom may contain the key. The exact key-equality filter
-        leaves only versions of that one key, so LWW resolution is a
-        top-1 by ``_seq`` with no shuffle: collecting the result is one
-        Spark job. On a 10^5-file table this reads a handful of files
-        instead of a bucket's worth; without blooms it still prunes to
-        the bucket. A value of the wrong Python type for its column
+        lookup. The driver hashes the key to its bucket with a pure-Python
+        copy of Spark's ``xxhash64`` (see ``_point_probe``; it must match
+        ``_bucket_expr`` bit for bit, and tests/test_point_read.py checks
+        that it does), and the scan opens only that ONE bucket's files.
+        The exact key equality is pushed down to parquet, whose row-group
+        statistics, dictionaries and (tables created with ``bloom_bits``)
+        key Blooms skip the row groups that cannot hold the key. The
+        equality leaves only versions of that one key, so LWW resolution
+        is a top-1 by ``_seq`` with no shuffle: collecting the result is
+        one Spark job. A value of the wrong Python type for its column
         raises ValueError. Mutually exclusive with ``buckets``/``zones``."""
         m = self.manifest(version)
-        bloom_positions: list[int] | None = None
         if point is not None:
             if buckets is not None or zones is not None:
                 raise ValueError("point is mutually exclusive with buckets/zones")
-            b, bloom_positions = self._point_probe(m, point)
+            b = self._point_probe(m, point)
             buckets = [b] if b is not None else None
         if zones:
             zc = set(self._zone_cols(m))
@@ -1026,7 +932,7 @@ class LakeTable:
                     "(non-key pruning would split keys across kept/skipped "
                     "files and break LWW resolution)"
                 )
-        raw = self._read_raw(m, buckets, zones, bloom_positions)
+        raw = self._read_raw(m, buckets, zones)
         if raw is None:
             empty = self.spark.createDataFrame([], self.spark_schema(m))
             return empty if include_deleted else empty.drop(DELETED_COL)
@@ -1068,7 +974,7 @@ class LakeTable:
         # cast is free (fits the codegen'd hash call) and makes the
         # int->bigint promotion hash-invariant from table creation.
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
-        col = F.col(m["bucket_col"]).cast(_hash_ddl(types[m["bucket_col"]], False))
+        col = F.col(m["bucket_col"]).cast(_hash_ddl(types[m["bucket_col"]]))
         return F.pmod(F.xxhash64(col), F.lit(m["n_buckets"])).cast("int")
 
     @staticmethod
@@ -1275,7 +1181,7 @@ class LakeTable:
             .select(
                 *data_cols,
                 F.col("seq").alias(SEQ_COL),
-                (F.col("op") == "D").alias(DELETED_COL),
+                F.when(F.col("op") == "D", F.lit(True)).alias(DELETED_COL),
                 F.col("__b").alias("b"),
             )
         )
@@ -1293,12 +1199,18 @@ class LakeTable:
         )
 
     # zone-col types whose parquet footer min/max are EXACT mirrors of the
-    # manifest representation (_zone_expr): int64/int32 raw values, and
+    # manifest representation (_zone_expr): int64/int32 raw values,
     # fixed-width temporal raw values (timestamp-micros == unix_micros,
-    # date32 days == unix_date). Strings are excluded (writers may
-    # truncate binary stats) and doubles are excluded (parquet stats omit
-    # NaN; Spark's max sorts NaN greatest — the bounds could disagree).
-    _FOOTER_ZONE_TYPES = ("bigint", "int", "timestamp", "date")
+    # date32 days == unix_date), and strings through pyarrow's decoded
+    # min/max. parquet-mr orders UTF-8 chunk statistics by unsigned bytes,
+    # which is Spark's string order and Python's code-point order, and
+    # does not truncate them: it omits min/max for a chunk whose min or
+    # max value is over 4 KB, and such a chunk sends the caller to the
+    # read-back. (A
+    # writer configured to truncate would widen the bounds, never narrow
+    # them.) Doubles are excluded (parquet stats omit NaN; Spark's max
+    # sorts NaN greatest — the bounds could disagree).
+    _FOOTER_ZONE_TYPES = ("bigint", "int", "timestamp", "date", "string")
 
     def _footer_stats_zones(
         self,
@@ -1312,7 +1224,8 @@ class LakeTable:
         ~35% of the MoR merge wall; footers hold the same numbers).
 
         Requires the TRUE-or-NULL ``_deleted`` coding (tombstones =
-        footer ``num_values - null_count``) and int-backed zone cols.
+        footer ``num_values - null_count``) and ``_FOOTER_ZONE_TYPES``
+        zone cols.
         Returns ``(stats_rows, zones)`` or ``None`` when any needed
         statistic is missing — the caller then falls back to the Spark
         read-back, so this is only ever an optimization, never a
@@ -1366,7 +1279,10 @@ class LakeTable:
                             if zst.has_null_count and zst.null_count == cc.num_values:
                                 continue
                             return None
-                        lo, hi = zst.min_raw, zst.max_raw
+                        if types[c] == "string":
+                            lo, hi = zst.min, zst.max
+                        else:
+                            lo, hi = zst.min_raw, zst.max_raw
                         cur = zb[c]
                         cur[0] = lo if cur[0] is None else min(cur[0], lo)
                         cur[1] = hi if cur[1] is None else max(cur[1], hi)
@@ -1391,43 +1307,73 @@ class LakeTable:
         }
 
     @staticmethod
-    def _entry(
-        m: dict[str, Any], rel: str, b: int, zones: dict[int, dict], blooms: dict[int, str]
-    ) -> dict[str, Any]:
+    def _entry(m: dict[str, Any], rel: str, b: int, zones: dict[int, dict]) -> dict[str, Any]:
         entry = {"path": os.path.join(rel, f"b={b}"), "schema_version": m["schema_version"]}
         if b in zones:
             entry["zones"] = zones[b]
-        if b in blooms:
-            entry["bloom"] = blooms[b]
         return entry
 
+    def _write(self, m: dict[str, Any], rows: DataFrame, out_dir: str) -> set[int]:
+        """Write ``rows`` (cols: data..., _seq, _deleted, b) as one
+        directory per bucket and return the buckets written. On a table
+        created with ``bloom_bits`` the parquet writer also builds a Bloom
+        filter per key column, capped at ``bloom_bits/8`` bytes, inside
+        the same job. Runs without AQE: the plan is fixed-shape (an
+        explicit bucket repartition feeding a partitioned write), so AQE
+        could only re-plan it."""
+        w = rows.write.partitionBy("b").mode("overwrite")
+        bits = int(m.get("bloom_bits", 0) or 0)
+        if bits:
+            w = w.option("parquet.bloom.filter.max.bytes", str(max(bits // 8, 1)))
+            for k in m["key"]:
+                w = w.option(f"parquet.bloom.filter.enabled#{k}", "true")
+        with _no_aqe(self.spark):
+            w.parquet(out_dir)
+        return self._written_buckets(out_dir)
+
+    def _stats_zones(
+        self, m: dict[str, Any], out_dir: str, written: set[int], zone_cols: list[str]
+    ) -> tuple[list[tuple], dict[int, dict[str, list]]]:
+        """Per-bucket ``(b, max _seq, live rows, tombstones)`` and zone
+        bounds of the files just written to ``out_dir``. On a local FS the
+        parquet footers answer with no Spark job; a non-local FS seam (an
+        object store would add a ranged-GET footer method), no pyarrow or
+        footers without the needed statistics take ONE read-back
+        (``_readback``) instead."""
+        if not written:
+            return [], {}
+        if type(self.fs) is LocalFS:
+            footer = self._footer_stats_zones(out_dir, written, m, zone_cols)
+            if footer is not None:
+                return footer
+        return self._readback(m, out_dir, zone_cols)
+
     def _readback(
-        self,
-        m: dict[str, Any],
-        out_dir: str,
-        zone_cols: list[str],
-        aggs: list[F.Column],
-    ) -> tuple[list, dict[int, dict[str, list]], dict[int, str]]:
-        """Per-bucket ``aggs``, zone bounds and (Bloom tables) key Blooms of
-        the files just written to ``out_dir`` under ``m``'s current schema:
-        one narrow pass that reads only the columns the aggregates use.
-        The read takes the manifest's schema plus the ``b`` partition
-        column, so it needs no schema-inference job. Returns ``(rows,
-        zones, blooms)``."""
-        bloom_on = self._bloom_bits(m) > 0
+        self, m: dict[str, Any], out_dir: str, zone_cols: list[str]
+    ) -> tuple[list[tuple], dict[int, dict[str, list]]]:
+        """``_stats_zones`` by a Spark job: one narrow pass over the files
+        just written to ``out_dir`` that reads only the columns the
+        aggregates use. The read takes ``m``'s schema plus the ``b``
+        partition column, so it needs no schema-inference job."""
         aggs = [
-            *aggs,
+            F.max(SEQ_COL).alias("applied_max_seq"),
+            F.count(F.lit(1)).alias("n"),
+            # coalesce: with the TRUE-or-NULL tombstone coding a
+            # delete-free bucket sums NULL, not 0
+            F.coalesce(F.sum(F.col(DELETED_COL).cast("long")), F.lit(0)).alias(
+                "rows_deleted"
+            ),
             *self._zone_aggs(m, zone_cols),
-            *(self._bloom_aggs(m) if bloom_on else []),
         ]
-        if not aggs:
-            return [], {}, {}
         schema = self.spark_schema(m).add("b", T.IntegerType())
         agged = self.spark.read.schema(schema).parquet(out_dir).groupBy("b").agg(*aggs)
         with _no_aqe(self.spark):
             rows = agged.collect()
-        blooms = self._blooms_from_rows(m, rows) if bloom_on else {}
-        return rows, self._zones_from_rows(rows, zone_cols), blooms
+        stats = [
+            (int(r["b"]), r["applied_max_seq"], r["n"] - r["rows_deleted"], r["rows_deleted"])
+            for r in rows
+        ]
+        return stats, self._zones_from_rows(rows, zone_cols)
 
     def _finish_merge(
         self,
@@ -1442,13 +1388,10 @@ class LakeTable:
         """Write ``out_rows`` (cols: data..., _seq, _deleted, b), derive
         lineage stats, and commit the manifest atomically.
 
-        The mor path (``stats_rows`` None) reads its per-bucket stats and
-        zone bounds from the parquet footers just written — no second
-        Spark job. Bloom tables, a non-local FS seam or footers without
-        the needed statistics take ONE narrow read-back of the written
-        files instead (``_readback``), which also builds the Blooms; cow
-        brings its stats from its narrow pre-pass and reads back only
-        zones and Blooms."""
+        Stats and zone bounds come from ``_stats_zones``: the parquet
+        footers just written, with no second Spark job, or the one
+        read-back fallback. cow brings its lineage stats from its narrow
+        pre-pass and takes only the zones."""
         rel = self._new_data_dir(m, "")
         out_dir = os.path.join(self.path, rel)
 
@@ -1464,42 +1407,14 @@ class LakeTable:
         if not replace:
             types = {f["name"]: f["type"] for f in self.schema_fields(m)}
             zone_cols = [c for c in zone_cols if types[c] != "string"]
-        zones: dict[int, dict[str, list]] = {}
-        blooms: dict[int, str] = {}
-        bloom_on = self._bloom_bits(m) > 0
-        with _no_aqe(self.spark):
-            out_rows.write.partitionBy("b").mode("overwrite").parquet(out_dir)
-
-        written = self._written_buckets(out_dir)
+        written = self._write(m, out_rows, out_dir)
         if affected is None:
             affected = sorted(written)
         if not written and not affected:  # empty mor batch: no-op commit
             return self._commit_noop(m, batch_key, commit_retries=commit_retries)
-        footer = None
-        # the footer seam is local-FS only; an object-store fs would add a
-        # ranged-GET footer method. Blooms need a collect_set per file,
-        # which footers do not hold (documented cost in create())
-        if stats_rows is None and not bloom_on and type(self.fs) is LocalFS:
-            footer = self._footer_stats_zones(out_dir, written, m, zone_cols)
-        if footer is not None:
-            stats_rows, zones = footer
-        elif written:
-            stat_aggs = [] if stats_rows is not None else [
-                F.max(SEQ_COL).alias("applied_max_seq"),
-                F.count(F.lit(1)).alias("n"),
-                # coalesce: with the TRUE-or-NULL tombstone coding a
-                # delete-free bucket sums NULL, not 0
-                F.coalesce(F.sum(F.col(DELETED_COL).cast("long")), F.lit(0)).alias(
-                    "rows_deleted"
-                ),
-            ]
-            back, zones, blooms = self._readback(m, out_dir, zone_cols, stat_aggs)
-            if stats_rows is None:
-                stats_rows = [
-                    (int(r["b"]), r["applied_max_seq"], r["n"] - r["rows_deleted"],
-                     r["rows_deleted"])
-                    for r in back
-                ]
+        written_stats, zones = self._stats_zones(m, out_dir, written, zone_cols)
+        if stats_rows is None:
+            stats_rows = written_stats
 
         rows_upserted = sum(r[2] for r in stats_rows)
         rows_deleted = sum(r[3] for r in stats_rows)
@@ -1517,7 +1432,7 @@ class LakeTable:
                 # schema commit, readers still resolve these files against
                 # the schema their parquet footers actually carry
                 new_buckets.setdefault(str(b), []).append(
-                    self._entry(m, rel, b, zones, blooms)
+                    self._entry(m, rel, b, zones)
                 )
 
             ledger, floors = self._advance_ledger(base, batch_key, max_seq)
@@ -1692,12 +1607,10 @@ class LakeTable:
         m_out: dict[str, Any],
         suffix: str,
         expire_tombstones: bool = False,
-        aggs: tuple[F.Column, ...] = (),
-    ) -> tuple[dict[str, list], list]:
+    ) -> tuple[dict[str, list], dict[str, int]]:
         """Write ``_rewrite_rows`` as one file per bucket of ``m_out``'s
-        layout. Returns the new ``{bucket: [entry]}`` map (zone bounds and
-        Blooms from one read-back, which also computes ``aggs`` per
-        bucket) and the read-back rows."""
+        layout. Returns the new ``{bucket: [entry]}`` map and each written
+        bucket's max ``_seq``, both from ``_stats_zones``."""
         rel = self._new_data_dir(m, suffix)
         out_dir = os.path.join(self.path, rel)
         rows = self._rewrite_rows(m, buckets, m_out)
@@ -1705,25 +1618,21 @@ class LakeTable:
         if rows is not None:
             if expire_tombstones:
                 rows = rows.filter(~F.col(DELETED_COL))
-            # a fixed-shape plan like the merge write: AQE only re-plans
-            with _no_aqe(self.spark):
-                rows.write.partitionBy("b").mode("overwrite").parquet(out_dir)
-            written = self._written_buckets(out_dir)
-        back, zones, blooms = [], {}, {}
-        if written:
-            back, zones, blooms = self._readback(
-                m, out_dir, self._zone_cols(m), list(aggs)
-            )
-        entries = {str(b): [self._entry(m, rel, b, zones, blooms)] for b in sorted(written)}
-        return entries, back
+            # the merge's TRUE-or-NULL tombstone coding, so footer
+            # null counts mean the same in every file
+            rows = rows.withColumn(DELETED_COL, F.when(F.col(DELETED_COL), F.lit(True)))
+            written = self._write(m, rows, out_dir)
+        stats, zones = self._stats_zones(m, out_dir, written, self._zone_cols(m))
+        entries = {str(b): [self._entry(m, rel, b, zones)] for b in sorted(written)}
+        return entries, {str(b): mx for b, mx, _up, _dl in stats}
 
     def rebucket(self, n_buckets: int) -> int:
         """Partition evolution: change the bucket count in ONE atomic
         commit (full rewrite — bucket membership is ``pmod(xxhash64(url),
         n)``, so every row can move). Re-derives the per-bucket watermark
-        map under the new bucketing in the same narrow pass that computes
-        the new zone bounds, so ``resume_watermarks()`` stays O(1) and
-        correct across the evolution. Use when the table outgrows its
+        map under the new bucketing from the same footers (or read-back)
+        that give the new zone bounds, so ``resume_watermarks()`` stays
+        O(1) and correct across the evolution. Use when the table outgrows its
         bucket count (hot buckets, oversized files) — the CDC analog of
         Iceberg's partition-spec evolution, except eager: this format
         addresses files THROUGH bucket ids, so lazy multi-spec reads
@@ -1732,9 +1641,8 @@ class LakeTable:
         m = self.manifest()
         if n_buckets == m["n_buckets"]:
             return 0
-        new_buckets, back = self._rewrite(
-            m, None, dict(m, n_buckets=n_buckets), "_rebucket",
-            aggs=(F.max(SEQ_COL).alias("__wm"),),
+        new_buckets, watermarks = self._rewrite(
+            m, None, dict(m, n_buckets=n_buckets), "_rebucket"
         )
         m2 = dict(
             m,
@@ -1742,7 +1650,7 @@ class LakeTable:
             parent=m["version"],
             n_buckets=n_buckets,
             buckets=new_buckets,
-            watermarks={str(int(r["b"])): r["__wm"] for r in back},
+            watermarks=watermarks,
             metrics=[],
             summary={"operation": "rebucket", "n_buckets": n_buckets},
         )

@@ -381,11 +381,15 @@ def connected_components(
     # paying full Spark job latency) is skipped outright: collect the
     # bounded edge list, run the same exact min-root union-find, and
     # label every vertex with one broadcast join. Same bounded-metadata
-    # rule and the same gate as the quotient-graph finish below (x2:
-    # ``und`` carries both directions of each edge); the distributed
-    # path above the gate — the 10^10-doc shape — is unchanged.
-    if und.count() <= 2 * driver_finish_max_edges:
-        mapping = _min_root_labels(und.collect())
+    # rule and the same gate as the quotient-graph finish below. ``und``
+    # holds both directions of every edge and any repeated edges, while
+    # union-find needs each edge once in one direction, so the gate counts
+    # and the driver collects only the distinct ``a <= b`` edges: at most
+    # ``driver_finish_max_edges`` rows. The distributed path above the
+    # gate — the 10^10-doc shape — is unchanged.
+    one_way = und.filter(F.col("a") <= F.col("b")).distinct()
+    if one_way.count() <= driver_finish_max_edges:
+        mapping = _min_root_labels(one_way.collect())
         spark = edges.sparkSession
         a_type = und.schema["a"].dataType.simpleString()
         if mapping:

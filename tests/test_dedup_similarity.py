@@ -324,9 +324,9 @@ def test_connected_components_driver_finish_equals_loop(spark):
         ).collect()
     }
     assert via_driver == via_loop
-    # r6b three-way: a gate that skips the EARLY full-edge finish (und
-    # holds 2x|edges| rows > 2*gate) but still admits the contracted
-    # quotient graph exercises the middle hop/contract+union-find tier
+    # r6b three-way: a gate that skips the EARLY full-edge finish (~358
+    # distinct edges > gate) but still admits the contracted quotient
+    # graph exercises the middle hop/contract+union-find tier
     via_quotient = {
         r["doc_id"]: r["cluster_id"]
         for r in connected_components(
@@ -334,6 +334,37 @@ def test_connected_components_driver_finish_equals_loop(spark):
         ).collect()
     }
     assert via_driver == via_quotient
+
+
+def test_connected_components_driver_finish_collects_each_edge_once(
+    spark, monkeypatch
+):
+    """The early driver finish hands union-find each distinct edge once,
+    in one direction: repeated edges and both orientations of an edge
+    would use up to twice the documented ``driver_finish_max_edges``
+    bound of driver memory."""
+    from go_bqloader_spark.operators import dedup
+
+    seen = []
+    real = dedup._min_root_labels
+
+    def spy(rows):
+        rows = list(rows)
+        seen.append(sorted((r["a"], r["b"]) for r in rows))
+        return real(rows)
+
+    monkeypatch.setattr(dedup, "_min_root_labels", spy)
+    # 1-2 three times (once reversed), 2-3 twice, a self-loop, 7-8
+    edges = [(1, 2), (2, 1), (1, 2), (2, 3), (3, 2), (5, 5), (8, 7)]
+    e = spark.createDataFrame(edges, "d1 bigint, d2 bigint")
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.connected_components(
+            e, id_col="doc_id", driver_finish_max_edges=4
+        ).collect()
+    }
+    assert seen == [[(1, 2), (2, 3), (5, 5), (7, 8)]]
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 8: 7}
 
 
 def test_near_dup_clusters_end_to_end(spark):

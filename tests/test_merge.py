@@ -5,6 +5,7 @@ reference's fake-boundary golden E2E tests
 (``/root/reference/bqloader_test.go:13-77``).
 """
 
+import datetime as dt
 import sys
 from types import SimpleNamespace
 
@@ -955,6 +956,58 @@ def test_footer_stats_match_spark_readback(spark, tmp_path, changes, monkeypatch
            for r in t_spark.read(include_deleted=True).collect()}
     assert got == exp
     assert all(r[2] in (True, False) for r in got)
+
+
+@pytest.mark.parametrize("op", ["compact", "rebucket"])
+@pytest.mark.parametrize("long_key", [False, True])
+def test_rewrite_footer_zones_match_spark_readback(spark, tmp_path, monkeypatch, op, long_key):
+    """compact and rebucket take their zone bounds — string url bounds
+    included — and rebucket its watermarks from the footers, with no
+    read-back; they equal what the read-back derives. A chunk whose max
+    url is over 4 KB has no footer min/max (parquet-mr omits them), so
+    that rewrite falls back to the read-back, with the same result."""
+    rows = [
+        (("D" if j % 7 == 3 else "U"), j, f"https://h{j % 3}.org/{j:03d}",
+         dt.datetime(2024, 1, 1 + j % 9), None, f"t{j}", "en")
+        for j in range(60)
+    ]
+    if long_key:
+        # h9 sorts after every other host: the max of its chunk
+        rows.append(("U", 99, "https://h9.org/" + "x" * 5000,
+                     dt.datetime(2024, 2, 1), None, "long", "en"))
+    ddl = ("op string, seq bigint, url string, warc_ts timestamp, "
+           "html binary, text string, lang string")
+    readbacks = []
+    real = LakeTable._readback
+
+    def spy(self, *a):
+        readbacks.append(op)
+        return real(self, *a)
+
+    monkeypatch.setattr(LakeTable, "_readback", spy)
+
+    def rewritten(path):
+        t = LakeTable.create(spark, str(path), PAGE_COLS, n_buckets=2, bloom_bits=1024)
+        for i in range(2):
+            t.merge(spark.createDataFrame(rows[i::2], ddl), batch_key=("q", i))
+        readbacks.clear()
+        assert (t.compact() if op == "compact" else t.rebucket(3)) > 0
+        return t, len(readbacks)
+
+    t_footer, n_footer = rewritten(tmp_path / "footer")
+    with monkeypatch.context() as mp:
+        mp.setattr(LakeTable, "_footer_stats_zones", lambda self, *a, **kw: None)
+        t_spark, n_spark = rewritten(tmp_path / "fallback")
+    assert (n_footer, n_spark) == (int(long_key), 1)
+
+    def zmap(t):
+        return {b: [e.get("zones") for e in es] for b, es in t.manifest()["buckets"].items()}
+
+    zf = zmap(t_footer)
+    assert zf == zmap(t_spark)
+    assert all(set(z) == {"url", "warc_ts"} for zs in zf.values() for z in zs)
+    assert t_footer.resume_watermarks() == t_spark.resume_watermarks()
+    assert _sorted_state(t_footer.read()) == _sorted_state(t_spark.read())
 
 
 def test_footer_stats_all_null_zone_col(spark, tmp_path):

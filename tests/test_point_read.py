@@ -1,5 +1,5 @@
 """Point lookups (``read(point=...)``): the driver-side key hash must equal
-the Spark expressions that wrote the buckets and Bloom filters, a lookup
+Spark's ``xxhash64`` and the expression that wrote the buckets, a lookup
 must cost exactly one Spark job, and lookups and scans must stay exact
 across schema evolution (old files are read with their own schema
 version's explicit schema)."""
@@ -10,8 +10,11 @@ import random
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from go_bqloader_spark.lake import LakeTable
-from go_bqloader_spark.lake.table import _DDL_TO_SPARK
+from go_bqloader_spark.lake.sparkhash import spark_xxhash64
+from go_bqloader_spark.lake.table import _DDL_TO_SPARK, _hash_ddl, _point_internal
 
 UTC = dt.timezone.utc
 PDT = dt.timezone(dt.timedelta(hours=-7))
@@ -45,23 +48,40 @@ EDGE_VALUES = {
 }
 
 
+def _widths(t, m):
+    """Each key column's type and the widths it is hashed at: its own and
+    its canonical bucket width."""
+    types = {f["name"]: f["type"] for f in t.schema_fields(m)}
+    return [(k, types[k], w) for k in m["key"] for w in (types[k], _hash_ddl(types[k]))]
+
+
 def _spark_probes(t, m, df):
-    """(bucket or None, [p0, p1]) per row of ``df``, from the write-side
-    Spark expressions."""
+    """(bucket or None, xxhash64 of the key) per row of ``df``, from the
+    Spark expressions: ``_bucket_expr`` and ``F.xxhash64`` over every key
+    column cast to each of its hash widths."""
     has_bucket = m["bucket_col"] in m["key"]
-    p0, p1 = t._bloom_pos_exprs(m)
-    sel = [p0.alias("p0"), p1.alias("p1")]
+    sel = [F.xxhash64(*(F.col(k).cast(w) for k, _, w in _widths(t, m))).alias("h")]
     if has_bucket:
         sel.append(t._bucket_expr(m).alias("b"))
-    return [
-        (r["b"] if has_bucket else None, [r["p0"], r["p1"]])
-        for r in df.select(*sel).collect()
-    ]
+    return [(r["b"] if has_bucket else None, r["h"]) for r in df.select(*sel).collect()]
+
+
+def _driver_probes(t, m, key_rows):
+    """The same pairs from the driver: ``_point_probe`` and
+    ``spark_xxhash64`` over the values' internal forms."""
+    out = []
+    for row in key_rows:
+        point = dict(zip(m["key"], row))
+        h = spark_xxhash64(
+            (w, _point_internal(k, ddl, point[k])) for k, ddl, w in _widths(t, m)
+        )
+        out.append((t._point_probe(m, point), h))
+    return out
 
 
 def _assert_probes_match(t, m, key_rows, df):
     want = _spark_probes(t, m, df)
-    got = [t._point_probe(m, dict(zip(m["key"], row))) for row in key_rows]
+    got = _driver_probes(t, m, key_rows)
     bad = [(row, g, w) for row, g, w in zip(key_rows, got, want) if g != w]
     assert not bad, bad[:5]
 
@@ -73,13 +93,14 @@ def test_edge_values_cover_every_column_type():
 @pytest.mark.parametrize("ddl", sorted(EDGE_VALUES))
 def test_point_probe_matches_spark_hash_exprs(spark, tmp_path, ddl):
     """One key column of each type, also the bucket column: the driver-
-    side bucket and Bloom positions equal ``_bucket_expr`` and
-    ``_bloom_pos_exprs`` over the same Python values through
-    createDataFrame (which fixes what naive datetimes, float keys and
-    dates given as datetimes mean)."""
+    side bucket and ``spark_xxhash64`` (at the column's own width and at
+    its canonical bucket width) equal ``_bucket_expr`` and ``F.xxhash64``
+    over the same Python values through createDataFrame (which fixes
+    what naive datetimes, float keys and dates given as datetimes
+    mean)."""
     t = LakeTable.create(
         spark, str(tmp_path / "t"), [("k", ddl), ("v", "string")], key=["k"],
-        bucket_col="k", n_buckets=7, bloom_bits=8191,
+        bucket_col="k", n_buckets=7,
     )
     m = t.manifest()
     vals = EDGE_VALUES[ddl]
@@ -115,7 +136,7 @@ def test_point_probe_matches_spark_on_composite_keys(spark, tmp_path):
     cols = [(f"c_{d}", d) for d in ddls]
     t = LakeTable.create(
         spark, str(tmp_path / "t"), cols, key=[c for c, _ in cols],
-        bucket_col="c_string", n_buckets=13, bloom_bits=4096,
+        bucket_col="c_string", n_buckets=13,
     )
     m = t.manifest()
     rnd = random.Random(5)
@@ -126,26 +147,35 @@ def test_point_probe_matches_spark_on_composite_keys(spark, tmp_path):
 
 @pytest.mark.parametrize("old,new,vals", [
     ("int", "bigint", [0, -1, 2**31 - 1, -(2**31), 77, None]),
-    ("float", "double", [0.0, -0.0, math.nan, 0.1, 1e39, -2.5, None]),
+    ("float", "double", [0.0, math.nan, 0.1, 1e39, -2.5, None]),
 ])
 def test_point_probe_after_key_widening_matches_stored_hashes(
     spark, tmp_path, old, new, vals
 ):
-    """A key widened after its Blooms were written: probing the widened
-    column with the stored value gives the positions the old-width write
-    recorded. Bucketing is on the key only where it is hash-safe."""
+    """A key widened after its files were written: probing the widened
+    column with a stored value gives the bucket the old-width write
+    routed it to (bucketing is on the key only where that is hash-safe),
+    and the lookup finds every stored key."""
     t = LakeTable.create(
         spark, str(tmp_path / "t"), [("k", old), ("v", "string")], key=["k"],
         bucket_col="k" if old == "int" else "v", n_buckets=5, bloom_bits=2048,
     )
     m_old = t.manifest()
     df = spark.createDataFrame([(v,) for v in vals], f"k {old}")
-    want = _spark_probes(t, m_old, df)
+    want = [b for b, _ in _spark_probes(t, m_old, df)]
+    t.merge(
+        spark.createDataFrame(
+            [("U", i, v, f"v{i}") for i, v in enumerate(vals)],
+            f"op string, seq bigint, k {old}, v string",
+        ),
+        batch_key=("q", 0),
+    )
     stored = [r["k"] for r in df.collect()]  # float32-rounded for floats
     t.widen_column("k", new)
     m_new = t.manifest()
-    got = [t._point_probe(m_new, {"k": v}) for v in stored]
-    assert got == want
+    assert [t._point_probe(m_new, {"k": v}) for v in stored] == want
+    for i, v in enumerate(stored):
+        assert [r["v"] for r in t.read(point={"k": v}).collect()] == [f"v{i}"], v
 
 
 @pytest.mark.parametrize("ddl,value", [
@@ -189,15 +219,14 @@ def test_point_read_is_one_spark_job(spark, spark_jobs, tmp_path, mode):
     )
     if mode == "mor":
         assert t._needs_resolve(t.manifest(), None)  # the top-1 resolve runs
-    # an updated key, a tombstoned key, an untouched key; a missing key
-    # whose Blooms prune every file needs no job at all
-    cases = [("u/3", [300], {1}), ("u/4", [], {1}), ("u/5", [5], {1}), ("u/x", [], {0, 1})]
-    for i, (url, want, want_jobs) in enumerate(cases):
+    # an updated key, a tombstoned key, an untouched key, a missing key
+    cases = [("u/3", [300]), ("u/4", []), ("u/5", [5]), ("u/x", [])]
+    for i, (url, want) in enumerate(cases):
         rows, jobs = spark_jobs(
             f"point-{mode}-{i}", lambda: t.read(point={"url": url}).collect()
         )
         assert [r["n"] for r in rows] == want
-        assert jobs in want_jobs, (url, jobs)
+        assert jobs == 1, (url, jobs)
 
 
 def _evolving_table(spark, tmp_path, mode):

@@ -190,7 +190,7 @@ assert card == {"en": 1, "fr": 1}, card
 print(f"EXPORT OK: funnel={stats['after_dedup']}->{stats['exported_docs']} "
       f"card={card} domain_rollup_ok")
 
-# --- manifest key Blooms: point lookup through the production API ---
+# --- parquet key Blooms: point lookups through the production API ---
 tmp3 = tempfile.mkdtemp(prefix="gbs_bl_")
 tb = LakeTable.create(
     spark, tmp3,
@@ -203,9 +203,23 @@ tb.merge(feed2, batch_key=("bl", 0))
 mrow = tb.read().limit(1).collect()[0]
 pt = tb.read(point={"url": mrow["url"], "warc_ts": mrow["warc_ts"]}).collect()
 assert pt == [mrow], pt
-mman = tb.manifest()
-assert all(e.get("bloom") for es in mman["buckets"].values() for e in es)
-print(f"BLOOM OK: point lookup exact, {sum(len(v) for v in mman['buckets'].values())} entries carry filters")
+# an absent url that sorts right after a stored one, at a stored warc_ts:
+# the row-group statistics, dictionaries or key Blooms of its bucket's
+# files skip every row group, so the scan outputs no row
+miss = tb.read(point={"url": mrow["url"] + "~", "warc_ts": mrow["warc_ts"]})
+assert miss.collect() == []
+plan = miss._jdf.queryExecution().executedPlan()
+if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+    plan = plan.executedPlan()
+scans, stack = [], [plan]
+while stack:
+    node = stack.pop()
+    if node.getClass().getSimpleName() == "FileSourceScanExec":
+        scans.append(node.metrics().get("numOutputRows").get().value())
+    kids = node.children()
+    stack.extend(kids.apply(i) for i in range(kids.size()))
+assert scans and sum(scans) == 0, scans
+print(f"BLOOM OK: point lookup exact, in-range miss scanned {sum(scans)} rows")
 
 # --- per-domain politeness quota at ingest ---
 from go_bqloader_spark.streaming import domain_quota_projector
