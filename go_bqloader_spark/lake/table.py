@@ -15,6 +15,11 @@ interface (SURVEY.md §7 names this exact fallback):
   untouched buckets carry over by manifest reference (the file-pruning
   analog). At 10^10 rows with n_buckets=4096 a batch touching 3 domains
   touches a handful of buckets, not the table.
+- **Point lookups without a Spark job** — ``read(point=...)`` hashes the
+  key to its bucket on the driver, reads that bucket's files there with
+  pyarrow (key columns first, only the row groups whose statistics admit
+  the key) and returns the newest version as a local relation; a Spark
+  scan of the bucket is the fallback off a local FS or without pyarrow.
 - **Two write modes** (Iceberg copy-on-write vs merge-on-read):
   * ``cow`` — merge rewrites affected buckets: (existing ∪ winners) → one
     LWW window → new base files. Read-optimized; write cost O(bucket).
@@ -36,7 +41,8 @@ interface (SURVEY.md §7 names this exact fallback):
   has passed.
 - **Schema evolution** — fields carry stable ids (Iceberg-style); add /
   rename are manifest-only commits; old data files are reconciled on read
-  by id→current-name mapping with NULL fill.
+  by id→current-name mapping with NULL fill (``_reconcile``, one
+  projection for scans and point lookups).
 - **Lineage metrics** — every merge embeds per-bucket applied-offset
   watermarks and row counts in its manifest (the Notifier analog,
   ``/root/reference/notifier.go:17-19``), so lineage commits atomically
@@ -156,10 +162,101 @@ def _point_internal(col: str, ddl: str, v: Any) -> Any:
     return v
 
 
-# per session (by id): [_no_aqe users in flight, the setting the first
-# of them saved]
+def _point_eq(col: str, ddl: str, v: Any) -> F.Column:
+    """Spark's ``col <=> v`` for the internal value ``v`` of type ``ddl``
+    (``_point_internal``), so the Spark point path compares exactly the
+    value the driver hashed and matched. Floating point needs care where
+    the filter is pushed down to parquet, whose min/max statistics leave
+    NaN out and order -0.0 below 0.0: a NaN is matched by ``isnan`` (not
+    pushed down) and a zero as ``IN (0.0, -0.0)``, each of which prunes
+    only what it cannot match."""
+    if v is None:
+        return F.col(col).isNull()
+    if ddl == "timestamp":
+        return F.col(col) == F.timestamp_micros(F.lit(v))
+    if ddl == "date":
+        return F.col(col) == F.date_from_unix_date(F.lit(v))
+    if ddl in ("float", "double") and v != v:
+        return F.isnan(col)
+    t = _spark_type(ddl)
+    if ddl in ("float", "double") and v == 0:
+        return F.col(col).isin(F.lit(0.0).cast(t), F.lit(-0.0).cast(t))
+    return F.col(col) == F.lit(v).cast(t)
+
+
+def _key_rows(t, keys: list[tuple[str, str, Any]]) -> list[int]:
+    """The rows of pyarrow table ``t`` whose key columns match the point
+    as Spark's ``<=>`` does. ``keys`` = (column, current type, internal
+    value) per key column; a file may still hold the int or float its
+    current type was widened from, which the exact casts below bring up. NULL
+    matches only NULL, NaN matches NaN, -0.0 matches 0.0, timestamps
+    compare as epoch micros and dates as epoch days."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    mask = None
+    for name, ddl, v in keys:
+        col = t[name]
+        if v is None:
+            km = pc.is_null(col)
+        else:
+            if ddl == "timestamp":
+                col = col.cast(pa.timestamp("us", col.type.tz)).cast(pa.int64())
+            elif ddl == "date":
+                col = col.cast(pa.int32())
+            elif ddl in ("int", "bigint"):
+                col = col.cast(pa.int64())
+            elif ddl in ("float", "double"):
+                col = col.cast(pa.float64())
+            elif ddl == "binary":
+                v = bytes(v)
+            if ddl in ("float", "double") and v != v:
+                km = pc.is_nan(col)
+            else:
+                km = pc.equal(col, pa.scalar(v, col.type))
+            km = pc.fill_null(km, False)
+        mask = km if mask is None else pc.and_(mask, km)
+    return pc.indices_nonzero(mask).to_pylist()
+
+
+def _group_may_hold(rg, idx: dict[str, int], keys: list[tuple[str, str, Any]]) -> bool:
+    """Can parquet row group ``rg`` hold the point, by its key columns'
+    statistics? ``idx`` maps a column to its index, ``keys`` is as in
+    ``_key_rows``. Only a statistic that proves the point absent drops
+    the group: a missing one keeps it, as does an INT96 or non-micros
+    timestamp chunk (its raw bounds are not epoch micros); a NaN bound or
+    point compares false and keeps it too."""
+    for name, ddl, v in keys:
+        cc = rg.column(idx[name])
+        st = cc.statistics
+        if st is None:
+            continue
+        if v is None:
+            if st.has_null_count and st.null_count == 0:
+                return False
+            continue
+        if not st.has_min_max or cc.physical_type == "INT96" or (
+            ddl == "timestamp" and "timeUnit=microseconds" not in str(st.logical_type)
+        ):
+            continue
+        if cc.physical_type == "BYTE_ARRAY":
+            lo, hi = st.min, st.max
+            v = bytes(v) if ddl == "binary" else v
+        else:
+            lo, hi = st.min_raw, st.max_raw
+        if v < lo or v > hi:
+            return False
+    return True
+
+
+def _hide_deleted(df: DataFrame) -> DataFrame:
+    return df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
+
+
+# per JVM session (by its UUID): [_no_aqe users in flight, the setting
+# the first of them saved]
 _aqe_lock = threading.Lock()
-_aqe_users: dict[int, list] = {}
+_aqe_users: dict[str, list] = {}
 
 
 @contextmanager
@@ -175,15 +272,19 @@ def _no_aqe(spark: SparkSession):
     writer thread may briefly plan its own query without AQE — a
     performance-only effect, never a correctness one.
 
-    Overlapping users of one session (two merges on different threads)
-    share one save: the first to enter saves the caller's setting, the
-    last to leave restores it. Saving per user would let the second save
-    the first's "false" and restore it last, leaving AQE off for the
-    session."""
+    ``spark`` must be the session of the frame the action runs: a
+    ``foreachBatch`` frame belongs to the stream's own session, whose AQE
+    setting is its own. PySpark wraps that session in a new Python object
+    per batch, so users are counted per JVM session. Overlapping users of
+    one session (two merges on different threads) share one save: the
+    first to enter saves the caller's setting, the last to leave restores
+    it. Saving per user would let the second save the first's "false" and
+    restore it last, leaving AQE off for the session."""
+    sid = spark._jsparkSession.sessionUUID()  # noqa: SLF001
     with _aqe_lock:
-        state = _aqe_users.get(id(spark))
+        state = _aqe_users.get(sid)
         if state is None:
-            state = _aqe_users[id(spark)] = [
+            state = _aqe_users[sid] = [
                 0, spark.conf.get("spark.sql.adaptive.enabled", "true")
             ]
             spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -194,7 +295,7 @@ def _no_aqe(spark: SparkSession):
         with _aqe_lock:
             state[0] -= 1
             if state[0] == 0:
-                del _aqe_users[id(spark)]
+                del _aqe_users[sid]
                 spark.conf.set("spark.sql.adaptive.enabled", state[1])
 
 
@@ -282,12 +383,15 @@ class LakeTable:
         every KEY column of each file the merge, ``compact`` and
         ``rebucket`` write, capped at ``bloom_bits/8`` bytes per column
         chunk (the default cap grew a 125-row delta file from 10 KB to
-        1 MB). Spark's scan tests a point lookup's pushed key equality
-        against them per row group, so ``read(point=...)`` skips the row
-        groups of a file whose zone range holds the key but whose rows do
-        not — a hash-distributed key inside one bucket spans the whole
-        range. parquet-mr writes no Bloom for a fully dictionary-encoded
-        chunk; its dictionary filter answers the same equality there. The
+        1 MB). Spark's scan tests a pushed-down key equality against them
+        per row group — the Spark point path (``read(point=...)``'s
+        fallback) and ``read().where(key == ...)`` scans — so it skips the
+        row groups of a file whose zone range holds the key but whose
+        rows do not: a hash-distributed key inside one bucket spans the
+        whole range. The driver's point path reads with pyarrow, which
+        reads no parquet Bloom; it prunes row groups by statistics only.
+        parquet-mr writes no Bloom for a fully dictionary-encoded chunk;
+        its dictionary filter answers the same equality there. The
         filters are built inside the write job, so merges still take
         their stats from the footers with no read-back. ``bloom`` fields
         that older versions stored on manifest entries are ignored.
@@ -788,19 +892,49 @@ class LakeTable:
                 out[int(r["b"])] = z
         return out
 
-    @staticmethod
-    def _zone_overlaps(entry: dict[str, Any], zones: dict[str, tuple]) -> bool:
+    # widenings after which a zone bound recorded under the old type is
+    # still the current zone expression's value (a date's epoch days are
+    # not a timestamp's epoch micros)
+    _ZONE_KEEPS_VALUE = {("int", "bigint"), ("int", "double")}
+
+    def _zone_overlaps(
+        self, m: dict[str, Any], entry: dict[str, Any], zones: dict[str, tuple]
+    ) -> bool:
         """Can this data file contain a row inside every requested range?
-        Missing bounds (legacy entries, all-null columns) keep the file —
-        pruning is only ever an optimization, never a correctness filter."""
+        An entry's bounds are recorded under its own schema version, so
+        they are found by field id (a renamed column keeps its bounds) and
+        used only if the column's type since then kept their value.
+        Missing or unusable bounds (legacy entries, all-null columns, a
+        ``date`` widened to ``timestamp``) keep the file — pruning is only
+        ever an optimization, never a correctness filter."""
         ez = entry.get("zones") or {}
+        if not ez:
+            return True
+        current = {f["name"]: f for f in self.schema_fields(m)}
+        written = {f["id"]: f for f in m["schemas"][str(entry["schema_version"])]}
         for c, (lo, hi) in zones.items():
-            if c not in ez:
+            f = written.get(current[c]["id"])
+            if f is None or f["name"] not in ez:
                 continue
-            zmn, zmx = ez[c]
+            if f["type"] != current[c]["type"] and \
+                    (f["type"], current[c]["type"]) not in self._ZONE_KEEPS_VALUE:
+                continue
+            zmn, zmx = ez[f["name"]]
             if (hi is not None and zmn > hi) or (lo is not None and zmx < lo):
                 return False
         return True
+
+    def _point_values(self, m: dict[str, Any], point: dict[str, Any]) -> dict[str, Any]:
+        """Each key column's point value as Spark's internal value of its
+        current type (``_point_internal``); ValueError for a partial key
+        or a value of the wrong type. Both point paths and the bucket hash
+        compare these values."""
+        if sorted(point) != sorted(m["key"]):
+            raise ValueError(
+                f"point lookup needs the full key {m['key']}; got {sorted(point)}"
+            )
+        types = {f["name"]: f["type"] for f in self.schema_fields(m)}
+        return {k: _point_internal(k, types[k], point[k]) for k in m["key"]}
 
     def _point_probe(self, m: dict[str, Any], point: dict[str, Any]) -> int | None:
         """The point key's bucket, hashed on the driver with no Spark job,
@@ -812,16 +946,126 @@ class LakeTable:
         reproduces Spark's ``xxhash64`` bit for bit (a mismatch would read
         the wrong bucket and miss the key; tests/test_point_read.py checks
         the equivalence). Every key value is type-checked the same way."""
-        if sorted(point) != sorted(m["key"]):
-            raise ValueError(
-                f"point lookup needs the full key {m['key']}; got {sorted(point)}"
-            )
-        types = {f["name"]: f["type"] for f in self.schema_fields(m)}
-        vals = {k: _point_internal(k, types[k], point[k]) for k in m["key"]}
+        vals = self._point_values(m, point)
         bc = m["bucket_col"]
         if bc not in m["key"]:
             return None
+        types = {f["name"]: f["type"] for f in self.schema_fields(m)}
         return spark_xxhash64([(_hash_ddl(types[bc]), vals[bc])]) % m["n_buckets"]
+
+    # key-column widenings a pyarrow cast reproduces exactly (Spark casts
+    # a date to a timestamp at the session time zone)
+    _ARROW_KEY_WIDENINGS = _WIDENINGS - {("date", "timestamp")}
+
+    def _point_local(
+        self, m: dict[str, Any], b: int, vals: dict[str, Any]
+    ) -> DataFrame | None:
+        """``read(point=...)`` answered on the driver with no Spark job:
+        pyarrow finds the key's rows in bucket ``b``'s files, and the
+        newest by ``_seq`` comes back as a local relation of its schema
+        version under ``_reconcile``'s projection (a miss as an empty one
+        of the current schema). Spark folds that projection and
+        ``read()``'s tombstone filter into the relation, so collecting it
+        runs no job. None (``read()`` then takes the Spark path) when
+        pyarrow is missing, an entry's directory holds no parquet file, a
+        file lacks a column of its schema version, or an entry holds a key
+        column under a widening no exact pyarrow cast reproduces (``date``
+        to ``timestamp``).
+
+        Per entry only the key columns and ``_seq`` are read, from the row
+        groups whose key statistics admit the point (``_group_may_hold``;
+        compaction writes key-sorted files, so at most one group of a base
+        file survives); then every column of the winner's row group, and
+        its row is sliced out. Keys match as Spark's ``<=>`` does, on the
+        internal values ``vals`` (``_key_rows``). pyarrow reads no parquet
+        Bloom filter, so this path prunes by statistics only."""
+        try:
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import to_arrow_schema
+        except ImportError:
+            return None
+        current = {f["name"]: f for f in self.schema_fields(m)}
+        best = None  # ((has seq, seq), file, row group, row, schema version)
+        for e in m["buckets"].get(str(b), []):
+            sv = str(e["schema_version"])
+            fields = m["schemas"][sv]
+            by_id = {f["id"]: f for f in fields}
+            keys = []  # (file column, current type, internal point value)
+            for k in m["key"]:
+                f, ddl = by_id[current[k]["id"]], current[k]["type"]
+                if f["type"] != ddl and (f["type"], ddl) not in self._ARROW_KEY_WIDENINGS:
+                    return None
+                keys.append((f["name"], ddl, vals[k]))
+            bdir = os.path.join(self.path, e["path"])
+            files = sorted(f for f in self.fs.listdir(bdir) if f.endswith(".parquet"))
+            if not files:
+                # every written bucket dir holds a file: a missing one is
+                # for Spark's scan to report, not to read as a miss
+                return None
+            for fname in files:
+                path = os.path.join(bdir, fname)
+                with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+                    md = pf.metadata
+                    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+                    if any(f["name"] not in idx for f in fields):
+                        return None
+                    for g in range(md.num_row_groups):
+                        if not _group_may_hold(md.row_group(g), idx, keys):
+                            continue
+                        t = pf.read_row_group(g, columns=[*(n for n, _, _ in keys), SEQ_COL])
+                        for i in _key_rows(t, keys):
+                            s = t[SEQ_COL][i].as_py()
+                            # newest _seq first, NULL last (Spark's desc
+                            # order); a later entry wins a tie
+                            rank = (s is not None, s or 0)
+                            if best is None or rank >= best[0]:
+                                best = (rank, path, g, i, sv)
+        if best is None:
+            schema = self.spark_schema(m)
+            return self.spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+        _, path, g, i, sv = best
+        fields = m["schemas"][sv]
+        with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+            row = pf.read_row_group(g, columns=[f["name"] for f in fields]).slice(i, 1)
+        # INT96 timestamps read as naive micros; like every timestamp this
+        # engine writes they are UTC instants
+        row = pa.table(
+            [
+                c.cast(pa.timestamp("us", "UTC")) if pa.types.is_timestamp(c.type) else c
+                for c in row.columns
+            ],
+            names=row.column_names,
+        )
+        return self.spark.createDataFrame(row, _fields_schema(fields)).select(
+            *self._reconcile(m, sv)
+        )
+
+    def _reconcile(self, m: dict[str, Any], sv: str) -> list[F.Column]:
+        """The projection that reads a file of schema version ``sv`` as
+        ``m``'s current schema, for scans and point reads alike: columns
+        are matched by field id (a renamed column reads its old name), a
+        column added since reads NULL, a widened one is cast up with
+        Spark's cast (lossless by the ``_WIDENINGS`` contract; ``date`` to
+        ``timestamp`` at the session time zone), and ``_deleted``'s
+        TRUE-or-NULL coding reads as true/false."""
+        file_fields = {f["id"]: f for f in m["schemas"][sv]}
+        cols = []
+        for f in self.schema_fields(m):
+            old = file_fields.get(f["id"])
+            if old is None:
+                cols.append(F.lit(None).cast(_spark_type(f["type"])).alias(f["name"]))
+                continue
+            c = F.col(old["name"])
+            if old["type"] != f["type"]:
+                c = c.cast(_spark_type(f["type"]))
+            if f["name"] == DELETED_COL:
+                # delta files store tombstones as TRUE-or-NULL so footer
+                # null_count gives exact deleted counts; readers always
+                # see the historical false/true
+                c = F.coalesce(c, F.lit(False))
+            cols.append(c.alias(f["name"]))
+        return cols
 
     def _read_raw(
         self,
@@ -830,44 +1074,26 @@ class LakeTable:
         zones: dict[str, tuple] | None = None,
     ) -> DataFrame | None:
         """Union all data files (schema-reconciled), no LWW resolution."""
-        current = self.schema_fields(m)
         groups: dict[str, list[str]] = {}
         for b, entries in m["buckets"].items():
             if buckets is not None and int(b) not in buckets:
                 continue
             for e in entries:
-                if zones and not self._zone_overlaps(e, zones):
+                if zones and not self._zone_overlaps(m, e, zones):
                     continue
                 groups.setdefault(str(e["schema_version"]), []).append(
                     os.path.join(self.path, e["path"])
                 )
         if not groups:
             return None
-        parts = []
-        for sv, paths in groups.items():
-            file_fields = {f["id"]: f for f in m["schemas"][sv]}
+        parts = [
             # the manifest records each schema version's file columns, so
             # the read needs no schema-inference job over the footers
-            df = self.spark.read.schema(_fields_schema(m["schemas"][sv])).parquet(*paths)
-            cols = []
-            for f in current:
-                old = file_fields.get(f["id"])
-                if old is not None:
-                    c = F.col(old["name"])
-                    if old["type"] != f["type"]:
-                        # type widening (widen_column): old files cast up
-                        # to the current type on read — lossless by the
-                        # _WIDENINGS contract, no file rewrite
-                        c = c.cast(_spark_type(f["type"]))
-                    if f["name"] == DELETED_COL:
-                        # delta files store tombstones as TRUE-or-NULL so
-                        # footer null_count gives exact deleted counts;
-                        # readers always see the historical false/true
-                        c = F.coalesce(c, F.lit(False))
-                    cols.append(c.alias(f["name"]))
-                else:
-                    cols.append(F.lit(None).cast(_spark_type(f["type"])).alias(f["name"]))
-            parts.append(df.select(*cols))
+            self.spark.read.schema(_fields_schema(m["schemas"][sv]))
+            .parquet(*paths)
+            .select(*self._reconcile(m, sv))
+            for sv, paths in groups.items()
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -909,19 +1135,31 @@ class LakeTable:
         lookup. The driver hashes the key to its bucket with a pure-Python
         copy of Spark's ``xxhash64`` (see ``_point_probe``; it must match
         ``_bucket_expr`` bit for bit, and tests/test_point_read.py checks
-        that it does), and the scan opens only that ONE bucket's files.
-        The exact key equality is pushed down to parquet, whose row-group
+        that it does), so only that ONE bucket's files are opened. On a
+        local FS with pyarrow the driver reads them itself
+        (``_point_local``): the key columns of the row groups whose
+        statistics admit the key, then the newest version's row, returned
+        as a local relation, so collecting the result runs no Spark job.
+        Otherwise (a non-local FS seam, no pyarrow, a bucket column outside
+        the key, a key column widened from ``date``) Spark scans the bucket
+        with the exact key equality pushed down to parquet, whose row-group
         statistics, dictionaries and (tables created with ``bloom_bits``)
-        key Blooms skip the row groups that cannot hold the key. The
-        equality leaves only versions of that one key, so LWW resolution
-        is a top-1 by ``_seq`` with no shuffle: collecting the result is
-        one Spark job. A value of the wrong Python type for its column
-        raises ValueError. Mutually exclusive with ``buckets``/``zones``."""
+        key Blooms skip the row groups that cannot hold the key, and
+        resolves the versions left with a top-1 by ``_seq``: one Spark
+        job. Both paths compare the key as ``<=>`` does on the values'
+        internal forms (a float point value is rounded to float32 first).
+        A value of the wrong Python type for its column raises ValueError.
+        Mutually exclusive with ``buckets``/``zones``."""
         m = self.manifest(version)
         if point is not None:
             if buckets is not None or zones is not None:
                 raise ValueError("point is mutually exclusive with buckets/zones")
             b = self._point_probe(m, point)
+            vals = self._point_values(m, point)
+            if b is not None and type(self.fs) is LocalFS:
+                local = self._point_local(m, b, vals)
+                if local is not None:
+                    return local if include_deleted else _hide_deleted(local)
             buckets = [b] if b is not None else None
         if zones:
             zc = set(self._zone_cols(m))
@@ -937,8 +1175,9 @@ class LakeTable:
             empty = self.spark.createDataFrame([], self.spark_schema(m))
             return empty if include_deleted else empty.drop(DELETED_COL)
         if point is not None:
-            for k, v in point.items():
-                raw = raw.filter(F.col(k).eqNullSafe(F.lit(v)))
+            types = {f["name"]: f["type"] for f in self.schema_fields(m)}
+            for k, v in vals.items():
+                raw = raw.filter(_point_eq(k, types[k], v))
         if zones:
             for c, (lo, hi) in zones.items():
                 e = self._zone_expr(m, c)
@@ -958,11 +1197,7 @@ class LakeTable:
                     .filter(F.col("__rn") == 1)
                     .drop("__rn")
                 )
-        if not include_deleted:
-            raw = raw.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(
-                DELETED_COL
-            )
-        return raw
+        return raw if include_deleted else _hide_deleted(raw)
 
     # --------------------------------------------------------------- merge
     def _bucket_expr(self, m: dict[str, Any]) -> F.Column:
@@ -1318,16 +1553,17 @@ class LakeTable:
         directory per bucket and return the buckets written. On a table
         created with ``bloom_bits`` the parquet writer also builds a Bloom
         filter per key column, capped at ``bloom_bits/8`` bytes, inside
-        the same job. Runs without AQE: the plan is fixed-shape (an
+        the same job. Runs without AQE on the session of ``rows`` (a
+        stream's own inside ``foreachBatch``): the plan is fixed-shape (an
         explicit bucket repartition feeding a partitioned write), so AQE
-        could only re-plan it."""
+        could only re-plan it, and would split it into two jobs."""
         w = rows.write.partitionBy("b").mode("overwrite")
         bits = int(m.get("bloom_bits", 0) or 0)
         if bits:
             w = w.option("parquet.bloom.filter.max.bytes", str(max(bits // 8, 1)))
             for k in m["key"]:
                 w = w.option(f"parquet.bloom.filter.enabled#{k}", "true")
-        with _no_aqe(self.spark):
+        with _no_aqe(rows.sparkSession):
             w.parquet(out_dir)
         return self._written_buckets(out_dir)
 

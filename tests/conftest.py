@@ -5,6 +5,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from go_bqloader_spark.lake import LakeTable  # noqa: E402
+from go_bqloader_spark.lake.fsio import LocalFS  # noqa: E402
 from go_bqloader_spark.session import build_session  # noqa: E402
 
 
@@ -38,3 +40,16 @@ def spark_jobs(spark):
         return out, len(jsc.statusTracker().getJobIdsForTag(tag))
 
     return run
+
+
+class _SeamFS(LocalFS):
+    """The local filesystem behind a seam the lake does not take for
+    ``LocalFS`` itself, as an object store's would be: point reads and
+    write stats take their Spark paths."""
+
+
+@pytest.fixture
+def spark_path(spark):
+    """``spark_path(t)`` opens table ``t`` through ``_SeamFS``, so its
+    point reads run Spark's scan instead of the driver's pyarrow read."""
+    return lambda t: LakeTable(spark, t.path, fs=_SeamFS())

@@ -1,8 +1,10 @@
 """Key Bloom filters: the parquet writer builds them on the key columns of
-every file a Bloom table writes, Spark's scan tests a point lookup's key
+every file a Bloom table writes, Spark's scan tests a pushed-down key
 equality against them per row group, and point lookups stay exact — no
 false negatives — through merges, compaction, rebucket, key widening and
-the manifest ``bloom`` fields older versions stored.
+the manifest ``bloom`` fields older versions stored. The driver's point
+path (pyarrow) reads no Bloom, so the pruning checks run point lookups
+through the Spark fallback (the ``spark_path`` fixture).
 """
 
 import base64
@@ -92,7 +94,7 @@ def _pages(n, step=2):
     ]
 
 
-def test_bloom_actually_prunes_files(spark, tmp_path):
+def test_bloom_actually_prunes_files(spark, spark_path, tmp_path):
     """A point lookup of a key inside a file's min/max range on both key
     columns but absent from it: the url Bloom skips the file's row group,
     so the scan outputs no row; without Blooms it outputs the whole file.
@@ -111,9 +113,9 @@ def test_bloom_actually_prunes_files(spark, tmp_path):
     with _no_dictionary(spark):
         bloom, plain = table("bloom", 4096), table("plain", 0)
     dictionary = table("dictionary", 4096)
-    assert _scan(bloom.read(point=miss)) == ([], 0)
-    assert _scan(plain.read(point=miss)) == ([], len(rows))
-    assert _scan(dictionary.read(point=miss)) == ([], 0)
+    assert _scan(spark_path(bloom).read(point=miss)) == ([], 0)
+    assert _scan(spark_path(plain).read(point=miss)) == ([], len(rows))
+    assert _scan(spark_path(dictionary).read(point=miss)) == ([], 0)
     for t in (bloom, plain, dictionary):
         got = t.read(point=hit).collect()
         assert [r["text"] for r in got] == ["t102"]
@@ -147,17 +149,21 @@ def test_compact_takes_zones_from_footers(spark, spark_jobs, tmp_path):
     assert all(set(z) == {"url", "warc_ts"} for z in zones)
 
 
-def _every_key_hits(t):
+def _every_key_hits(t, spark_path):
+    """Every stored key is found, by the driver path and by the Spark
+    fallback, whose scan tests the Blooms."""
     rows = t.read(include_deleted=True).collect()
     assert rows
     misses = [
-        r for r in rows
-        if t.read(point=_point_of(r), include_deleted=True).collect() != [r]
+        (r, reader is t)
+        for reader in (t, spark_path(t))
+        for r in rows
+        if reader.read(point=_point_of(r), include_deleted=True).collect() != [r]
     ]
     assert not misses, misses[:5]
 
 
-def _check_rewrite(spark, tmp_path, op):
+def _check_rewrite(spark, spark_path, tmp_path, op):
     """compact and rebucket write Blooms too: afterwards every key is
     still found, and an absent key inside a rewritten file's range scans
     no row."""
@@ -170,7 +176,7 @@ def _check_rewrite(spark, tmp_path, op):
         assert (t.compact() if op == "compact" else t.rebucket(3)) > 0
     assert set(t.entries_per_bucket().values()) == {1}
     assert sorted(t.read(include_deleted=True).collect(), key=repr) == before
-    _every_key_hits(t)
+    _every_key_hits(t, spark_path)
     # an absent url that sorts right after a stored one, with a stored
     # warc_ts, inside both zone ranges of its bucket's file
     m = t.manifest()
@@ -183,15 +189,15 @@ def _check_rewrite(spark, tmp_path, op):
             break
     else:
         pytest.fail("no absent key inside a file's zone range")
-    assert _scan(t.read(point=miss)) == ([], 0)
+    assert _scan(spark_path(t).read(point=miss)) == ([], 0)
 
 
-def test_blooms_survive_compaction(spark, tmp_path):
-    _check_rewrite(spark, tmp_path, "compact")
+def test_blooms_survive_compaction(spark, spark_path, tmp_path):
+    _check_rewrite(spark, spark_path, tmp_path, "compact")
 
 
-def test_blooms_survive_rebucket(spark, tmp_path):
-    _check_rewrite(spark, tmp_path, "rebucket")
+def test_blooms_survive_rebucket(spark, spark_path, tmp_path):
+    _check_rewrite(spark, spark_path, tmp_path, "rebucket")
 
 
 @pytest.mark.parametrize("old,new", [("int", "double"), ("int", "bigint")])
@@ -276,7 +282,7 @@ def test_point_lookup_of_deleted_key_is_empty(spark, tmp_path):
     assert t.read(point=_point_of(dead[0]), include_deleted=True).count() == 1
 
 
-def test_bloom_has_no_false_negatives_across_all_keys(spark, tmp_path):
+def test_bloom_has_no_false_negatives_across_all_keys(spark, spark_path, tmp_path):
     """THE correctness property: every stored key is found by its point
     lookup — false positives only cost extra reads, a false negative
     would silently drop rows. The Blooms are the smallest parquet-mr
@@ -288,10 +294,10 @@ def test_bloom_has_no_false_negatives_across_all_keys(spark, tmp_path):
         t = _mk(spark, tmp_path / "t", n_buckets=2, bloom_bits=256)
         for i in range(3):
             t.merge(changes.filter(F.pmod("seq", F.lit(3)) == i), batch_key=("b", i))
-    _every_key_hits(t)
+    _every_key_hits(t, spark_path)
 
 
-def test_legacy_manifest_blooms_are_ignored(spark, tmp_path):
+def test_legacy_manifest_blooms_are_ignored(spark, spark_path, tmp_path):
     """Entries that an older version wrote with a manifest ``bloom``
     bitset — here all zeros, which a reader honouring it would take as
     "no key here" for every file — are read as if it were absent."""
@@ -309,4 +315,4 @@ def test_legacy_manifest_blooms_are_ignored(spark, tmp_path):
     legacy = LakeTable(spark, str(tmp_path / "t"))
     entries = [e for es in legacy.manifest()["buckets"].values() for e in es]
     assert entries and all(e["bloom"] == zero for e in entries)
-    _every_key_hits(legacy)
+    _every_key_hits(legacy, spark_path)

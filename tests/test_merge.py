@@ -706,7 +706,7 @@ def test_zone_maps_prune_and_stay_exact(spark, tmp_path, mode):
     # (file = bucket), so nothing prunes there — by design
     kept = [
         e for es in m["buckets"].values() for e in es
-        if t._zone_overlaps(e, {"warc_ts": (micros(10), micros(20))})
+        if t._zone_overlaps(m, e, {"warc_ts": (micros(10), micros(20))})
     ]
     if mode == "mor":
         assert 0 < len(kept) < len(entries)
@@ -885,6 +885,52 @@ def test_zone_maps_date_key_column(spark, tmp_path):
     full = {(str(r["d"]), r["text"])
             for r in t.read().filter(F.col("d") >= "2024-01-20").collect()}
     assert pruned == full and len(pruned) == 3
+
+
+def _date_key_table(spark, path):
+    import datetime as dt
+
+    t = LakeTable.create(
+        spark, str(path), [("u", "string"), ("d", "date"), ("text", "string")],
+        key=["u", "d"], bucket_col="u", n_buckets=2,
+    )
+    rows = [("U", j, f"u{j}", dt.date(2024, 1, 1 + j), f"t{j}") for j in range(10)]
+    t.merge(
+        spark.createDataFrame(rows, "op string, seq bigint, u string, d date, text string"),
+        batch_key=("q", 0),
+    )
+    return t
+
+
+def test_zone_bounds_of_a_date_key_widened_to_timestamp(spark, tmp_path):
+    """Zone bounds are recorded in the type a file was written with: after
+    a date key is widened to timestamp, the old entries' epoch-day bounds
+    must not judge an epoch-micros range (they would drop every old
+    file)."""
+    import datetime as dt
+
+    t = _date_key_table(spark, tmp_path / "tbl")
+    t.widen_column("d", "timestamp")
+    utc = dt.timezone.utc
+    lo = int(dt.datetime(2024, 1, 1, tzinfo=utc).timestamp()) * 10**6
+    hi = int(dt.datetime(2024, 2, 1, tzinfo=utc).timestamp()) * 10**6
+    assert t.read().count() == 10
+    assert sorted(r["text"] for r in t.read(zones={"d": (lo, hi)}).collect()) == sorted(
+        f"t{j}" for j in range(10)
+    )
+
+
+def test_zone_bounds_follow_a_renamed_column(spark, tmp_path):
+    """An entry's bounds are found by field id under its schema version,
+    so a renamed key column still prunes files under its new name."""
+    import datetime as dt
+
+    t = _date_key_table(spark, tmp_path / "tbl")
+    t.rename_column("d", "day")
+    far = (dt.date(2030, 1, 1) - dt.date(1970, 1, 1)).days
+    out = t.read(zones={"day": (far, None)})
+    assert out.collect() == [] and out.inputFiles() == []
+    assert len(t.read(zones={"day": (None, far)}).inputFiles()) == 2
 
 
 def test_rebucket_partition_evolution(spark, tmp_path, changes):

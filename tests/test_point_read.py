@@ -1,12 +1,16 @@
 """Point lookups (``read(point=...)``): the driver-side key hash must equal
-Spark's ``xxhash64`` and the expression that wrote the buckets, a lookup
-must cost exactly one Spark job, and lookups and scans must stay exact
-across schema evolution (old files are read with their own schema
-version's explicit schema)."""
+Spark's ``xxhash64`` and the expression that wrote the buckets; the
+driver path (pyarrow, a local relation, no Spark job) must return what
+the Spark fallback returns, across every key type, schema evolution and
+time travel; each fallback must stay exact in one Spark job; and lookups
+and scans must stay exact across schema evolution (old files are read
+with their own schema version's explicit schema)."""
 
 import datetime as dt
 import math
 import random
+import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -205,28 +209,39 @@ def _batch(spark, rows, ddl):
     return spark.createDataFrame(rows, "op string, seq bigint, " + ddl)
 
 
+@pytest.mark.parametrize("path", ["driver", "fallback"])
 @pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_point_read_is_one_spark_job(spark, spark_jobs, tmp_path, mode):
+def test_point_read_spark_jobs(spark, spark_jobs, spark_path, tmp_path, mode, path):
+    """The driver path answers from the files with pyarrow and returns a
+    local relation: collecting it runs no Spark job, also when the
+    winning row lives in a file of an older schema version. The Spark
+    fallback scans the bucket in one job."""
     t = LakeTable.create(
         spark, str(tmp_path / "t"), [("url", "string"), ("n", "int")],
         key=["url"], n_buckets=2, bloom_bits=1024, write_mode=mode,
     )
     ddl = "url string, n int"
     t.merge(_batch(spark, [("U", i, f"u/{i}", i) for i in range(20)], ddl), batch_key=("q", 0))
+    t.add_column("lang", "string")
+    t.widen_column("n", "bigint")
     t.merge(
-        _batch(spark, [("U", 100, "u/3", 300), ("D", 101, "u/4", None)], ddl),
+        _batch(spark, [("U", 100, "u/3", 300, "en"), ("D", 101, "u/4", None, None)],
+               "url string, n bigint, lang string"),
         batch_key=("q", 1),
     )
     if mode == "mor":
         assert t._needs_resolve(t.manifest(), None)  # the top-1 resolve runs
-    # an updated key, a tombstoned key, an untouched key, a missing key
-    cases = [("u/3", [300]), ("u/4", []), ("u/5", [5]), ("u/x", [])]
+    reader = t if path == "driver" else spark_path(t)
+    # an updated key, a tombstoned key, an untouched key of the older
+    # schema version, a missing key
+    cases = [("u/3", [(300, "en")]), ("u/4", []), ("u/5", [(5, None)]), ("u/x", [])]
     for i, (url, want) in enumerate(cases):
         rows, jobs = spark_jobs(
-            f"point-{mode}-{i}", lambda: t.read(point={"url": url}).collect()
+            f"point-{mode}-{path}-{i}",
+            lambda: reader.read(point={"url": url}).collect(),
         )
-        assert [r["n"] for r in rows] == want
-        assert jobs == 1, (url, jobs)
+        assert [(r["n"], r["lang"]) for r in rows] == want
+        assert jobs == (0 if path == "driver" else 1), (url, jobs)
 
 
 def _evolving_table(spark, tmp_path, mode):
@@ -290,3 +305,299 @@ def test_point_and_scan_exact_across_schema_evolution(spark, tmp_path, mode):
         rows = t.read(point={"url": url, "k": k}).collect()
         exp = [want[(url, k)]] if (url, k) in want else []
         assert [(r["body"], r["lang"], r["_seq"]) for r in rows] == exp, (url, k)
+
+
+# ------------------------------------------- driver path against fallback
+def _canon(rows):
+    """Rows as comparable tuples: floats by repr (NaN equals NaN, -0.0
+    differs from 0.0), binaries as bytes."""
+    return [
+        tuple(
+            (k, repr(v) if isinstance(v, float) else bytes(v) if isinstance(v, bytearray) else v)
+            for k, v in r.items()
+        )
+        for r in rows
+    ]
+
+
+def _key_id(types, key, point):
+    """A point's identity under ``<=>``: internal values, NaN as one
+    value, -0.0 as 0.0."""
+    out = []
+    for k in key:
+        v = _point_internal(k, types[k], point[k])
+        if isinstance(v, float):
+            v = "nan" if v != v else v + 0.0
+        out.append(bytes(v) if isinstance(v, bytearray) else v)
+    return tuple(out)
+
+
+def _assert_paths_agree(t, fb, version=None, every_probe=True):
+    """Every stored key (tombstones included): the driver path, the
+    fallback and the fallback's resolved scan agree. With
+    ``every_probe``, also with ``include_deleted=False``, with each key's
+    float zeros' sign flipped, and for a miss next to each key. Returns
+    the number of stored keys."""
+    m = t.manifest(version)
+    types = {f["name"]: f["type"] for f in t.schema_fields(m)}
+    key = m["key"]
+    scan = [r.asDict() for r in fb.read(version=version, include_deleted=True).collect()]
+    assert any(r["_deleted"] for r in scan) and any(not r["_deleted"] for r in scan)
+    stored = {_key_id(types, key, r): r for r in scan}
+    assert len(stored) == len(scan)
+    probes = []  # (point, check include_deleted=False too)
+    for r in scan:
+        p = {k: r[k] for k in key}
+        probes.append((p, every_probe))
+        if not every_probe:
+            continue
+        if any(isinstance(v, float) and v == 0 for v in p.values()):
+            flipped = {k: -v if isinstance(v, float) and v == 0 else v for k, v in p.items()}
+            probes.append((flipped, False))
+        probes.append((dict(p, u=p["u"] + "~"), False))
+    dtypes = None
+    for p, live_too in probes:
+        want = stored.get(_key_id(types, key, p))
+        for inc in (True, False) if live_too else (True,):
+            if want is None or (not inc and want["_deleted"]):
+                exp = []
+            else:
+                exp = [{k: v for k, v in want.items() if inc or k != "_deleted"}]
+            got = t.read(version=version, point=p, include_deleted=inc)
+            ref = fb.read(version=version, point=p, include_deleted=inc)
+            got_rows = [r.asDict() for r in got.collect()]
+            assert _canon(got_rows) == _canon(exp), (p, inc, got_rows, exp)
+            assert _canon([r.asDict() for r in ref.collect()]) == _canon(exp), (p, inc)
+            if inc and dtypes is None:
+                dtypes = got.dtypes
+                assert dtypes == ref.dtypes
+    return len(scan)
+
+
+KEY_DDLS = sorted(EDGE_VALUES)
+# key columns widened between deltas
+WIDENED = [("wi_b", "int", "bigint"), ("wi_d", "int", "double"), ("wf_d", "float", "double")]
+
+
+def test_driver_point_path_equals_fallback(spark, spark_path, tmp_path):
+    """A key over all 9 column types plus three widened key columns, with
+    NULL key parts, NaN and -0.0/0.0 among the values, through add_column,
+    rename_column and the int->bigint, int->double and float->double
+    key widenings between deltas, tombstones, a re-insert and a late
+    older update: the driver path returns what the Spark fallback does
+    for every stored key, every tombstone and misses, at the current
+    version and at an older one (time travel)."""
+    cols = [("u", "string"), *((f"c_{d}", d) for d in KEY_DDLS),
+            *((c, old) for c, old, _ in WIDENED)]
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [*cols, ("n", "int"), ("f", "float")],
+        key=[c for c, _ in cols], bucket_col="u", n_buckets=3, bloom_bits=1024,
+    )
+    fb = spark_path(t)
+
+    def values(j):
+        vals = [f"u{j % 4}"]
+        for i, d in enumerate(KEY_DDLS):
+            vals.append(EDGE_VALUES[d][(j + i) % len(EDGE_VALUES[d])])
+        vals.append(EDGE_VALUES["int"][j % 7])
+        vals.append(EDGE_VALUES["int"][(j + 3) % 7])
+        vals.append(EDGE_VALUES["float"][(j + 1) % 10])
+        return vals
+
+    def ddl(types):
+        return "op string, seq bigint, " + ", ".join(f"{c} {ty}" for c, ty in types)
+
+    t.merge(
+        spark.createDataFrame(
+            [("U", 10 + j, *values(j), j, j + 0.5) for j in range(12)],
+            ddl([*cols, ("n", "int"), ("f", "float")]),
+        ),
+        batch_key=("q", 0),
+    )
+    t.add_column("lang", "string")
+    t.merge(
+        spark.createDataFrame(
+            [("U", 100 + j, *values(j), 1000 + j, 0.25, "en") for j in (0, 5, 9, 12, 13)]
+            + [("D", 100 + j, *values(j), None, None, None) for j in (2, 7, 10)]
+            # a late older update: loses to the stored seq 21
+            + [("U", 1, *values(11), -1, -1.0, "late")],
+            ddl([*cols, ("n", "int"), ("f", "float"), ("lang", "string")]),
+        ),
+        batch_key=("q", 1),
+    )
+    v_mid = t.current_version()
+    t.rename_column("n", "num")
+    for c, _, new in WIDENED:
+        t.widen_column(c, new)
+    # the stored keys (tombstones too) in their widened types, by the j
+    # that wrote them (seq 10 + j, then 100 + j)
+    keys = {
+        r["_seq"] % 100 - (10 if r["_seq"] < 100 else 0): [r[c] for c, _ in cols]
+        for r in t.read(include_deleted=True).collect()
+    }
+    wcols = [*cols[:-3], *((c, new) for c, _, new in WIDENED)]
+    t.merge(
+        spark.createDataFrame(
+            [("U", 200, *keys[5], 2005, 0.75, "de"),
+             ("D", 201, *keys[12], None, None, None),
+             # re-inserts the key tombstoned at seq 102
+             ("U", 202, *keys[2], 2002, 1.5, "re")],
+            ddl([*wcols, ("num", "int"), ("f", "float"), ("lang", "string")]),
+        ),
+        batch_key=("q", 2),
+    )
+    assert t._needs_resolve(t.manifest(), None)
+    assert _assert_paths_agree(t, fb) == 14
+    assert _assert_paths_agree(t, fb, version=v_mid, every_probe=False) == 14
+
+
+@pytest.mark.parametrize("case", ["no-pyarrow", "date-key-widened", "bucket-outside-key"])
+def test_point_fallbacks_stay_exact(spark, spark_jobs, tmp_path, monkeypatch, case):
+    """Where the driver path steps aside — pyarrow.parquet missing, a
+    ``date`` key column widened to ``timestamp`` (Spark's cast depends on
+    the session time zone), a bucket column outside the key — the Spark
+    scan answers every stored key (tombstones included) and a miss
+    exactly, in one job each."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [("u", "string"), ("d", "date"), ("v", "string")],
+        key=["u", "d"], bucket_col="v" if case == "bucket-outside-key" else "u",
+        n_buckets=2,
+    )
+    day = dt.date(2024, 1, 1)
+    rows = [("U", j, f"u{j % 3}", day + dt.timedelta(days=j), f"v{j}") for j in range(8)]
+    t.merge(_batch(spark, rows, "u string, d date, v string"), batch_key=("q", 0))
+    dtype = "date"
+    if case == "date-key-widened":
+        t.widen_column("d", "timestamp")
+        dtype = "timestamp"
+    later = [("U", 20, "u1", day + dt.timedelta(days=1), "v1b"),
+             ("D", 21, "u2", day + dt.timedelta(days=2), None),
+             ("U", 22, "u0", day + dt.timedelta(days=30), "v30")]
+    if dtype == "timestamp":
+        later = [(*r[:3], dt.datetime.combine(r[3], dt.time()), r[4]) for r in later]
+    t.merge(_batch(spark, later, f"u string, d {dtype}, v string"), batch_key=("q", 1))
+    if case == "no-pyarrow":
+        monkeypatch.setitem(sys.modules, "pyarrow.parquet", None)
+    scan = t.read(include_deleted=True).collect()
+    assert len(scan) == 9 and sum(r["_deleted"] for r in scan) == 1
+    probes = [({"u": r["u"], "d": r["d"]}, [r]) for r in scan]
+    probes.append(({"u": "u0", "d": scan[0]["d"] + dt.timedelta(days=400)}, []))
+    for i, (p, want) in enumerate(probes):
+        got, jobs = spark_jobs(
+            f"fallback-{case}-{i}",
+            lambda: t.read(point=p, include_deleted=True).collect(),
+        )
+        assert got == want and jobs == 1, (p, got, jobs)
+
+
+def test_point_driver_path_reads_int96_timestamps(spark, spark_jobs, spark_path, tmp_path):
+    """Files written with INT96 timestamps (no statistics; pyarrow reads
+    them as naive micros): the driver path matches every key exactly, as
+    the Spark scan does."""
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [("url", "string"), ("ts", "timestamp"), ("v", "int")],
+        key=["url", "ts"], n_buckets=2,
+    )
+    stamps = [v for v in EDGE_VALUES["timestamp"] if v is None or v.year >= 1969]
+    rows = [("U", j, f"u{j % 2}", ts, j) for j, ts in enumerate(stamps)]
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        t.merge(_batch(spark, rows, "url string, ts timestamp, v int"), batch_key=("q", 0))
+    finally:
+        spark.conf.set(key, prev)
+    files = list((tmp_path / "t" / "data").glob("*/b=*/*.parquet"))
+    assert files
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        assert md.schema.column(md.schema.names.index("ts")).physical_type == "INT96"
+    # INT96 values are UTC instants; outside a UTC session a naive read
+    # would be taken as local time
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        scan = t.read().collect()
+        assert len(scan) == len(stamps)
+        for i, r in enumerate(scan):
+            p = {"url": r["url"], "ts": r["ts"]}
+            got, jobs = spark_jobs(f"int96-{i}", lambda: t.read(point=p).collect())
+            assert got == [r] == spark_path(t).read(point=p).collect() and jobs == 0, p
+            if r["ts"] is not None:
+                near = dict(p, ts=r["ts"] + dt.timedelta(microseconds=1))
+                assert t.read(point=near).collect() == []
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+@contextmanager
+def _hadoop_conf(spark, key, value):
+    conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+    prev = conf.get(key)
+    conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            conf.unset(key)
+        else:
+            conf.set(key, prev)
+
+
+def test_point_driver_path_reads_one_row_group_of_a_sorted_file(spark, tmp_path, monkeypatch):
+    """A compacted (key-sorted) file written in many small row groups: the
+    driver path reads the key columns of only the row group whose url
+    statistics admit the point, then every column of that group; a miss
+    between two stored urls reads at most one group's key columns."""
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [("url", "string"), ("n", "int"), ("text", "string")],
+        key=["url"], n_buckets=1,
+    )
+    ddl = "url string, n int, text string"
+    with _hadoop_conf(spark, "parquet.block.size", "2048"):
+        for i in range(2):
+            t.merge(
+                _batch(spark, [("U", 10 * j + i, f"u/{j:05d}", j, "x" * 40)
+                               for j in range(i, 1200, 2)], ddl),
+                batch_key=("q", i),
+            )
+        assert t.compact() == 1
+    (entry,) = t.manifest()["buckets"]["0"]
+    (f,) = (tmp_path / "t" / entry["path"]).glob("*.parquet")
+    assert pq.ParquetFile(f).metadata.num_row_groups >= 4
+    reads = []
+    orig = pq.ParquetFile.read_row_group
+
+    def spy(self, i, columns=None, **kw):
+        reads.append((i, tuple(columns)))
+        return orig(self, i, columns=columns, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", spy)
+    rows = t.read(point={"url": "u/00601"}).collect()
+    assert [(r["n"], r["_seq"]) for r in rows] == [(601, 6011)]
+    assert len(reads) == 2, reads
+    (g, keys), (g2, every) = reads
+    assert g == g2 and keys == ("url", "_seq") and len(every) == 5
+    reads.clear()
+    assert t.read(point={"url": "u/00601~"}).collect() == []
+    assert len(reads) <= 1 and all(cols == ("url", "_seq") for _, cols in reads)
+
+
+def test_point_read_of_a_missing_bucket_dir_raises(spark, tmp_path):
+    """An entry whose directory is gone is reported by the Spark scan, as
+    before, and never read as a miss."""
+    import shutil
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [("url", "string"), ("n", "int")], key=["url"],
+        n_buckets=1,
+    )
+    t.merge(_batch(spark, [("U", 1, "u/1", 1)], "url string, n int"), batch_key=("q", 0))
+    (entry,) = t.manifest()["buckets"]["0"]
+    shutil.rmtree(tmp_path / "t" / entry["path"])
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        t.read(point={"url": "u/1"}).collect()

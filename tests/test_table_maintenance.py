@@ -2,7 +2,8 @@
 (no Spark job, crash-safe, legacy parquet spills still read), ``compact``
 and ``rebucket`` resolve MoR files with one exchange and leave exactly the
 state ``read()`` resolved before them, and ``_no_aqe`` restores the
-caller's setting under overlapping users."""
+caller's setting under overlapping users and applies to the session of
+the frame it writes (a stream's own, inside ``foreachBatch``)."""
 
 import datetime as dt
 import os
@@ -210,3 +211,39 @@ def test_no_aqe_restores_setting_under_overlapping_users(spark):
         assert spark.conf.get(conf) == "true"
     finally:
         spark.conf.set(conf, prev)
+
+
+def test_stream_merge_runs_without_aqe(spark, spark_jobs, tmp_path):
+    """foreachBatch hands the merge a frame of the stream's own session,
+    whose AQE setting is not the caller's: the merge switches AQE off on
+    that session, so its bucket repartition and write run as ONE Spark
+    job (two with AQE on), and the batch session's setting is back after."""
+    src = str(tmp_path / "src")
+    schema = "op string, seq bigint, url string, n int"
+    spark.createDataFrame(
+        [("U", i, f"u/{i}", i) for i in range(40)], schema
+    ).coalesce(1).write.parquet(src)
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [("url", "string"), ("n", "int")], key=["url"],
+        n_buckets=4,
+    )
+    seen = []
+
+    def apply(df, batch_id):
+        conf = df.sparkSession.conf
+        before = conf.get("spark.sql.adaptive.enabled")
+        _, jobs = spark_jobs(
+            f"stream-merge-{batch_id}", lambda: t.merge(df, batch_key=("s", batch_id))
+        )
+        seen.append((jobs, before, conf.get("spark.sql.adaptive.enabled")))
+
+    q = (
+        spark.readStream.schema(schema).parquet(src)
+        .writeStream.foreachBatch(apply)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert seen == [(1, "true", "true")]
+    assert sorted(r["n"] for r in t.read().collect()) == list(range(40))

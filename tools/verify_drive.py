@@ -201,12 +201,26 @@ tb = LakeTable.create(
 feed2 = gen_changes(spark, n_events=3000, n_urls=400, n_hosts=20, seed=13)
 tb.merge(feed2, batch_key=("bl", 0))
 mrow = tb.read().limit(1).collect()[0]
-pt = tb.read(point={"url": mrow["url"], "warc_ts": mrow["warc_ts"]}).collect()
-assert pt == [mrow], pt
-# an absent url that sorts right after a stored one, at a stored warc_ts:
-# the row-group statistics, dictionaries or key Blooms of its bucket's
-# files skip every row group, so the scan outputs no row
-miss = tb.read(point={"url": mrow["url"] + "~", "warc_ts": mrow["warc_ts"]})
+# the point read runs on the driver (pyarrow over the key's bucket, a
+# local relation back): exact, and no Spark job
+sc = spark.sparkContext
+sc.addJobTag("drive-point")
+try:
+    pt = tb.read(point={"url": mrow["url"], "warc_ts": mrow["warc_ts"]}).collect()
+finally:
+    sc.removeJobTag("drive-point")
+sc._jsc.sc().listenerBus().waitUntilEmpty()
+point_jobs = len(sc._jsc.sc().statusTracker().getJobIdsForTag("drive-point"))
+assert pt == [mrow] and point_jobs == 0, (pt, point_jobs)
+# the Blooms serve Spark's pushed-down key equality: an absent url that
+# sorts right after a stored one, at a stored warc_ts, in a table whose
+# buckets hold one entry each (no resolve window, so the equality reaches
+# the scan). The row-group statistics, dictionaries or key Blooms skip
+# every row group, so the scan outputs no row
+assert set(tb.entries_per_bucket().values()) == {1}
+miss = tb.read().where(
+    (F.col("url") == mrow["url"] + "~") & (F.col("warc_ts") == F.lit(mrow["warc_ts"]))
+)
 assert miss.collect() == []
 plan = miss._jdf.queryExecution().executedPlan()
 if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
@@ -219,7 +233,8 @@ while stack:
     kids = node.children()
     stack.extend(kids.apply(i) for i in range(kids.size()))
 assert scans and sum(scans) == 0, scans
-print(f"BLOOM OK: point lookup exact, in-range miss scanned {sum(scans)} rows")
+print(f"BLOOM OK: point lookup exact in {point_jobs} Spark jobs, pushed-down "
+      f"in-range miss scanned {sum(scans)} rows")
 
 # --- per-domain politeness quota at ingest ---
 from go_bqloader_spark.streaming import domain_quota_projector
