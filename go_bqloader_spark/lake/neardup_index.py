@@ -209,9 +209,9 @@ class NearDupIndex:
         # hash, computed here from the batch (bounded by n_buckets ints)
         probe = sorted(
             r["__b"]
-            for r in newb.select(
-                self.table._bucket_expr(im).alias("__b")
-            ).distinct().collect()
+            for r in newb.selectExpr(f"{self.table._bucket_expr(im)} AS __b")
+            .distinct()
+            .collect()
         )
         # every sweep read is PINNED to the snapshot its bucket ids were
         # computed from (version=...): bucket membership is a function of
@@ -264,9 +264,9 @@ class NearDupIndex:
         if old_keys.limit(1).count():
             cbuckets = sorted(
                 r["__b"]
-                for r in old_keys.select(
-                    self.corpus._bucket_expr(cm).alias("__b")
-                ).distinct().collect()
+                for r in old_keys.selectExpr(f"{self.corpus._bucket_expr(cm)} AS __b")
+                .distinct()
+                .collect()
             )
             live = self.corpus.read(version=cm["version"], buckets=cbuckets).select(
                 F.concat_ws("\x00", *key).alias("__oid")
@@ -390,9 +390,9 @@ class NearDupIndex:
         )
         buckets = sorted(
             r["__b"]
-            for r in loser_keys.select(
-                self.corpus._bucket_expr(cm).alias("__b")
-            ).distinct().collect()
+            for r in loser_keys.selectExpr(f"{self.corpus._bucket_expr(cm)} AS __b")
+            .distinct()
+            .collect()
         )
         if not buckets:
             return self.spark.createDataFrame([], "op string, seq bigint")

@@ -62,6 +62,22 @@ still resolve with the key-window. The engine is
 bandwidth-frugal by design — at cluster scale network bytes are the merge
 bottleneck, and in this sandbox the shared memory bus plays that role
 (measured: ~5 GB/s aggregate; see BENCH/BASELINE.md).
+
+Plans are built from SQL text: ``selectExpr``, ``where("<sql>")``,
+``repartition(n, "<col>")`` and DDL schema strings. Every ``Column`` a
+PySpark builder makes costs py4j round trips per expression node (``F.col``
+alone about 13), and on a small table that boundary, not Spark, was most of
+a point lookup or a merge; a text expression is parsed in the JVM in one
+call. Besides the engine's own fixed words (functions, the change feed's
+``op`` and ``seq``, the ``'D'`` op code), only three kinds of text go into
+SQL: identifiers quoted by ``_q``
+(backticks, an inner backtick doubled, so a column named ``a.b`` or
+``x`y`` is one column), column types of the manifest's DDL vocabulary
+(``_sql_type``) and integers the engine computed itself (``n_buckets``, a
+manifest version). A value that comes from the caller never does: point
+keys, zone bounds and ``read_changes_since``'s ``seq`` stay ``F.lit``
+columns, so ``_point_eq`` (the Spark point path's key filter) and the zone
+filters keep their ``Column`` form.
 """
 
 from __future__ import annotations
@@ -77,7 +93,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -110,6 +126,25 @@ def _spark_type(ddl: str) -> T.DataType:
 
 def _fields_schema(fields: list[dict[str, Any]]) -> T.StructType:
     return T.StructType([T.StructField(f["name"], _spark_type(f["type"])) for f in fields])
+
+
+def _q(name: str) -> str:
+    """``name`` as a SQL identifier: in backticks, any backtick inside
+    doubled. The only way a column name enters SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(ddl: str) -> str:
+    """A manifest column type as SQL text; ValueError for a word outside
+    the DDL vocabulary (``_DDL_TO_SPARK``), so no other text can pass."""
+    if ddl not in _DDL_TO_SPARK:
+        raise ValueError(f"unknown column type {ddl!r}; known: {sorted(_DDL_TO_SPARK)}")
+    return ddl
+
+
+def _ddl(fields: list[dict[str, Any]]) -> str:
+    """``fields`` as a DDL schema string (``spark.read.schema``)."""
+    return ", ".join(f"{_q(f['name'])} {_sql_type(f['type'])}" for f in fields)
 
 
 def _hash_ddl(ddl: str) -> str:
@@ -170,18 +205,19 @@ def _point_eq(col: str, ddl: str, v: Any) -> F.Column:
     NaN out and order -0.0 below 0.0: a NaN is matched by ``isnan`` (not
     pushed down) and a zero as ``IN (0.0, -0.0)``, each of which prunes
     only what it cannot match."""
+    c = F.expr(_q(col))
     if v is None:
-        return F.col(col).isNull()
+        return c.isNull()
     if ddl == "timestamp":
-        return F.col(col) == F.timestamp_micros(F.lit(v))
+        return c == F.timestamp_micros(F.lit(v))
     if ddl == "date":
-        return F.col(col) == F.date_from_unix_date(F.lit(v))
+        return c == F.date_from_unix_date(F.lit(v))
     if ddl in ("float", "double") and v != v:
-        return F.isnan(col)
+        return F.isnan(c)
     t = _spark_type(ddl)
     if ddl in ("float", "double") and v == 0:
-        return F.col(col).isin(F.lit(0.0).cast(t), F.lit(-0.0).cast(t))
-    return F.col(col) == F.lit(v).cast(t)
+        return c.isin(F.lit(0.0).cast(t), F.lit(-0.0).cast(t))
+    return c == F.lit(v).cast(t)
 
 
 def _key_rows(t, keys: list[tuple[str, str, Any]]) -> list[int]:
@@ -250,7 +286,9 @@ def _group_may_hold(rg, idx: dict[str, int], keys: list[tuple[str, str, Any]]) -
 
 
 def _hide_deleted(df: DataFrame) -> DataFrame:
-    return df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
+    """``df`` without its tombstones and its ``_deleted`` column; ``df``
+    carries ``_deleted`` as ``_reconcile`` reads it, never NULL."""
+    return df.where(f"NOT {_q(DELETED_COL)}").drop(DELETED_COL)
 
 
 # per JVM session (by its UUID): [_no_aqe users in flight, the setting
@@ -300,21 +338,23 @@ def _no_aqe(spark: SparkSession):
 
 
 def _first_per_key(
-    rows: DataFrame, part: str, key: list[str], order: list[F.Column]
+    rows: DataFrame, part: str, key: list[str], order: list[str]
 ) -> DataFrame:
     """The first row of each key within each ``part`` partition, in
-    ``order`` (which must keep a key's rows adjacent and put the row to
-    keep first, e.g. ``[*key, seq desc]``). ``rows`` must already be
-    hash-partitioned on ``part`` and every key must live in one ``part``
-    value (bucket = f(bucket column), a key column): the window then sorts
-    within partitions and adds no exchange, and a row is a key's first
-    when it heads its partition or its key differs from the previous
-    row's (``lag`` + ``eqNullSafe``, so NULL key parts compare equal)."""
-    w = W.partitionBy(part).orderBy(*order)
-    first = F.lag(F.lit(True)).over(w).isNull()
-    for k in key:
-        first = first | ~F.lag(k).over(w).eqNullSafe(F.col(k))
-    return rows.withColumn("__first", first).filter(F.col("__first")).drop("__first")
+    ``order`` (SQL sort items that keep a key's rows adjacent and put the
+    row to keep first, e.g. ``[*key, "`seq` DESC"]``). ``rows`` must
+    already be hash-partitioned on ``part`` and every key must live in one
+    ``part`` value (bucket = f(bucket column), a key column): the window
+    then sorts within partitions and adds no exchange, and a row is a
+    key's first when it heads its partition (``lag(true)`` is NULL) or its
+    key differs from the previous row's (``lag`` and ``<=>``, so NULL key
+    parts compare equal). One ``selectExpr`` and one ``where``; the rows
+    keep a ``__first`` column that the caller's next projection drops."""
+    w = f"OVER (PARTITION BY {_q(part)} ORDER BY {', '.join(order)})"
+    first = " OR ".join(
+        [f"lag(true) {w} IS NULL", *(f"NOT (lag({_q(k)}) {w} <=> {_q(k)})" for k in key)]
+    )
+    return rows.selectExpr("*", f"{first} AS __first").where("__first")
 
 
 class CommitConflict(RuntimeError):
@@ -858,25 +898,25 @@ class LakeTable:
             if types.get(c) in ("string", "bigint", "int", "double", "timestamp", "date")
         ]
 
-    def _zone_expr(self, m: dict[str, Any], c: str) -> F.Column:
+    def _zone_expr(self, m: dict[str, Any], c: str) -> str:
+        """Zone column ``c``'s value as manifest bounds hold it, SQL text."""
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
-        col = F.col(c)
         # temporal zone bounds are stored in the manifest as fixed-width
         # ints (epoch micros / epoch days): JSON has no timestamp or date
         # type — a raw datetime.date would crash json.dumps at commit
         # (ADVICE r4) — and ints compare exactly on the read side
         if types[c] == "timestamp":
-            return F.unix_micros(col)
+            return f"unix_micros({_q(c)})"
         if types[c] == "date":
-            return F.unix_date(col)
-        return col
+            return f"unix_date({_q(c)})"
+        return _q(c)
 
-    def _zone_aggs(self, m: dict[str, Any], zone_cols: list[str]) -> list[F.Column]:
-        aggs: list[F.Column] = []
+    def _zone_aggs(self, m: dict[str, Any], zone_cols: list[str]) -> list[str]:
+        aggs: list[str] = []
         for c in zone_cols:
             e = self._zone_expr(m, c)
-            aggs.append(F.min(e).alias(f"__zmn_{c}"))
-            aggs.append(F.max(e).alias(f"__zmx_{c}"))
+            aggs.append(f"min({e}) AS {_q(f'__zmn_{c}')}")
+            aggs.append(f"max({e}) AS {_q(f'__zmx_{c}')}")
         return aggs
 
     @staticmethod
@@ -958,15 +998,17 @@ class LakeTable:
     _ARROW_KEY_WIDENINGS = _WIDENINGS - {("date", "timestamp")}
 
     def _point_local(
-        self, m: dict[str, Any], b: int, vals: dict[str, Any]
+        self, m: dict[str, Any], b: int, vals: dict[str, Any], include_deleted: bool
     ) -> DataFrame | None:
         """``read(point=...)`` answered on the driver with no Spark job:
         pyarrow finds the key's rows in bucket ``b``'s files, and the
         newest by ``_seq`` comes back as a local relation of its schema
-        version under ``_reconcile``'s projection (a miss as an empty one
-        of the current schema). Spark folds that projection and
-        ``read()``'s tombstone filter into the relation, so collecting it
-        runs no job. None (``read()`` then takes the Spark path) when
+        version under ``_reconcile``'s projection, one ``DataFrame`` step
+        that Spark folds into the relation, so collecting it runs no job.
+        The driver also judges the tombstone: a miss, or a tombstoned
+        winner read without ``include_deleted``, is ``_empty``'s relation,
+        and a hit's projection drops ``_deleted`` unless it was asked
+        for. None (``read()`` then takes the Spark path) when
         pyarrow is missing, an entry's directory holds no parquet file, a
         file lacks a column of its schema version, or an entry holds a key
         column under a widening no exact pyarrow cast reproduces (``date``
@@ -982,7 +1024,6 @@ class LakeTable:
         try:
             import pyarrow as pa
             import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import to_arrow_schema
         except ImportError:
             return None
         current = {f["name"]: f for f in self.schema_fields(m)}
@@ -1022,12 +1063,14 @@ class LakeTable:
                             if best is None or rank >= best[0]:
                                 best = (rank, path, g, i, sv)
         if best is None:
-            schema = self.spark_schema(m)
-            return self.spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+            return self._empty(m, include_deleted)
         _, path, g, i, sv = best
         fields = m["schemas"][sv]
         with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
             row = pf.read_row_group(g, columns=[f["name"] for f in fields]).slice(i, 1)
+        # TRUE-or-NULL in delta and rewritten files, false in older ones
+        if not include_deleted and row[DELETED_COL][0].as_py():
+            return self._empty(m, include_deleted)
         # INT96 timestamps read as naive micros; like every timestamp this
         # engine writes they are UTC instants
         row = pa.table(
@@ -1037,34 +1080,50 @@ class LakeTable:
             ],
             names=row.column_names,
         )
-        return self.spark.createDataFrame(row, _fields_schema(fields)).select(
-            *self._reconcile(m, sv)
+        return self.spark.createDataFrame(row, _fields_schema(fields)).selectExpr(
+            *self._reconcile(m, sv, deleted=include_deleted)
         )
 
-    def _reconcile(self, m: dict[str, Any], sv: str) -> list[F.Column]:
-        """The projection that reads a file of schema version ``sv`` as
-        ``m``'s current schema, for scans and point reads alike: columns
-        are matched by field id (a renamed column reads its old name), a
-        column added since reads NULL, a widened one is cast up with
-        Spark's cast (lossless by the ``_WIDENINGS`` contract; ``date`` to
-        ``timestamp`` at the session time zone), and ``_deleted``'s
-        TRUE-or-NULL coding reads as true/false."""
+    def _empty(self, m: dict[str, Any], include_deleted: bool) -> DataFrame:
+        """An empty relation of ``m``'s current schema, ``_deleted`` only
+        when asked for. A ``SELECT ... WHERE false`` plans as an empty
+        local relation, so collecting it runs no Spark job (an RDD-backed
+        ``createDataFrame([], schema)`` runs one)."""
+        cols = [
+            f"CAST(NULL AS {_sql_type(f['type'])}) AS {_q(f['name'])}"
+            for f in self.schema_fields(m)
+            if include_deleted or f["name"] != DELETED_COL
+        ]
+        return self.spark.sql(f"SELECT {', '.join(cols)} WHERE false")
+
+    def _reconcile(self, m: dict[str, Any], sv: str, deleted: bool = True) -> list[str]:
+        """The projection, as ``selectExpr`` text, that reads a file of
+        schema version ``sv`` as ``m``'s current schema, for scans and
+        point reads alike: columns are matched by field id (a renamed
+        column reads its old name), a column added since reads NULL, a
+        widened one is cast up with Spark's cast (lossless by the
+        ``_WIDENINGS`` contract; ``date`` to ``timestamp`` at the session
+        time zone), and ``_deleted``'s TRUE-or-NULL coding reads as
+        true/false. ``deleted=False`` leaves ``_deleted`` out."""
         file_fields = {f["id"]: f for f in m["schemas"][sv]}
         cols = []
         for f in self.schema_fields(m):
-            old = file_fields.get(f["id"])
-            if old is None:
-                cols.append(F.lit(None).cast(_spark_type(f["type"])).alias(f["name"]))
+            if f["name"] == DELETED_COL and not deleted:
                 continue
-            c = F.col(old["name"])
-            if old["type"] != f["type"]:
-                c = c.cast(_spark_type(f["type"]))
-            if f["name"] == DELETED_COL:
-                # delta files store tombstones as TRUE-or-NULL so footer
-                # null_count gives exact deleted counts; readers always
-                # see the historical false/true
-                c = F.coalesce(c, F.lit(False))
-            cols.append(c.alias(f["name"]))
+            old = file_fields.get(f["id"])
+            t = _sql_type(f["type"])
+            if old is None:
+                c = f"CAST(NULL AS {t})"
+            else:
+                c = _q(old["name"])
+                if old["type"] != f["type"]:
+                    c = f"CAST({c} AS {t})"
+                if f["name"] == DELETED_COL:
+                    # delta files store tombstones as TRUE-or-NULL so footer
+                    # null_count gives exact deleted counts; readers always
+                    # see the historical false/true
+                    c = f"coalesce({c}, false)"
+            cols.append(f"{c} AS {_q(f['name'])}")
         return cols
 
     def _read_raw(
@@ -1089,9 +1148,9 @@ class LakeTable:
         parts = [
             # the manifest records each schema version's file columns, so
             # the read needs no schema-inference job over the footers
-            self.spark.read.schema(_fields_schema(m["schemas"][sv]))
+            self.spark.read.schema(_ddl(m["schemas"][sv]))
             .parquet(*paths)
-            .select(*self._reconcile(m, sv))
+            .selectExpr(*self._reconcile(m, sv))
             for sv, paths in groups.items()
         ]
         out = parts[0]
@@ -1118,6 +1177,14 @@ class LakeTable:
         one LWW window (skipped automatically when every bucket has a
         single base entry). Tombstones are hidden unless requested.
 
+        The plan is SQL text (see the module docstring): each schema
+        version's files are read with a DDL schema and reconciled by one
+        ``selectExpr`` (``_reconcile``), the window is ``row_number() OVER
+        (PARTITION BY <key> ORDER BY _seq DESC)`` inside a ``selectExpr``,
+        and its winner filter and the tombstone filter are one ``where``.
+        Nothing to scan (an empty table, buckets without entries) gives
+        ``_empty``'s local relation, which runs no Spark job.
+
         ``zones={"col": (lo, hi)}`` restricts the read to rows whose KEY
         column falls in [lo, hi] (either bound may be None), pruning data
         files by manifest zone maps BEFORE any storage access — at 10^6
@@ -1139,7 +1206,8 @@ class LakeTable:
         local FS with pyarrow the driver reads them itself
         (``_point_local``): the key columns of the row groups whose
         statistics admit the key, then the newest version's row, returned
-        as a local relation, so collecting the result runs no Spark job.
+        as a local relation, so collecting the result runs no Spark job
+        (a tombstoned winner is judged there too).
         Otherwise (a non-local FS seam, no pyarrow, a bucket column outside
         the key, a key column widened from ``date``) Spark scans the bucket
         with the exact key equality pushed down to parquet, whose row-group
@@ -1157,9 +1225,9 @@ class LakeTable:
             b = self._point_probe(m, point)
             vals = self._point_values(m, point)
             if b is not None and type(self.fs) is LocalFS:
-                local = self._point_local(m, b, vals)
+                local = self._point_local(m, b, vals, include_deleted)
                 if local is not None:
-                    return local if include_deleted else _hide_deleted(local)
+                    return local
             buckets = [b] if b is not None else None
         if zones:
             zc = set(self._zone_cols(m))
@@ -1172,35 +1240,36 @@ class LakeTable:
                 )
         raw = self._read_raw(m, buckets, zones)
         if raw is None:
-            empty = self.spark.createDataFrame([], self.spark_schema(m))
-            return empty if include_deleted else empty.drop(DELETED_COL)
+            return self._empty(m, include_deleted)
         if point is not None:
             types = {f["name"]: f["type"] for f in self.schema_fields(m)}
             for k, v in vals.items():
                 raw = raw.filter(_point_eq(k, types[k], v))
         if zones:
             for c, (lo, hi) in zones.items():
-                e = self._zone_expr(m, c)
+                e = F.expr(self._zone_expr(m, c))
                 if lo is not None:
-                    raw = raw.filter(e >= lo)
+                    raw = raw.filter(e >= F.lit(lo))
                 if hi is not None:
-                    raw = raw.filter(e <= hi)
+                    raw = raw.filter(e <= F.lit(hi))
         if self._needs_resolve(m, buckets):
-            if point is not None:
-                # every row left is a version of the one key: the newest
-                # wins, a top-1 with no exchange
-                raw = raw.orderBy(F.col(SEQ_COL).desc()).limit(1)
-            else:
-                w = W.partitionBy(*m["key"]).orderBy(F.col(SEQ_COL).desc())
-                raw = (
-                    raw.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
+            if point is None:
+                keys = ", ".join(_q(k) for k in m["key"])
+                raw = raw.selectExpr(
+                    "*",
+                    f"row_number() OVER (PARTITION BY {keys} ORDER BY {_q(SEQ_COL)} DESC) AS __rn",
                 )
+                if include_deleted:
+                    return raw.where("__rn = 1").drop("__rn")
+                return raw.where(f"__rn = 1 AND NOT {_q(DELETED_COL)}").drop("__rn", DELETED_COL)
+            # every row left is a version of the one key: the newest
+            # wins, a top-1 with no exchange
+            raw = raw.orderBy(SEQ_COL, ascending=False).limit(1)
         return raw if include_deleted else _hide_deleted(raw)
 
     # --------------------------------------------------------------- merge
-    def _bucket_expr(self, m: dict[str, Any]) -> F.Column:
+    def _bucket_expr(self, m: dict[str, Any]) -> str:
+        """A row's bucket under ``m``'s layout, SQL text."""
         # integer bucket columns hash at a canonical bigint width:
         # xxhash64 hashes int and bigint to DIFFERENT values (verified:
         # xxhash64(5 as int) != xxhash64(5 as bigint)), so without the
@@ -1209,8 +1278,9 @@ class LakeTable:
         # cast is free (fits the codegen'd hash call) and makes the
         # int->bigint promotion hash-invariant from table creation.
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
-        col = F.col(m["bucket_col"]).cast(_hash_ddl(types[m["bucket_col"]]))
-        return F.pmod(F.xxhash64(col), F.lit(m["n_buckets"])).cast("int")
+        bc = m["bucket_col"]
+        col = f"CAST({_q(bc)} AS {_sql_type(_hash_ddl(types[bc]))})"
+        return f"CAST(pmod(xxhash64({col}), {int(m['n_buckets'])}) AS int)"
 
     @staticmethod
     def _committed_in(m: dict[str, Any], query_id: str, batch_id: int) -> bool:
@@ -1247,15 +1317,16 @@ class LakeTable:
         """Normalize change columns to the current schema (NULL-fill absent
         columns — how a pre-evolution replay writes a post-evolution
         schema)."""
-        proj = [F.col("op"), F.col("seq")]
+        have = set(changes.columns)
+        proj = ["op", "seq"]
         for f in self.schema_fields(m):
             if f["name"] in (SEQ_COL, DELETED_COL):
                 continue
-            if f["name"] in changes.columns:
-                proj.append(F.col(f["name"]))
+            if f["name"] in have:
+                proj.append(_q(f["name"]))
             else:
-                proj.append(F.lit(None).cast(_spark_type(f["type"])).alias(f["name"]))
-        return changes.select(*proj)
+                proj.append(f"CAST(NULL AS {_sql_type(f['type'])}) AS {_q(f['name'])}")
+        return changes.selectExpr(*proj)
 
     def merge(
         self,
@@ -1322,29 +1393,22 @@ class LakeTable:
             # bucket = f(url) co-locates every key. Hot DOMAINS spread
             # across buckets by url-hash; the sort absorbs hot-KEY skew
             # in O(n log n) with spill (no per-key reducer to pin).
-            bucketed = changes.withColumn("__b", self._bucket_expr(m)).repartition(
-                m["n_buckets"], F.col("__b")
-            )
+            bucketed = changes.selectExpr(
+                "*", f"{self._bucket_expr(m)} AS __b"
+            ).repartition(m["n_buckets"], "__b")
             # sort prefix: an 8-byte key hash resolves almost every
             # comparison radix-style — without it the sorter walks the
             # long shared "https://host..." url prefixes byte by byte
-            kh = F.xxhash64(*[F.col(k) for k in key])
+            keys = [_q(k) for k in key]
             winners = _first_per_key(
-                bucketed, "__b", key, [kh, *key, F.col("seq").desc()]
+                bucketed, "__b", key, [f"xxhash64({', '.join(keys)})", *keys, "seq DESC"]
             )
             # _deleted is stored TRUE-or-NULL (NULL = live) in delta files:
             # the parquet footer's exact per-chunk null_count then yields
             # the tombstone count without any read-back job (see
             # _footer_stats_zones). _read_raw normalizes NULL back to
             # false, so every reader sees the same values as before.
-            out_rows = (
-                winners.select(
-                    *data_cols,
-                    F.col("seq").alias(SEQ_COL),
-                    F.when(F.col("op") == "D", F.lit(True)).alias(DELETED_COL),
-                    F.col("__b").alias("b"),
-                )
-            )
+            out_rows = winners.selectExpr(*self._out_cols(data_cols))
             return self._finish_merge(
                 m, out_rows, batch_key, replace=False, commit_retries=commit_retries
             )
@@ -1364,13 +1428,10 @@ class LakeTable:
         # below, so lineage stats / affected buckets always describe the
         # rows actually written (ADVICE r3: divergent tie winners could
         # land a row in a bucket outside `affected`)
-        oppri = (
-            F.when(F.col("op") == "D", 3)
-            .when(F.col("op") == "E", 2)
-            .when(F.col("op") == "I", 1)
-            .otherwise(0)
+        narrow = changes.selectExpr(
+            *(_q(c) for c in narrow_cols), "seq", "op",
+            "CASE op WHEN 'D' THEN 3 WHEN 'E' THEN 2 WHEN 'I' THEN 1 ELSE 0 END AS __oppri",
         )
-        narrow = changes.select(*narrow_cols, "seq", "op").withColumn("__oppri", oppri)
         if salted:
             nwin = salted_lww_dedup(
                 narrow, key=key, order_col="seq", n_salts=n_salts,
@@ -1379,12 +1440,12 @@ class LakeTable:
         else:
             nwin = lww_dedup(narrow, key=key, order_col="seq", tie_cols=("__oppri",))
         stats_collected = (
-            nwin.withColumn("__b", self._bucket_expr(m))
+            nwin.selectExpr(f"{self._bucket_expr(m)} AS __b", "seq", "op")
             .groupBy("__b")
             .agg(
-                F.max("seq").alias("applied_max_seq"),
-                F.sum(F.when(F.col("op") != "D", 1).otherwise(0)).alias("rows_upserted"),
-                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("rows_deleted"),
+                F.expr("max(seq) AS applied_max_seq"),
+                F.expr("sum(CASE WHEN op != 'D' THEN 1 ELSE 0 END) AS rows_upserted"),
+                F.expr("sum(CASE WHEN op = 'D' THEN 1 ELSE 0 END) AS rows_deleted"),
             )
             .collect()
         )
@@ -1392,37 +1453,31 @@ class LakeTable:
         if not affected:
             return self._commit_noop(m, batch_key, commit_retries=commit_retries)
 
-        existing = self.read(buckets=affected, include_deleted=True).withColumn(
-            "__b", self._bucket_expr(m)
-        )
+        data = [_q(c) for c in data_cols]
+        bucket = f"{self._bucket_expr(m)} AS __b"
         # existing rows join the race as op='E' (live) / 'D' (tombstone)
         # with their stored _seq; one window decides every survivor. On a
         # (key, seq) tie 'D' sorts first (op asc), so a redelivered delete
         # still beats the row it already tombstoned.
-        ex = existing.select(
-            F.when(F.col(DELETED_COL), F.lit("D")).otherwise(F.lit("E")).alias("op"),
-            F.col(SEQ_COL).alias("seq"),
-            *data_cols,
-            "__b",
+        ex = self.read(buckets=affected, include_deleted=True).selectExpr(
+            f"CASE WHEN {_q(DELETED_COL)} THEN 'D' ELSE 'E' END AS op",
+            f"{_q(SEQ_COL)} AS seq",
+            *data,
+            bucket,
         )
-        ch = changes.withColumn("__b", self._bucket_expr(m)).select(
-            "op", "seq", *data_cols, "__b"
-        )
-        all_rows = ex.unionByName(ch)
-        w = W.partitionBy(*key).orderBy(F.col("seq").desc(), F.col("op").asc())
+        ch = changes.selectExpr("op", "seq", *data, bucket)
+        keys = ", ".join(_q(k) for k in key)
         out_rows = (
-            all_rows.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(
-                *data_cols,
-                F.col("seq").alias(SEQ_COL),
-                F.when(F.col("op") == "D", F.lit(True)).alias(DELETED_COL),
-                F.col("__b").alias("b"),
+            ex.unionByName(ch)
+            .selectExpr(
+                "*", f"row_number() OVER (PARTITION BY {keys} ORDER BY seq DESC, op) AS __rn"
             )
+            .where("__rn = 1")
+            .selectExpr(*self._out_cols(data_cols))
         )
         return self._finish_merge(
             m,
-            out_rows.repartition(max(len(affected), 1), F.col("b")),
+            out_rows.repartition(max(len(affected), 1), "b"),
             batch_key,
             replace=True,
             commit_retries=commit_retries,
@@ -1432,6 +1487,18 @@ class LakeTable:
                 for r in stats_collected
             ],
         )
+
+    @staticmethod
+    def _out_cols(data_cols: list[str]) -> list[str]:
+        """The projection from a winning change row (``op``, ``seq``,
+        data..., ``__b``) to a written row (data..., ``_seq``, ``_deleted``
+        TRUE-or-NULL, ``b``)."""
+        return [
+            *(_q(c) for c in data_cols),
+            f"seq AS {_q(SEQ_COL)}",
+            f"CASE WHEN op = 'D' THEN true END AS {_q(DELETED_COL)}",
+            "__b AS b",
+        ]
 
     # zone-col types whose parquet footer min/max are EXACT mirrors of the
     # manifest representation (_zone_expr): int64/int32 raw values,
@@ -1592,17 +1659,20 @@ class LakeTable:
         aggregates use. The read takes ``m``'s schema plus the ``b``
         partition column, so it needs no schema-inference job."""
         aggs = [
-            F.max(SEQ_COL).alias("applied_max_seq"),
-            F.count(F.lit(1)).alias("n"),
+            f"max({_q(SEQ_COL)}) AS applied_max_seq",
+            "count(1) AS n",
             # coalesce: with the TRUE-or-NULL tombstone coding a
             # delete-free bucket sums NULL, not 0
-            F.coalesce(F.sum(F.col(DELETED_COL).cast("long")), F.lit(0)).alias(
-                "rows_deleted"
-            ),
+            f"coalesce(sum(CAST({_q(DELETED_COL)} AS bigint)), 0) AS rows_deleted",
             *self._zone_aggs(m, zone_cols),
         ]
-        schema = self.spark_schema(m).add("b", T.IntegerType())
-        agged = self.spark.read.schema(schema).parquet(out_dir).groupBy("b").agg(*aggs)
+        schema = f"{_ddl(self.schema_fields(m))}, b int"
+        agged = (
+            self.spark.read.schema(schema)
+            .parquet(out_dir)
+            .groupBy("b")
+            .agg(*(F.expr(a) for a in aggs))
+        )
         with _no_aqe(self.spark):
             rows = agged.collect()
         stats = [
@@ -1823,17 +1893,18 @@ class LakeTable:
         row-group min/max on the key columns are tight (zone reads push
         predicates down and skip row groups, not just buckets) — the
         offline counterpart of the merge's key-HASH sort, like Iceberg's
-        sort-order rewrite. None when the buckets hold no files."""
+        sort-order rewrite. None when the buckets hold no files. The rows
+        keep ``_first_per_key``'s ``__first`` column."""
         raw = self._read_raw(m, buckets)
         if raw is None:
             return None
         n = m_out["n_buckets"] if buckets is None else len(buckets)
-        rows = raw.withColumn("b", self._bucket_expr(m_out)).repartition(
-            max(n, 1), F.col("b")
+        rows = raw.selectExpr("*", f"{self._bucket_expr(m_out)} AS b").repartition(
+            max(n, 1), "b"
         )
         key = m["key"]
         return _first_per_key(
-            rows, "b", key, [*(F.col(k) for k in key), F.col(SEQ_COL).desc()]
+            rows, "b", key, [*(_q(k) for k in key), f"{_q(SEQ_COL)} DESC"]
         )
 
     def _rewrite(
@@ -1853,10 +1924,16 @@ class LakeTable:
         written: set[int] = set()
         if rows is not None:
             if expire_tombstones:
-                rows = rows.filter(~F.col(DELETED_COL))
+                rows = rows.where(f"NOT {_q(DELETED_COL)}")
             # the merge's TRUE-or-NULL tombstone coding, so footer
             # null counts mean the same in every file
-            rows = rows.withColumn(DELETED_COL, F.when(F.col(DELETED_COL), F.lit(True)))
+            # (_deleted is the last schema field)
+            d = _q(DELETED_COL)
+            rows = rows.selectExpr(
+                *(_q(f["name"]) for f in self.schema_fields(m) if f["name"] != DELETED_COL),
+                f"CASE WHEN {d} THEN true END AS {d}",
+                "b",
+            )
             written = self._write(m, rows, out_dir)
         stats, zones = self._stats_zones(m, out_dir, written, self._zone_cols(m))
         entries = {str(b): [self._entry(m, rel, b, zones)] for b in sorted(written)}
@@ -1928,7 +2005,7 @@ class LakeTable:
         if pq:
             parts.append(self.spark.read.schema(self._METRICS_SCHEMA).parquet(*pq))
         for p in parts:
-            df = p.filter(F.col("commit_version") < chain[-1]["version"]).unionByName(df)
+            df = p.where(f"commit_version < {int(chain[-1]['version'])}").unionByName(df)
         return df
 
     def resume_watermarks(self) -> dict[int, int]:
@@ -1957,12 +2034,12 @@ class LakeTable:
         wms = {int(b): s for b, s in m.get("watermarks", {}).items()}
         hot = [b for b, mx in wms.items() if mx > seq]
         if not hot:
-            empty = self.spark.createDataFrame([], self.spark_schema(m))
-            return empty if include_deleted else empty.drop(DELETED_COL)
+            return self._empty(m, include_deleted)
         out = self.read(
             version=m["version"], buckets=hot, include_deleted=include_deleted
         )
-        return out.filter(F.col(SEQ_COL) > seq)
+        # seq is the caller's: a literal, never SQL text
+        return out.where(F.expr(_q(SEQ_COL)) > F.lit(seq))
 
     # --------------------------------------------------------------- expiry
     def expire_snapshots(

@@ -53,3 +53,27 @@ def spark_path(spark):
     """``spark_path(t)`` opens table ``t`` through ``_SeamFS``, so its
     point reads run Spark's scan instead of the driver's pyarrow read."""
     return lambda t: LakeTable(spark, t.path, fs=_SeamFS())
+
+
+@pytest.fixture
+def py4j_calls(monkeypatch):
+    """``py4j_calls(fn)`` runs ``fn`` and returns ``(fn's result, the py4j
+    round trips it made)``: the commands any thread sent the JVM, counted
+    at ``ClientServerConnection.send_command``."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    real = ClientServerConnection.send_command
+
+    def counted(self, command):
+        sent[0] += 1
+        return real(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+
+    def run(fn):
+        before = sent[0]
+        out = fn()
+        return out, sent[0] - before
+
+    return run

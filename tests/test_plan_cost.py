@@ -1,0 +1,109 @@
+"""What building and running lake plans costs outside Spark's own work:
+py4j round trips per call (plans are SQL text, not ``Column`` trees), and
+Spark jobs that an empty read or a read of many entry directories would
+add."""
+
+import datetime as dt
+
+import pytest
+
+from pyspark.sql import types as T
+
+from go_bqloader_spark.lake import LakeTable
+
+COLS = [
+    ("url", "string"),
+    ("warc_ts", "timestamp"),
+    ("html", "binary"),
+    ("text", "string"),
+    ("lang", "string"),
+]
+DDL = "op string, seq bigint, url string, warc_ts timestamp, html binary, text string, lang string"
+TS = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+
+
+def _batch(spark, seqs):
+    return spark.createDataFrame(
+        [("U", s, f"https://h{s % 7}.org/p{s}", TS, b"<p>x</p>", f"text {s}", "en") for s in seqs],
+        DDL,
+    )
+
+
+@pytest.fixture
+def table(spark, tmp_path):
+    """A MoR table shaped like the benchmark's (5 columns, a url and
+    timestamp key, 8 buckets, key Blooms) holding a base and a delta."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), COLS, key=["url", "warc_ts"], n_buckets=8, bloom_bits=4096
+    )
+    t.merge(_batch(spark, range(200)), batch_key=("q", 0))
+    t.merge(_batch(spark, range(100, 300)), batch_key=("q", 1))
+    assert t._needs_resolve(t.manifest(), None)
+    return t
+
+
+def _fewest(py4j_calls, fn, reps=3):
+    """The fewest round trips ``fn`` made over ``reps`` calls: a call can
+    also carry the JVM-side deletes of objects an earlier one freed."""
+    return min(py4j_calls(fn)[1] for _ in range(reps))
+
+
+# (the count on the engine's earlier Column-built plans, the count with
+# plans built from SQL text); each budget is the second plus about 50 %
+BUDGETS = {
+    "point hit": (265, 39),
+    "point miss": (73, 12),
+    "merge": (674, 73),
+    "read plan": (380, 78),
+}
+
+
+def test_py4j_round_trips_stay_in_budget(spark, py4j_calls, table):
+    """A point hit and a miss (both collected, on the driver path), a MoR
+    merge of 40 events and building a full ``read()`` of a base plus a
+    delta stay within their round-trip budgets."""
+    hit = {"url": "https://h3.org/p150", "warc_ts": TS}
+    miss = {"url": "https://h3.org/none", "warc_ts": TS}
+    assert len(table.read(point=hit).collect()) == 1
+    # distinct batch keys, each batch built before the count
+    merges = iter([(_batch(spark, range(300 + i, 340 + i)), ("q", 2 + i)) for i in range(3)])
+    counts = {
+        "point hit": _fewest(py4j_calls, lambda: table.read(point=hit).collect()),
+        "point miss": _fewest(py4j_calls, lambda: table.read(point=miss).collect()),
+        "merge": _fewest(py4j_calls, lambda: table.merge(*next(merges))),
+        "read plan": _fewest(py4j_calls, table.read),
+    }
+    for op, n in counts.items():
+        assert n <= BUDGETS[op][1] * 3 // 2, (op, n, BUDGETS[op])
+
+
+@pytest.mark.parametrize("include_deleted", [True, False])
+def test_empty_reads_run_no_spark_job(spark, spark_jobs, tmp_path, include_deleted):
+    """A read with nothing to scan (an empty table, buckets without
+    entries) and an idle consumer's ``read_changes_since`` return a local
+    relation of the table's schema: collecting it runs no Spark job."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), COLS, key=["url", "warc_ts"], n_buckets=8)
+    want = T.StructType(
+        [f for f in t.spark_schema().fields if include_deleted or f.name != "_deleted"]
+    )
+    reads = {"empty table": t.read(include_deleted=include_deleted)}
+    t.merge(_batch(spark, [3]), batch_key=("q", 0))
+    (full,) = t.manifest()["buckets"]
+    reads["no entries"] = t.read(buckets=[(int(full) + 1) % 8], include_deleted=include_deleted)
+    reads["idle consumer"] = t.read_changes_since(3, include_deleted=include_deleted)
+    for name, df in reads.items():
+        rows, jobs = spark_jobs(f"empty-{include_deleted}-{name}", df.collect)
+        assert (rows, jobs) == ([], 0), name
+        assert df.schema == want, name
+
+
+def test_read_of_many_entry_directories_lists_without_a_job(spark, spark_jobs, tmp_path):
+    """Compacting 34 entry directories (above Spark's default parallel
+    listing threshold of 32) runs one Spark job, the write: the paths are
+    listed on the driver."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), COLS, key=["url", "warc_ts"], n_buckets=17)
+    t.merge(_batch(spark, range(200)), batch_key=("q", 0))
+    t.merge(_batch(spark, range(100, 300)), batch_key=("q", 1))
+    assert sum(t.entries_per_bucket().values()) == 34
+    n, jobs = spark_jobs("compact-34", t.compact)
+    assert (n, jobs) == (17, 1)

@@ -15,6 +15,7 @@ from contextlib import contextmanager
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from go_bqloader_spark.lake import LakeTable
 from go_bqloader_spark.lake.sparkhash import spark_xxhash64
@@ -66,7 +67,7 @@ def _spark_probes(t, m, df):
     has_bucket = m["bucket_col"] in m["key"]
     sel = [F.xxhash64(*(F.col(k).cast(w) for k, _, w in _widths(t, m))).alias("h")]
     if has_bucket:
-        sel.append(t._bucket_expr(m).alias("b"))
+        sel.append(F.expr(t._bucket_expr(m)).alias("b"))
     return [(r["b"] if has_bucket else None, r["h"]) for r in df.select(*sel).collect()]
 
 
@@ -305,6 +306,61 @@ def test_point_and_scan_exact_across_schema_evolution(spark, tmp_path, mode):
         rows = t.read(point={"url": url, "k": k}).collect()
         exp = [want[(url, k)]] if (url, k) in want else []
         assert [(r["body"], r["lang"], r["_seq"]) for r in rows] == exp, (url, k)
+
+
+@pytest.mark.parametrize("odd", ["c d", "a.b", "x`y"])
+def test_odd_column_names_round_trip(spark, spark_path, tmp_path, odd):
+    """Column names with a space, a dot (one column, not a nested field)
+    or a backtick, in every column the table has (key, bucket, payload,
+    added and renamed), through create, merges with a delete, read, both
+    point paths, add_column, rename_column and compact."""
+    url, k, text, lang, body = (f"{c}{odd}" for c in ("url", "k", "text", "lang", "body"))
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [(url, "string"), (k, "int"), (text, "string")],
+        key=[url, k], bucket_col=url, n_buckets=3,
+    )
+
+    def batch(rows, cols):
+        schema = T.StructType(
+            [T.StructField("op", T.StringType()), T.StructField("seq", T.LongType())]
+            + [T.StructField(c, _DDL_TO_SPARK[d]) for c, d in cols]
+        )
+        return spark.createDataFrame(rows, schema)
+
+    base = [(url, "string"), (k, "int"), (text, "string")]
+    t.merge(batch([("U", i, f"u/{i}", i, f"t{i}") for i in range(8)], base), batch_key=("q", 0))
+    t.add_column(lang, "string")
+    t.merge(
+        batch([("U", 10, "u/1", 1, "t1b", "en"), ("D", 11, "u/2", 2, None, None)],
+              [*base, (lang, "string")]),
+        batch_key=("q", 1),
+    )
+    t.rename_column(text, body)
+    t.merge(
+        batch([("U", 20, "u/3", 3, "b3", "fr")],
+              [(url, "string"), (k, "int"), (body, "string"), (lang, "string")]),
+        batch_key=("q", 2),
+    )
+    want = {(f"u/{i}", i): (f"t{i}", None, i) for i in range(8)}
+    want[("u/1", 1)] = ("t1b", "en", 10)
+    want[("u/3", 3)] = ("b3", "fr", 20)
+    del want[("u/2", 2)]
+
+    def check():
+        assert t.read().columns == [url, k, body, lang, "_seq"]
+        got = {(r[url], r[k]): (r[body], r[lang], r["_seq"]) for r in t.read().collect()}
+        assert got == want
+        for reader in (t, spark_path(t)):
+            for key in [*want, ("u/2", 2), ("u/x", 9)]:
+                rows = reader.read(point={url: key[0], k: key[1]}).collect()
+                exp = [want[key]] if key in want else []
+                assert [(r[body], r[lang], r["_seq"]) for r in rows] == exp, key
+            dead = reader.read(point={url: "u/2", k: 2}, include_deleted=True).collect()
+            assert [(r["_seq"], r["_deleted"]) for r in dead] == [(11, True)]
+
+    check()
+    assert t.compact() > 0
+    check()
 
 
 # ------------------------------------------- driver path against fallback
