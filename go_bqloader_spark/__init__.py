@@ -23,7 +23,7 @@ Layout:
 - ``sources``     CSV-variant parsers (P1-P3), binlog/change-feed readers,
                   deterministic synthetic data generator
 - ``lake``        snapshot-versioned table format: atomic manifest commits,
-                  bucket-partitioned copy-on-write MERGE, schema evolution,
+                  bucket-partitioned merge-on-read MERGE, schema evolution,
                   exactly-once offset ledger, time travel
 - ``operators``   merge/dedup/similarity operators (LWW dedup, salted
                   two-phase dedup, MinHash-LSH, SimHash, ANN)

@@ -2,7 +2,7 @@
 
 Subcommands (argv[1]):
 
-- ``create   <table_path> [n_buckets] [mode]`` — create the pages table
+- ``create   <table_path> [n_buckets]`` — create the pages table
 - ``replay   <table_path> <binlog_glob> <checkpoint_dir>`` — drain the
   currently-available binlog through the exactly-once streaming apply
   (availableNow trigger); safe to re-run, resumes from checkpoint
@@ -53,10 +53,9 @@ def main(argv: list[str]) -> int:
     if cmd == "create":
         path = args[0]
         n_buckets = int(args[1]) if len(args) > 1 else 256
-        mode = args[2] if len(args) > 2 else "mor"
         LakeTable.create(spark, path, PAGE_COLS, key=["url", "warc_ts"],
-                         n_buckets=n_buckets, write_mode=mode)
-        print(json.dumps({"created": path, "n_buckets": n_buckets, "mode": mode}))
+                         n_buckets=n_buckets)
+        print(json.dumps({"created": path, "n_buckets": n_buckets}))
     elif cmd == "replay":
         path, binlog, ckpt = args[:3]
         t = LakeTable(spark, path)

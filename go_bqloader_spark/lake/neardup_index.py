@@ -119,7 +119,6 @@ class NearDupIndex:
             key=["band_hash", "band_idx", *cm["key"]],
             bucket_col="band_hash",
             n_buckets=n_buckets,
-            write_mode="mor",
         )
         fs.write_atomic(
             os.path.join(path, _PARAMS),

@@ -20,15 +20,19 @@ interface (SURVEY.md §7 names this exact fallback):
   pyarrow (key columns first, only the row groups whose statistics admit
   the key) and returns the newest version as a local relation; a Spark
   scan of the bucket is the fallback off a local FS or without pyarrow.
-- **Two write modes** (Iceberg copy-on-write vs merge-on-read):
-  * ``cow`` — merge rewrites affected buckets: (existing ∪ winners) → one
-    LWW window → new base files. Read-optimized; write cost O(bucket).
-  * ``mor`` (default) — merge APPENDS the deduped winners as delta files
-    per bucket, never reading the base: write cost O(batch) — this is what
-    sustains CDC apply throughput at 10^10 events. Reads resolve
-    base+deltas with the same LWW window; ``compact()`` folds a bucket's
-    entries back to a single base file (run it every N batches or when
-    ``entries_per_bucket`` exceeds a threshold).
+- **Merge-on-read** — merge APPENDS the deduped winners as delta files
+  per bucket, never reading the base: write cost O(batch) — this is what
+  sustains CDC apply throughput at 10^10 events. Reads resolve
+  base+deltas with the same LWW rule; ``compact()`` folds a bucket's
+  entries back to a single key-sorted base file, the read-optimized
+  layout (run it every N batches or when ``entries_per_bucket`` exceeds
+  a threshold). Tables written by the copy-on-write mode of earlier
+  releases hold one resolved entry per bucket, a valid MoR layout, and
+  take merges unchanged.
+- **One LWW rule** — a key's newest ``_seq`` wins; on a ``_seq`` tie the
+  tombstone wins. The merge's in-batch dedup, the scan window, both
+  point paths and the compaction/rebucket rewrite all order by
+  (``_seq`` DESC, deleted DESC), so every reader agrees on one snapshot.
 - **Exactly-once offset ledger** — the manifest embeds applied
   ``(query_id, batch_id)`` keys; a merge whose batch key is present is a
   no-op. Ledger entry and data land in ONE atomic pointer swap, so
@@ -49,16 +53,15 @@ interface (SURVEY.md §7 names this exact fallback):
   with the data and costs no extra Spark job; resumable replay = max
   applied seq per bucket (``resume_watermarks``).
 
-Shuffle budget per merge: mor moves the wide payload across the memory bus
-exactly ONCE (a single exchange on bucket; dedup is a within-partition sort
-+ lag filter because bucket = f(url) already co-locates every key). cow
-adds the affected-bucket read-back and a key-window. ``compact()`` and
-``rebucket()`` pay the same single exchange: they read the raw files, hash
-rows onto their (new) bucket and keep the first row per key inside each
-bucket partition (``_first_per_key``, shared with the mor merge), so the
-rewrite is one exchange where a key-window read plus a bucket repartition
-would be two, and every rewritten file comes out key-sorted. Plain scans
-still resolve with the key-window. The engine is
+Shuffle budget per merge: the wide payload crosses the memory bus exactly
+ONCE (a single exchange on bucket; dedup is a within-partition sort + lag
+filter because bucket = f(url) already co-locates every key).
+``compact()`` and ``rebucket()`` pay the same single exchange: they read
+the raw files, hash rows onto their (new) bucket and keep the first row
+per key inside each bucket partition (``_first_per_key``, shared with the
+merge), so the rewrite is one exchange where a key-window read plus a
+bucket repartition would be two, and every rewritten file comes out
+key-sorted. Plain scans still resolve with the key-window. The engine is
 bandwidth-frugal by design — at cluster scale network bytes are the merge
 bottleneck, and in this sandbox the shared memory bus plays that role
 (measured: ~5 GB/s aggregate; see BENCH/BASELINE.md).
@@ -99,7 +102,6 @@ from pyspark.sql import types as T
 
 from go_bqloader_spark.lake.fsio import LocalFS
 from go_bqloader_spark.lake.sparkhash import spark_xxhash64
-from go_bqloader_spark.operators.merge import lww_dedup, salted_lww_dedup
 
 SEQ_COL = "_seq"
 DELETED_COL = "_deleted"
@@ -359,12 +361,13 @@ def _first_per_key(
 
 class CommitConflict(RuntimeError):
     """Another writer committed between this writer's snapshot read and its
-    manifest CAS. Recoverable: ``merge()`` retries automatically (MoR delta
-    appends rebase at the manifest level without rewriting data; CoW
-    re-merges against the fresh snapshot). Maintenance rewrites
-    (``compact``/``rebucket``/schema DDL) surface it to the caller — their
-    output is derived from the superseded snapshot, so a blind re-commit
-    could drop a concurrent merge's rows; re-run the operation instead."""
+    manifest CAS. Recoverable: ``merge()`` retries automatically (a delta
+    append rebases at the manifest level without rewriting data; one that
+    raced a rebucket recomputes against the fresh layout). Maintenance
+    rewrites (``compact``/``rebucket``/schema DDL) surface it to the caller
+    — their output is derived from the superseded snapshot, so a blind
+    re-commit could drop a concurrent merge's rows; re-run the operation
+    instead."""
 
 
 @dataclass
@@ -408,7 +411,6 @@ class LakeTable:
         key: list[str] | None = None,
         n_buckets: int = 32,
         bucket_col: str = "url",
-        write_mode: str = "mor",
         bloom_bits: int = 0,
         max_manifest_groups: int = 64,
         fs=None,
@@ -436,7 +438,6 @@ class LakeTable:
         their stats from the footers with no read-back. ``bloom`` fields
         that older versions stored on manifest entries are ignored.
         """
-        assert write_mode in ("mor", "cow")
         key = key or ["url", "warc_ts"]
         fs = fs or LocalFS()
         fs.makedirs(os.path.join(path, _MANIFESTS))
@@ -457,7 +458,9 @@ class LakeTable:
             "key": key,
             "bucket_col": bucket_col,
             "n_buckets": n_buckets,
-            "write_mode": write_mode,
+            # always "mor": earlier releases read a missing field as
+            # copy-on-write; this release never reads it
+            "write_mode": "mor",
             "buckets": {},
             "ledger": {},
             # all batch ids <= ledger_floor[qid] are committed (compacted
@@ -1002,9 +1005,10 @@ class LakeTable:
     ) -> DataFrame | None:
         """``read(point=...)`` answered on the driver with no Spark job:
         pyarrow finds the key's rows in bucket ``b``'s files, and the
-        newest by ``_seq`` comes back as a local relation of its schema
-        version under ``_reconcile``'s projection, one ``DataFrame`` step
-        that Spark folds into the relation, so collecting it runs no job.
+        newest by ``_seq`` (the tombstone on a tie) comes back as a local
+        relation of its schema version under ``_reconcile``'s projection,
+        one ``DataFrame`` step that Spark folds into the relation, so
+        collecting it runs no job.
         The driver also judges the tombstone: a miss, or a tombstoned
         winner read without ``include_deleted``, is ``_empty``'s relation,
         and a hit's projection drops ``_deleted`` unless it was asked
@@ -1014,11 +1018,11 @@ class LakeTable:
         column under a widening no exact pyarrow cast reproduces (``date``
         to ``timestamp``).
 
-        Per entry only the key columns and ``_seq`` are read, from the row
-        groups whose key statistics admit the point (``_group_may_hold``;
-        compaction writes key-sorted files, so at most one group of a base
-        file survives); then every column of the winner's row group, and
-        its row is sliced out. Keys match as Spark's ``<=>`` does, on the
+        Per entry only the key columns, ``_seq`` and ``_deleted`` are read,
+        from the row groups whose key statistics admit the point
+        (``_group_may_hold``; compaction writes key-sorted files, so at
+        most one group of a base file survives); then every column of the
+        winner's row group, and its row is sliced out. Keys match as Spark's ``<=>`` does, on the
         internal values ``vals`` (``_key_rows``). pyarrow reads no parquet
         Bloom filter, so this path prunes by statistics only."""
         try:
@@ -1054,12 +1058,14 @@ class LakeTable:
                     for g in range(md.num_row_groups):
                         if not _group_may_hold(md.row_group(g), idx, keys):
                             continue
-                        t = pf.read_row_group(g, columns=[*(n for n, _, _ in keys), SEQ_COL])
+                        t = pf.read_row_group(
+                            g, columns=[*(n for n, _, _ in keys), SEQ_COL, DELETED_COL]
+                        )
                         for i in _key_rows(t, keys):
                             s = t[SEQ_COL][i].as_py()
                             # newest _seq first, NULL last (Spark's desc
-                            # order); a later entry wins a tie
-                            rank = (s is not None, s or 0)
+                            # order), then the tombstone (the LWW tie rule)
+                            rank = (s is not None, s or 0, bool(t[DELETED_COL][i].as_py()))
                             if best is None or rank >= best[0]:
                                 best = (rank, path, g, i, sv)
         if best is None:
@@ -1173,14 +1179,15 @@ class LakeTable:
         zones: dict[str, tuple] | None = None,
         point: dict[str, Any] | None = None,
     ) -> DataFrame:
-        """Read a snapshot. In mor mode, base+delta files are resolved with
-        one LWW window (skipped automatically when every bucket has a
-        single base entry). Tombstones are hidden unless requested.
+        """Read a snapshot. Base+delta files are resolved with one LWW
+        window (skipped automatically when every bucket has a single base
+        entry). Tombstones are hidden unless requested.
 
         The plan is SQL text (see the module docstring): each schema
         version's files are read with a DDL schema and reconciled by one
         ``selectExpr`` (``_reconcile``), the window is ``row_number() OVER
-        (PARTITION BY <key> ORDER BY _seq DESC)`` inside a ``selectExpr``,
+        (PARTITION BY <key> ORDER BY _seq DESC, _deleted DESC)`` inside a
+        ``selectExpr`` (a ``_seq`` tie goes to the tombstone),
         and its winner filter and the tombstone filter are one ``where``.
         Nothing to scan (an empty table, buckets without entries) gives
         ``_empty``'s local relation, which runs no Spark job.
@@ -1213,8 +1220,8 @@ class LakeTable:
         with the exact key equality pushed down to parquet, whose row-group
         statistics, dictionaries and (tables created with ``bloom_bits``)
         key Blooms skip the row groups that cannot hold the key, and
-        resolves the versions left with a top-1 by ``_seq``: one Spark
-        job. Both paths compare the key as ``<=>`` does on the values'
+        resolves the versions left with a top-1 by (``_seq``, ``_deleted``)
+        DESC: one Spark job. Both paths compare the key as ``<=>`` does on the values'
         internal forms (a float point value is rounded to float32 first).
         A value of the wrong Python type for its column raises ValueError.
         Mutually exclusive with ``buckets``/``zones``."""
@@ -1255,16 +1262,16 @@ class LakeTable:
         if self._needs_resolve(m, buckets):
             if point is None:
                 keys = ", ".join(_q(k) for k in m["key"])
+                order = f"{_q(SEQ_COL)} DESC, {_q(DELETED_COL)} DESC"
                 raw = raw.selectExpr(
-                    "*",
-                    f"row_number() OVER (PARTITION BY {keys} ORDER BY {_q(SEQ_COL)} DESC) AS __rn",
+                    "*", f"row_number() OVER (PARTITION BY {keys} ORDER BY {order}) AS __rn"
                 )
                 if include_deleted:
                     return raw.where("__rn = 1").drop("__rn")
                 return raw.where(f"__rn = 1 AND NOT {_q(DELETED_COL)}").drop("__rn", DELETED_COL)
             # every row left is a version of the one key: the newest
-            # wins, a top-1 with no exchange
-            raw = raw.orderBy(SEQ_COL, ascending=False).limit(1)
+            # wins (the tombstone on a tie), a top-1 with no exchange
+            raw = raw.orderBy([SEQ_COL, DELETED_COL], ascending=False).limit(1)
         return raw if include_deleted else _hide_deleted(raw)
 
     # --------------------------------------------------------------- merge
@@ -1332,22 +1339,23 @@ class LakeTable:
         self,
         changes: DataFrame,
         batch_key: tuple[str, int] | None = None,
-        salted: bool = True,
-        n_salts: int = 16,
         commit_retries: int = 3,
     ) -> MergeStats:
         """Apply a change batch: LWW upsert + delete, exactly-once.
 
-        ``changes`` columns: ``op ('I'|'U'|'D'), seq`` + data columns.
+        ``changes`` columns: ``op ('I'|'U'|'D'), seq`` + data columns. The
+        batch's winners (newest ``seq`` per key, a delete on a ``seq`` tie)
+        are appended as one delta file per touched bucket; the base is
+        never read.
 
         Optimistic concurrency: when another writer commits between this
         merge's snapshot read and its manifest CAS, the merge retries up to
-        ``commit_retries`` times. A MoR delta append rebases at the
-        MANIFEST level — the written files stay valid under any interleaved
+        ``commit_retries`` times. The delta append rebases at the MANIFEST
+        level — the written files stay valid under any interleaved
         merge/compact/schema commit (entries pin their schema_version and
         bucket membership is layout-stable), so the retry is a metadata
-        re-write, not a Spark job. A CoW merge (or a MoR append that raced
-        a rebucket) recomputes against the fresh snapshot. Exactly-once
+        re-write, not a Spark job. An append that raced a rebucket
+        recomputes against the fresh snapshot. Exactly-once
         holds under contention: every retry re-checks the ledger, and a
         batch_key another writer landed first returns ``skipped`` with the
         stale data dir removed. ``commit_retries=0`` restores fail-fast
@@ -1355,9 +1363,7 @@ class LakeTable:
         last: CommitConflict | None = None
         for _ in range(commit_retries + 1):
             try:
-                return self._merge_once(
-                    changes, batch_key, salted, n_salts, commit_retries
-                )
+                return self._merge_once(changes, batch_key, commit_retries)
             except CommitConflict as e:
                 last = e
         raise last
@@ -1366,8 +1372,6 @@ class LakeTable:
         self,
         changes: DataFrame,
         batch_key: tuple[str, int] | None,
-        salted: bool,
-        n_salts: int,
         commit_retries: int,
     ) -> MergeStats:
         m = self.manifest()
@@ -1383,122 +1387,36 @@ class LakeTable:
         ]
         changes = self._align_changes(m, changes)
 
-        if m.get("write_mode", "cow") == "mor":
-            # Single-payload-shuffle path: repartition by BUCKET (one
-            # exchange of the wide rows), sort within partitions by
-            # (key, seq desc), keep the first row of each key group via
-            # lag — the LWW winner — then write, already clustered by
-            # bucket. The wide html/text payload crosses the memory bus
-            # exactly once; dedup needs no second exchange because
-            # bucket = f(url) co-locates every key. Hot DOMAINS spread
-            # across buckets by url-hash; the sort absorbs hot-KEY skew
-            # in O(n log n) with spill (no per-key reducer to pin).
-            bucketed = changes.selectExpr(
-                "*", f"{self._bucket_expr(m)} AS __b"
-            ).repartition(m["n_buckets"], "__b")
-            # sort prefix: an 8-byte key hash resolves almost every
-            # comparison radix-style — without it the sorter walks the
-            # long shared "https://host..." url prefixes byte by byte
-            keys = [_q(k) for k in key]
-            winners = _first_per_key(
-                bucketed, "__b", key, [f"xxhash64({', '.join(keys)})", *keys, "seq DESC"]
-            )
-            # _deleted is stored TRUE-or-NULL (NULL = live) in delta files:
-            # the parquet footer's exact per-chunk null_count then yields
-            # the tombstone count without any read-back job (see
-            # _footer_stats_zones). _read_raw normalizes NULL back to
-            # false, so every reader sees the same values as before.
-            out_rows = winners.selectExpr(*self._out_cols(data_cols))
-            return self._finish_merge(
-                m, out_rows, batch_key, replace=False, commit_retries=commit_retries
-            )
-
-        # ---- cow: rewrite affected buckets (read-optimized) ------------
-        # Affected buckets + per-bucket lineage stats come from a NARROW
-        # pre-pass over (key, bucket_col, seq, op) only — the wide payload
-        # is never shuffled or persisted here (round 2 persisted the wide
-        # winner rows, pinning them in executor memory for the whole
-        # merge). The main write job unions existing rows with the RAW
-        # aligned changes: the survivor window below is itself the LWW
-        # dedup, so a separate winners pass would shuffle the payload an
-        # extra time for nothing.
-        narrow_cols = list(dict.fromkeys([*key, m["bucket_col"]]))
-        # __oppri DESC == op ASC for op in {D,E,I,U}: the narrow pre-pass
-        # breaks (key, seq) ties exactly like the payload survivor window
-        # below, so lineage stats / affected buckets always describe the
-        # rows actually written (ADVICE r3: divergent tie winners could
-        # land a row in a bucket outside `affected`)
-        narrow = changes.selectExpr(
-            *(_q(c) for c in narrow_cols), "seq", "op",
-            "CASE op WHEN 'D' THEN 3 WHEN 'E' THEN 2 WHEN 'I' THEN 1 ELSE 0 END AS __oppri",
-        )
-        if salted:
-            nwin = salted_lww_dedup(
-                narrow, key=key, order_col="seq", n_salts=n_salts,
-                tie_cols=("__oppri",),
-            )
-        else:
-            nwin = lww_dedup(narrow, key=key, order_col="seq", tie_cols=("__oppri",))
-        stats_collected = (
-            nwin.selectExpr(f"{self._bucket_expr(m)} AS __b", "seq", "op")
-            .groupBy("__b")
-            .agg(
-                F.expr("max(seq) AS applied_max_seq"),
-                F.expr("sum(CASE WHEN op != 'D' THEN 1 ELSE 0 END) AS rows_upserted"),
-                F.expr("sum(CASE WHEN op = 'D' THEN 1 ELSE 0 END) AS rows_deleted"),
-            )
-            .collect()
-        )
-        affected = sorted(int(r["__b"]) for r in stats_collected)
-        if not affected:
-            return self._commit_noop(m, batch_key, commit_retries=commit_retries)
-
-        data = [_q(c) for c in data_cols]
-        bucket = f"{self._bucket_expr(m)} AS __b"
-        # existing rows join the race as op='E' (live) / 'D' (tombstone)
-        # with their stored _seq; one window decides every survivor. On a
-        # (key, seq) tie 'D' sorts first (op asc), so a redelivered delete
-        # still beats the row it already tombstoned.
-        ex = self.read(buckets=affected, include_deleted=True).selectExpr(
-            f"CASE WHEN {_q(DELETED_COL)} THEN 'D' ELSE 'E' END AS op",
-            f"{_q(SEQ_COL)} AS seq",
-            *data,
-            bucket,
-        )
-        ch = changes.selectExpr("op", "seq", *data, bucket)
-        keys = ", ".join(_q(k) for k in key)
-        out_rows = (
-            ex.unionByName(ch)
-            .selectExpr(
-                "*", f"row_number() OVER (PARTITION BY {keys} ORDER BY seq DESC, op) AS __rn"
-            )
-            .where("__rn = 1")
-            .selectExpr(*self._out_cols(data_cols))
-        )
-        return self._finish_merge(
-            m,
-            out_rows.repartition(max(len(affected), 1), "b"),
-            batch_key,
-            replace=True,
-            commit_retries=commit_retries,
-            affected=affected,
-            stats_rows=[
-                (int(r["__b"]), r["applied_max_seq"], r["rows_upserted"], r["rows_deleted"])
-                for r in stats_collected
-            ],
-        )
-
-    @staticmethod
-    def _out_cols(data_cols: list[str]) -> list[str]:
-        """The projection from a winning change row (``op``, ``seq``,
-        data..., ``__b``) to a written row (data..., ``_seq``, ``_deleted``
-        TRUE-or-NULL, ``b``)."""
-        return [
+        # Single-payload-shuffle path: repartition by BUCKET (one exchange
+        # of the wide rows), sort within partitions by (key, seq desc, delete
+        # first), keep the first row of each key group via lag — the LWW
+        # winner — then write, already clustered by bucket. The wide
+        # html/text payload crosses the memory bus exactly once; dedup
+        # needs no second exchange because bucket = f(url) co-locates every
+        # key. Hot DOMAINS spread across buckets by url-hash; the sort
+        # absorbs hot-KEY skew in O(n log n) with spill (no per-key reducer
+        # to pin).
+        bucketed = changes.selectExpr(
+            "*", f"{self._bucket_expr(m)} AS __b"
+        ).repartition(m["n_buckets"], "__b")
+        # sort prefix: an 8-byte key hash resolves almost every
+        # comparison radix-style — without it the sorter walks the
+        # long shared "https://host..." url prefixes byte by byte
+        keys = [_q(k) for k in key]
+        order = [f"xxhash64({', '.join(keys)})", *keys, "seq DESC", "op = 'D' DESC"]
+        winners = _first_per_key(bucketed, "__b", key, order)
+        # _deleted is stored TRUE-or-NULL (NULL = live) in delta files:
+        # the parquet footer's exact per-chunk null_count then yields
+        # the tombstone count without any read-back job (see
+        # _footer_stats_zones). _read_raw normalizes NULL back to
+        # false, so every reader sees the same values as before.
+        out_rows = winners.selectExpr(
             *(_q(c) for c in data_cols),
             f"seq AS {_q(SEQ_COL)}",
             f"CASE WHEN op = 'D' THEN true END AS {_q(DELETED_COL)}",
             "__b AS b",
-        ]
+        )
+        return self._finish_merge(m, out_rows, batch_key, commit_retries)
 
     # zone-col types whose parquet footer min/max are EXACT mirrors of the
     # manifest representation (_zone_expr): int64/int32 raw values,
@@ -1686,41 +1604,32 @@ class LakeTable:
         m: dict[str, Any],
         out_rows: DataFrame,
         batch_key: tuple[str, int] | None,
-        replace: bool,
         commit_retries: int = 3,
-        affected: list[int] | None = None,
-        stats_rows: list[tuple] | None = None,
     ) -> MergeStats:
-        """Write ``out_rows`` (cols: data..., _seq, _deleted, b), derive
-        lineage stats, and commit the manifest atomically.
+        """Write ``out_rows`` (cols: data..., _seq, _deleted, b) as delta
+        files, derive lineage stats, and commit the manifest atomically.
 
         Stats and zone bounds come from ``_stats_zones``: the parquet
         footers just written, with no second Spark job, or the one
-        read-back fallback. cow brings its lineage stats from its narrow
-        pre-pass and takes only the zones."""
+        read-back fallback."""
         rel = self._new_data_dir(m, "")
         out_dir = os.path.join(self.path, rel)
 
-        zone_cols = self._zone_cols(m)
-        # string zone bounds are skipped on DELTA appends (replace=False):
-        # keys are hash-scattered within a bucket, so a delta file's string
-        # min/max spans ~the whole key range and never prunes, while
-        # computing it forces the read-back to scan the long url strings
-        # (measured 33% of the read-back pass). Numeric/temporal bounds
-        # stay (batches correlate with event time — they DO prune), and
-        # compaction/rebucket/CoW rewrites are key-sorted, so they record
-        # full bounds. Readers keep entries with missing bounds by design.
-        if not replace:
-            types = {f["name"]: f["type"] for f in self.schema_fields(m)}
-            zone_cols = [c for c in zone_cols if types[c] != "string"]
+        # string zone bounds are skipped on delta appends: keys are
+        # hash-scattered within a bucket, so a delta file's string min/max
+        # spans ~the whole key range and never prunes, while computing it
+        # forces the read-back to scan the long url strings (measured 33%
+        # of the read-back pass). Numeric/temporal bounds stay (batches
+        # correlate with event time — they DO prune), and the key-sorted
+        # compaction/rebucket rewrites (_rewrite) record full bounds.
+        # Readers keep entries with missing bounds by design.
+        types = {f["name"]: f["type"] for f in self.schema_fields(m)}
+        zone_cols = [c for c in self._zone_cols(m) if types[c] != "string"]
         written = self._write(m, out_rows, out_dir)
-        if affected is None:
-            affected = sorted(written)
-        if not written and not affected:  # empty mor batch: no-op commit
+        if not written:  # empty batch: no-op commit
             return self._commit_noop(m, batch_key, commit_retries=commit_retries)
-        written_stats, zones = self._stats_zones(m, out_dir, written, zone_cols)
-        if stats_rows is None:
-            stats_rows = written_stats
+        affected = sorted(written)
+        stats_rows, zones = self._stats_zones(m, out_dir, written, zone_cols)
 
         rows_upserted = sum(r[2] for r in stats_rows)
         rows_deleted = sum(r[3] for r in stats_rows)
@@ -1729,10 +1638,7 @@ class LakeTable:
 
         def _build(base: dict[str, Any]) -> dict[str, Any]:
             new_buckets = {b: list(entries) for b, entries in base["buckets"].items()}
-            if replace:
-                for b in affected:
-                    new_buckets.pop(str(b), None)
-            for b in sorted(written):
+            for b in affected:
                 # schema_version pins the snapshot the files were WRITTEN
                 # under (m, not base): after a rebase past a concurrent
                 # schema commit, readers still resolve these files against
@@ -1765,7 +1671,6 @@ class LakeTable:
                 ],
                 summary={
                     "operation": "merge",
-                    "mode": base.get("write_mode", "cow"),
                     "affected_buckets": len(affected),
                     "rows_upserted": rows_upserted,
                     "rows_deleted": rows_deleted,
@@ -1774,13 +1679,11 @@ class LakeTable:
             )
 
         # optimistic commit: a CAS loss means another writer landed a
-        # version on our parent. A delta append (replace=False) is
-        # REBASEABLE — the written files are valid under any interleaved
-        # merge/compact/schema commit, so the retry rebuilds only the
-        # manifest on the fresh snapshot. A bucket-REPLACEMENT commit is
-        # not: its output resolves the buckets as of snapshot m, and
-        # rebasing would silently drop rows a concurrent merge added to an
-        # affected bucket — recompute instead (merge() owns that loop).
+        # version on our parent. A delta append is REBASEABLE — the written
+        # files are valid under any interleaved merge/compact/schema
+        # commit, so the retry rebuilds only the manifest on the fresh
+        # snapshot. A concurrent rebucket is the exception: recompute
+        # instead (merge() owns that loop).
         base = m
         for attempt in range(commit_retries + 1):
             m2 = _build(base)
@@ -1796,14 +1699,10 @@ class LakeTable:
                 if batch_key is not None and self._committed_in(fresh, *batch_key):
                     self.fs.delete(out_dir)
                     return MergeStats(fresh["version"], True, [], 0, 0, None)
-                rebase_safe = (
-                    not replace
-                    # a concurrent rebucket changed the layout: our b= dirs
-                    # no longer match bucket membership
-                    and fresh["n_buckets"] == m["n_buckets"]
-                    and fresh["bucket_col"] == m["bucket_col"]
-                )
-                if not rebase_safe or attempt >= commit_retries:
+                # a concurrent rebucket changed the layout: our b= dirs no
+                # longer match bucket membership
+                layout = ("n_buckets", "bucket_col")
+                if attempt >= commit_retries or any(fresh[k] != m[k] for k in layout):
                     self.fs.delete(out_dir)
                     raise
                 base = fresh
@@ -1903,9 +1802,8 @@ class LakeTable:
             max(n, 1), "b"
         )
         key = m["key"]
-        return _first_per_key(
-            rows, "b", key, [*(_q(k) for k in key), f"{_q(SEQ_COL)} DESC"]
-        )
+        order = [*(_q(k) for k in key), f"{_q(SEQ_COL)} DESC", f"{_q(DELETED_COL)} DESC"]
+        return _first_per_key(rows, "b", key, order)
 
     def _rewrite(
         self,

@@ -30,17 +30,11 @@ def lww_dedup(
     changes: DataFrame,
     key: Sequence[str] = DEFAULT_KEY,
     order_col: str = "seq",
-    tie_cols: Sequence[str] = (),
 ) -> DataFrame:
     """One winner per key: ``row_number() OVER (PARTITION BY key ORDER BY
     seq DESC) = 1``. Exactly the north-star's "last-writer-wins dedup via
-    window ranking". ``tie_cols`` (each DESC) break ``order_col`` ties
-    deterministically — the CoW merge passes an op-priority column so its
-    narrow stats pre-pass picks the same winner as the payload survivor
-    window (ADVICE r3)."""
-    w = W.partitionBy(*key).orderBy(
-        F.col(order_col).desc(), *[F.col(c).desc() for c in tie_cols]
-    )
+    window ranking"."""
+    w = W.partitionBy(*key).orderBy(F.col(order_col).desc())
     return (
         changes.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -53,7 +47,6 @@ def salted_lww_dedup(
     key: Sequence[str] = DEFAULT_KEY,
     order_col: str = "seq",
     n_salts: int = 16,
-    tie_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Two-phase skew-proof LWW dedup, same result as :func:`lww_dedup`.
 
@@ -67,18 +60,8 @@ def salted_lww_dedup(
     Spark performs partial (map-side) aggregation — a window cannot do that.
     """
     salt = F.pmod(F.xxhash64(F.col(order_col)), F.lit(n_salts)).alias("__salt")
-    others = [
-        c for c in changes.columns
-        if c not in key and c != order_col and c not in tie_cols
-    ]
-    # struct max compares fields left-to-right, so leading tie_cols after
-    # order_col give the same desc-lexicographic winner as lww_dedup's
-    # (order_col DESC, tie_cols DESC) window — tied seqs share a salt
-    # (salt hashes order_col), so the tie-break resolves within one group
-    packed = F.struct(
-        F.col(order_col), *[F.col(c) for c in tie_cols],
-        *[F.col(c) for c in others],
-    ).alias("__row")
+    others = [c for c in changes.columns if c not in key and c != order_col]
+    packed = F.struct(F.col(order_col), *[F.col(c) for c in others]).alias("__row")
 
     local = (
         changes.select(*key, salt, packed)
@@ -89,5 +72,5 @@ def salted_lww_dedup(
     return winners.select(
         *key,
         F.col(f"__row.{order_col}").alias(order_col),
-        *[F.col(f"__row.{c}").alias(c) for c in (*tie_cols, *others)],
+        *[F.col(f"__row.{c}").alias(c) for c in others],
     ).select(*changes.columns)

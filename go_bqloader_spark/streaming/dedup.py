@@ -188,7 +188,7 @@ class IngestContentDedup:
         except FileNotFoundError:
             self.state = LakeTable.create(
                 spark, state_path, self.STATE_COLS, key=["__fp"],
-                bucket_col="__fp", n_buckets=n_buckets, write_mode="mor",
+                bucket_col="__fp", n_buckets=n_buckets,
             )
         self._pending: DataFrame | None = None
 

@@ -1,8 +1,8 @@
 """Multi-writer optimistic concurrency: conflicting commits retry instead
-of failing the batch. MoR delta appends rebase at the MANIFEST level (the
-written parquet stays valid — no data rewrite); CoW merges and layout
-races (rebucket) recompute against the fresh snapshot; exactly-once holds
-when two writers race the SAME batch_key. This is the engine analog of
+of failing the batch. Delta appends rebase at the MANIFEST level (the
+written parquet stays valid — no data rewrite); a layout race (rebucket)
+recomputes against the fresh snapshot; exactly-once holds when two
+writers race the SAME batch_key. This is the engine analog of
 Iceberg's fast-append commit retry — the reference pipeline serializes
 per-table via Cloud Functions, so multi-writer safety is a Spark-side
 extension (reference: handler.go:69-112 runs one load per event).
@@ -76,7 +76,7 @@ def _referenced_dirs(t):
 
 
 def test_mor_append_rebases_without_data_rewrite(spark, tmp_path):
-    t1 = _mk(spark, tmp_path, write_mode="mor")
+    t1 = _mk(spark, tmp_path)
     t2 = LakeTable(spark, str(tmp_path / "tbl"))
     v0 = t1.current_version()
 
@@ -102,7 +102,7 @@ def test_mor_append_rebases_without_data_rewrite(spark, tmp_path):
 
 
 def test_same_batch_key_race_skips_and_cleans_up(spark, tmp_path):
-    t1 = _mk(spark, tmp_path, write_mode="mor")
+    t1 = _mk(spark, tmp_path)
     t2 = LakeTable(spark, str(tmp_path / "tbl"))
 
     # the competing writer lands the SAME logical batch first
@@ -115,27 +115,8 @@ def test_same_batch_key_race_skips_and_cleans_up(spark, tmp_path):
     assert _data_dirs(tmp_path) == _referenced_dirs(t1)
 
 
-def test_cow_conflict_recomputes_against_fresh_snapshot(spark, tmp_path):
-    t1 = _mk(spark, tmp_path, write_mode="cow")
-    t2 = LakeTable(spark, str(tmp_path / "tbl"))
-    # shared key space: both writers touch the same urls, so a blind
-    # manifest rebase of t1's bucket REPLACEMENT would drop t2's rows
-    t1.merge(_batch(spark, "a", 0), batch_key=("w1", 0))
-
-    _interleave(t1, lambda: t2.merge(_batch(spark, "b", 7), batch_key=("w2", 7)))
-    st = t1.merge(_batch(spark, "a", 1), batch_key=("w1", 1))
-
-    assert not st.skipped
-    state = {(r["url"], r["text"]) for r in t1.read().collect()}
-    # t1's second batch overwrote its first (same urls, higher seq) AND
-    # t2's batch survived the recompute
-    assert {t for u, t in state if u.startswith("https://a")} == {"a1"}
-    assert {t for u, t in state if u.startswith("https://b")} == {"b7"}
-    assert _data_dirs(tmp_path) == _referenced_dirs(t1)
-
-
 def test_rebucket_race_forces_recompute(spark, tmp_path):
-    t1 = _mk(spark, tmp_path, write_mode="mor")
+    t1 = _mk(spark, tmp_path)
     t2 = LakeTable(spark, str(tmp_path / "tbl"))
     t1.merge(_batch(spark, "a", 0), batch_key=("q", 0))
 
@@ -152,10 +133,12 @@ def test_rebucket_race_forces_recompute(spark, tmp_path):
     # rebase would duplicate or lose rows on bucket-pruned resolution)
     dup = t1.read().groupBy("url").count().filter("count > 1").count()
     assert dup == 0
+    # the refused rebase deleted its mis-bucketed dir: nothing orphaned
+    assert _data_dirs(tmp_path) == _referenced_dirs(t1)
 
 
 def test_commit_retries_zero_fails_fast(spark, tmp_path):
-    t1 = _mk(spark, tmp_path, write_mode="mor")
+    t1 = _mk(spark, tmp_path)
     t2 = LakeTable(spark, str(tmp_path / "tbl"))
 
     _interleave(t1, lambda: t2.merge(_batch(spark, "b", 0), batch_key=("w2", 0)))
@@ -170,7 +153,7 @@ def test_threaded_writers_converge(spark, tmp_path):
     table handles — the local analog of two driver processes) each apply 4
     batches; retries absorb every CAS race and the table converges to the
     union with all 8 ledger entries."""
-    _mk(spark, tmp_path, write_mode="mor")
+    _mk(spark, tmp_path)
     errors = []
 
     def writer(name):

@@ -69,12 +69,15 @@ def _make_table(spark, tmp_path, **kw):
     )
 
 
-MODES = ["cow", "mor"]
+# The write_mode an earlier release recorded in a table's manifest ("cow"
+# meant copy-on-write merges there). Merges no longer read the field, so a
+# table marked either way takes the one merge path and must converge alike.
+MANIFEST_MODES = ["cow", "mor"]
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_single_batch_merge_converges(spark, tmp_path, changes, mode):
-    t = _make_table(spark, tmp_path, n_buckets=8, write_mode=mode)
+@pytest.mark.parametrize("mode", MANIFEST_MODES)
+def test_single_batch_merge_converges(spark, tmp_path, changes, mode, legacy_manifest):
+    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=8), mode)
     t.merge(changes, batch_key=("q", 0))
     got = _sorted_state(t.read())
     exp = _sorted_state(expected_final_state(changes))
@@ -82,10 +85,12 @@ def test_single_batch_merge_converges(spark, tmp_path, changes, mode):
 
 
 @pytest.mark.parametrize("n_batches", [3, 7])
-@pytest.mark.parametrize("mode", MODES)
-def test_multi_batch_replay_converges(spark, tmp_path, changes, n_batches, mode):
+@pytest.mark.parametrize("mode", MANIFEST_MODES)
+def test_multi_batch_replay_converges(
+    spark, tmp_path, changes, n_batches, mode, legacy_manifest
+):
     """Any batch split of the log converges to the same final state."""
-    t = _make_table(spark, tmp_path, n_buckets=8, write_mode=mode)
+    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=8), mode)
     for i in range(n_batches):
         batch = changes.filter(F.pmod(F.col("seq"), n_batches) == i)
         t.merge(batch, batch_key=("q", i))
@@ -96,10 +101,10 @@ def test_multi_batch_replay_converges(spark, tmp_path, changes, n_batches, mode)
     assert got == exp
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_idempotent_redelivery(spark, tmp_path, changes, mode):
+@pytest.mark.parametrize("mode", MANIFEST_MODES)
+def test_idempotent_redelivery(spark, tmp_path, changes, mode, legacy_manifest):
     """Re-merging an already-committed batch key is a no-op (exactly-once)."""
-    t = _make_table(spark, tmp_path, n_buckets=8, write_mode=mode)
+    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=8), mode)
     b0 = changes.filter(F.col("seq") < 2000)
     b1 = changes.filter(F.col("seq") >= 2000)
     t.merge(b0, batch_key=("q", 0))
@@ -121,8 +126,8 @@ def test_reapplying_older_changes_is_noop(spark, tmp_path, changes):
     assert _sorted_state(t.read()) == state
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_delete_semantics(spark, tmp_path, mode):
+@pytest.mark.parametrize("mode", MANIFEST_MODES)
+def test_delete_semantics(spark, tmp_path, mode, legacy_manifest):
     rows = [
         ("I", 1, "2024-01-01 00:00:01", "https://a/x", "2024-01-01 00:00:00", b"<p>v1</p>", "v1", "en"),
         ("U", 2, "2024-01-01 00:00:02", "https://a/x", "2024-01-01 00:00:00", b"<p>v2</p>", "v2", "en"),
@@ -139,7 +144,7 @@ def test_delete_semantics(spark, tmp_path, mode):
         F.to_timestamp("warc_ts").alias("warc_ts"),
         "html", "text", "lang",
     )
-    t = _make_table(spark, tmp_path, n_buckets=4, write_mode=mode)
+    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=4), mode)
     t.merge(df, batch_key=("q", 0))
     got = _sorted_state(t.read())
     assert got == [("https://a/y", "2024-01-01 00:00:00", "y", "en", 4)]
@@ -219,7 +224,7 @@ def test_mor_compaction_preserves_state(spark, tmp_path, changes):
     """MoR: deltas accumulate per bucket; compact() folds them to one base
     entry without changing the visible state; expire_tombstones drops the
     hidden delete markers."""
-    t = _make_table(spark, tmp_path, n_buckets=8, write_mode="mor")
+    t = _make_table(spark, tmp_path, n_buckets=8, )
     for i in range(4):
         t.merge(changes.filter(F.pmod(F.col("seq"), 4) == i), batch_key=("q", i))
     assert max(t.entries_per_bucket().values()) > 1
@@ -251,7 +256,7 @@ def test_compaction_key_sorts_bucket_files(spark, tmp_path, changes):
 
     import pyarrow.parquet as pq
 
-    t = _make_table(spark, tmp_path, n_buckets=4, write_mode="mor")
+    t = _make_table(spark, tmp_path, n_buckets=4, )
     for i in range(3):
         t.merge(changes.filter(F.pmod(F.col("seq"), 3) == i), batch_key=("q", i))
     assert t.compact() > 0
@@ -268,11 +273,11 @@ def test_compaction_key_sorts_bucket_files(spark, tmp_path, changes):
     assert checked > 0
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_empty_batch_commits_noop(spark, tmp_path, changes, mode):
+@pytest.mark.parametrize("mode", MANIFEST_MODES)
+def test_empty_batch_commits_noop(spark, tmp_path, changes, mode, legacy_manifest):
     """An empty change batch must commit a ledger no-op, not crash on the
     empty parquet read-back (round-2 regression from the verify drive)."""
-    t = _make_table(spark, tmp_path, n_buckets=8, write_mode=mode)
+    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=8), mode)
     t.merge(changes, batch_key=("q", 0))
     before = t.read().count()
     st = t.merge(changes.filter(F.lit(False)), batch_key=("q", 1))
@@ -448,25 +453,102 @@ def test_create_exclusive_never_partial(tmp_path):
     assert [f for f in fs.listdir(str(tmp_path)) if ".cas." in f] == []
 
 
-@pytest.mark.parametrize("salted", [True, False])
-def test_cow_tie_break_matches_survivor_window(spark, tmp_path, salted):
-    """A (key, seq) tie between a 'U' and a 'D' in one batch (outside the
-    verbatim-redelivery contract): the CoW narrow stats pre-pass must pick
-    the same winner as the payload survivor window — 'D' — so the delete
-    is both counted in lineage AND actually applied (ADVICE r3)."""
-    t = _make_table(spark, tmp_path, n_buckets=4, write_mode="cow")
-    url = "https://tie.ex/p"
-    batch = spark.createDataFrame(
-        [("U", 5, url, None, None, "keepme", "en"),
-         ("D", 5, url, None, None, None, None),
-         ("U", 1, "https://other.ex/p", None, None, "x", "en")],
+_TIE_URL = "https://tie.ex/p"
+
+
+def _tie_rows(spark, ops, seq=5):
+    """One row per op of ``ops`` for the tie key, all at ``seq``, in that
+    input order, plus an unrelated live row."""
+    rows = [
+        (op, seq, _TIE_URL, None, None, None if op == "D" else "keepme", "en")
+        for op in ops
+    ] + [("U", 1, "https://other.ex/p", None, None, "x", "en")]
+    return spark.createDataFrame(
+        rows,
         "op string, seq bigint, url string, warc_ts timestamp, "
         "html binary, text string, lang string",
     )
-    s = t.merge(batch, batch_key=("q", 0), salted=salted)
-    live = [r["url"] for r in t.read().select("url").collect()]
-    assert live == ["https://other.ex/p"]  # the delete won the tie
+
+
+def _tie_readers_agree_deleted(spark_path, t):
+    """Every reader of ``t`` sees the tie key deleted: the scan, the
+    driver point read and the Spark point read."""
+    point = {"url": _TIE_URL, "warc_ts": None}
+    assert [r["url"] for r in t.read().select("url").collect()] == ["https://other.ex/p"]
+    assert t.read(point=point).collect() == []
+    assert spark_path(t).read(point=point).collect() == []
+
+
+@pytest.mark.parametrize("order", ["UD", "DU"])
+def test_tie_goes_to_the_tombstone_in_one_batch(spark, spark_path, tmp_path, order):
+    """A (key, seq) tie between a 'U' and a 'D' in one batch (outside the
+    verbatim-redelivery contract) resolves to the delete whatever the input
+    order, and the merge's lineage counts the row it wrote."""
+    t = _make_table(spark, tmp_path, n_buckets=4)
+    s = t.merge(_tie_rows(spark, order), batch_key=("q", 0))
     assert s.rows_deleted == 1 and s.rows_upserted == 1
+    _tie_readers_agree_deleted(spark_path, t)
+
+
+@pytest.mark.parametrize("order", ["UD", "DU"])
+def test_tie_goes_to_the_tombstone_across_batches(spark, spark_path, tmp_path, order):
+    """The same tie split over two batches (first op in batch 0, second in
+    batch 1): the scan window, both point paths and compaction's rewrite
+    all let the tombstone win, so they agree on one snapshot."""
+    t = _make_table(spark, tmp_path, n_buckets=4)
+    t.merge(_tie_rows(spark, order[0]), batch_key=("q", 0))
+    t.merge(_tie_rows(spark, order[1]), batch_key=("q", 1))
+    _tie_readers_agree_deleted(spark_path, t)
+    assert t.compact() > 0
+    _tie_readers_agree_deleted(spark_path, t)
+    tomb = t.read(include_deleted=True).where(F.col("url") == _TIE_URL).collect()
+    assert [(r["_deleted"], r["_seq"]) for r in tomb] == [(True, 5)]
+
+
+@pytest.mark.parametrize("legacy", ["cow", None])
+def test_legacy_copy_on_write_table_takes_merges(
+    spark, tmp_path, changes, legacy_manifest, legacy
+):
+    """A table as the copy-on-write mode of earlier releases left it: one
+    key-sorted entry per bucket with full key zones, and a manifest whose
+    write_mode says "cow" (or, older still, is missing). It needs no
+    migration: a late older replay, a newer update, a tombstone and a
+    redelivered batch key converge to the LWW oracle, and point reads
+    agree with the scan."""
+    t = _make_table(spark, tmp_path, n_buckets=4)
+    t.merge(changes.filter(F.col("seq") < 2000), batch_key=("q", 0))
+    t.merge(changes.filter(F.col("seq") >= 2000), batch_key=("q", 1))
+    t.compact(min_entries=1)
+    m = t.manifest()
+    assert all(len(es) == 1 for es in m["buckets"].values())
+    assert all(set(es[0]["zones"]) == {"url", "warc_ts"} for es in m["buckets"].values())
+    t = legacy_manifest(t, legacy)
+    assert t.manifest().get("write_mode") == legacy
+
+    live = expected_final_state(changes).orderBy("url", "warc_ts").limit(2).collect()
+    newer, dead = live[0], live[1]
+    edits = spark.createDataFrame(
+        [("U", 10_000, newer["url"], newer["warc_ts"], None, "newer", "en"),
+         ("D", 10_001, dead["url"], dead["warc_ts"], None, None, None)],
+        "op string, seq bigint, url string, warc_ts timestamp, "
+        "html binary, text string, lang string",
+    )
+    late = changes.filter(F.col("seq") < 1000)
+    t.merge(late, batch_key=("q", 2))  # late older versions lose
+    t.merge(edits, batch_key=("q", 3))
+    assert t.merge(changes, batch_key=("q", 1)).skipped  # redelivered
+    applied = changes.unionByName(
+        edits.selectExpr("*", "CAST(NULL AS timestamp) AS commit_ts")
+    )
+    want = _sorted_state(expected_final_state(applied))
+    assert _sorted_state(t.read()) == want
+
+    assert t.manifest().get("write_mode") == legacy  # merges carry it over
+    by_key = {(u, ts): (text, lang, seq) for u, ts, text, lang, seq in want}
+    for r in [newer, dead, *expected_final_state(changes).limit(6).collect()]:
+        got = t.read(point={"url": r["url"], "warc_ts": r["warc_ts"]}).collect()
+        exp = by_key.get((r["url"], str(r["warc_ts"])))
+        assert [(g["text"], g["lang"], g["_seq"]) for g in got] == ([exp] if exp else [])
 
 
 def test_publish_if_newer_is_monotonic(tmp_path):
@@ -560,15 +642,15 @@ def test_expire_snapshots_spares_inflight_commit_dirs(spark, tmp_path):
     assert os.path.exists(os.path.join(rebasing, "b=0"))
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_near_dup_rewrite_maintenance(spark, tmp_path, mode):
+@pytest.mark.parametrize("mode", MANIFEST_MODES)
+def test_near_dup_rewrite_maintenance(spark, tmp_path, mode, legacy_manifest):
     """Ingest → near-dup cluster → keep-representatives, end-to-end through
     the CDC path: duplicates are tombstoned via the normal exactly-once
     merge, the representative (min key) survives, unique pages untouched,
     and redelivery of the maintenance batch is a ledger no-op."""
     from go_bqloader_spark.lake import near_dup_rewrite
 
-    t = _make_table(spark, tmp_path, n_buckets=4, write_mode=mode)
+    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=4), mode)
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = [
         ("U", 1, "https://a.ex/1", None, None, base, "en"),
@@ -617,8 +699,8 @@ def test_near_dup_rewrite_maintenance(spark, tmp_path, mode):
         assert "html" not in s and "text" not in s and "lang" not in s
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_quality_rewrite_maintenance(spark, tmp_path, mode):
+@pytest.mark.parametrize("mode", MANIFEST_MODES)
+def test_quality_rewrite_maintenance(spark, tmp_path, mode, legacy_manifest):
     """Ingest → corpus-prep quality filters → tombstone failures, through
     the CDC path: a repetitive (Gopher-flagged) page and a page whose
     chunks all duplicate an earlier page are removed via the exactly-once
@@ -626,7 +708,7 @@ def test_quality_rewrite_maintenance(spark, tmp_path, mode):
     a ledger no-op."""
     from go_bqloader_spark.lake import quality_rewrite
 
-    t = _make_table(spark, tmp_path, n_buckets=4, write_mode=mode)
+    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=4), mode)
     boiler = " ".join(f"b{i}" for i in range(20))
     uniq = " ".join(f"u{i}" for i in range(40))
     rows = [
@@ -664,15 +746,15 @@ def test_quality_rewrite_maintenance(spark, tmp_path, mode):
     assert rep3.removed == 0
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_zone_maps_prune_and_stay_exact(spark, tmp_path, mode):
+@pytest.mark.parametrize("mode", MANIFEST_MODES)
+def test_zone_maps_prune_and_stay_exact(spark, tmp_path, mode, legacy_manifest):
     """Manifest zone maps: every data-file entry records key-column
     min/max; read(zones=...) skips non-overlapping files at PLANNING time
     and still returns exactly the filtered table (MoR LWW resolution
     included, because zones are restricted to key columns)."""
     import datetime as dt
 
-    t = _make_table(spark, tmp_path, n_buckets=2, write_mode=mode)
+    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=2), mode)
 
     def batch(day, seq0):
         ts = f"2024-01-{day:02d} 00:00:00"
@@ -689,29 +771,24 @@ def test_zone_maps_prune_and_stay_exact(spark, tmp_path, mode):
     t.merge(batch(1, 200), batch_key=("q", 2))  # day-1 keys updated later
 
     # every entry carries zone bounds; string bounds only on key-sorted
-    # rewrites (CoW bucket replacement here) — mor DELTA files skip them
-    # (hash-scattered strings never prune and cost a string scan, r5)
+    # rewrites — DELTA files skip them (hash-scattered strings never prune
+    # and cost a string scan, r5)
     m = t.manifest()
     entries = [e for es in m["buckets"].values() for e in es]
     assert entries and all("zones" in e for e in entries)
-    want = {"warc_ts"} if mode == "mor" else {"url", "warc_ts"}
-    assert all(set(e["zones"]) == want for e in entries)
+    assert all(set(e["zones"]) == {"warc_ts"} for e in entries)
 
     def micros(day):
         return int(dt.datetime(2024, 1, day, tzinfo=dt.timezone.utc)
                    .timestamp() * 1_000_000)
 
-    # MoR keeps per-commit delta files, so the day-15 range must skip the
-    # two day-1 commits' files; CoW's bucket-wide rewrites span both days
-    # (file = bucket), so nothing prunes there — by design
+    # per-commit delta files: the day-15 range skips the two day-1
+    # commits' files
     kept = [
         e for es in m["buckets"].values() for e in es
         if t._zone_overlaps(m, e, {"warc_ts": (micros(10), micros(20))})
     ]
-    if mode == "mor":
-        assert 0 < len(kept) < len(entries)
-    else:
-        assert len(kept) == len(entries)
+    assert 0 < len(kept) < len(entries)
 
     # pruned read == full read + filter (exact, incl. LWW winners)
     full = {(r["url"], str(r["warc_ts"]), r["text"], r["_seq"])
@@ -729,6 +806,16 @@ def test_zone_maps_prune_and_stay_exact(spark, tmp_path, mode):
     # non-key columns are rejected (would break MoR resolution)
     with pytest.raises(ValueError, match="key columns"):
         t.read(zones={"text": (0, 1)})
+
+    # compact()'s key-sorted rewrite records full bounds, strings too, and
+    # pruned reads over it stay exact
+    t.compact(min_entries=1)
+    m = t.manifest()
+    entries = [e for es in m["buckets"].values() for e in es]
+    assert entries and all(set(e["zones"]) == {"url", "warc_ts"} for e in entries)
+    pruned = {(r["url"], str(r["warc_ts"]), r["text"], r["_seq"])
+              for r in t.read(zones={"warc_ts": (micros(10), None)}).collect()}
+    assert pruned == full
 
 
 def test_read_changes_since_incremental(spark, tmp_path):
@@ -860,7 +947,7 @@ def test_zone_maps_date_key_column(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "tbl"),
         [("d", "date"), ("text", "string")],
-        key=["d"], bucket_col="d", n_buckets=2, write_mode="mor",
+        key=["d"], bucket_col="d", n_buckets=2,
     )
 
     def batch(day, seq0):

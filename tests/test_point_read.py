@@ -210,17 +210,25 @@ def _batch(spark, rows, ddl):
     return spark.createDataFrame(rows, "op string, seq bigint, " + ddl)
 
 
+# the write_mode an earlier release recorded in the manifest; merges no
+# longer read it (see tests/test_merge.py)
+MANIFEST_MODES = ["mor", "cow"]
+
+
 @pytest.mark.parametrize("path", ["driver", "fallback"])
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_point_read_spark_jobs(spark, spark_jobs, spark_path, tmp_path, mode, path):
+@pytest.mark.parametrize("mode", MANIFEST_MODES)
+def test_point_read_spark_jobs(
+    spark, spark_jobs, spark_path, legacy_manifest, tmp_path, mode, path
+):
     """The driver path answers from the files with pyarrow and returns a
     local relation: collecting it runs no Spark job, also when the
     winning row lives in a file of an older schema version. The Spark
     fallback scans the bucket in one job."""
     t = LakeTable.create(
         spark, str(tmp_path / "t"), [("url", "string"), ("n", "int")],
-        key=["url"], n_buckets=2, bloom_bits=1024, write_mode=mode,
+        key=["url"], n_buckets=2, bloom_bits=1024,
     )
+    t = legacy_manifest(t, mode)
     ddl = "url string, n int"
     t.merge(_batch(spark, [("U", i, f"u/{i}", i) for i in range(20)], ddl), batch_key=("q", 0))
     t.add_column("lang", "string")
@@ -230,8 +238,7 @@ def test_point_read_spark_jobs(spark, spark_jobs, spark_path, tmp_path, mode, pa
                "url string, n bigint, lang string"),
         batch_key=("q", 1),
     )
-    if mode == "mor":
-        assert t._needs_resolve(t.manifest(), None)  # the top-1 resolve runs
+    assert t._needs_resolve(t.manifest(), None)  # the top-1 resolve runs
     reader = t if path == "driver" else spark_path(t)
     # an updated key, a tombstoned key, an untouched key of the older
     # schema version, a missing key
@@ -245,15 +252,15 @@ def test_point_read_spark_jobs(spark, spark_jobs, spark_path, tmp_path, mode, pa
         assert jobs == (0 if path == "driver" else 1), (url, jobs)
 
 
-def _evolving_table(spark, tmp_path, mode):
+def _evolving_table(spark, tmp_path, reopen):
     """Four merges around add_column, rename_column and widen_column of a
-    key column; returns the table and the expected live rows
-    {(url, k): (body, lang, seq)} and the deleted keys."""
-    t = LakeTable.create(
-        spark, str(tmp_path / mode),
+    key column into ``reopen(<the new table>)``; returns the table and the
+    expected live rows {(url, k): (body, lang, seq)} and the deleted keys."""
+    t = reopen(LakeTable.create(
+        spark, str(tmp_path / "t"),
         [("url", "string"), ("k", "int"), ("text", "string")],
-        key=["url", "k"], n_buckets=3, bloom_bits=2048, write_mode=mode,
-    )
+        key=["url", "k"], n_buckets=3, bloom_bits=2048,
+    ))
     want, dead = {}, set()
     batches = 0
 
@@ -288,13 +295,15 @@ def _evolving_table(spark, tmp_path, mode):
     return t, want, dead
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_point_and_scan_exact_across_schema_evolution(spark, tmp_path, mode):
+@pytest.mark.parametrize("mode", MANIFEST_MODES)
+def test_point_and_scan_exact_across_schema_evolution(
+    spark, tmp_path, legacy_manifest, mode
+):
     """Files of four schema versions (before add_column, before the
     rename, before the key widening, after it) read with their own
     explicit schemas reconcile to the current one: scans and point
     lookups equal the oracle."""
-    t, want, dead = _evolving_table(spark, tmp_path, mode)
+    t, want, dead = _evolving_table(spark, tmp_path, lambda t: legacy_manifest(t, mode))
     assert t.manifest()["schema_version"] == 3
     got = {
         (r["url"], r["k"]): (r["body"], r["lang"], r["_seq"]) for r in t.read().collect()
@@ -604,8 +613,9 @@ def _hadoop_conf(spark, key, value):
 
 def test_point_driver_path_reads_one_row_group_of_a_sorted_file(spark, tmp_path, monkeypatch):
     """A compacted (key-sorted) file written in many small row groups: the
-    driver path reads the key columns of only the row group whose url
-    statistics admit the point, then every column of that group; a miss
+    driver path reads the key columns (with ``_seq`` and ``_deleted``, the
+    LWW rank) of only the row group whose url statistics admit the point,
+    then every column of that group; a miss
     between two stored urls reads at most one group's key columns."""
     import pyarrow.parquet as pq
 
@@ -637,10 +647,10 @@ def test_point_driver_path_reads_one_row_group_of_a_sorted_file(spark, tmp_path,
     assert [(r["n"], r["_seq"]) for r in rows] == [(601, 6011)]
     assert len(reads) == 2, reads
     (g, keys), (g2, every) = reads
-    assert g == g2 and keys == ("url", "_seq") and len(every) == 5
+    assert g == g2 and keys == ("url", "_seq", "_deleted") and len(every) == 5
     reads.clear()
     assert t.read(point={"url": "u/00601~"}).collect() == []
-    assert len(reads) <= 1 and all(cols == ("url", "_seq") for _, cols in reads)
+    assert len(reads) <= 1 and all(cols == ("url", "_seq", "_deleted") for _, cols in reads)
 
 
 def test_point_read_of_a_missing_bucket_dir_raises(spark, tmp_path):

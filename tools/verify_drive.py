@@ -273,7 +273,7 @@ tc = LakeTable.create(
     spark, tmp4,
     [("url", "string"), ("warc_ts", "timestamp"), ("html", "binary"),
      ("text", "string"), ("lang", "string")],
-    key=["url", "warc_ts"], n_buckets=4, write_mode="mor",
+    key=["url", "warc_ts"], n_buckets=4,
 )
 tc2 = LakeTable(spark, tmp4)
 _orig_cas = tc.fs.create_exclusive
