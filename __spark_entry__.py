@@ -17,15 +17,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_bqloader_spark.lake import LakeTable
-from go_bqloader_spark.plans import ORACLE_SQL, QUERIES
+from go_bqloader_spark.plans import ORACLE_SQL, QUERIES, load
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: replay the sf0.001 events table as a change log through
     the MERGE engine (3 out-of-order batches, exactly-once ledger) and
     return the converged table state."""
-    sf_dir = "/root/testdata/sf0.001"
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    e = load(spark, "/root/testdata/sf0.001", "events")
     changes = e.select(
         F.when(F.col("event_type") == "signup", "I")
         .when(F.col("event_type") == "error", "D")

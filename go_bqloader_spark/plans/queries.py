@@ -15,7 +15,9 @@ driver can verify it row-for-row against ANSI SQL. Conventions:
 - ratios use pure integer division (``DIV`` / ``//``) so no float ever
   reaches the output;
 - queries are pure DataFrame plans — no collect, no Python in the row path
-  (the only pandas UDFs in the engine live in the multimodal module).
+  (the only pandas UDFs in the engine live in the multimodal module);
+- every table is read with its declared schema (``TABLES``), as the lake
+  reads with its manifest's: building a scan runs no schema-inference job.
 
 CDC-shaped queries treat the ``events`` table as a change log:
 ``event_id`` is the total order (seq), ``user_id`` the change key, and
@@ -42,13 +44,49 @@ from go_bqloader_spark.functions.transforms import (
 from go_bqloader_spark.operators.merge import lww_dedup, salted_lww_dedup
 from go_bqloader_spark.operators.similarity import lsh_topk
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+# name -> DDL of every input table, with the types Spark infers from the
+# files (parquet ``timestamp[us]`` without a zone is ``timestamp_ntz``)
+TABLES = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": (
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+        "c_mktsegment string"
+    ),
+    "supplier": (
+        "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double"
+    ),
+    "part": (
+        "p_partkey bigint, p_name string, p_brand string, p_type string, "
+        "p_size int, p_retailprice double"
+    ),
+    "orders": (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, "
+        "l_tax double, l_returnflag string, l_linestatus string, "
+        "l_shipdate timestamp_ntz"
+    ),
+    "events": (
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+        "value double, props string"
+    ),
+    "documents": (
+        "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    ),
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Table ``name`` of ``sf_dir``, read with its declared schema: building
+    the read runs no schema-inference job. A column missing from the file
+    would read as NULL, so ``tests/test_queries.py`` checks every
+    declaration against the files."""
+    return spark.read.schema(TABLES[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _spread(df: DataFrame, *key: str) -> DataFrame:
@@ -65,7 +103,12 @@ def _spread(df: DataFrame, *key: str) -> DataFrame:
     shuffles back to one partition otherwise, which is exactly wrong
     ahead of explosive per-row work. Keyed when a downstream
     aggregation/window on the same key can reuse the partitioning;
-    round-robin otherwise."""
+    round-robin otherwise.
+
+    Not for regex-light per-row work: there the exchange costs more than
+    the parallel map buys. Without it, 8 interleaved reps on local[4] ran
+    ``clean_number`` in 609 ms instead of 654 at sf0.01 (1155 vs 1229 at
+    sf0.1) and ``token_stats`` in 207 ms instead of 314 (208 vs 272)."""
     n = df.sparkSession.sparkContext.defaultParallelism * 2
     return df.repartition(n, *[F.col(c) for c in key]) if key else df.repartition(n)
 
@@ -192,12 +235,10 @@ CDC_METRICS_SQL = f"""
 def q_clean_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 CleanNumber over deterministically dirtied strings
     (/root/reference/contrib/handlers/handlers.go:36-51)."""
-    # r6: project to the 3 needed columns, then spread — the regex clean
-    # otherwise runs inside the 6 row-group scan tasks (guide §2.5/§2.3)
-    li = _spread(
-        load(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey", "l_linenumber"
-        )
+    # no _spread: the clean is a few regex replaces per row, cheaper
+    # than the round-robin exchange that would feed it
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_linenumber"
     )
     ok = F.col("l_orderkey").cast("string")
     pk = F.col("l_partkey").cast("string")
@@ -466,7 +507,7 @@ def _fixture_csv_dir(spark: SparkSession, sf_dir: str) -> str:
     import re
     import tempfile
 
-    n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    n = load(spark, sf_dir, "documents").count()
     base = os.path.join(
         tempfile.gettempdir(), "gbs_fixture_" + re.sub(r"\W+", "_", sf_dir)
     )
@@ -588,7 +629,7 @@ def _fixture_lazy_dir(spark: SparkSession, sf_dir: str) -> str:
     import re
     import tempfile
 
-    n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    n = load(spark, sf_dir, "documents").count()
     base = os.path.join(
         tempfile.gettempdir(), "gbs_lazyfix_" + re.sub(r"\W+", "_", sf_dir)
     )
@@ -882,9 +923,9 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting rolled up per language. All-BIGINT outputs: the mean
     is integer-scaled (``avg_tokens_e4`` = floor(avg * 10^4)) via pure
     integer division so both engines compute the identical value."""
-    # keyless spread: downstream groups by lang, so doc_id partitioning
-    # buys nothing (and the audit asserts no doc-keyed exchange here)
-    d = _spread(load(spark, sf_dir, "documents"))
+    # no _spread: one split of each row's text, then a partial aggregate
+    # by lang, is cheaper than an exchange ahead of it
+    d = load(spark, sf_dir, "documents")
     n = F.size(F.expr(_TOKENS)).cast("long")
     agg = d.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
