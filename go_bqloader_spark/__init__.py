@@ -25,11 +25,14 @@ Layout:
 - ``lake``        snapshot-versioned table format: atomic manifest commits,
                   bucket-partitioned merge-on-read MERGE, schema evolution,
                   exactly-once offset ledger, time travel
-- ``operators``   merge/dedup/similarity operators (LWW dedup, salted
-                  two-phase dedup, MinHash-LSH, SimHash, ANN)
+- ``operators``   the query registry's operators: LWW and salted two-phase
+                  dedup, near-dup clustering, LSH/IVF similarity search,
+                  corpus-prep passes; plus MinHash/SimHash/n-gram dedup,
+                  the KMV sketch and media decoders (tests only)
 - ``streaming``   Structured Streaming pipeline: binlog tail → foreachBatch
                   MERGE with checkpointed exactly-once and lineage metrics
-- ``plans``       handler registry (event fan-out O1) and pipeline specs
+- ``plans``       handler registry (event fan-out O1) and the oracle-backed
+                  query registry
 """
 
 __version__ = "0.1.0"

@@ -74,15 +74,6 @@ _TWO_LEVEL_SUFFIXES = (
 )
 
 
-def host_of(col: Column | str) -> Column:
-    """Host part of a URL column: the authority, lowercased, with
-    userinfo and port stripped. Pure projection."""
-    u = F.col(col) if isinstance(col, str) else col
-    auth = F.lower(F.regexp_extract(u, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1))
-    auth = F.regexp_replace(auth, "^[^@]*@", "")  # userinfo
-    return F.regexp_replace(auth, ":[0-9]+$", "")  # port
-
-
 def registrable_domain(host: Column | str) -> Column:
     """Registrable ("eTLD+1") domain of a host column — the key a crawl
     pipeline rolls pages up to for per-site statistics, politeness caps,

@@ -41,32 +41,7 @@ def extract_text_py(html: bytes) -> str:
     return re.sub(_WS_RE, " ", no_tags).strip()
 
 
-def simhash_expr(tokens_expr: str, seed: int = 42) -> "Column":
-    """64-bit SimHash of a token array as ONE Catalyst expression — no
-    shuffle, no explode: an ``aggregate`` HOF with an array<int> bit-counter
-    accumulator, finished by re-assembling the sign bits into a bigint.
-    This is the shuffle-free variant of operators.dedup.simhash64 used at
-    ingest time (document fingerprinting is an ingest stage: the stored
-    fingerprint feeds near-dup candidate generation downstream)."""
-    from pyspark.sql import functions as F
-
-    bits = (
-        f"transform(sequence(0, 63), i -> CASE WHEN (shiftright(xxhash64({seed}, t), i) & 1) = 1 THEN 1 ELSE -1 END)"
-    )
-    counters = (
-        f"aggregate({tokens_expr}, transform(sequence(0, 63), i -> 0), "
-        f"(acc, t) -> zip_with(acc, {bits}, (a, b) -> a + b))"
-    )
-    assemble = (
-        f"aggregate(zip_with({counters}, sequence(0, 63), "
-        f"(c, i) -> CASE WHEN c > 0 THEN CASE WHEN i = 63 THEN CAST(-9223372036854775808 AS BIGINT) "
-        f"ELSE shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)) END ELSE CAST(0 AS BIGINT) END), "
-        f"CAST(0 AS BIGINT), (a, v) -> a + v)"
-    )
-    return F.expr(assemble)
-
-
-def project_page_batch(df, html_col: str = "html", with_fingerprint: bool = False):
+def project_page_batch(df, html_col: str = "html"):
     """The per-batch page projector — the engine's analog of the reference's
     ``project`` stage (``/root/reference/handler.go:141-186``), fully
     vectorized as Catalyst expressions (no Python in the row path):
@@ -95,18 +70,11 @@ def project_page_batch(df, html_col: str = "html", with_fingerprint: bool = Fals
     lang_guess = F.coalesce(
         F.col("lang"), F.when(stop_ratio >= 0.05, F.lit("en")).otherwise(F.lit("und"))
     )
-    out = (
+    return (
         df.withColumn("n_tokens", F.when(F.col(html_col).isNull(), F.lit(None).cast("int")).otherwise(n_tokens))
         .withColumn("stop_ratio", F.when(F.col(html_col).isNull(), F.lit(None).cast("double")).otherwise(stop_ratio))
         .withColumn("lang", F.when(F.col(html_col).isNull(), F.lit(None).cast("string")).otherwise(lang_guess))
     )
-    if with_fingerprint:
-        fp = simhash_expr("filter(split(text, ' '), x -> x <> '')")
-        out = out.withColumn(
-            "fingerprint",
-            F.when(F.col(html_col).isNull(), F.lit(None).cast("bigint")).otherwise(fp),
-        )
-    return out
 
 
 def make_html(title_col: Column, body_col: Column) -> Column:

@@ -1,13 +1,3 @@
-from go_bqloader_spark.lake.maintenance import (  # noqa: F401
-    DedupReport,
-    QualityReport,
-    near_dup_rewrite,
-    quality_rewrite,
-)
-from go_bqloader_spark.lake.neardup_index import (  # noqa: F401
-    IncrementalDedupReport,
-    NearDupIndex,
-)
 from go_bqloader_spark.lake.table import (  # noqa: F401
     CommitConflict,
     LakeTable,

@@ -1,23 +1,6 @@
-from go_bqloader_spark.operators.dedup import (  # noqa: F401
-    exact_dedup,
-    minhash_candidates,
-    minhash_dedup,
-    ngram_jaccard_pairs,
-    simhash64,
-)
-from go_bqloader_spark.operators.kmv import (  # noqa: F401
-    kmv_estimate,
-    kmv_hash,
-    kmv_merge,
-    kmv_sketch,
-)
 from go_bqloader_spark.operators.merge import (  # noqa: F401
     lww_dedup,
     salted_lww_dedup,
-)
-from go_bqloader_spark.operators.multimodal import (  # noqa: F401
-    decode_audio_meta,
-    decode_image_meta,
 )
 from go_bqloader_spark.operators.textpipeline import (  # noqa: F401
     chunk_documents,
@@ -34,6 +17,5 @@ from go_bqloader_spark.operators.similarity import (  # noqa: F401
     ivf_assign,
     ivf_cells,
     ivf_topk,
-    kmeans_cells,
     lsh_topk,
 )

@@ -284,65 +284,6 @@ def ivf_assign(
     )
 
 
-def kmeans_cells(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Trained IVF centroids: a few Lloyd's iterations, all in DataFrames.
-
-    Init = a deterministic seeded sample (the ``n_cells`` rows with the
-    lowest ``xxhash64(seed, id)`` — pseudo-random but reproducible across
-    runs/executors, no driver randomness). Each round: assign every
-    vector with the shuffle-free :func:`ivf_assign` projection, then
-    recompute each cell's centroid as the element-wise mean
-    (``posexplode`` → two-level hash agg with map-side partials — one
-    narrow shuffle of (cell, pos, x) per round, never the full vectors).
-    Cells that lose all members keep their previous centroid. Returns
-    ``(cell_id, __cv)`` — drop-in wherever :func:`ivf_cells` is used
-    (``ivf_topk(..., cells=...)``) for better recall-per-probe on real
-    embedding distributions; the deterministic :func:`ivf_cells` variant
-    remains the cross-engine-oracle path.
-
-    At 10^9 vectors: ``iters`` full scans (projection-only) + ``iters``
-    narrow aggregations; centroids round-trip through the driver once per
-    iteration (n_cells·dim doubles — KBs).
-    """
-    init = (
-        corpus.withColumn("__h", F.xxhash64(F.lit(seed), F.col(id_col)))
-        .orderBy("__h", id_col)
-        .limit(n_cells)
-        .select(F.col(id_col).alias("cell_id"), F.col(vec_col).alias("__cv"))
-    )
-    cents = init
-    prev = {int(r["cell_id"]): [float(x) for x in r["__cv"]] for r in cents.collect()}
-    spark = corpus.sparkSession
-    for _ in range(iters):
-        assigned = ivf_assign(corpus, cents, id_col, vec_col)
-        means = (
-            assigned.select("cell_id", F.posexplode(vec_col).alias("pos", "x"))
-            .groupBy("cell_id", "pos")
-            .agg(F.avg(F.col("x").cast("double")).alias("m"))
-            .groupBy("cell_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("__cv")
-            )
-        )
-        new = {int(r["cell_id"]): [float(x) for x in r["__cv"]] for r in means.collect()}
-        prev = {cid: new.get(cid, cv) for cid, cv in prev.items()}
-        cents = spark.createDataFrame(
-            [(cid, cv) for cid, cv in sorted(prev.items())],
-            "cell_id bigint, __cv array<double>",
-        )
-    return cents
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -352,20 +293,16 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    cells: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: exact cosine rank within the query's
     ``nprobe`` nearest cells. Expected candidates per query ≈
     corpus × nprobe / n_cells; recall rises monotonically with nprobe
     (nprobe = n_cells degenerates to the exact scan). The corpus is
     assigned once (projection-only — see :func:`ivf_assign`); the query
-    side is broadcast-small. ``cells`` overrides the deterministic
-    :func:`ivf_cells` quantizer — pass :func:`kmeans_cells` output for
-    trained centroids (better recall-per-probe; ``n_cells`` ignored).
-    r6: per-row norms are hoisted below the probe join (once per corpus
-    row / per probe row instead of once per candidate) — bit-identical
-    values, same multiplication order."""
-    cents = cells if cells is not None else ivf_cells(corpus, n_cells, id_col, vec_col)
+    side is broadcast-small. r6: per-row norms are hoisted below the
+    probe join (once per corpus row / per probe row instead of once per
+    candidate) — bit-identical values, same multiplication order."""
+    cents = ivf_cells(corpus, n_cells, id_col, vec_col)
     assigned = ivf_assign(corpus, cents, id_col, vec_col)
     qcos = _dot(vec_col, "__cv") / (_norm(vec_col) * _norm("__cv"))
     qw = W.partitionBy(query_id_col).orderBy(F.col("__cos").desc(), F.col("cell_id"))

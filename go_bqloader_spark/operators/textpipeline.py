@@ -290,17 +290,6 @@ EMAIL_RE = "[a-z0-9._%+-]+@[a-z0-9.-]+[.][a-z][a-z]+"
 PHONE_RE = "[0-9]{3}-[0-9]{3,4}-[0-9]{4}"
 
 
-def redact_expr(col: F.Column | str) -> F.Column:
-    """The PII redaction expression :func:`pii_scrub` applies — exposed
-    so composers (``plans/export.py``) can redact inline in an existing
-    projection instead of joining the scrub output back by id (which
-    would re-evaluate the upstream pipeline)."""
-    t = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(
-        F.regexp_replace(t, EMAIL_RE, "<EMAIL>"), PHONE_RE, "<PHONE>"
-    )
-
-
 def pii_scrub(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -341,7 +330,7 @@ def pack_assign(
     """Per-document packing assignment: which training sequence each
     document opens in (see :func:`pack_sequences` for the layout rules).
     Returns ``(id, shard, n_tokens, seq_id)`` — the frame a shard writer
-    joins back to the payload (``plans/export.py`` does exactly that).
+    joins back to the payload.
 
     Scale shape is the packing window's: the only exchange is the narrow
     ``(shard, id, n_tokens)`` projection, text never shuffles."""
@@ -406,8 +395,8 @@ def corpus_stats(
     integers and one 32-hex fingerprint in a map-side projection, so the
     exchange carries ``(group, n_tokens, n_chars, fp)`` — never the text.
     The exact-duplicate count uses ``count(distinct md5)`` (the same
-    normalized fingerprint as the ``doc_fingerprint`` query /
-    ``exact_dedup`` operator, so card numbers reconcile with what the
+    normalized fingerprint as the ``doc_fingerprint`` and
+    ``exact_dedup`` queries, so card numbers reconcile with what the
     dedup pass actually removes); with a single distinct column Spark
     plans it as a two-level hash aggregate — partial agg on
     ``(group, fp)`` map-side, then the final count — no Expand, and both

@@ -14,8 +14,7 @@ driver can verify it row-for-row against ANSI SQL. Conventions:
   mode), so any decimal column is a latent hash mismatch;
 - ratios use pure integer division (``DIV`` / ``//``) so no float ever
   reaches the output;
-- queries are pure DataFrame plans — no collect, no Python in the row path
-  (the only pandas UDFs in the engine live in the multimodal module);
+- queries are pure DataFrame plans — no collect, no Python in the row path;
 - every table is read with its declared schema (``TABLES``), as the lake
   reads with its manifest's: building a scan runs no schema-inference job.
 
@@ -1054,14 +1053,9 @@ QUALITY_SQL = f"""
 # 3-word shingles (not unigrams): a unigram equi-join is quadratic on hot
 # tokens (every doc shares "the" → D²/2 join rows); 3-shingles are near-
 # unique so the candidate-pair count stays near-linear at corpus scale.
-# Spark's sequence(1, 0) yields a DESCENDING [1, 0], so short docs need the
-# explicit size guard (DuckDB's generate_series(1, 0) is empty).
-_SHINGLES3 = (
-    "CASE WHEN size(filter(split(text, ' '), x -> x <> '')) >= 3 "
-    "THEN transform(sequence(1, size(filter(split(text, ' '), x -> x <> '')) - 2), "
-    "i -> array_join(slice(filter(split(text, ' '), x -> x <> ''), i, 3), ' ')) "
-    "ELSE CAST(array() AS array<string>) END"
-)
+# Spark's sequence(1, 0) yields a DESCENDING [1, 0], so q_ngram_jaccard's
+# shingles need an explicit size guard (DuckDB's generate_series(1, 0) is
+# empty).
 _SHINGLES3_SQL = (
     f"list_transform(generate_series(1, greatest(len({_TOKENS_SQL}) - 2, 0)), "
     f"i -> array_to_string(list_slice({_TOKENS_SQL}, i, i + 2), ' '))"
@@ -2104,8 +2098,8 @@ DOMAIN_ROLLUP_SQL = f"""
 
 
 def q_windowed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time windows (the streaming metrics aggregation of
-    streaming/windows.py, run in batch mode for oracle checkability)."""
+    """Tumbling event-time windows: per-hour ingest metrics, the windowed
+    aggregation a stream would run, in batch mode for oracle checkability."""
     e = load(spark, sf_dir, "events")
     win = F.window("ts", "1 hour")
     return (

@@ -1,19 +1,5 @@
-from go_bqloader_spark.streaming.dedup import (  # noqa: F401
-    IngestContentDedup,
-    content_fingerprint,
-    dedup_stream,
-)
-from go_bqloader_spark.streaming.quality import (  # noqa: F401
-    domain_quota_projector,
-    pii_scrub_projector,
-    quality_filter_projector,
-)
 from go_bqloader_spark.streaming.pipeline import (  # noqa: F401
     compose_projectors,
     run_cdc_stream,
     start_cdc_stream,
-)
-from go_bqloader_spark.streaming.sessions import (  # noqa: F401
-    session_window_metrics,
-    stateful_host_progress,
 )

@@ -14,9 +14,8 @@ the upgrade the north-star demands:
   REPLAY; the table's manifest ledger makes the apply idempotent, so the
   composition is exactly-once (kill -9 between merge-commit and checkpoint
   advance ⇒ the redelivered batch is a no-op);
-- watermarking on ``commit_ts`` is available for windowed enrichment, but
-  the MERGE itself never drops late rows — LWW by ``seq`` makes late
-  arrivals converge instead (tombstones guard deletes).
+- no watermark: the MERGE never drops late rows — LWW by ``seq`` makes
+  late arrivals converge instead (tombstones guard deletes).
 
 Lineage/metrics per batch land in the table manifest (resume_watermarks).
 """
@@ -43,57 +42,24 @@ def start_cdc_stream(
     compact_every: int = 16,
     expire_keep: int | None = 64,
     schema: str = CHANGE_SCHEMA,
-    stream_transform: Callable[[DataFrame], DataFrame] | None = None,
-    content_dedup=None,
-    neardup_index=None,
-    neardup_every: int = 0,
-    neardup_threshold: float = 0.7,
 ) -> StreamingQuery:
     """Start the streaming apply; returns the StreamingQuery handle.
 
-    ``projector`` runs per micro-batch inside ``foreachBatch`` (the
-    reference's per-table Projector analog); ``stream_transform`` runs on
-    the STREAMING frame before the sink — the hook for stateful stream
-    operators like :func:`~go_bqloader_spark.streaming.dedup.dedup_stream`
-    (ingest-time content dedup), whose watermark/state machinery must live
-    upstream of ``foreachBatch``. ``content_dedup`` takes an
-    :class:`~go_bqloader_spark.streaming.dedup.IngestContentDedup` — the
-    zero-payload-shuffle dedup path that runs inside ``foreachBatch`` and
-    commits its fingerprint state exactly-once AFTER each data merge.
-
-    ``neardup_index`` + ``neardup_every=N`` runs
-    :meth:`~go_bqloader_spark.lake.neardup_index.NearDupIndex.update`
-    every N batches, right after the merge: exact content dups never
-    reach the table (``content_dedup``), NEAR dups are swept out of it
-    incrementally — each pass reads only the changes since the index's
-    watermark and only the index buckets the new band hashes fall in, so
-    the sweep stays O(batch) on an endless-tail 10^10-doc table. The pass
-    is ledgered by the streaming batch_id, so a replayed batch redelivers
-    it as a no-op."""
+    ``projector`` runs per micro-batch inside ``foreachBatch``, before the
+    merge (the reference's per-table Projector analog; chain several with
+    :func:`compose_projectors`). Every ``compact_every`` batches the same
+    thread compacts the table and expires snapshots beyond
+    ``expire_keep``."""
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(binlog_dir)
     )
-    if stream_transform is not None:
-        stream = stream_transform(stream)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if content_dedup is not None:
-            batch_df = content_dedup.filter_batch(batch_df)
         if projector is not None:
             batch_df = projector(batch_df)
         table.merge(batch_df, batch_key=(query_name, batch_id))
-        if content_dedup is not None:
-            content_dedup.commit(batch_id)
-        if neardup_index is not None and neardup_every and (
-            batch_id > 0 and batch_id % neardup_every == 0
-        ):
-            neardup_index.update(
-                batch_id=batch_id,
-                threshold=neardup_threshold,
-                query_id=f"{query_name}_neardup",
-            )
         # MoR maintenance, same single-writer thread as the merges: fold
         # delta entries periodically so read amplification stays bounded,
         # and expire old snapshots so manifests + dead files don't
@@ -139,21 +105,17 @@ def compose_projectors(
     *projectors: Callable[[DataFrame], DataFrame],
 ) -> Callable[[DataFrame], DataFrame]:
     """Chain per-batch projectors left-to-right into one
-    ``start_cdc_stream(projector=...)`` hook — the full ingest-hygiene
-    stack is a composition, e.g.::
+    ``start_cdc_stream(projector=...)`` hook, e.g.::
 
         compose_projectors(
-            canonicalize_projector(),      # key normalization FIRST
-            quality_filter_projector(),    # drop spam before paying scrub
-            pii_scrub_projector(),         # redact what survives
-            domain_quota_projector(1000),  # politeness cap last
+            canonicalize_projector(),  # key normalization FIRST
+            project_page_batch,        # re-extract text, token stats
         )
 
     Order matters and is the caller's contract: canonicalization must
-    precede anything keyed by url; the quota should run after the
-    filters so dropped spam doesn't consume a domain's budget. Each
-    stage is itself a lazy DataFrame→DataFrame map, so composition adds
-    no extra evaluation — the batch plan fuses across stages."""
+    precede anything keyed by url. Each stage is itself a lazy
+    DataFrame→DataFrame map, so composition adds no extra evaluation —
+    the batch plan fuses across stages."""
 
     def project(batch: DataFrame) -> DataFrame:
         for p in projectors:

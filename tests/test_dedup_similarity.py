@@ -480,38 +480,6 @@ def test_ivf_assign_is_projection_only(spark):
         assert int(r["cell_id"]) == best, f"vec {r['vec_id']}"
 
 
-def test_kmeans_cells_recall_uplift(spark):
-    """r4 judge item 3: a few Lloyd's iterations beat the lowest-id
-    stand-in centroids on recall-per-probe (sf0.01 embeddings, where the
-    corpus is big enough for trained cells to matter); empty cells keep
-    their previous centroid so the cell count never shrinks."""
-    from go_bqloader_spark.operators.similarity import (
-        ivf_topk,
-        kmeans_cells,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    exact = {(r["query_id"], r["vec_id"])
-             for r in cosine_topk(corpus, q, k=10).collect()}
-
-    km = kmeans_cells(corpus, n_cells=16, iters=4)
-    assert km.count() == 16  # no cell lost to an empty assignment
-
-    def recall(cells, nprobe):
-        got = {(r["query_id"], r["vec_id"])
-               for r in ivf_topk(corpus, q, k=10, n_cells=16,
-                                 nprobe=nprobe, cells=cells).collect()}
-        return len(exact & got) / len(exact)
-
-    # measured (deterministic): lowest-id .28/.42, kmeans .42/.56
-    for nprobe in (2, 4):
-        assert recall(km, nprobe) > recall(None, nprobe)
-
-
 def test_kmv_operator_merge_and_registry_equality(spark):
     """r4 judge item 7: KMV as a library operator. The sketch is
     associative-mergeable (sketch(A ∪ B) == merge(sketch(A), sketch(B)))

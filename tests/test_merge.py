@@ -643,110 +643,6 @@ def test_expire_snapshots_spares_inflight_commit_dirs(spark, tmp_path):
 
 
 @pytest.mark.parametrize("mode", MANIFEST_MODES)
-def test_near_dup_rewrite_maintenance(spark, tmp_path, mode, legacy_manifest):
-    """Ingest → near-dup cluster → keep-representatives, end-to-end through
-    the CDC path: duplicates are tombstoned via the normal exactly-once
-    merge, the representative (min key) survives, unique pages untouched,
-    and redelivery of the maintenance batch is a ledger no-op."""
-    from go_bqloader_spark.lake import near_dup_rewrite
-
-    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=4), mode)
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [
-        ("U", 1, "https://a.ex/1", None, None, base, "en"),
-        ("U", 2, "https://a.ex/2", None, None, base, "en"),
-        ("U", 3, "https://b.ex/1", None, None, base + " extra", "en"),
-        ("U", 4, "https://c.ex/1", None, None,
-         "completely different content about spark engines and lakes", "en"),
-        ("U", 5, "https://n.ex/null", None, None, None, "en"),
-    ]
-    batch = spark.createDataFrame(
-        rows,
-        "op string, seq bigint, url string, warc_ts timestamp, "
-        "html binary, text string, lang string",
-    )
-    t.merge(batch, batch_key=("q", 0))
-
-    rep = near_dup_rewrite(t, threshold=0.5, batch_id=0)
-    assert rep.scanned == 4  # NULL-text row is not a candidate
-    assert rep.removed >= 2  # a.ex/2 and b.ex/1 fold into a.ex/1's cluster
-    live = sorted(r["url"] for r in t.read().select("url").collect())
-    assert "https://a.ex/1" in live            # representative kept
-    assert "https://a.ex/2" not in live        # duplicate tombstoned
-    assert "https://c.ex/1" in live            # unique page untouched
-    assert "https://n.ex/null" in live         # null-text page untouched
-
-    # exactly-once: redelivering the same maintenance batch is a no-op
-    rep2 = near_dup_rewrite(t, threshold=0.5, batch_id=0)
-    assert rep2.merge.skipped and rep2.removed == 0
-    # a fresh pass over the already-deduped table finds nothing to remove
-    rep3 = near_dup_rewrite(t, threshold=0.5, batch_id=1)
-    assert rep3.removed == 0
-
-    # r4 judge item 5: the victim-delete builder is payload-free — every
-    # parquet scan it plans reads only key + engine columns (html/text
-    # pruned), so tombstoning never moves page bytes
-    import re
-
-    from go_bqloader_spark.lake import maintenance as mnt
-
-    losers = spark.createDataFrame([("probe\x00None",)], "__id string")
-    plan = (mnt._victim_deletes(t, t.manifest(), losers)
-            ._jdf.queryExecution().executedPlan().toString())
-    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    assert schemas
-    for s in schemas:
-        assert "html" not in s and "text" not in s and "lang" not in s
-
-
-@pytest.mark.parametrize("mode", MANIFEST_MODES)
-def test_quality_rewrite_maintenance(spark, tmp_path, mode, legacy_manifest):
-    """Ingest → corpus-prep quality filters → tombstone failures, through
-    the CDC path: a repetitive (Gopher-flagged) page and a page whose
-    chunks all duplicate an earlier page are removed via the exactly-once
-    merge; clean unique pages and NULL-text pages survive; redelivery is
-    a ledger no-op."""
-    from go_bqloader_spark.lake import quality_rewrite
-
-    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=4), mode)
-    boiler = " ".join(f"b{i}" for i in range(20))
-    uniq = " ".join(f"u{i}" for i in range(40))
-    rows = [
-        # clean, unique, first owner of the boilerplate chunk
-        ("U", 1, "https://a.ex/1", None, None, f"{boiler} {uniq}", "en"),
-        # 100% of its chunks duplicate a.ex/1's -> chunk_dup
-        ("U", 2, "https://a.ex/2", None, None, boiler, "en"),
-        # heavy repetition -> low_quality
-        ("U", 3, "https://s.ex/1", None, None,
-         "spam spam spam spam spam spam spam spam", "en"),
-        # clean and unique
-        ("U", 4, "https://c.ex/1", None, None,
-         " ".join(f"w{i}" for i in range(30)), "en"),
-        ("U", 5, "https://n.ex/null", None, None, None, "en"),
-    ]
-    batch = spark.createDataFrame(
-        rows,
-        "op string, seq bigint, url string, warc_ts timestamp, "
-        "html binary, text string, lang string",
-    )
-    t.merge(batch, batch_key=("q", 0))
-
-    rep = quality_rewrite(t, batch_id=0)
-    assert rep.scanned == 4  # NULL-text row is not a candidate
-    assert rep.n_repetitive == 1 and rep.n_chunk_dup == 1
-    assert rep.removed == 2
-    live = sorted(r["url"] for r in t.read().select("url").collect())
-    assert live == ["https://a.ex/1", "https://c.ex/1", "https://n.ex/null"]
-
-    # exactly-once: redelivering the same maintenance batch is a no-op
-    rep2 = quality_rewrite(t, batch_id=0)
-    assert rep2.merge.skipped and rep2.removed == 0
-    # a fresh pass over the cleaned table finds nothing to remove
-    rep3 = quality_rewrite(t, batch_id=1)
-    assert rep3.removed == 0
-
-
-@pytest.mark.parametrize("mode", MANIFEST_MODES)
 def test_zone_maps_prune_and_stay_exact(spark, tmp_path, mode, legacy_manifest):
     """Manifest zone maps: every data-file entry records key-column
     min/max; read(zones=...) skips non-overlapping files at PLANNING time

@@ -1,5 +1,6 @@
 """Streaming pipeline tests: drain-to-convergence, kill/resume from
-checkpoint, exactly-once under batch redelivery, and mid-stream compaction.
+checkpoint, exactly-once under batch redelivery, mid-stream compaction, and
+composed per-batch projectors.
 """
 
 import os
@@ -156,596 +157,42 @@ def test_checkpoint_dir_created(spark, tmp_path, binlog):
     assert os.path.exists(os.path.join(ckpt, "offsets"))
 
 
-def _run_win_metrics(spark, path, name, files_per_trigger, watermark):
-    from go_bqloader_spark.sources.datagen import CHANGE_SCHEMA
-    from go_bqloader_spark.streaming.windows import windowed_ingest_metrics
-
-    stream = (
-        spark.readStream.schema(CHANGE_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(path)
-    )
-    q = (
-        windowed_ingest_metrics(stream, window="10 minutes", watermark=watermark)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    return sorted(map(tuple, spark.table(name).collect()))
-
-
-def test_windowed_ingest_metrics_stream(spark, tmp_path, binlog):
-    """Single micro-batch (watermark never advances mid-stream) matches the
-    batch-mode aggregation exactly; multi-batch with a tight watermark
-    drops events later than the watermark — the bounded-state contract."""
-    from go_bqloader_spark.streaming.windows import windowed_ingest_metrics
-
-    d, changes = binlog
-    want = sorted(
-        map(tuple, windowed_ingest_metrics(changes, window="10 minutes").collect())
-    )
-    one_batch = _run_win_metrics(spark, f"{d}/seg=*", "win_all", 12, "20 minutes")
-    # append mode only EMITS windows the final watermark has passed; the
-    # tail windows (end > max_event_time - 20min) stay in state forever
-    # under availableNow — exclude them from the batch expectation
-    import datetime
-
-    max_ts = changes.agg(F.max("commit_ts").alias("m")).collect()[0]["m"]
-    horizon = max_ts - datetime.timedelta(minutes=20)
-    want_emittable = [w for w in want if w[1] <= horizon]
-    assert one_batch == want_emittable and len(one_batch) > 0
-
-    multi = _run_win_metrics(spark, f"{d}/seg=*", "win_late", 2, "1 minute")
-    # late events (datagen emits up to 1h-late commit_ts) fall outside the
-    # 1-minute watermark across micro-batches → strictly fewer counted
-    assert sum(r[3] for r in multi) < sum(r[3] for r in want)
-
-
-def test_session_window_metrics_stream_matches_batch(spark, tmp_path, binlog):
-    """Built-in session windows: streamed append-mode emission equals the
-    batch session_window aggregation for every session the final watermark
-    passed (bounded-state contract, same expression both modes)."""
-    import datetime
-
-    from go_bqloader_spark.streaming.sessions import session_window_metrics
-
-    d, changes = binlog
-    want = sorted(map(tuple, session_window_metrics(
-        changes, gap="30 minutes").collect()))
-    stream = (spark.readStream.schema(changes.schema)
-              .option("maxFilesPerTrigger", 12).parquet(f"{d}/seg=*"))
-    q = (session_window_metrics(stream, gap="30 minutes", watermark="20 minutes")
-         .writeStream.format("memory").queryName("sess_all")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(300)
-    got = sorted(map(tuple, spark.table("sess_all").collect()))
-    max_ts = changes.agg(F.max("commit_ts").alias("m")).collect()[0]["m"]
-    horizon = max_ts - datetime.timedelta(minutes=20)
-    want_emittable = [w for w in want if w[1] <= horizon]
-    assert got == want_emittable and len(got) > 0
-
-
-def test_stateful_host_progress(spark, tmp_path, binlog):
-    """applyInPandasWithState custom operator: after draining the stream,
-    the per-host running state equals the batch groupBy answer."""
-    from go_bqloader_spark.streaming.sessions import stateful_host_progress
-
-    d, changes = binlog
-    want = {
-        r["host"]: (r["max_seq"], r["n_events"])
-        for r in changes.select(
-            F.regexp_extract("url", r"https?://([^/]+)", 1).alias("host"), "seq"
-        ).groupBy("host").agg(
-            F.max("seq").alias("max_seq"), F.count(F.lit(1)).alias("n_events")
-        ).collect()
-    }
-    stream = (spark.readStream.schema(changes.schema)
-              .option("maxFilesPerTrigger", 4).parquet(f"{d}/seg=*"))
-    q = (stateful_host_progress(stream)
-         .writeStream.format("memory").queryName("host_prog")
-         .outputMode("update").trigger(availableNow=True).start())
-    assert q.awaitTermination(300)
-    # last emission per host (multi-batch stream → several updates)
-    rows = spark.sql(
-        "SELECT host, max_seq, n_events FROM ("
-        "  SELECT *, row_number() OVER (PARTITION BY host ORDER BY n_batches DESC) rn"
-        "  FROM host_prog) WHERE rn = 1"
-    ).collect()
-    got = {r["host"]: (r["max_seq"], r["n_events"]) for r in rows}
-    assert got == want and len(got) > 1
-
-
-def test_host_extract_handles_bare_host_urls(spark, tmp_path):
-    """ADVICE r2: https://example.com (no path) must extract the host, not
-    collapse into an empty-host state group."""
-    from go_bqloader_spark.streaming.sessions import stateful_host_progress
-
-    d = str(tmp_path / "bare")
-    spark.createDataFrame(
-        [("https://example.com", 1), ("https://example.com/p", 2),
-         ("http://other.net", 3)],
-        "url string, seq bigint",
-    ).coalesce(1).write.parquet(d)
-    stream = spark.readStream.schema("url string, seq bigint").parquet(d)
-    q = (stateful_host_progress(stream)
-         .writeStream.format("memory").queryName("bare_host")
-         .outputMode("update").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    got = {
-        r["host"]: (r["max_seq"], r["n_events"])
-        for r in spark.table("bare_host").collect()
-    }
-    assert got == {"example.com": (2, 2), "other.net": (3, 1)}
-
-
-def test_stream_content_dedup_first_arrival(spark, tmp_path):
-    """dedup_stream drops later content-duplicates (different change keys,
-    same text) inside the watermark, keeps first arrivals, and passes
-    delete events (NULL text) straight through."""
-    import os as _os
-
-    from go_bqloader_spark.streaming import dedup_stream
-
-    src = str(tmp_path / "feed")
-    rows = [
-        ("U", 1, "https://a.ex/p", "2024-01-01 00:00:01", "same content", "en"),
-        ("U", 2, "https://mirror.ex/p", "2024-01-01 00:00:02", "same content", "en"),
-        ("U", 3, "https://b.ex/q", "2024-01-01 00:00:03", "unique content", "en"),
-        ("D", 4, "https://a.ex/p", "2024-01-01 00:00:04", None, None),
-    ]
-    df = spark.createDataFrame(
-        rows, "op string, seq bigint, url string, ts string, text string, lang string"
-    ).select("op", "seq", "url", F.to_timestamp("ts").alias("warc_ts"),
-             "text", "lang")
-    df.repartition(1).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(
-        "op string, seq bigint, url string, warc_ts timestamp, "
-        "text string, lang string"
-    ).parquet(src)
-    out_dir = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r["url"], r["op"]) for r in spark.read.parquet(out_dir).collect()}
-    assert ("https://a.ex/p", "U") in got        # first arrival kept
-    assert ("https://mirror.ex/p", "U") not in got  # content dup dropped
-    assert ("https://b.ex/q", "U") in got        # unique kept
-    assert ("https://a.ex/p", "D") in got        # tombstone passes through
-    assert _os.path.isdir(ck)
-
-    # r4 judge item 1 — plan assertion: the dedup state operator and its
-    # exchange see only the narrow (id_cols, ts, __fp) projection; the
-    # payload never crosses the dedup-state exchange (text appears only
-    # as input to the pre-exchange md5, html/lang not at all)
-    import re
-
-    plan = q._jsq.explainInternal(True)
-    phys = plan.split("== Physical Plan ==")[1]
-    assert "StreamingDeduplicateWithinWatermark" in phys
-    m = re.search(
-        r"StreamingDeduplicateWithinWatermark.*?Exchange hashpartitioning\(__fp#\d+"
-        r".*?Project \[([^\]]*)\]",
-        phys, re.S,
-    )
-    assert m, f"dedup-state exchange/projection not found:\n{phys}"
-    narrow = m.group(1)
-    assert "html#" not in narrow and "lang#" not in narrow
-    # text feeds the fingerprint hash pre-exchange, nothing else
-    assert narrow.count("text#") == 1 and "md5(" in narrow
-
-
-def test_cdc_stream_with_content_dedup_transform(spark, tmp_path):
-    """dedup_stream plugged into start_cdc_stream via stream_transform:
-    content dupes under different keys never reach the table; deletes
-    still apply."""
-    from go_bqloader_spark.streaming import dedup_stream, run_cdc_stream
-
-    src = str(tmp_path / "feed")
-    rows = [
-        ("U", 1, "https://a.ex/p", "2024-01-01 00:00:01", "same content", "en"),
-        ("U", 2, "https://mirror.ex/p", "2024-01-01 00:00:02", "same content", "en"),
-        ("U", 3, "https://b.ex/q", "2024-01-01 00:00:03", "unique content", "en"),
-    ]
-    df = spark.createDataFrame(
-        rows, "op string, seq bigint, url string, ts string, text string, lang string"
-    ).select("op", "seq", "url", F.to_timestamp("ts").alias("warc_ts"),
-             F.lit(None).cast("binary").alias("html"), "text", "lang")
-    df.repartition(1).write.mode("overwrite").parquet(src)
-
-    t = _mk_table(spark, tmp_path)
-    run_cdc_stream(
-        spark, src, t, str(tmp_path / "ck"),
-        stream_transform=dedup_stream, timeout_sec=180,
-    )
-    live = sorted(r["url"] for r in t.read().select("url").collect())
-    assert live == ["https://a.ex/p", "https://b.ex/q"]
-
-
-def test_stream_dedup_delete_with_before_image_passes(spark, tmp_path):
-    """ADVICE r4: a delete event carrying a before-image text whose
-    content duplicates an earlier arrival must still reach the sink —
-    tombstones route on op = 'D', not on text nullability."""
-    from go_bqloader_spark.streaming import dedup_stream
-
-    src = str(tmp_path / "feed")
-    rows = [
-        ("U", 1, "https://a.ex/p", "2024-01-01 00:00:01", "same content", "en"),
-        # delete of a DIFFERENT key, carrying a duplicate before-image
-        ("D", 2, "https://b.ex/q", "2024-01-01 00:00:02", "same content", "en"),
-    ]
-    df = spark.createDataFrame(
-        rows, "op string, seq bigint, url string, ts string, text string, lang string"
-    ).select("op", "seq", "url", F.to_timestamp("ts").alias("warc_ts"),
-             "text", "lang")
-    df.repartition(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(
-        "op string, seq bigint, url string, warc_ts timestamp, "
-        "text string, lang string"
-    ).parquet(src)
-    out_dir = str(tmp_path / "out")
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("parquet").option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {(r["url"], r["op"]) for r in spark.read.parquet(out_dir).collect()}
-    assert ("https://b.ex/q", "D") in got   # delete NOT swallowed by dedup
-    assert ("https://a.ex/p", "U") in got
-
-
-def test_ingest_content_dedup_foreachbatch(spark, tmp_path):
-    """IngestContentDedup — the zero-payload-shuffle dedup path:
-    cross-batch content dupes are dropped via the fingerprint state
-    table, payload rows cross NO exchange in the batch filter (broadcast
-    semi-join, plan-asserted), deletes pass, and replaying a committed
-    batch is a no-op end to end."""
-    from go_bqloader_spark.streaming import IngestContentDedup, run_cdc_stream
-
-    src = str(tmp_path / "feed")
-    schema = ("op string, seq bigint, url string, warc_ts timestamp, "
-              "html binary, text string, lang string")
-
-    def write_seg(name, rows):
-        (spark.createDataFrame(
-            rows, "op string, seq bigint, url string, ts string, "
-                  "text string, lang string")
-         .select("op", "seq", "url", F.to_timestamp("ts").alias("warc_ts"),
-                 F.lit(None).cast("binary").alias("html"), "text", "lang")
-         .repartition(1).write.mode("append").parquet(src))
-
-    # segment 1: one unique page + an intra-batch content dup
-    write_seg("s1", [
-        ("U", 1, "https://a.ex/p", "2024-01-01 00:00:01", "alpha", "en"),
-        ("U", 2, "https://a2.ex/p", "2024-01-01 00:00:02", "alpha", "en"),
-        ("U", 3, "https://b.ex/q", "2024-01-01 00:00:03", "beta", "en"),
-    ])
-    t = _mk_table(spark, tmp_path)
-    dd = IngestContentDedup(spark, str(tmp_path / "fpstate"))
-    run_cdc_stream(spark, src, t, str(tmp_path / "ck"),
-                   content_dedup=dd, timeout_sec=180,
-                   max_files_per_trigger=1)
-    assert sorted(r["url"] for r in t.read().collect()) == \
-        ["https://a.ex/p", "https://b.ex/q"]
-
-    # segment 2 (separate micro-batch): CROSS-batch content dup + a
-    # delete with duplicate before-image + fresh content
-    write_seg("s2", [
-        ("U", 10, "https://mirror.ex/p", "2024-01-01 00:01:00", "alpha", "en"),
-        ("D", 11, "https://b.ex/q", "2024-01-01 00:00:03", "beta", "en"),
-        ("U", 12, "https://c.ex/r", "2024-01-01 00:01:02", "gamma", "en"),
-    ])
-    run_cdc_stream(spark, src, t, str(tmp_path / "ck"),
-                   content_dedup=dd, timeout_sec=180,
-                   max_files_per_trigger=1)
-    live = sorted(r["url"] for r in t.read().collect())
-    assert live == ["https://a.ex/p", "https://c.ex/r"]  # dup dropped, delete applied
-
-    # fingerprint state holds the distinct contents seen
-    assert dd.state.read().count() == 3  # alpha, beta, gamma
-
-    # replaying the same checkpoint is a full no-op (both ledgers skip)
-    v_data, v_state = t.current_version(), dd.state.current_version()
-    run_cdc_stream(spark, src, t, str(tmp_path / "ck"),
-                   content_dedup=dd, timeout_sec=180,
-                   max_files_per_trigger=1)
-    assert t.current_version() == v_data
-    assert dd.state.current_version() == v_state
-
-    # plan assertion: the payload filter is a broadcast semi-join — the
-    # wide batch side crosses no hash exchange before the merge
-    batch = spark.createDataFrame(
-        [("U", 20, "https://d.ex/s", None, None, "delta", "en")], schema
-    )
-    kept = dd.filter_batch(batch)
-    phys = kept._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in phys and "LeftSemi" in phys
-    assert "Exchange hashpartitioning" not in phys
-    dd._pending = None  # plan-only probe: don't leak into a state commit
-
-
-def test_ingest_content_dedup_broadcast_gate(spark, tmp_path):
-    """r6 (VERDICT r5 #1): the winner-key broadcast is size-gated. A
-    batch whose winner set exceeds ``broadcast_max_rows`` filters the
-    payload through a plain shuffled left-semi join (no broadcast of the
-    batch-sized key set), with results identical to the broadcast path."""
-    from go_bqloader_spark.streaming import IngestContentDedup
-
-    schema = ("op string, seq bigint, url string, warc_ts timestamp, "
-              "html binary, text string, lang string")
-    rows = [
-        ("U", i, f"https://h{i % 7}.ex/p{i}", None, None,
-         f"content-{i % 40}", "en")  # 100 rows, 40 distinct contents
-        for i in range(100)
-    ]
-    batch = spark.createDataFrame(rows, schema).withColumn(
-        "warc_ts", F.to_timestamp(F.lit("2024-01-01 00:00:01"))
-    )
-
-    gated = IngestContentDedup(
-        spark, str(tmp_path / "fp_gated"), broadcast_max_rows=0
-    )
-    kept_gated = gated.filter_batch(batch)
-    phys = kept_gated._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in phys
-    assert "BroadcastHashJoin" not in phys  # gate forced the shuffled path
-
-    bcast = IngestContentDedup(
-        spark, str(tmp_path / "fp_bcast"), broadcast_max_rows=10**6
-    )
-    kept_bcast = bcast.filter_batch(batch)
-    phys_b = kept_bcast._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in phys_b  # small winner set still broadcasts
-
-    a = sorted((r["seq"], r["url"]) for r in kept_gated.collect())
-    b = sorted((r["seq"], r["url"]) for r in kept_bcast.collect())
-    assert a == b and len(a) == 40  # first arrival per distinct content
-
-
-def test_cdc_stream_with_quality_filter_projector(spark, tmp_path):
-    """quality_filter_projector inside foreachBatch: a Gopher-flagged
-    repetitive page never reaches the table; clean pages, NULL-text rows,
-    and tombstones pass."""
-    from go_bqloader_spark.streaming import (
-        quality_filter_projector, run_cdc_stream,
-    )
-
-    src = str(tmp_path / "feed")
-    clean = " ".join(f"w{i}" for i in range(30))
-    rows = [
-        ("U", 1, "https://a.ex/p", "2024-01-01 00:00:01", clean, "en"),
-        ("U", 2, "https://s.ex/spam", "2024-01-01 00:00:02",
-         "spam spam spam spam spam spam spam spam", "en"),
-        ("U", 3, "https://n.ex/null", "2024-01-01 00:00:03", None, "en"),
-        # tombstone whose before-image text is ALSO repetitive: must apply
-        ("U", 4, "https://d.ex/gone", "2024-01-01 00:00:04", clean, "en"),
-        ("D", 5, "https://d.ex/gone", "2024-01-01 00:00:04",
-         "spam spam spam spam spam spam spam spam", "en"),
-    ]
-    df = spark.createDataFrame(
-        rows, "op string, seq bigint, url string, ts string, text string, lang string"
-    ).select("op", "seq", "url", F.to_timestamp("ts").alias("warc_ts"),
-             F.lit(None).cast("binary").alias("html"), "text", "lang")
-    df.repartition(1).write.mode("overwrite").parquet(src)
-
-    t = _mk_table(spark, tmp_path)
-    run_cdc_stream(
-        spark, src, t, str(tmp_path / "ck"),
-        projector=quality_filter_projector(), timeout_sec=180,
-    )
-    live = sorted(r["url"] for r in t.read().select("url").collect())
-    assert live == ["https://a.ex/p", "https://n.ex/null"]
-
-
-def test_cdc_stream_with_pii_scrub_projector(spark, tmp_path):
-    """pii_scrub_projector: emails/phones are redacted from the payload at
-    ingest AND the text byte-invariant text == extract_text(html) still
-    holds on every stored row (text is re-derived from scrubbed html)."""
-    from go_bqloader_spark.functions.webtext import extract_text, make_html
-    from go_bqloader_spark.streaming import pii_scrub_projector, run_cdc_stream
-
-    src = str(tmp_path / "feed")
-    rows = [
-        ("U", 1, "https://a.ex/p", "2024-01-01 00:00:01",
-         "contact", "mail me at alice@example.org or 415-555-0134"),
-        ("U", 2, "https://b.ex/q", "2024-01-01 00:00:02",
-         "clean", "nothing sensitive here"),
-    ]
-    base = spark.createDataFrame(
-        rows, "op string, seq bigint, url string, ts string, "
-              "title string, body string",
-    )
-    html = make_html(F.col("title"), F.col("body"))
-    df = base.select(
-        "op", "seq", "url", F.to_timestamp("ts").alias("warc_ts"),
-        html.alias("html"), extract_text(html).alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    df.repartition(1).write.mode("overwrite").parquet(src)
-
-    t = _mk_table(spark, tmp_path)
-    run_cdc_stream(
-        spark, src, t, str(tmp_path / "ck"),
-        projector=pii_scrub_projector(), timeout_sec=180,
-    )
-    out = {r["url"]: r for r in t.read().collect()}
-    a = out["https://a.ex/p"]
-    assert "alice@example.org" not in a["text"]
-    assert "415-555-0134" not in a["text"]
-    assert "xEMAILx" in a["text"] and "xPHONEx" in a["text"]
-    assert "alice@example.org" not in bytes(a["html"]).decode("utf-8")
-    # byte-invariant preserved on every stored row
-    bad = t.read().where(
-        F.col("html").isNotNull()
-        & (F.col("text") != extract_text(F.col("html")))
-    ).count()
-    assert bad == 0
-    # make_html renders the title twice (title tag + h1)
-    assert out["https://b.ex/q"]["text"] == "clean clean nothing sensitive here"
-
-
-def test_cdc_stream_with_domain_quota_projector(spark, tmp_path):
-    """domain_quota_projector: at most N upserts per registrable domain
-    per micro-batch survive (lowest seq first — deterministic under
-    replay); other domains are untouched and tombstones always pass."""
-    from go_bqloader_spark.streaming import domain_quota_projector, run_cdc_stream
-
-    src = str(tmp_path / "feed")
-    rows = [
-        # 4 pages from hot.co.uk mirrors (www./cdn. collapse to one
-        # registrable domain) -> only the 2 lowest seqs may land
-        ("U", 1, "https://www.hot.co.uk/a", "cw a"),
-        ("U", 2, "https://cdn.hot.co.uk/b", "cw b"),
-        ("U", 3, "https://hot.co.uk/c", "cw c"),
-        ("U", 4, "https://www.hot.co.uk/d", "cw d"),
-        ("U", 5, "https://quiet.org/x", "qx"),
-        # delete on the hot domain: must apply regardless of the cap
-        ("U", 6, "https://gone.co.uk/y", "gy"),
-        ("D", 7, "https://gone.co.uk/y", None),
-    ]
-    df = spark.createDataFrame(
-        rows, "op string, seq bigint, url string, text string"
-    ).select(
-        "op", "seq", "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:01")).alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"), "text",
-        F.lit("en").alias("lang"),
-    )
-    df.repartition(1).write.mode("overwrite").parquet(src)
-
-    t = _mk_table(spark, tmp_path)
-    run_cdc_stream(
-        spark, src, t, str(tmp_path / "ck"),
-        projector=domain_quota_projector(max_per_domain=2), timeout_sec=180,
-    )
-    live = sorted(r["url"] for r in t.read().select("url").collect())
-    assert live == [
-        "https://cdn.hot.co.uk/b",   # seq 2
-        "https://quiet.org/x",
-        "https://www.hot.co.uk/a",   # seq 1
-    ]
-    # the tombstone applied: gone.co.uk/y was upserted then deleted
-    assert t.read(include_deleted=True).where("url like '%gone%'").count() == 1
-
-
-def test_cdc_stream_full_hygiene_stack(spark, tmp_path):
-    """The composed ingest pipeline — canonicalize → quality filter →
-    PII scrub → domain quota — through ONE projector hook: key variants
-    collapse, spam dies before the scrub pays for it, survivors are
-    redacted with the byte-invariant intact, and the hot domain is
-    capped. The composition is the production recipe from the
-    compose_projectors docstring."""
+def test_cdc_stream_with_composed_projectors(spark, tmp_path):
+    """compose_projectors chains canonicalize_projector and
+    project_page_batch through one projector hook: two tracking-parameter
+    variants of a page collapse onto one LWW key (the later seq wins),
+    and the stored text is re-extracted from the html."""
     from go_bqloader_spark.functions.urlnorm import canonicalize_projector
-    from go_bqloader_spark.functions.webtext import extract_text
-    from go_bqloader_spark.streaming import (
-        compose_projectors,
-        domain_quota_projector,
-        pii_scrub_projector,
-        quality_filter_projector,
-        run_cdc_stream,
-    )
+    from go_bqloader_spark.functions.webtext import extract_text, project_page_batch
+    from go_bqloader_spark.streaming import compose_projectors
 
     src = str(tmp_path / "feed")
-    clean = " ".join(f"w{i}" for i in range(30))
-    rows = [
-        # same page under two tracking-param variants: canonicalization
-        # must collapse them onto one LWW key (seq 2 wins)
-        ("U", 1, "https://a.ex/p?utm_source=x", clean + " v1"),
-        ("U", 2, "https://a.ex/p?utm_source=y", clean + " v2"),
-        # spam page: must die at the quality gate
-        ("U", 3, "https://s.ex/spam", "spam spam spam spam spam spam spam"),
-        # PII page: must land redacted
-        ("U", 4, "https://b.ex/pii", "call 415-555-0134 " + clean),
-        # hot domain: 3 upserts, quota 2 -> lowest seqs win
-        ("U", 5, "https://hot.ex/1", clean + " h1"),
-        ("U", 6, "https://hot.ex/2", clean + " h2"),
-        ("U", 7, "https://hot.ex/3", clean + " h3"),
-    ]
-    df = spark.createDataFrame(
-        rows, "op string, seq bigint, url string, text string"
+    spark.createDataFrame(
+        [("U", 1, "https://a.ex/p?utm_source=x", "v1 body"),
+         ("U", 2, "https://A.ex/p?utm_source=y", "v2 body"),
+         ("U", 3, "https://b.ex/q", "other page")],
+        "op string, seq bigint, url string, body string",
     ).select(
         "op", "seq", "url",
         F.to_timestamp(F.lit("2024-01-01 00:00:01")).alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"), "text",
+        F.encode(F.concat(F.lit("<p>"), "body", F.lit("</p>")), "UTF-8").alias("html"),
+        F.lit("stale").alias("text"),
         F.lit("en").alias("lang"),
-    )
-    df.repartition(1).write.mode("overwrite").parquet(src)
+    ).repartition(1).write.parquet(src)
 
-    t = _mk_table(spark, tmp_path)
+    t = LakeTable.create(
+        spark, str(tmp_path / "pages"),
+        PAGE_COLS + [("n_tokens", "int"), ("stop_ratio", "double")],
+        key=["url", "warc_ts"], n_buckets=8,
+    )
     run_cdc_stream(
         spark, src, t, str(tmp_path / "ck"),
-        projector=compose_projectors(
-            canonicalize_projector(),
-            quality_filter_projector(),
-            pii_scrub_projector(),
-            domain_quota_projector(max_per_domain=2),
-        ),
+        projector=compose_projectors(canonicalize_projector(), project_page_batch),
         timeout_sec=180,
     )
     out = {r["url"]: r for r in t.read().collect()}
-    assert sorted(out) == [
-        "https://a.ex/p",        # canonical key, one row
-        "https://b.ex/pii",
-        "https://hot.ex/1",
-        "https://hot.ex/2",
-    ]
-    assert out["https://a.ex/p"]["text"].endswith("v2")      # LWW by seq
-    assert "415-555-0134" not in out["https://b.ex/pii"]["text"]
-    assert "xPHONEx" in out["https://b.ex/pii"]["text"]
-    # byte-invariant holds on every stored row with a payload
-    bad = t.read().where(
-        F.col("html").isNotNull()
-        & (F.col("text") != extract_text(F.col("html")))
-    ).count()
+    assert sorted(out) == ["https://a.ex/p", "https://b.ex/q"]
+    assert out["https://a.ex/p"]["text"] == "v2 body"
+    assert out["https://a.ex/p"]["n_tokens"] == 2
+    bad = t.read().where(F.col("text") != extract_text(F.col("html"))).count()
     assert bad == 0
-
-
-def test_cdc_stream_with_incremental_neardup_sweep(spark, tmp_path):
-    """NearDupIndex wired into start_cdc_stream: the periodic in-pipeline
-    sweep tombstones near-dups (same text family, different urls) that
-    ingest-time exact dedup cannot catch, across micro-batch boundaries."""
-    from go_bqloader_spark.lake import NearDupIndex
-
-    fam_a = "the quick brown fox jumps over the lazy dog near the old river"
-    fam_b = "spark structured streaming applies change data capture merges"
-    solo = "completely unrelated text about volcanic geology and minerals"
-    segs = [
-        [(1, "u/a2", fam_a + " tail"), (2, "u/s1", solo)],
-        [(3, "u/a1", fam_a + " tail")],
-        [(4, "u/b2", fam_b + " tail"), (5, "u/b1", fam_b + " tail")],
-    ]
-    src = str(tmp_path / "feed")
-    for rows in segs:  # sequential writes -> mtime-ordered micro-batches
-        spark.createDataFrame(
-            [("U", s, u, None, None, t, "en") for s, u, t in rows],
-            "op string, seq bigint, url string, warc_ts timestamp, "
-            "html binary, text string, lang string",
-        ).repartition(1).write.mode("append").parquet(src)
-
-    table = _mk_table(spark, tmp_path)
-    idx = NearDupIndex.create(
-        spark, str(tmp_path / "ndidx"), table, n_buckets=16
-    )
-    run_cdc_stream(
-        spark, src, table, str(tmp_path / "ck"),
-        max_files_per_trigger=1,
-        compact_every=0, expire_keep=None,
-        neardup_index=idx, neardup_every=1,
-    )
-    live = sorted(r["url"] for r in table.read().select("url").collect())
-    assert live == ["u/a1", "u/b1", "u/s1"], live
-    # the sweep is ledgered under the streaming batch ids
-    assert table.committed("cdc_apply_neardup", 2)
-    assert idx.indexed_through() == 5

@@ -1,6 +1,12 @@
 """End-to-end drive via the production launch path: seeded CDC feed ->
 LakeTable merge (out-of-order split) -> convergence + idempotence + text
-byte-invariant; plus the new MJPEG-AVI frame-sampling path."""
+byte-invariant; then MJPEG-AVI frame sampling, the corpus-prep operators,
+URL canonicalization, key Blooms, composed projectors, multi-writer commit
+rebase and format-3 manifests.
+
+    zip -qr gbs.zip go_bqloader_spark
+    spark-submit --master 'local[4]' --py-files gbs.zip tools/verify_drive.py
+"""
 import tempfile
 
 from pyspark.sql import SparkSession, functions as F
@@ -56,7 +62,7 @@ print(f"DRIVE OK: events={n} final_rows={rows_final} "
       f"up1={s1.rows_upserted} up2={s2.rows_upserted} skipped_ok idempotent_ok "
       f"empty_ok text_invariant_ok")
 
-# --- MJPEG-AVI frame-sampling path (new this session) ---
+# --- MJPEG-AVI frame-sampling path ---
 from go_bqloader_spark.operators import jpegcodec as jc
 from go_bqloader_spark.operators import mediacodecs as mc
 from go_bqloader_spark.operators.multimodal import (
@@ -71,13 +77,7 @@ vdf = spark.createDataFrame(
     [("http://v/a.avi", None, bytearray(avi)),
      ("http://v/bad.bin", None, bytearray(b"not a video"))],
     "url string, warc_ts timestamp, payload binary")
-meta = {r["url"]: r.asDict() for r in decode_video_meta(
-    vdf.withColumnRenamed("payload", "html")
-       .withColumn("warc_ts", F.current_timestamp())
-       .withColumnRenamed("html", "payload")).collect()} \
-    if False else {}
-vmeta = decode_video_meta(vdf).collect()
-byurl = {r["url"]: r for r in vmeta}
+byurl = {r["url"]: r for r in decode_video_meta(vdf).collect()}
 assert byurl["http://v/a.avi"]["mime"] == "video/x-msvideo", byurl
 assert byurl["http://v/a.avi"]["brand"] == "MJPG"
 assert byurl["http://v/a.avi"]["width"] == 16
@@ -110,47 +110,6 @@ samp = stratified_sample(docs.withColumn("source", F.lit("s")), "source")
 assert samp.count() == samp.count()  # deterministic plan executes
 print("TEXTPIPE OK: chunk-dedup, repetition flags, pii redaction, sampling")
 
-# --- corpus hygiene through the CDC path (quality_rewrite + projectors) ---
-from go_bqloader_spark.lake import quality_rewrite
-
-tmp2 = tempfile.mkdtemp(prefix="gbs_q_")
-tq = LakeTable.create(
-    spark, tmp2,
-    [("url", "string"), ("warc_ts", "timestamp"), ("html", "binary"),
-     ("text", "string"), ("lang", "string")],
-    key=["url", "warc_ts"], bucket_col="url", n_buckets=4,
-)
-boiler = " ".join(f"b{i}" for i in range(20))
-rows = [("U", 1, "https://a.ex/1", None, None,
-         boiler + " " + " ".join(f"u{i}" for i in range(40)), "en"),
-        ("U", 2, "https://a.ex/2", None, None, boiler, "en"),
-        ("U", 3, "https://s.ex/1", None, None,
-         "spam spam spam spam spam spam spam spam", "en"),
-        ("U", 4, "https://c.ex/1", None, None,
-         " ".join(f"w{i}" for i in range(30)), "en")]
-tq.merge(spark.createDataFrame(
-    rows, "op string, seq bigint, url string, warc_ts timestamp, "
-          "html binary, text string, lang string"), batch_key=("q", 0))
-qr = quality_rewrite(tq, batch_id=0)
-assert qr.removed == 2 and qr.n_repetitive == 1 and qr.n_chunk_dup == 1
-qr2 = quality_rewrite(tq, batch_id=0)
-assert qr2.merge.skipped
-from go_bqloader_spark.streaming import (
-    pii_scrub_projector, quality_filter_projector)
-b = spark.createDataFrame(
-    [("U", 1, "x", "keep me " + " ".join(f"k{i}" for i in range(10))),
-     ("U", 2, "y", "spam spam spam spam spam spam"),
-     ("D", 3, "z", "spam spam spam spam spam spam")],
-    "op string, seq bigint, url string, text string")
-kept = sorted(r["seq"] for r in quality_filter_projector()(b).collect())
-assert kept == [1, 3], kept
-s = pii_scrub_projector()(spark.createDataFrame(
-    [("U", 1, "u", None, "mail a@b.org now")],
-    "op string, seq bigint, url string, html binary, text string")).collect()[0]
-assert s["text"] == "mail xEMAILx now"
-print(f"HYGIENE OK: quality_rewrite removed={qr.removed} ledger_skip "
-      f"projector_kept={kept} scrubbed")
-
 # --- URL canonicalization (CDC key normalization) ---
 from go_bqloader_spark.functions.urlnorm import canonical_url
 cu = spark.createDataFrame(
@@ -159,36 +118,15 @@ cu = spark.createDataFrame(
 assert cu == "http://a.ex/P?q=2", cu
 print("URLNORM OK:", cu)
 
-# --- r5 additions: domain rollup, dataset card, training-set export ---
-from go_bqloader_spark.functions.urlnorm import host_of, registrable_domain
+# --- registrable domain (the domain-rollup key) ---
+from go_bqloader_spark.functions.urlnorm import registrable_domain
 
 rd = spark.createDataFrame(
-    [("https://a.b.site.co.uk:8443/x",), ("http://www.news.org/p",)],
-    "url string",
-).select(registrable_domain(host_of("url")).alias("d")).collect()
+    [("a.b.site.co.uk",), ("www.news.org",)], "host string",
+).select(registrable_domain("host").alias("d")).collect()
 assert [r["d"] for r in rd] == ["site.co.uk", "news.org"], rd
+print("DOMAIN OK:", [r["d"] for r in rd])
 
-from go_bqloader_spark.plans.export import export_training_set
-
-clean40 = " ".join(f"tok{i}" for i in range(40))
-corpus = spark.createDataFrame(
-    [(1, clean40, "en"), (2, clean40, "en"), (3, "hi", "en"),
-     (4, " ".join(["spam"] * 30), "en"),
-     (5, "ping x@y.org " + clean40, "fr")],
-    "doc_id bigint, text string, lang string")
-exp_dir = tempfile.mkdtemp(prefix="gbs_exp_") + "/rel"
-stats = export_training_set(corpus, exp_dir, min_tokens=5,
-                            capacity=32, n_shards=2)
-assert stats["input_docs"] == 5 and stats["after_dedup"] == 4
-assert stats["exported_docs"] == 2, stats
-shipped = {r["doc_id"]: r for r in
-           spark.read.parquet(f"{exp_dir}/shards").collect()}
-assert sorted(shipped) == [1, 5] and "<EMAIL>" in shipped[5]["text"]
-card = {r["stratum"]: r["docs"] for r in
-        spark.read.parquet(f"{exp_dir}/card").collect()}
-assert card == {"en": 1, "fr": 1}, card
-print(f"EXPORT OK: funnel={stats['after_dedup']}->{stats['exported_docs']} "
-      f"card={card} domain_rollup_ok")
 
 # --- parquet key Blooms: point lookups through the production API ---
 tmp3 = tempfile.mkdtemp(prefix="gbs_bl_")
@@ -236,36 +174,24 @@ assert scans and sum(scans) == 0, scans
 print(f"BLOOM OK: point lookup exact in {point_jobs} Spark jobs, pushed-down "
       f"in-range miss scanned {sum(scans)} rows")
 
-# --- per-domain politeness quota at ingest ---
-from go_bqloader_spark.streaming import domain_quota_projector
-qb = spark.createDataFrame(
-    [("U", i, f"https://{'www.' if i % 2 else ''}hot.co.uk/{i}", f"t{i}")
-     for i in range(1, 5)] + [("U", 9, "https://quiet.org/x", "qx")],
-    "op string, seq bigint, url string, text string")
-qkept = sorted(r["seq"] for r in
-               domain_quota_projector(max_per_domain=2)(qb).collect())
-assert qkept == [1, 2, 9], qkept
-print(f"QUOTA OK: kept={qkept}")
-
-# --- composed hygiene stack through one projector hook ---
+# --- composed projectors through one hook ---
 from go_bqloader_spark.functions.urlnorm import canonicalize_projector
-from go_bqloader_spark.streaming import (
-    compose_projectors, pii_scrub_projector, quality_filter_projector)
-stack = compose_projectors(
-    canonicalize_projector(), quality_filter_projector(),
-    pii_scrub_projector(), domain_quota_projector(max_per_domain=2))
+from go_bqloader_spark.functions.webtext import make_html, project_page_batch
+from go_bqloader_spark.streaming import compose_projectors
+stack = compose_projectors(canonicalize_projector(), project_page_batch)
 cb = spark.createDataFrame(
-    [("U", 1, "https://c.ex/p?utm_source=t", "call 415-555-0134 "
-      + " ".join(f"k{i}" for i in range(20))),
-     ("U", 2, "https://s.ex/x", "spam spam spam spam spam spam")],
-    "op string, seq bigint, url string, text string"
+    [("U", 1, "HTTPS://C.EX/p?utm_source=t", "the title", "a body of words")],
+    "op string, seq bigint, url string, title string, body string"
 ).select("op", "seq", "url",
          F.lit(None).cast("timestamp").alias("warc_ts"),
-         F.lit(None).cast("binary").alias("html"), "text",
-         F.lit("en").alias("lang"))
-cres = {r["url"]: r["text"] for r in stack(cb).collect()}
-assert list(cres) == ["https://c.ex/p"] and "xPHONEx" in cres["https://c.ex/p"]
-print("STACK OK: canonicalized key, spam dropped, PII redacted")
+         make_html(F.col("title"), F.col("body")).alias("html"),
+         F.lit(None).cast("string").alias("text"),
+         F.lit(None).cast("string").alias("lang"))
+cres = stack(cb).collect()[0]
+assert cres["url"] == "https://c.ex/p", cres["url"]
+assert cres["text"] == "the title the title a body of words", cres["text"]
+assert cres["n_tokens"] == 8 and cres["lang"] == "en", cres
+print("STACK OK: canonicalized key, text re-extracted, token stats")
 
 # --- multi-writer optimistic concurrency (r5): interleaved commit rebases ---
 tmp4 = tempfile.mkdtemp(prefix="gbs_cc_")
@@ -294,36 +220,6 @@ ccst = tc.merge(spark.createDataFrame(
 assert not ccst.skipped and tc.read().count() == 2
 assert tc.committed("w1", 0) and tc.committed("w2", 0)
 print(f"CONCURRENCY OK: interleaved commit rebased to v{ccst.version}, both batches live")
-
-# --- incremental near-dup maintenance via the persisted band index ---
-import os
-
-from go_bqloader_spark.lake import NearDupIndex
-tmp5 = tempfile.mkdtemp(prefix="gbs_ndi_")
-tn = LakeTable.create(
-    spark, os.path.join(tmp5, "corpus"),
-    [("url", "string"), ("warc_ts", "timestamp"), ("html", "binary"),
-     ("text", "string"), ("lang", "string")],
-    key=["url", "warc_ts"], n_buckets=4,
-)
-ndx = NearDupIndex.create(spark, os.path.join(tmp5, "idx"), tn, n_buckets=16)
-fam = "the quick brown fox jumps over the lazy dog near the old river bank"
-def _nb(rows):
-    return spark.createDataFrame(
-        [("U", s, u, None, None, t, "en") for s, u, t in rows],
-        "op string, seq bigint, url string, warc_ts timestamp, "
-        "html binary, text string, lang string")
-tn.merge(_nb([(1, "u/a2", fam), (2, "u/solo", "unrelated volcanic geology text")]),
-         batch_key=("feed", 0))
-nr1 = ndx.update(batch_id=0)
-tn.merge(_nb([(3, "u/a1", fam)]), batch_key=("feed", 1))
-nr2 = ndx.update(batch_id=1)
-live = sorted(r["url"] for r in tn.read().select("url").collect())
-assert live == ["u/a1", "u/solo"], live
-assert nr2.index_buckets_probed < nr2.index_buckets_total
-print(f"NEARDUP-INDEX OK: incremental pass removed={nr2.removed} "
-      f"probed={nr2.index_buckets_probed}/{nr2.index_buckets_total} buckets, "
-      f"indexed_through={ndx.indexed_through()}")
 
 # --- format-3 manifests: O(delta) groups + bounded coalescing (r5 tail) ---
 import json as _json
