@@ -4,21 +4,39 @@ Each function here reproduces, column-vectorized and JVM-side, one of the
 per-row Go projector behaviors catalogued in SURVEY.md §2.2 (T1-T10). The
 reference applies these row-at-a-time inside goroutine batches
 (``/root/reference/handler.go:141-186``); here they are plain Catalyst
-column expressions, so they stay inside whole-stage codegen — no Python in
-the hot path at all.
+expressions, so they stay inside whole-stage codegen — no Python in the
+hot path at all.
 
-All functions take and return ``pyspark.sql.Column`` so they compose into a
-single projection (one ``select``), exactly like the reference composes
-projector closures.
+Every function takes SQL expression text — a column name is one
+(``clean_number("amount")``), so is any expression
+(``clean_number("concat('-', raw)")``) — and returns SQL expression text.
+The results compose by nesting and go into one ``selectExpr`` (or
+``F.expr``), exactly like the reference composes projector closures. Text
+rather than ``Column`` trees: every ``Column`` call costs 11–13 py4j round
+trips from Python, while a text expression is parsed in the JVM in one.
+The input text is inlined wherever the transform reads it, as a
+``Column`` tree would be. Values from the caller (formats, patterns, time
+zones) enter the text only through :func:`sql_str`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+def sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal: in single quotes, each
+    backslash and quote escaped, so any text (a regex, a format with quoted
+    literal text) reads back verbatim. The one way a Python string becomes
+    a literal in the plans' SQL text."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def clean_number(col: Column | str) -> Column:
+def sql_name(name: str) -> str:
+    """``name`` as a SQL identifier: in backticks, an inner backtick
+    doubled. The one way a caller's column name enters the plans' SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def clean_number(expr: str) -> str:
     """T5 — CleanNumber (``/root/reference/contrib/handlers/handlers.go:36-51``).
 
     Keep digits and ``.``; keep ``-`` only when it is the first character of
@@ -30,15 +48,15 @@ def clean_number(col: Column | str) -> Column:
     in the DuckDB oracle: strip everything outside ``[0-9.]``, then re-apply
     a leading ``-`` if the original started with one.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    stripped = F.regexp_replace(c, r"[^0-9.]", "")
-    signed = F.when(c.startswith("-"), F.concat(F.lit("-"), stripped)).otherwise(
-        stripped
+    stripped = f"regexp_replace({expr}, '[^0-9.]', '')"
+    signed = (
+        f"CASE WHEN startswith({expr}, '-') THEN concat('-', {stripped}) "
+        f"ELSE {stripped} END"
     )
-    return F.when(signed == "-", F.lit("")).otherwise(signed)
+    return f"CASE WHEN {signed} = '-' THEN '' ELSE {signed} END"
 
 
-def normalize_date(col: Column | str, fmt: str = "yyyy/MM/dd") -> Column:
+def normalize_date(expr: str, fmt: str = "yyyy/MM/dd") -> str:
     """T1 — date normalize ``yyyy/MM/dd`` → ``yyyy-MM-dd``.
 
     Reference: ``/root/reference/contrib/handlers/sbi_sumishin_net_bank.go:16-21``
@@ -46,33 +64,33 @@ def normalize_date(col: Column | str, fmt: str = "yyyy/MM/dd") -> Column:
     yields NULL (the Go version aborts the load; the engine surfaces NULLs
     to a quarantine filter instead — see operators.merge).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(F.try_to_date(c, fmt), "yyyy-MM-dd")
+    return f"date_format(try_to_date({expr}, {sql_str(fmt)}), 'yyyy-MM-dd')"
 
 
-def normalize_date_compact(col: Column | str) -> Column:
+def normalize_date_compact(expr: str) -> str:
     """T2 — ``yyyyMMdd`` → ``yyyy-MM-dd``
     (``/root/reference/contrib/handlers/rakuten_bank.go:16-21``)."""
-    return normalize_date(col, "yyyyMMdd")
+    return normalize_date(expr, "yyyyMMdd")
 
 
-def normalize_date_kanji(col: Column | str) -> Column:
+def normalize_date_kanji(expr: str) -> str:
     """T3 — Japanese-locale ``2006年01月02日`` → ``yyyy-MM-dd``
     (``/root/reference/contrib/handlers/sony_bank.go:16-21``).
 
     DateTimeFormatter accepts quoted literal text, so the kanji delimiters
     are matched directly — still a JVM-side expression.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(F.try_to_date(c, "yyyy'年'MM'月'dd'日'"), "yyyy-MM-dd")
+    return normalize_date(expr, "yyyy'年'MM'月'dd'日'")
 
 
 # Era bases from /root/reference/contrib/handlers/smbc.go:24-31:
 # Heisei N -> 1988+N, Reiwa N -> 2018+N. Showa is explicitly unsupported.
 _ERA_BASE = {"H": 1988, "R": 2018}
+_GREGORIAN_RE = r"^\d{4}/\d{1,2}/\d{1,2}$"
+_ERA_RE = r"^[HR]\d{2}\.\d{2}\.\d{2}$"
 
 
-def parse_era_date(col: Column | str) -> Column:
+def parse_era_date(expr: str) -> str:
     """T4 — wareki (era) date parse
     (``/root/reference/contrib/handlers/smbc.go:15-41``).
 
@@ -80,45 +98,31 @@ def parse_era_date(col: Column | str) -> Column:
     ``[HR]NN.MM.DD`` (H=Heisei base 1988, R=Reiwa base 2018). Anything else
     (including Showa ``S``) is NULL, mirroring the reference's error path.
     Returns ``yyyy-MM-dd`` strings. Pure Catalyst expression: regex branch +
-    ``make_date``.
+    ``try_to_date``.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    gregorian = F.date_format(F.try_to_date(c, "yyyy/M/d"), "yyyy-MM-dd")
-    era_letter = F.substring(c, 1, 1)
-    era_year = F.substring(c, 2, 2).cast("int")
-    era_month = F.substring(c, 5, 2).cast("int")
-    era_day = F.substring(c, 8, 2).cast("int")
-    era_base = (
-        F.when(era_letter == "H", F.lit(_ERA_BASE["H"]))
-        .when(era_letter == "R", F.lit(_ERA_BASE["R"]))
-        .otherwise(F.lit(None).cast("int"))
-    )
+    gregorian = normalize_date(expr, "yyyy/M/d")
+    letter = f"substring({expr}, 1, 1)"
+    base = " ".join(f"WHEN {letter} = {sql_str(k)} THEN {v}" for k, v in _ERA_BASE.items())
+    year, month, day = (f"CAST(substring({expr}, {i}, 2) AS INT)" for i in (2, 5, 8))
     # build the Gregorian string then try_to_date, so out-of-range month/day
     # degrades to NULL (ANSI-safe) exactly like Go's time.Parse error path
-    era = F.date_format(
-        F.try_to_date(
-            F.concat_ws(
-                "-",
-                (era_base + era_year).cast("string"),
-                era_month.cast("string"),
-                era_day.cast("string"),
-            ),
-            "yyyy-M-d",
-        ),
-        "yyyy-MM-dd",
+    ymd = (
+        f"concat_ws('-', CAST(CASE {base} ELSE CAST(NULL AS INT) END + {year} AS STRING), "
+        f"CAST({month} AS STRING), CAST({day} AS STRING))"
     )
+    era = normalize_date(ymd, "yyyy-M-d")
     return (
-        F.when(c.rlike(r"^\d{4}/\d{1,2}/\d{1,2}$"), gregorian)
-        .when(c.rlike(r"^[HR]\d{2}\.\d{2}\.\d{2}$"), era)
-        .otherwise(F.lit(None).cast("string"))
+        f"CASE WHEN {expr} RLIKE {sql_str(_GREGORIAN_RE)} THEN {gregorian} "
+        f"WHEN {expr} RLIKE {sql_str(_ERA_RE)} THEN {era} "
+        "ELSE CAST(NULL AS STRING) END"
     )
 
 
 def normalize_timestamp(
-    col: Column | str,
+    expr: str,
     fmt: str = "yyyy/MM/dd HH:mm:ss",
     assume_tz: str = "Asia/Tokyo",
-) -> Column:
+) -> str:
     """Timezone-aware timestamp normalization (north-star invariant).
 
     The reference's inputs are Japanese bank exports whose timestamps are
@@ -128,18 +132,16 @@ def normalize_timestamp(
     (strings carrying an explicit offset pattern in ``fmt`` win), and
     return a UTC timestamp. Unparseable input → NULL (ANSI-safe).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    parsed = F.try_to_timestamp(c, F.lit(fmt))
     # session TZ is UTC (session.py), so try_to_timestamp yields the
     # wall-clock instant AS IF UTC; reinterpret it as assume_tz wall time
-    return F.to_utc_timestamp(parsed, assume_tz)
+    return f"to_utc_timestamp(try_to_timestamp({expr}, {sql_str(fmt)}), {sql_str(assume_tz)})"
 
 
 def payment_month_from_path(
-    path_col: Column | str,
+    path_expr: str,
     pattern: str = r"/(\d{6})\.csv$",
     fmt: str = "yyyyMM",
-) -> Column:
+) -> str:
     """T7/O6 — preprocessor-derived column: payment month from the file name
     (``/root/reference/contrib/handlers/smbc_card.go:46-58``).
 
@@ -151,7 +153,8 @@ def payment_month_from_path(
     (``amex_csv.go:16-30``); rakuten_card ``enavi(\\d{6})\\(`` + ``yyyyMM``
     (``rakuten_card.go:20-32``).
     """
-    p = F.col(path_col) if isinstance(path_col, str) else path_col
-    ym = F.regexp_extract(p, pattern, 1)
-    out = F.date_format(F.try_to_date(ym, fmt), "yyyy-MM-dd")
-    return F.when(ym == "", F.lit(None).cast("string")).otherwise(out)
+    ym = f"regexp_extract({path_expr}, {sql_str(pattern)}, 1)"
+    return (
+        f"CASE WHEN {ym} = '' THEN CAST(NULL AS STRING) "
+        f"ELSE {normalize_date(ym, fmt)} END"
+    )

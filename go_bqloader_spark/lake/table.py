@@ -96,6 +96,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Any
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -147,6 +148,22 @@ def _sql_type(ddl: str) -> str:
 def _ddl(fields: list[dict[str, Any]]) -> str:
     """``fields`` as a DDL schema string (``spark.read.schema``)."""
     return ", ".join(f"{_q(f['name'])} {_sql_type(f['type'])}" for f in fields)
+
+
+def _read_parquet(spark: SparkSession, schema: str, paths: list[str]) -> DataFrame:
+    """``spark.read.schema(schema).parquet(*paths)`` in a constant number
+    of py4j round trips. py4j hands a Python list to the JVM one element
+    per round trip, so a scan of many entry directories paid one per path;
+    here the paths cross as one string, joined on NUL (the one character
+    no path holds), and are split in the JVM. The classes are named in
+    full: a lookup through ``sc._jvm`` costs a round trip per package."""
+    client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+    split = JavaClass("java.util.regex.Pattern", client).compile("\0").splitAsStream
+    jpaths = JavaClass("org.apache.spark.api.python.PythonUtils", client).toSeq(
+        split("\0".join(paths)).toList()
+    )
+    reader = spark.read.schema(schema)
+    return reader._df(reader._jreader.parquet(jpaths))  # noqa: SLF001
 
 
 def _hash_ddl(ddl: str) -> str:
@@ -1154,8 +1171,7 @@ class LakeTable:
         parts = [
             # the manifest records each schema version's file columns, so
             # the read needs no schema-inference job over the footers
-            self.spark.read.schema(_ddl(m["schemas"][sv]))
-            .parquet(*paths)
+            _read_parquet(self.spark, _ddl(m["schemas"][sv]), paths)
             .selectExpr(*self._reconcile(m, sv))
             for sv, paths in groups.items()
         ]
@@ -1901,7 +1917,7 @@ class LakeTable:
         if js:
             parts.append(self.spark.read.schema(self._METRICS_SCHEMA).json(js))
         if pq:
-            parts.append(self.spark.read.schema(self._METRICS_SCHEMA).parquet(*pq))
+            parts.append(_read_parquet(self.spark, self._METRICS_SCHEMA, pq))
         for p in parts:
             df = p.where(f"commit_version < {int(chain[-1]['version'])}").unionByName(df)
         return df

@@ -14,14 +14,21 @@ before MERGE. Two implementations with identical semantics:
 
 Winner rule: max ``seq`` per (key); ties (verbatim redeliveries) are
 identical rows, so any winner is correct.
+
+Both build their plans from SQL text (``selectExpr``, ``where``,
+``F.expr`` aggregates): a ``Column`` tree costs 11–13 py4j round trips per
+call from Python, a text expression one parse in the JVM. Key and order
+column names enter the text through ``sql_name``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from go_bqloader_spark.functions.transforms import sql_name
 
 DEFAULT_KEY: tuple[str, ...] = ("url", "warc_ts")
 
@@ -34,12 +41,9 @@ def lww_dedup(
     """One winner per key: ``row_number() OVER (PARTITION BY key ORDER BY
     seq DESC) = 1``. Exactly the north-star's "last-writer-wins dedup via
     window ranking"."""
-    w = W.partitionBy(*key).orderBy(F.col(order_col).desc())
-    return (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    keys = ", ".join(map(sql_name, key))
+    rn = f"row_number() OVER (PARTITION BY {keys} ORDER BY {sql_name(order_col)} DESC) AS __rn"
+    return changes.selectExpr("*", rn).where("__rn = 1").drop("__rn")
 
 
 def salted_lww_dedup(
@@ -59,18 +63,19 @@ def salted_lww_dedup(
     ``max_by``-style reduction (groupBy + struct max) is used in phase 1 so
     Spark performs partial (map-side) aggregation — a window cannot do that.
     """
-    salt = F.pmod(F.xxhash64(F.col(order_col)), F.lit(n_salts)).alias("__salt")
+    keys = [sql_name(k) for k in key]
     others = [c for c in changes.columns if c not in key and c != order_col]
-    packed = F.struct(F.col(order_col), *[F.col(c) for c in others]).alias("__row")
-
+    packed = ", ".join(sql_name(c) for c in [order_col, *others])
     local = (
-        changes.select(*key, salt, packed)
-        .groupBy(*key, "__salt")
-        .agg(F.max("__row").alias("__row"))
+        changes.selectExpr(
+            *keys, f"pmod(xxhash64({sql_name(order_col)}), {int(n_salts)}) AS __salt",
+            f"struct({packed}) AS __row",
+        )
+        .groupBy(*map(F.expr, keys), F.expr("__salt"))
+        .agg(F.expr("max(__row) AS __row"))
     )
-    winners = local.groupBy(*key).agg(F.max("__row").alias("__row"))
-    return winners.select(
-        *key,
-        F.col(f"__row.{order_col}").alias(order_col),
-        *[F.col(f"__row.{c}").alias(c) for c in others],
-    ).select(*changes.columns)
+    winners = local.groupBy(*map(F.expr, keys)).agg(F.expr("max(__row) AS __row"))
+    # the winner's fields, back in the input's column order
+    return winners.selectExpr(
+        *(sql_name(c) if c in key else f"__row.{sql_name(c)} AS {sql_name(c)}" for c in changes.columns)
+    )

@@ -9,7 +9,8 @@ errgroup at 119-128), and ALWAYS notifies per (event, handler)
 - :class:`Handler` — (name, pattern, reader, projector, sink): the Spark
   restatement of ``/root/reference/handler.go:20-48``. ``reader`` builds a
   DataFrame from the event path (extract+decode+parse); ``projector`` is a
-  vectorized column-expression bundle (never per-row Python); ``sink``
+  vectorized bundle of SQL expressions (never per-row Python) built from
+  the text the ``functions.transforms`` library returns; ``sink``
   loads (LakeTable.merge / append / parquet write).
 - :class:`Registry` — ``dispatch(path)`` fans out to all matching
   handlers; every matching handler runs even after a failure; the first
@@ -27,7 +28,7 @@ import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_bqloader_spark.functions.transforms import (
@@ -137,6 +138,12 @@ def _string_schema(cols: list[str]) -> str:
     return ", ".join(f"{c} string" for c in cols)
 
 
+def _with(df: DataFrame, **exprs: str) -> DataFrame:
+    """``df`` with each named column set to its SQL expression text, in
+    place where the column exists (the transforms return text)."""
+    return df.withColumns({name: F.expr(e) for name, e in exprs.items()})
+
+
 def sbi_sumishin_net_bank_statement(name: str, pattern: str, sink=None) -> Handler:
     """Mirror of ``contrib/handlers/sbi_sumishin_net_bank.go:14-45``:
     Shift-JIS CSV, skip 1 header row, date ``yyyy/MM/dd``→ISO on col 0,
@@ -150,13 +157,12 @@ def sbi_sumishin_net_bank_statement(name: str, pattern: str, sink=None) -> Handl
         )
 
     def projector(df: DataFrame) -> DataFrame:
-        return df.withColumns(
-            {
-                "date": normalize_date("date"),
-                "withdrawal": clean_number("withdrawal"),
-                "deposit": clean_number("deposit"),
-                "balance": clean_number("balance"),
-            }
+        return _with(
+            df,
+            date=normalize_date("date"),
+            withdrawal=clean_number("withdrawal"),
+            deposit=clean_number("deposit"),
+            balance=clean_number("balance"),
         )
 
     return Handler(name, pattern, reader, projector, sink)
@@ -171,13 +177,12 @@ def sony_bank_statement(name: str, pattern: str, sink=None) -> Handler:
         return read_csv_files(spark, path, _string_schema(cols), skip_parsed_rows=1)
 
     def projector(df: DataFrame) -> DataFrame:
-        return df.withColumns(
-            {
-                "date": normalize_date_kanji("date"),
-                "withdrawal": clean_number("withdrawal"),
-                "deposit": clean_number("deposit"),
-                "balance": clean_number("balance"),
-            }
+        return _with(
+            df,
+            date=normalize_date_kanji("date"),
+            withdrawal=clean_number("withdrawal"),
+            deposit=clean_number("deposit"),
+            balance=clean_number("balance"),
         )
 
     return Handler(name, pattern, reader, projector, sink)
@@ -192,12 +197,11 @@ def rakuten_bank_statement(name: str, pattern: str, sink=None) -> Handler:
         return read_csv_files(spark, path, _string_schema(cols), skip_parsed_rows=1)
 
     def projector(df: DataFrame) -> DataFrame:
-        return df.withColumns(
-            {
-                "date": normalize_date_compact("date"),
-                "amount": clean_number("amount"),
-                "balance": clean_number("balance"),
-            }
+        return _with(
+            df,
+            date=normalize_date_compact("date"),
+            amount=clean_number("amount"),
+            balance=clean_number("balance"),
         )
 
     return Handler(name, pattern, reader, projector, sink)
@@ -215,7 +219,7 @@ def smbc_statement(name: str, pattern: str, sink=None) -> Handler:
         )
 
     def projector(df: DataFrame) -> DataFrame:
-        return df.withColumn("date", parse_era_date("date"))
+        return _with(df, date=parse_era_date("date"))
 
     return Handler(name, pattern, reader, projector, sink)
 
@@ -229,21 +233,18 @@ def smbc_card_statement(name: str, pattern: str, sink=None) -> Handler:
     cols = ["date", "store", "amount", "installments", "month_count", "pay", "note"]
 
     def reader(spark: SparkSession, path: str) -> DataFrame:
-        shape: Column = (F.length(F.col("line")) > 4) & (
-            F.substring(F.col("line"), 5, 1) == "/"
-        )
         return read_csv_files(
             spark, path, _string_schema(cols), encoding="shift_jis",
-            line_filter=shape, keep_path=True,
+            line_filter="length(line) > 4 AND substring(line, 5, 1) = '/'",
+            keep_path=True,
         )
 
     def projector(df: DataFrame) -> DataFrame:
-        return (
-            df.filter(F.col("date").isNotNull() & (F.col("date") != ""))
-            .withColumn("date", normalize_date("date"))
-            .withColumn("payment_month", payment_month_from_path("path"))
-            .drop("path", "line_no")
-        )
+        return _with(
+            df.where("date IS NOT NULL AND date <> ''"),
+            date=normalize_date("date"),
+            payment_month=payment_month_from_path("path"),
+        ).drop("path", "line_no")
 
     return Handler(name, pattern, reader, projector, sink)
 
@@ -270,18 +271,17 @@ def amex_statement_csv(name: str, pattern: str, sink=None) -> Handler:
         )
 
     def projector(df: DataFrame) -> DataFrame:
-        return df.select(
-            normalize_date("date").alias("date"),
-            normalize_date("proc_date").alias("proc_date"),
-            F.col("description"),
-            F.col("member"),
-            clean_number("amount_raw").alias("amount"),     # r[4] = clean(r[5])
-            F.col("fx_amount").alias("fx_currency_amount"),  # r[5] = r[6]
-            F.col("fx_rate").alias("exchange_rate"),         # r[6] = r[7]
-            F.lit("").alias("extra"),                        # r[7] = ""
-            payment_month_from_path(
-                F.col("path"), r"/(\d{4}-\d{2})\.csv$", "yyyy-MM"
-            ).alias("payment_month"),
+        month = payment_month_from_path("path", r"/(\d{4}-\d{2})\.csv$", "yyyy-MM")
+        return df.selectExpr(
+            f"{normalize_date('date')} AS date",
+            f"{normalize_date('proc_date')} AS proc_date",
+            "description",
+            "member",
+            f"{clean_number('amount_raw')} AS amount",  # r[4] = clean(r[5])
+            "fx_amount AS fx_currency_amount",  # r[5] = r[6]
+            "fx_rate AS exchange_rate",  # r[6] = r[7]
+            "'' AS extra",  # r[7] = ""
+            f"{month} AS payment_month",
         )
 
     return Handler(name, pattern, reader, projector, sink)
@@ -308,15 +308,11 @@ def rakuten_card_statement(name: str, pattern: str, sink=None) -> Handler:
         )
 
     def projector(df: DataFrame) -> DataFrame:
-        return (
-            df.filter(F.col("date") != "")
-            .withColumn("date", normalize_date("date"))
-            .withColumn(
-                "payment_month",
-                payment_month_from_path(F.col("path"), r"enavi(\d{6})\(", "yyyyMM"),
-            )
-            .drop("path", "line_no")
-        )
+        return _with(
+            df.where("date <> ''"),
+            date=normalize_date("date"),
+            payment_month=payment_month_from_path("path", r"enavi(\d{6})\(", "yyyyMM"),
+        ).drop("path", "line_no")
 
     return Handler(name, pattern, reader, projector, sink)
 
@@ -342,21 +338,17 @@ def amex_statement(name: str, pattern: str, sink=None) -> Handler:
         )
 
     def projector(df: DataFrame) -> DataFrame:
-        return (
-            df.filter(F.col("date") != "")
-            .select(
-                normalize_date("date").alias("date"),
-                normalize_date("proc_date").alias("proc_date"),
-                F.col("description"),
-                F.col("member"),
-                clean_number("amount").alias("amount"),
-                F.col("fx_currency_amount"),
-                F.col("exchange_rate"),
-                F.col("extra"),
-                payment_month_from_path(
-                    F.col("path"), r"/(\d{4}-\d{2})\.xls$", "yyyy-MM"
-                ).alias("payment_month"),
-            )
+        month = payment_month_from_path("path", r"/(\d{4}-\d{2})\.xls$", "yyyy-MM")
+        return df.where("date <> ''").selectExpr(
+            f"{normalize_date('date')} AS date",
+            f"{normalize_date('proc_date')} AS proc_date",
+            "description",
+            "member",
+            f"{clean_number('amount')} AS amount",
+            "fx_currency_amount",
+            "exchange_rate",
+            "extra",
+            f"{month} AS payment_month",
         )
 
     return Handler(name, pattern, reader, projector, sink)
@@ -378,13 +370,13 @@ def sbi_securities_global_banking_statement(name: str, pattern: str, sink=None) 
         )
 
     def projector(df: DataFrame) -> DataFrame:
-        return df.select(
-            normalize_date("date").alias("date"),
-            F.col("trade"),
-            F.col("currency"),
-            F.col("summary"),
-            clean_number("out_amt").alias("out_amt"),
-            clean_number("in_amt").alias("in_amt"),
+        return df.selectExpr(
+            f"{normalize_date('date')} AS date",
+            "trade",
+            "currency",
+            "summary",
+            f"{clean_number('out_amt')} AS out_amt",
+            f"{clean_number('in_amt')} AS in_amt",
         )
 
     return Handler(name, pattern, reader, projector, sink)
@@ -408,14 +400,13 @@ def sbi_securities_global_execution_history(name: str, pattern: str, sink=None) 
         )
 
     def projector(df: DataFrame) -> DataFrame:
-        return df.withColumns(
-            {
-                "contract_date": normalize_date("contract_date"),
-                "quantity": clean_number("quantity"),
-                "unit_price": clean_number("unit_price"),
-                "delivery_date": normalize_date("delivery_date"),
-                "delivery_amount": clean_number("delivery_amount"),
-            }
+        return _with(
+            df,
+            contract_date=normalize_date("contract_date"),
+            quantity=clean_number("quantity"),
+            unit_price=clean_number("unit_price"),
+            delivery_date=normalize_date("delivery_date"),
+            delivery_amount=clean_number("delivery_amount"),
         )
 
     return Handler(name, pattern, reader, projector, sink)

@@ -81,7 +81,7 @@ def read_csv_files(
     skip_head_rows: int = 0,
     skip_tail_rows: int = 0,
     skip_parsed_rows: int = 0,
-    line_filter: Column | None = None,
+    line_filter: Column | str | None = None,
     csv_options: dict[str, str] | None = None,
     keep_path: bool = False,
 ) -> DataFrame:
@@ -95,9 +95,10 @@ def read_csv_files(
       happens AFTER csv parsing, so blank lines between the raw head and
       the header do not count). Differs from ``skip_head_rows`` exactly
       when blank/filtered lines precede the header.
-    - ``line_filter``: predicate over ``F.col("line")`` applied BEFORE CSV
-      parsing — e.g. the SMBC-card date-prefix shape filter
-      (``smbc_card.go:31-36``): ``F.substring(F.col("line"), 5, 1) == "/"``.
+    - ``line_filter``: predicate over the ``line`` column, SQL text or a
+      ``Column``, applied BEFORE CSV parsing — e.g. the SMBC-card
+      date-prefix shape filter (``smbc_card.go:31-36``):
+      ``"substring(line, 5, 1) = '/'"``.
     - ``schema``: DDL for the parsed columns (all-string for parity with
       the reference's ``[]string`` rows).
     """

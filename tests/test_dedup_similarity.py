@@ -160,36 +160,26 @@ def test_lsh_topk_recall_against_exact(spark):
     assert all(r["rank"] <= 5 for r in approx)
 
 
-def test_ngram_df_cap_bounds_candidate_pairs(spark):
-    """Scale guard (VERDICT r1): with a document-frequency cap every join
-    key has df <= cap, so candidate pairs <= occurrences * cap / 2 —
-    near-linear in corpus size — and a hot shingle shared by every doc
-    contributes nothing. Without the cap the same corpus is quadratic."""
-    hot = "alpha beta gamma"  # one shared 3-shingle across ALL docs
-    rows = [(i, f"{hot} unique{i} tail{i} end{i}") for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+def test_ngram_df_cap_bounds_candidate_pairs(spark, tmp_path):
+    """Scale guard (VERDICT r1), on the ``ngram_jaccard`` leaf itself: a
+    shingle in more than ``_NGRAM_DF_CAP`` docs is dropped before the
+    self-join, so no pair comes from it — without the cap every two of the
+    docs below would pair on it with Jaccard 1 (quadratic in its document
+    frequency). A planted near-dup still surfaces through its rare
+    shingles."""
+    from go_bqloader_spark.plans.queries import _NGRAM_DF_CAP, TABLES, q_ngram_jaccard
 
-    def n_candidate_pairs(cap):
-        from go_bqloader_spark.operators.dedup import _tokens
-        tok = df.select("doc_id", F.explode(_tokens("text", 3)).alias("tok"))
-        if cap is not None:
-            rare = (tok.groupBy("tok").count()
-                    .filter(F.col("count") <= cap).select("tok"))
-            tok = tok.join(rare, "tok")
-        a, b = tok.alias("a"), tok.alias("b")
-        return (a.join(b, "tok")
-                .filter(F.col("a.doc_id") < F.col("b.doc_id")).count())
-
-    uncapped = n_candidate_pairs(None)
-    capped = n_candidate_pairs(10)
-    assert uncapped >= 40 * 39 // 2      # hot shingle alone is quadratic
-    assert capped == 0                   # cap removes it entirely
-    # and real near-dups still surface through their rare shingles
-    dup_rows = rows + [(100, rows[0][1])]
-    dup_df = spark.createDataFrame(dup_rows, "doc_id bigint, text string")
-    found = {(r["d1"], r["d2"])
-             for r in ngram_jaccard_pairs(dup_df, threshold=0.8, df_cap=10).collect()}
-    assert (0, 100) in found
+    hot = "alpha beta gamma"  # one 3-shingle, each hot doc's only one
+    hot_docs = _NGRAM_DF_CAP + 10
+    texts = [(i, hot) for i in range(hot_docs)]
+    texts += [(1000, f"{hot} unique tail end"), (1001, f"{hot} unique tail end")]
+    rows = [(i, t, "en", "s", len(t)) for i, t in texts]
+    spark.createDataFrame(rows, TABLES["documents"]).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    got = [tuple(r) for r in q_ngram_jaccard(spark, str(tmp_path)).collect()]
+    assert hot_docs > _NGRAM_DF_CAP
+    assert got == [(1000, 1001, 10000)]
 
 
 def test_lsh_multiprobe_recall_uplift(spark):

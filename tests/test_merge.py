@@ -61,6 +61,12 @@ def test_salted_dedup_equals_plain(spark, changes):
     a = sorted(map(tuple, plain.select("url", "warc_ts", "seq").collect()))
     b = sorted(map(tuple, salted.select("url", "warc_ts", "seq").collect()))
     assert a == b
+    # a key column whose name holds a dot is one column, not a nested field
+    dotted = changes.withColumnRenamed("url", "u.rl")
+    key = ["u.rl", "warc_ts"]
+    for dedup in (lww_dedup(dotted, key), salted_lww_dedup(dotted, key, n_salts=8)):
+        assert dedup.columns == dotted.columns
+        assert sorted(map(tuple, dedup.selectExpr("`u.rl`", "warc_ts", "seq").collect())) == a
 
 
 def _make_table(spark, tmp_path, **kw):

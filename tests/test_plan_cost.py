@@ -1,7 +1,7 @@
-"""What building and running lake plans costs outside Spark's own work:
-py4j round trips per call (plans are SQL text, not ``Column`` trees), and
-Spark jobs that an empty read or a read of many entry directories would
-add."""
+"""What building and running plans costs outside Spark's own work: py4j
+round trips per call (lake and registry plans are SQL text, not ``Column``
+trees), and Spark jobs that an empty read or a read of many entry
+directories would add."""
 
 import datetime as dt
 
@@ -10,6 +10,8 @@ import pytest
 from pyspark.sql import types as T
 
 from go_bqloader_spark.lake import LakeTable
+from go_bqloader_spark.plans import QUERIES
+from perfbench import querydata
 
 COLS = [
     ("url", "string"),
@@ -95,6 +97,43 @@ def test_empty_reads_run_no_spark_job(spark, spark_jobs, tmp_path, include_delet
         rows, jobs = spark_jobs(f"empty-{include_deleted}-{name}", df.collect)
         assert (rows, jobs) == ([], 0), name
         assert df.schema == want, name
+
+
+def test_read_plan_round_trips_do_not_grow_with_entry_directories(spark, py4j_calls, tmp_path):
+    """Building ``read()`` over 33 entry directories costs about the round
+    trips of a read over 2: the paths reach the JVM as one string, not one
+    round trip per path."""
+    counts = {}
+    for n in (2, 33):
+        t = LakeTable.create(spark, str(tmp_path / f"t{n}"), COLS, key=["url", "warc_ts"], n_buckets=n)
+        t.merge(_batch(spark, range(300)), batch_key=("q", 0))
+        assert sum(t.entries_per_bucket().values()) == n
+        counts[n] = _fewest(py4j_calls, t.read)
+    assert counts[33] <= counts[2] + 3, counts
+
+
+# (the count with each benchmarked registry leaf built from Column trees,
+# the count with its glue built from SQL text); each budget is the second
+# plus about 50 %
+LEAF_BUDGETS = {
+    "lww_dedup": (322, 47),
+    "clean_number": (387, 21),
+    "token_stats": (126, 47),
+    "windowed_metrics": (147, 51),
+    "embedding_near_dup": (409, 63),
+}
+
+
+def test_registry_leaf_round_trips_stay_in_budget(spark, py4j_calls, tmp_path):
+    """Building each leaf ``perfbench``'s ``query_registry`` times, over
+    the benchmark's own seeded tables, stays within its round-trip budget."""
+    querydata.write(7, str(tmp_path))
+    counts = {
+        leaf: _fewest(py4j_calls, lambda: QUERIES[leaf](spark, str(tmp_path)))
+        for leaf in LEAF_BUDGETS
+    }
+    for leaf, n in counts.items():
+        assert n <= LEAF_BUDGETS[leaf][1] * 3 // 2, (leaf, n, LEAF_BUDGETS[leaf])
 
 
 def test_read_of_many_entry_directories_lists_without_a_job(spark, spark_jobs, tmp_path):

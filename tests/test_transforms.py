@@ -1,11 +1,12 @@
 """Reference-parity golden tests for the transform library.
 
 Every case table below is ported from the reference's Go unit tests
-(file:line cited per test) into the vectorized Spark implementations.
+(file:line cited per test) into the vectorized Spark implementations. The
+transforms take and return SQL expression text, so each case applies one
+to the column name ``s`` inside ``selectExpr``.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from go_bqloader_spark.functions import (
     clean_number,
@@ -19,7 +20,7 @@ from go_bqloader_spark.functions import (
 
 def _apply(spark, fn, values):
     df = spark.createDataFrame([(v,) for v in values], "s string")
-    return [r["out"] for r in df.select(fn(F.col("s")).alias("out")).collect()]
+    return [r["out"] for r in df.selectExpr(f"{fn('s')} AS out").collect()]
 
 
 # /root/reference/contrib/handlers/handlers_test.go:77-103 golden matrix
@@ -84,13 +85,7 @@ def test_parse_era_date(spark, raw, expected):
 
 def test_payment_month_from_path(spark):
     # /root/reference/contrib/handlers/smbc_card.go:46-58
-    df = spark.createDataFrame(
-        [("gs://b/smbc_card/202101.csv",), ("gs://b/nomatch.txt",)], "p string"
-    )
-    got = [
-        r["out"]
-        for r in df.select(payment_month_from_path(F.col("p")).alias("out")).collect()
-    ]
+    got = _apply(spark, payment_month_from_path, ["gs://b/smbc_card/202101.csv", "gs://b/nomatch.txt"])
     assert got == ["2021-01-01", None]
 
 
