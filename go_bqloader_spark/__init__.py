@@ -27,8 +27,8 @@ Layout:
                   exactly-once offset ledger, time travel
 - ``operators``   the query registry's operators: LWW and salted two-phase
                   dedup, near-dup clustering, LSH/IVF similarity search,
-                  corpus-prep passes; plus MinHash/SimHash/n-gram dedup,
-                  the KMV sketch and media decoders (tests only)
+                  corpus-prep passes; plus MinHash/SimHash/n-gram dedup
+                  (tests only)
 - ``streaming``   Structured Streaming pipeline: binlog tail → foreachBatch
                   MERGE with checkpointed exactly-once and lineage metrics
 - ``plans``       handler registry (event fan-out O1) and the oracle-backed

@@ -456,6 +456,10 @@ class LakeTable:
         that older versions stored on manifest entries are ignored.
         """
         key = key or ["url", "warc_ts"]
+        if bucket_col not in key:
+            # every version of a key must hash to one bucket: reads, the
+            # merge's in-batch dedup and compaction resolve per bucket
+            raise ValueError(f"bucket_col {bucket_col!r} is not a key column {key}")
         fs = fs or LocalFS()
         fs.makedirs(os.path.join(path, _MANIFESTS))
         fields = [
@@ -996,20 +1000,17 @@ class LakeTable:
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
         return {k: _point_internal(k, types[k], point[k]) for k in m["key"]}
 
-    def _point_probe(self, m: dict[str, Any], point: dict[str, Any]) -> int | None:
-        """The point key's bucket, hashed on the driver with no Spark job,
-        or None when the bucket column is not part of the key (the read
-        then spans every bucket). The value is what ``_bucket_expr``
-        computes for the key's row: the bucket value is converted to
-        Spark's internal form of its column type, cast to the same
-        canonical hash width, and hashed by ``spark_xxhash64``, which
-        reproduces Spark's ``xxhash64`` bit for bit (a mismatch would read
-        the wrong bucket and miss the key; tests/test_point_read.py checks
-        the equivalence). Every key value is type-checked the same way."""
+    def _point_probe(self, m: dict[str, Any], point: dict[str, Any]) -> int:
+        """The point key's bucket, hashed on the driver with no Spark job.
+        The value is what ``_bucket_expr`` computes for the key's row: the
+        bucket value is converted to Spark's internal form of its column
+        type, cast to the same canonical hash width, and hashed by
+        ``spark_xxhash64``, which reproduces Spark's ``xxhash64`` bit for
+        bit (a mismatch would read the wrong bucket and miss the key;
+        tests/test_point_read.py checks the equivalence). Every key value
+        is type-checked the same way."""
         vals = self._point_values(m, point)
         bc = m["bucket_col"]
-        if bc not in m["key"]:
-            return None
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
         return spark_xxhash64([(_hash_ddl(types[bc]), vals[bc])]) % m["n_buckets"]
 
@@ -1231,14 +1232,14 @@ class LakeTable:
         statistics admit the key, then the newest version's row, returned
         as a local relation, so collecting the result runs no Spark job
         (a tombstoned winner is judged there too).
-        Otherwise (a non-local FS seam, no pyarrow, a bucket column outside
-        the key, a key column widened from ``date``) Spark scans the bucket
-        with the exact key equality pushed down to parquet, whose row-group
-        statistics, dictionaries and (tables created with ``bloom_bits``)
-        key Blooms skip the row groups that cannot hold the key, and
-        resolves the versions left with a top-1 by (``_seq``, ``_deleted``)
-        DESC: one Spark job. Both paths compare the key as ``<=>`` does on the values'
-        internal forms (a float point value is rounded to float32 first).
+        Otherwise (a non-local FS seam, no pyarrow, a key column widened
+        from ``date``) Spark scans the bucket with the exact key equality
+        pushed down to parquet, whose row-group statistics, dictionaries
+        and (tables created with ``bloom_bits``) key Blooms skip the row
+        groups that cannot hold the key, and resolves the versions left
+        with a top-1 by (``_seq``, ``_deleted``) DESC: one Spark job. Both
+        paths compare the key as ``<=>`` does on the values' internal forms
+        (a float point value is rounded to float32 first).
         A value of the wrong Python type for its column raises ValueError.
         Mutually exclusive with ``buckets``/``zones``."""
         m = self.manifest(version)
@@ -1247,11 +1248,11 @@ class LakeTable:
                 raise ValueError("point is mutually exclusive with buckets/zones")
             b = self._point_probe(m, point)
             vals = self._point_values(m, point)
-            if b is not None and type(self.fs) is LocalFS:
+            if type(self.fs) is LocalFS:
                 local = self._point_local(m, b, vals, include_deleted)
                 if local is not None:
                     return local
-            buckets = [b] if b is not None else None
+            buckets = [b]
         if zones:
             zc = set(self._zone_cols(m))
             bad = [c for c in zones if c not in zc]

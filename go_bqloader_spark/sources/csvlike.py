@@ -33,31 +33,6 @@ def _enable_jvm_charsets(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.javaCharsets", "true")
 
 
-def read_lines(
-    spark: SparkSession,
-    path: str,
-    encoding: str = "UTF-8",
-    sep: str = "\n",
-) -> DataFrame:
-    """Whole files → one row per line: (path, line_no, line).
-
-    ``encoding`` may be any JVM charset (e.g. ``shift_jis`` — O3,
-    ``/root/reference/handler.go:112-114``). Line numbers are per file,
-    0-based, in file order (the whole-file read preserves order, unlike
-    the line-splittable text source).
-    """
-    _enable_jvm_charsets(spark)
-    raw = spark.read.format("binaryFile").load(path)
-    decoded = raw.select(
-        F.col("path"),
-        F.decode(F.col("content"), encoding).alias("body"),
-    )
-    lines = F.split(F.col("body"), sep)
-    return decoded.select(
-        "path", F.posexplode(lines).alias("line_no", "line")
-    )
-
-
 def _sliced_lines(encoding: str, sep: str, skip_head: int, skip_tail: int) -> Column:
     """Exact PartialCSVParser slicing
     (``/root/reference/contrib/handlers/handlers.go:61-77``): split the raw

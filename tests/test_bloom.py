@@ -201,16 +201,19 @@ def test_blooms_survive_rebucket(spark, spark_path, tmp_path):
 
 
 @pytest.mark.parametrize("old,new", [("int", "double"), ("int", "bigint")])
-def test_point_reads_find_every_key_across_key_widening(spark, tmp_path, old, new):
+def test_point_reads_find_every_key_across_key_widening(
+    spark, spark_path, tmp_path, old, new
+):
     """A Bloom'd key column widened after files were written: Spark casts
     the old files' column up on read and still pushes the equality down
     to them, so every key — written before or after the widening — is
-    found, and an absent one is not. The bucket column is not a key
-    column, so each lookup spans both buckets."""
+    found, and an absent one is not; the driver path agrees. The table
+    buckets on the unwidened key column ``warc_ts``, since ``int`` ->
+    ``double`` would move bucket hashes."""
     cols = [("k", old), ("warc_ts", "timestamp"), ("v", "string")]
     t = LakeTable.create(
         spark, str(tmp_path / "w"), cols, key=["k", "warc_ts"],
-        bucket_col="v", n_buckets=2, bloom_bits=2048,
+        bucket_col="warc_ts", n_buckets=2, bloom_bits=2048,
     )
     ts = dt.datetime(2024, 6, 1)
     with _no_dictionary(spark):
@@ -230,10 +233,11 @@ def test_point_reads_find_every_key_across_key_widening(spark, tmp_path, old, ne
             ),
             batch_key=("b", 1),
         )
-    for i in range(0, 60, 2):
-        got = t.read(point={"k": py(i), "warc_ts": ts}).collect()
-        assert [r["v"] for r in got] == [f"v{i}" if i < 40 else f"w{i}"], i
-    assert t.read(point={"k": py(7), "warc_ts": ts}).collect() == []
+    for tt in (spark_path(t), t):
+        for i in range(0, 60, 2):
+            got = tt.read(point={"k": py(i), "warc_ts": ts}).collect()
+            assert [r["v"] for r in got] == [f"v{i}" if i < 40 else f"w{i}"], i
+        assert tt.read(point={"k": py(7), "warc_ts": ts}).collect() == []
 
 
 def test_point_without_bloom_still_works(spark, tmp_path):

@@ -468,52 +468,3 @@ def test_ivf_assign_is_projection_only(spark):
             ((-cos(v, cv), cid) for cid, cv in cvs.items())
         )[1]
         assert int(r["cell_id"]) == best, f"vec {r['vec_id']}"
-
-
-def test_kmv_operator_merge_and_registry_equality(spark):
-    """r4 judge item 7: KMV as a library operator. The sketch is
-    associative-mergeable (sketch(A ∪ B) == merge(sketch(A), sketch(B)))
-    and its estimate equals the oracle-checked registry query's on the
-    same domain."""
-    from go_bqloader_spark.operators.kmv import (
-        kmv_estimate,
-        kmv_merge,
-        kmv_sketch,
-    )
-    from go_bqloader_spark.plans.queries import q_kmv_distinct
-
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    fp = d.select(F.md5(F.lower(F.trim(F.col("text")))).alias("v"))
-
-    whole = kmv_sketch(fp, "v", k=256)
-    est_row = kmv_estimate(whole).collect()[0]
-
-    # equality with the registry query (same domain, same hash, same k)
-    reg = q_kmv_distinct(spark, SF).collect()[0]
-    assert int(est_row["estimate"] * 100) == reg["kmv_estimate_e2"]
-    assert est_row["k"] == reg["k"] == 256
-
-    # mergeability: split by doc_id parity, sketch halves, merge
-    a = kmv_sketch(
-        d.filter(F.col("doc_id") % 2 == 0)
-        .select(F.md5(F.lower(F.trim(F.col("text")))).alias("v")),
-        "v", k=256,
-    )
-    b = kmv_sketch(
-        d.filter(F.col("doc_id") % 2 == 1)
-        .select(F.md5(F.lower(F.trim(F.col("text")))).alias("v")),
-        "v", k=256,
-    )
-    merged = kmv_merge(a.unionByName(b), k=256)
-    mh = merged.collect()[0]["sketch"]["hashes"]
-    wh = whole.collect()[0]["sketch"]["hashes"]
-    assert mh == wh  # identical sketch, not just similar estimate
-
-    # partial merges at other granularity agree too (associativity)
-    m2 = kmv_merge(kmv_merge(a, k=256).unionByName(b), k=256)
-    assert m2.collect()[0]["sketch"]["hashes"] == wh
-
-    # the estimate is actually approximate AND close (domain >> k)
-    assert est_row["n"] == 256
-    rel_err = abs(est_row["estimate"] - reg["exact_distinct"]) / reg["exact_distinct"]
-    assert rel_err < 0.2

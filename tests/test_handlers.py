@@ -20,7 +20,7 @@ from go_bqloader_spark.plans.handlers import (
     smbc_statement,
     sony_bank_statement,
 )
-from go_bqloader_spark.sources.csvlike import read_csv_files, read_lines
+from go_bqloader_spark.sources.csvlike import read_csv_files
 
 
 def _rows(df, *cols):
@@ -98,13 +98,6 @@ def fixtures(tmp_path):
          ).encode("utf-8")
     )
     return str(d)
-
-
-def test_read_lines_sjis(spark, fixtures):
-    df = read_lines(spark, f"{fixtures}/sbi_bank.csv", encoding="shift_jis")
-    lines = [r["line"] for r in df.orderBy("line_no").collect()]
-    assert lines[0].startswith("日付,")
-    assert "振込 テスト" in lines[1]
 
 
 def test_sbi_sumishin_golden(spark, fixtures):

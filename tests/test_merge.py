@@ -402,6 +402,40 @@ def test_rename_guards_and_structural_update(spark, tmp_path):
         t.add_column("_hidden", "string")
 
 
+def test_bucket_col_must_be_a_key_column(spark, tmp_path):
+    """Reads, the merge's in-batch dedup and compaction resolve versions
+    within a bucket, so every version of a key must hash to one bucket.
+    Bucketed on ``lang``, a page re-crawled in another language landed in
+    a second one-entry bucket, and ``read()`` and ``read(point=...)``
+    returned both versions. ``create`` rejects that layout before it
+    writes anything; bucketed on ``url``, the same versions resolve."""
+    key = ["url", "warc_ts"]
+    with pytest.raises(ValueError, match="not a key column"):
+        LakeTable.create(
+            spark, str(tmp_path / "by_lang"), PAGE_COLS, key=key,
+            bucket_col="lang", n_buckets=64,
+        )
+    assert not (tmp_path / "by_lang").exists()
+    t = LakeTable.create(
+        spark, str(tmp_path / "by_url"), PAGE_COLS, key=key, bucket_col="url",
+        n_buckets=64,
+    )
+    point = {"url": "https://ex.org/p", "warc_ts": dt.datetime(2024, 1, 1)}
+    for i, (op, seq, lang) in enumerate([("U", 1, "en"), ("U", 2, "fr"), ("D", 9, None)]):
+        t.merge(
+            spark.createDataFrame(
+                [(op, seq, point["url"], point["warc_ts"], None, "t", lang)],
+                "op string, seq bigint, url string, warc_ts timestamp, "
+                "html binary, text string, lang string",
+            ),
+            batch_key=("q", i),
+        )
+        if op == "U":
+            assert [r["lang"] for r in t.read().collect()] == [lang]
+            assert [r["lang"] for r in t.read(point=point).collect()] == [lang]
+    assert t.read().collect() == [] and t.read(point=point).collect() == []
+
+
 def test_interrupted_commit_rolls_latest_forward(spark, tmp_path):
     """Crash between the CAS manifest create and the LATEST publish must
     not wedge the table (ADVICE r2 medium): the next committer detects the

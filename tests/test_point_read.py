@@ -61,14 +61,14 @@ def _widths(t, m):
 
 
 def _spark_probes(t, m, df):
-    """(bucket or None, xxhash64 of the key) per row of ``df``, from the
-    Spark expressions: ``_bucket_expr`` and ``F.xxhash64`` over every key
+    """(bucket, xxhash64 of the key) per row of ``df``, from the Spark
+    expressions: ``_bucket_expr`` and ``F.xxhash64`` over every key
     column cast to each of its hash widths."""
-    has_bucket = m["bucket_col"] in m["key"]
-    sel = [F.xxhash64(*(F.col(k).cast(w) for k, _, w in _widths(t, m))).alias("h")]
-    if has_bucket:
-        sel.append(F.expr(t._bucket_expr(m)).alias("b"))
-    return [(r["b"] if has_bucket else None, r["h"]) for r in df.select(*sel).collect()]
+    sel = [
+        F.expr(t._bucket_expr(m)).alias("b"),
+        F.xxhash64(*(F.col(k).cast(w) for k, _, w in _widths(t, m))).alias("h"),
+    ]
+    return [(r["b"], r["h"]) for r in df.select(*sel).collect()]
 
 
 def _driver_probes(t, m, key_rows):
@@ -158,29 +158,34 @@ def test_point_probe_after_key_widening_matches_stored_hashes(
     spark, tmp_path, old, new, vals
 ):
     """A key widened after its files were written: probing the widened
-    column with a stored value gives the bucket the old-width write
-    routed it to (bucketing is on the key only where that is hash-safe),
-    and the lookup finds every stored key."""
+    key with a stored value gives the bucket the old-width write routed
+    it to, and the lookup finds every stored key. ``int`` -> ``bigint``
+    is hash-safe, so that table buckets on the widened ``k``; ``float``
+    -> ``double`` is not, so that table buckets on the unwidened ``g``."""
     t = LakeTable.create(
-        spark, str(tmp_path / "t"), [("k", old), ("v", "string")], key=["k"],
-        bucket_col="k" if old == "int" else "v", n_buckets=5, bloom_bits=2048,
+        spark, str(tmp_path / "t"), [("g", "string"), ("k", old), ("v", "string")],
+        key=["g", "k"], bucket_col="k" if old == "int" else "g", n_buckets=5,
+        bloom_bits=2048,
     )
     m_old = t.manifest()
-    df = spark.createDataFrame([(v,) for v in vals], f"k {old}")
+    df = spark.createDataFrame(
+        [(f"g{i % 2}", v) for i, v in enumerate(vals)], f"g string, k {old}"
+    )
     want = [b for b, _ in _spark_probes(t, m_old, df)]
     t.merge(
         spark.createDataFrame(
-            [("U", i, v, f"v{i}") for i, v in enumerate(vals)],
-            f"op string, seq bigint, k {old}, v string",
+            [("U", i, f"g{i % 2}", v, f"v{i}") for i, v in enumerate(vals)],
+            f"op string, seq bigint, g string, k {old}, v string",
         ),
         batch_key=("q", 0),
     )
-    stored = [r["k"] for r in df.collect()]  # float32-rounded for floats
+    # float32-rounded for floats
+    stored = [{"g": r["g"], "k": r["k"]} for r in df.collect()]
     t.widen_column("k", new)
     m_new = t.manifest()
-    assert [t._point_probe(m_new, {"k": v}) for v in stored] == want
-    for i, v in enumerate(stored):
-        assert [r["v"] for r in t.read(point={"k": v}).collect()] == [f"v{i}"], v
+    assert [t._point_probe(m_new, p) for p in stored] == want
+    for i, p in enumerate(stored):
+        assert [r["v"] for r in t.read(point=p).collect()] == [f"v{i}"], p
 
 
 @pytest.mark.parametrize("ddl,value", [
@@ -516,17 +521,15 @@ def test_driver_point_path_equals_fallback(spark, spark_path, tmp_path):
     assert _assert_paths_agree(t, fb, version=v_mid, every_probe=False) == 14
 
 
-@pytest.mark.parametrize("case", ["no-pyarrow", "date-key-widened", "bucket-outside-key"])
+@pytest.mark.parametrize("case", ["no-pyarrow", "date-key-widened"])
 def test_point_fallbacks_stay_exact(spark, spark_jobs, tmp_path, monkeypatch, case):
     """Where the driver path steps aside — pyarrow.parquet missing, a
     ``date`` key column widened to ``timestamp`` (Spark's cast depends on
-    the session time zone), a bucket column outside the key — the Spark
-    scan answers every stored key (tombstones included) and a miss
-    exactly, in one job each."""
+    the session time zone) — the Spark scan answers every stored key
+    (tombstones included) and a miss exactly, in one job each."""
     t = LakeTable.create(
         spark, str(tmp_path / "t"), [("u", "string"), ("d", "date"), ("v", "string")],
-        key=["u", "d"], bucket_col="v" if case == "bucket-outside-key" else "u",
-        n_buckets=2,
+        key=["u", "d"], bucket_col="u", n_buckets=2,
     )
     day = dt.date(2024, 1, 1)
     rows = [("U", j, f"u{j % 3}", day + dt.timedelta(days=j), f"v{j}") for j in range(8)]

@@ -1,6 +1,6 @@
 """The package holds only code an entry point reaches.
 
-Three static guards, none of which starts Spark:
+Four static guards, none of which starts Spark:
 
 1. An AST import walk from the entry points (``bench.py``, the driver
    entry, ``perfbench/``, the CLI, the query registry, the handlers and
@@ -13,6 +13,12 @@ Three static guards, none of which starts Spark:
    entry and ``perfbench/`` names something that exists, so a deletion
    cannot leave a broken script behind.
 3. Importing ``lake`` and ``streaming`` loads no ``operators`` module.
+4. Every public top-level ``def``/``class`` of a package module is
+   referenced by name outside its own definition, from an entry point,
+   directly or through other referenced definitions (see
+   ``test_every_public_function_is_referenced``). A package ``__init__``
+   re-export is not a reference. ``KEEP_NAMES`` names the ones kept
+   without a reference, each with its reason.
 """
 
 from __future__ import annotations
@@ -38,16 +44,30 @@ ENTRY_POINTS = [
 KEEP = {
     f"{PKG}.notifier": "bqloader notifier.go parity (SlackNotifier); "
     "tested by tests/test_handlers.py",
-    # the media-decode stack and the KMV library operator have tests but
-    # no entry point; their deletion is ROADMAP item 5
-    f"{PKG}.operators.multimodal": "mapInPandas media decoders; "
-    "tests/test_multimodal.py",
-    f"{PKG}.operators.mediacodecs": "PNG/BMP/PPM/WAV/MP4/AVI codecs under "
-    "multimodal; tests/test_multimodal.py, tests/test_codec_properties.py",
-    f"{PKG}.operators.jpegcodec": "T.81 JPEG codec under multimodal; "
-    "tests/test_multimodal.py, tests/test_codec_properties.py",
-    f"{PKG}.operators.kmv": "mergeable KMV sketch operator; "
-    "tests/test_dedup_similarity.py",
+}
+
+KEEP_NAMES = {
+    f"{PKG}.notifier.SlackNotifier": "bqloader notifier.go parity; "
+    "tests/test_handlers.py",
+    f"{PKG}.functions.webtext.extract_text_py": "pure-Python oracle for "
+    "extract_text; tests/test_merge.py",
+    f"{PKG}.operators.similarity.cosine_topk": "exact oracle for the ANN "
+    "operators; tests/test_dedup_similarity.py",
+    f"{PKG}.sources.xlsbiff.write_xls": "XLS fixture writer; "
+    "tests/test_handlers.py, tests/test_codec_properties.py",
+    f"{PKG}.session.stop_session": "public session teardown; "
+    "tools/bench_scaling.py",
+    f"{PKG}.functions.urlnorm.canonicalize_projector": "URL-key projector "
+    "for start_cdc_stream(projector=); tests/test_transforms.py, "
+    "tests/test_streaming.py, tools/verify_drive.py",
+    **{
+        f"{PKG}.operators.dedup.{n}": "ROADMAP item 8"
+        for n in (
+            "exact_dedup", "minhash_signatures", "minhash_candidates",
+            "minhash_dedup", "simhash64", "hamming64",
+            "ngram_jaccard_pairs", "near_dup_clusters",
+        )
+    },
 }
 
 SCRIPTS = [
@@ -181,3 +201,52 @@ def test_lake_and_streaming_load_no_operators():
         text=True, check=True, timeout=60,
     ).stdout.strip()
     assert out == "[]", f"operators modules loaded: {out}"
+
+
+def _refs(tree: ast.AST) -> set[str]:
+    """Names a subtree uses: bare names and attributes. An import is a
+    use only when it renames (``import f as g``); otherwise the use is
+    the bound name itself."""
+    out: set[str] = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            out.update(a.name for a in n.names if a.asname)
+    return out
+
+
+def test_every_public_function_is_referenced():
+    """A name is live when module-level code uses it, when it is a public
+    function of an entry point (that module's surface), when a script
+    outside the package uses it, or when a live name's definition does.
+    Names resolve by bare name, so one use keeps every definition of it."""
+    defs: dict[str, str] = {}  # qualified public name -> bare name
+    bodies: dict[str, set[str]] = {}  # bare name -> names its definitions use
+    live: set[str] = set()
+    modules = {p for p in (ROOT / PKG).rglob("*.py") if p.name != "__init__.py"}
+    for path in sorted(modules | set(ENTRY_POINTS)):
+        mod = _module_name(path)
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if mod.startswith(PKG) and isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                bodies.setdefault(node.name, set()).update(_refs(node) - {node.name})
+                if not node.name.startswith("_"):
+                    defs[f"{mod}.{node.name}"] = node.name
+                    if path in ENTRY_POINTS:
+                        live.add(node.name)
+            else:
+                live |= _refs(node)
+    todo = list(live)
+    while todo:
+        for n in bodies.get(todo.pop(), ()):
+            if n not in live:
+                live.add(n)
+                todo.append(n)
+    unused = {q for q, n in defs.items() if n not in live} - set(KEEP_NAMES)
+    assert not unused, f"reached from no entry point: {sorted(unused)}"
+    stale = {q for q in KEEP_NAMES if defs.get(q) in live or q not in defs}
+    assert not stale, f"KEEP_NAMES entries that are reached or gone: {sorted(stale)}"

@@ -5,8 +5,7 @@ Checked properties (each maps to a scale rule from the build brief):
 - parquet scans carry PushedFilters / pruned ReadSchema where expected;
 - small-dim joins are BroadcastHashJoin (no fact-side shuffle);
 - the MoR merge plan contains exactly ONE wide-row Exchange;
-- no row-at-a-time Python (BatchEvalPython) anywhere; ArrowEvalPython only
-  in the multimodal module (not part of these queries);
+- no row-at-a-time Python (BatchEvalPython) anywhere;
 - whole-stage codegen covers the expression pipelines.
 
 Usage: python tools/explain_audit.py [query ...]

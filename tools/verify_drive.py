@@ -1,8 +1,8 @@
 """End-to-end drive via the production launch path: seeded CDC feed ->
 LakeTable merge (out-of-order split) -> convergence + idempotence + text
-byte-invariant; then MJPEG-AVI frame sampling, the corpus-prep operators,
-URL canonicalization, key Blooms, composed projectors, multi-writer commit
-rebase and format-3 manifests.
+byte-invariant; then the corpus-prep operators, URL canonicalization, key
+Blooms, composed projectors, multi-writer commit rebase and format-3
+manifests.
 
     zip -qr gbs.zip go_bqloader_spark
     spark-submit --master 'local[4]' --py-files gbs.zip tools/verify_drive.py
@@ -61,33 +61,6 @@ assert bad == 0, f"{bad} rows violate text byte-invariant"
 print(f"DRIVE OK: events={n} final_rows={rows_final} "
       f"up1={s1.rows_upserted} up2={s2.rows_upserted} skipped_ok idempotent_ok "
       f"empty_ok text_invariant_ok")
-
-# --- MJPEG-AVI frame-sampling path ---
-from go_bqloader_spark.operators import jpegcodec as jc
-from go_bqloader_spark.operators import mediacodecs as mc
-from go_bqloader_spark.operators.multimodal import (
-    decode_video_meta, sample_video_frames)
-
-frames = [jc.encode_jpeg(16, 16, 3, bytes(
-              (x * 16 + y * 3 + f * 40) % 256
-              for y in range(16) for x in range(16) for _ in range(3)))
-          for f in range(12)]
-avi = mc.write_avi_mjpeg(frames, 16, 16, fps=10)
-vdf = spark.createDataFrame(
-    [("http://v/a.avi", None, bytearray(avi)),
-     ("http://v/bad.bin", None, bytearray(b"not a video"))],
-    "url string, warc_ts timestamp, payload binary")
-byurl = {r["url"]: r for r in decode_video_meta(vdf).collect()}
-assert byurl["http://v/a.avi"]["mime"] == "video/x-msvideo", byurl
-assert byurl["http://v/a.avi"]["brand"] == "MJPG"
-assert byurl["http://v/a.avi"]["width"] == 16
-assert byurl["http://v/bad.bin"]["mime"] is None
-fr = sample_video_frames(vdf, every_ms=300).collect()
-idxs = sorted(r["frame_idx"] for r in fr)
-assert idxs == [0, 3, 6, 9], idxs
-assert all(r["width"] == 16 and r["height"] == 16 for r in fr)
-assert len({r["sha256"] for r in fr}) == 4
-print(f"AVI OK: meta_brand=MJPG frames={idxs}")
 
 # --- corpus-prep pipeline (textpipeline operators, new) ---
 from go_bqloader_spark.operators.textpipeline import (
