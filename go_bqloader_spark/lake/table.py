@@ -18,8 +18,12 @@ interface (SURVEY.md §7 names this exact fallback):
 - **Point lookups without a Spark job** — ``read(point=...)`` hashes the
   key to its bucket on the driver, reads that bucket's files there with
   pyarrow (key columns first, only the row groups whose statistics admit
-  the key) and returns the newest version as a local relation; a Spark
-  scan of the bucket is the fallback off a local FS or without pyarrow.
+  the key) and returns the newest version as a local relation, handed to
+  the JVM as an arrow stream (``_local_relation``, ``createDataFrame``'s
+  last step without its per-call conf lookups). A miss or a tombstone
+  reads no row: it returns the empty relation the handle keeps per
+  schema, so it costs one collect and no new plan. A Spark scan of the
+  bucket is the fallback off a local FS or without pyarrow.
 - **Merge-on-read** — merge APPENDS the deduped winners as delta files
   per bucket, never reading the base: write cost O(batch) — this is what
   sustains CDC apply throughput at 10^10 events. Reads resolve
@@ -164,6 +168,31 @@ def _read_parquet(spark: SparkSession, schema: str, paths: list[str]) -> DataFra
     )
     reader = spark.read.schema(schema)
     return reader._df(reader._jreader.parquet(jpaths))  # noqa: SLF001
+
+
+def _local_relation(spark: SparkSession, table, schema: T.StructType) -> DataFrame:
+    """The pyarrow ``table`` as a local relation of ``schema``: the
+    handoff ``createDataFrame`` ends in (the batches go through a temp
+    file, or the encryption server, to ``PythonSQLUtils.toDataFrame``)
+    without its per-call conf lookups and timestamp re-localisation.
+    Every timestamp this engine writes is a UTC instant, INT96 ones (read
+    as naive micros) too, so the cast to the schema's arrow form (UTC
+    timestamps) keeps each value. py4j would send the batches as
+    ``byte[]`` in base64 text, slower than the file for a 1 MB row."""
+    from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client  # noqa: SLF001
+    utils = JavaClass("org.apache.spark.sql.api.python.PythonSQLUtils", client)
+    jiter = sc._serialize_to_jvm(  # noqa: SLF001
+        table.cast(to_arrow_schema(schema)).to_batches(),
+        ArrowStreamSerializer(),
+        utils.readArrowStreamFromFile,
+        JavaClass("org.apache.spark.sql.api.python.ArrowIteratorServer", client),
+    )
+    jdf = utils.toDataFrame(jiter, schema.json(), spark._jsparkSession)  # noqa: SLF001
+    return DataFrame(jdf, spark)
 
 
 def _hash_ddl(ddl: str) -> str:
@@ -418,6 +447,8 @@ class LakeTable:
         # entry-group files are immutable too — cache by name; successive
         # manifests share almost all of their groups
         self._gcache: dict[str, dict[str, Any]] = {}
+        # _empty's relations by their SQL text
+        self._ecache: dict[str, DataFrame] = {}
 
     # ------------------------------------------------------------- create
     @staticmethod
@@ -1000,16 +1031,15 @@ class LakeTable:
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
         return {k: _point_internal(k, types[k], point[k]) for k in m["key"]}
 
-    def _point_probe(self, m: dict[str, Any], point: dict[str, Any]) -> int:
-        """The point key's bucket, hashed on the driver with no Spark job.
+    def _point_probe(self, m: dict[str, Any], vals: dict[str, Any]) -> int:
+        """The bucket of the point whose internal values are ``vals``
+        (``_point_values``), hashed on the driver with no Spark job.
         The value is what ``_bucket_expr`` computes for the key's row: the
-        bucket value is converted to Spark's internal form of its column
-        type, cast to the same canonical hash width, and hashed by
+        bucket value, in Spark's internal form of its column type, is cast
+        to the same canonical hash width and hashed by
         ``spark_xxhash64``, which reproduces Spark's ``xxhash64`` bit for
         bit (a mismatch would read the wrong bucket and miss the key;
-        tests/test_point_read.py checks the equivalence). Every key value
-        is type-checked the same way."""
-        vals = self._point_values(m, point)
+        tests/test_point_read.py checks the equivalence)."""
         bc = m["bucket_col"]
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
         return spark_xxhash64([(_hash_ddl(types[bc]), vals[bc])]) % m["n_buckets"]
@@ -1024,12 +1054,15 @@ class LakeTable:
         """``read(point=...)`` answered on the driver with no Spark job:
         pyarrow finds the key's rows in bucket ``b``'s files, and the
         newest by ``_seq`` (the tombstone on a tie) comes back as a local
-        relation of its schema version under ``_reconcile``'s projection,
+        relation of its schema version (``_local_relation``, the handoff
+        ``createDataFrame`` ends in) under ``_reconcile``'s projection,
         one ``DataFrame`` step that Spark folds into the relation, so
         collecting it runs no job.
-        The driver also judges the tombstone: a miss, or a tombstoned
-        winner read without ``include_deleted``, is ``_empty``'s relation,
-        and a hit's projection drops ``_deleted`` unless it was asked
+        The driver also judges the tombstone, from the ``_deleted`` value
+        it ranked the winner by: a miss, or a tombstoned winner read
+        without ``include_deleted``, is ``_empty``'s relation, which the
+        handle keeps, so it costs one collect and no winner's row is read;
+        a hit's projection drops ``_deleted`` unless it was asked
         for. None (``read()`` then takes the Spark path) when
         pyarrow is missing, an entry's directory holds no parquet file, a
         file lacks a column of its schema version, or an entry holds a key
@@ -1039,17 +1072,18 @@ class LakeTable:
         Per entry only the key columns, ``_seq`` and ``_deleted`` are read,
         from the row groups whose key statistics admit the point
         (``_group_may_hold``; compaction writes key-sorted files, so at
-        most one group of a base file survives); then every column of the
-        winner's row group, and its row is sliced out. Keys match as Spark's ``<=>`` does, on the
-        internal values ``vals`` (``_key_rows``). pyarrow reads no parquet
-        Bloom filter, so this path prunes by statistics only."""
+        most one group of a base file survives); then every column of a
+        live winner's row group, and its row is sliced out. Keys match as
+        Spark's ``<=>`` does, on the internal values ``vals``
+        (``_key_rows``). pyarrow reads no parquet Bloom filter, so this
+        path prunes by statistics only."""
         try:
-            import pyarrow as pa
             import pyarrow.parquet as pq
         except ImportError:
             return None
         current = {f["name"]: f for f in self.schema_fields(m)}
-        best = None  # ((has seq, seq), file, row group, row, schema version)
+        # ((has seq, seq, deleted), file, row group, row, schema version)
+        best = None
         for e in m["buckets"].get(str(b), []):
             sv = str(e["schema_version"])
             fields = m["schemas"][sv]
@@ -1086,25 +1120,15 @@ class LakeTable:
                             rank = (s is not None, s or 0, bool(t[DELETED_COL][i].as_py()))
                             if best is None or rank >= best[0]:
                                 best = (rank, path, g, i, sv)
-        if best is None:
+        # the rank's last part is the winner's _deleted (TRUE-or-NULL in
+        # delta and rewritten files, false in older ones)
+        if best is None or (best[0][2] and not include_deleted):
             return self._empty(m, include_deleted)
         _, path, g, i, sv = best
         fields = m["schemas"][sv]
         with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
             row = pf.read_row_group(g, columns=[f["name"] for f in fields]).slice(i, 1)
-        # TRUE-or-NULL in delta and rewritten files, false in older ones
-        if not include_deleted and row[DELETED_COL][0].as_py():
-            return self._empty(m, include_deleted)
-        # INT96 timestamps read as naive micros; like every timestamp this
-        # engine writes they are UTC instants
-        row = pa.table(
-            [
-                c.cast(pa.timestamp("us", "UTC")) if pa.types.is_timestamp(c.type) else c
-                for c in row.columns
-            ],
-            names=row.column_names,
-        )
-        return self.spark.createDataFrame(row, _fields_schema(fields)).selectExpr(
+        return _local_relation(self.spark, row, _fields_schema(fields)).selectExpr(
             *self._reconcile(m, sv, deleted=include_deleted)
         )
 
@@ -1112,13 +1136,21 @@ class LakeTable:
         """An empty relation of ``m``'s current schema, ``_deleted`` only
         when asked for. A ``SELECT ... WHERE false`` plans as an empty
         local relation, so collecting it runs no Spark job (an RDD-backed
-        ``createDataFrame([], schema)`` runs one)."""
+        ``createDataFrame([], schema)`` runs one). The relation depends on
+        nothing but its SQL text, which fixes the schema and
+        ``include_deleted``, so the handle keeps one per text: a point
+        miss or tombstone reuses it and pays only the collect, not a
+        parse, analysis and optimisation."""
         cols = [
             f"CAST(NULL AS {_sql_type(f['type'])}) AS {_q(f['name'])}"
             for f in self.schema_fields(m)
             if include_deleted or f["name"] != DELETED_COL
         ]
-        return self.spark.sql(f"SELECT {', '.join(cols)} WHERE false")
+        sql = f"SELECT {', '.join(cols)} WHERE false"
+        df = self._ecache.get(sql)
+        if df is None:
+            df = self._ecache[sql] = self.spark.sql(sql)
+        return df
 
     def _reconcile(self, m: dict[str, Any], sv: str, deleted: bool = True) -> list[str]:
         """The projection, as ``selectExpr`` text, that reads a file of
@@ -1229,9 +1261,12 @@ class LakeTable:
         that it does), so only that ONE bucket's files are opened. On a
         local FS with pyarrow the driver reads them itself
         (``_point_local``): the key columns of the row groups whose
-        statistics admit the key, then the newest version's row, returned
-        as a local relation, so collecting the result runs no Spark job
-        (a tombstoned winner is judged there too).
+        statistics admit the key, then the newest version's row, handed
+        to the JVM as an arrow stream (``_local_relation``) and returned
+        as a local relation, so collecting the result runs no Spark job.
+        A miss, or a tombstoned winner without ``include_deleted``, reads
+        no row and returns the handle's cached empty relation
+        (``_empty``).
         Otherwise (a non-local FS seam, no pyarrow, a key column widened
         from ``date``) Spark scans the bucket with the exact key equality
         pushed down to parquet, whose row-group statistics, dictionaries
@@ -1246,8 +1281,8 @@ class LakeTable:
         if point is not None:
             if buckets is not None or zones is not None:
                 raise ValueError("point is mutually exclusive with buckets/zones")
-            b = self._point_probe(m, point)
             vals = self._point_values(m, point)
+            b = self._point_probe(m, vals)
             if type(self.fs) is LocalFS:
                 local = self._point_local(m, b, vals, include_deleted)
                 if local is not None:

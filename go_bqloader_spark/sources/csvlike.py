@@ -33,6 +33,25 @@ def _enable_jvm_charsets(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.javaCharsets", "true")
 
 
+_GLOB_CHARS = frozenset("*?[{")
+
+
+def _load_files(spark: SparkSession, path: str) -> DataFrame:
+    """The ``binaryFile`` rows of ``path``, a file, a directory or a glob.
+    Spark probes a lone load path for a streaming sink's metadata
+    directory, and a glob names no file, so the probe logged a
+    ``FileNotFoundException`` stack trace on every load. A glob in the
+    last path part alone loads the parent directory instead, keeping the
+    files whose names match (``pathGlobFilter``): for a directory of
+    plain files (no partition-style ``k=v`` subdirectory, no file whose
+    name starts with ``_`` or ``.``), the files the glob names."""
+    reader = spark.read.format("binaryFile")
+    parent, _, name = path.rpartition("/")
+    if parent and _GLOB_CHARS.intersection(name) and not _GLOB_CHARS.intersection(parent):
+        return reader.option("pathGlobFilter", name).load(parent)
+    return reader.load(path)
+
+
 def _sliced_lines(encoding: str, sep: str, skip_head: int, skip_tail: int) -> Column:
     """Exact PartialCSVParser slicing
     (``/root/reference/contrib/handlers/handlers.go:61-77``): split the raw
@@ -78,7 +97,7 @@ def read_csv_files(
       the reference's ``[]string`` rows).
     """
     _enable_jvm_charsets(spark)
-    raw = spark.read.format("binaryFile").load(path)
+    raw = _load_files(spark, path)
     body = _sliced_lines(encoding, sep, skip_head_rows, skip_tail_rows)
     df = raw.select(F.col("path"), F.posexplode(body).alias("line_no", "line"))
     if sep == "\n":

@@ -182,7 +182,8 @@ def _check_rewrite(spark, spark_path, tmp_path, op):
     m = t.manifest()
     for row in before:
         miss = dict(_point_of(row), url=row["url"] + "~")
-        z = m["buckets"][str(t._point_probe(m, miss))][0]["zones"]  # noqa: SLF001
+        b = t._point_probe(m, t._point_values(m, miss))  # noqa: SLF001
+        z = m["buckets"][str(b)][0]["zones"]
         ts = _point_internal("warc_ts", "timestamp", miss["warc_ts"])
         if z["url"][0] < miss["url"] < z["url"][1] and \
                 z["warc_ts"][0] <= ts <= z["warc_ts"][1]:

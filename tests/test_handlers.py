@@ -253,6 +253,23 @@ def test_partial_csv_tail_counts_trailing_newline(spark, tmp_path):
     assert sorted(_rows(df2, "k", "v")) == [("a", "1"), ("b", "2")]
 
 
+def test_csv_glob_reads_the_files_it_names(spark, tmp_path):
+    """A glob in the last path part reads exactly the files it names (a
+    sibling that does not match and a matching file in a subdirectory are
+    left out), with the same ``path`` values as reading each file."""
+    for name, body in [("part-0.csv", "a,1\n"), ("part-1.csv", "b,2\nc,3\n"),
+                       ("other.csv", "x,9\n"), ("sub/part-2.csv", "y,8\n")]:
+        (tmp_path / name).parent.mkdir(exist_ok=True)
+        (tmp_path / name).write_text(body)
+    cols = ("path", "line_no", "k", "v")
+    got = _rows(read_csv_files(spark, f"{tmp_path}/part*.csv", "k string, v string",
+                               keep_path=True), *cols)
+    want = [r for n in ("part-0.csv", "part-1.csv")
+            for r in _rows(read_csv_files(spark, str(tmp_path / n), "k string, v string",
+                                          keep_path=True), *cols)]
+    assert sorted(got) == sorted(want) and len(want) == 3
+
+
 def test_registry_fanout_and_error_semantics(spark, fixtures):
     """All matching handlers run even when one fails; first error raised
     after the fan-out; notifier sees every result (bqloader_test.go:79-114,

@@ -50,28 +50,38 @@ def _fewest(py4j_calls, fn, reps=3):
     return min(py4j_calls(fn)[1] for _ in range(reps))
 
 
-# (the count on the engine's earlier Column-built plans, the count with
-# plans built from SQL text); each budget is the second plus about 50 %
+# (the count before the last change to the op's path, the count after
+# it); each budget is the second plus about 50 %. Before it, the merge and
+# the read plan were built from Column trees, a point hit went through
+# createDataFrame, and a miss or a tombstone planned a new empty relation.
 BUDGETS = {
-    "point hit": (265, 39),
-    "point miss": (73, 12),
+    "point hit": (39, 22),
+    "point miss": (12, 7),
+    "point tombstone": (12, 7),
     "merge": (674, 73),
     "read plan": (380, 78),
 }
 
 
 def test_py4j_round_trips_stay_in_budget(spark, py4j_calls, table):
-    """A point hit and a miss (both collected, on the driver path), a MoR
-    merge of 40 events and building a full ``read()`` of a base plus a
-    delta stay within their round-trip budgets."""
+    """A point hit, a miss and a tombstoned key (each collected, on the
+    driver path), a MoR merge of 40 events and building a full ``read()``
+    of a base plus a delta stay within their round-trip budgets."""
     hit = {"url": "https://h3.org/p150", "warc_ts": TS}
     miss = {"url": "https://h3.org/none", "warc_ts": TS}
+    dead = {"url": "https://h3.org/p157", "warc_ts": TS}
+    table.merge(
+        spark.createDataFrame([("D", 400, dead["url"], TS, None, None, None)], DDL),
+        batch_key=("q", 9),
+    )
     assert len(table.read(point=hit).collect()) == 1
+    assert table.read(point=dead).collect() == []
     # distinct batch keys, each batch built before the count
     merges = iter([(_batch(spark, range(300 + i, 340 + i)), ("q", 2 + i)) for i in range(3)])
     counts = {
         "point hit": _fewest(py4j_calls, lambda: table.read(point=hit).collect()),
         "point miss": _fewest(py4j_calls, lambda: table.read(point=miss).collect()),
+        "point tombstone": _fewest(py4j_calls, lambda: table.read(point=dead).collect()),
         "merge": _fewest(py4j_calls, lambda: table.merge(*next(merges))),
         "read plan": _fewest(py4j_calls, table.read),
     }

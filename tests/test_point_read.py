@@ -80,7 +80,7 @@ def _driver_probes(t, m, key_rows):
         h = spark_xxhash64(
             (w, _point_internal(k, ddl, point[k])) for k, ddl, w in _widths(t, m)
         )
-        out.append((t._point_probe(m, point), h))
+        out.append((t._point_probe(m, t._point_values(m, point)), h))
     return out
 
 
@@ -183,7 +183,7 @@ def test_point_probe_after_key_widening_matches_stored_hashes(
     stored = [{"g": r["g"], "k": r["k"]} for r in df.collect()]
     t.widen_column("k", new)
     m_new = t.manifest()
-    assert [t._point_probe(m_new, p) for p in stored] == want
+    assert [t._point_probe(m_new, t._point_values(m_new, p)) for p in stored] == want
     for i, p in enumerate(stored):
         assert [r["v"] for r in t.read(point=p).collect()] == [f"v{i}"], p
 
@@ -654,6 +654,112 @@ def test_point_driver_path_reads_one_row_group_of_a_sorted_file(spark, tmp_path,
     reads.clear()
     assert t.read(point={"url": "u/00601~"}).collect() == []
     assert len(reads) <= 1 and all(cols == ("url", "_seq", "_deleted") for _, cols in reads)
+
+
+def test_point_miss_has_the_current_schema_across_evolution(spark, spark_jobs, tmp_path):
+    """On one handle, a miss read before and after add_column,
+    rename_column and widen_column, with and without ``include_deleted``,
+    returns no rows in the schema current at that read, and collecting it
+    runs no Spark job: the empty relation the handle keeps follows the
+    schema."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [("url", "string"), ("n", "int")], key=["url"],
+        n_buckets=1,
+    )
+    t.merge(_batch(spark, [("U", 1, "u/1", 1)], "url string, n int"), batch_key=("q", 0))
+    steps = {
+        "created": lambda: None,
+        "added": lambda: t.add_column("lang", "string"),
+        "renamed": lambda: t.rename_column("n", "num"),
+        "widened": lambda: t.widen_column("num", "bigint"),
+    }
+    for name, step in steps.items():
+        step()
+        for inc in (True, False):
+            want = T.StructType(
+                [f for f in t.spark_schema().fields if inc or f.name != "_deleted"]
+            )
+            df = t.read(point={"url": "u/x"}, include_deleted=inc)
+            rows, jobs = spark_jobs(f"miss-{name}-{inc}", df.collect)
+            assert (rows, jobs) == ([], 0), (name, inc)
+            assert df.schema == want, (name, inc)
+        assert [r["url"] for r in t.read(point={"url": "u/1"}).collect()] == ["u/1"]
+
+
+def test_point_tombstone_is_judged_before_its_row_is_read(spark, tmp_path, monkeypatch):
+    """A tombstoned key read without ``include_deleted`` returns no rows
+    after reading only key columns (with ``_seq`` and ``_deleted``, the
+    rank that already says the winner is a tombstone); with
+    ``include_deleted`` the tombstone's row is read once and returned."""
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [("url", "string"), ("n", "int"), ("text", "string")],
+        key=["url"], n_buckets=1,
+    )
+    ddl = "url string, n int, text string"
+    t.merge(_batch(spark, [("U", i, f"u/{i}", i, f"t{i}") for i in range(5)], ddl),
+            batch_key=("q", 0))
+    t.merge(_batch(spark, [("D", 10, "u/2", None, None)], ddl), batch_key=("q", 1))
+    reads = []
+    orig = pq.ParquetFile.read_row_group
+
+    def spy(self, i, columns=None, **kw):
+        reads.append(tuple(columns))
+        return orig(self, i, columns=columns, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", spy)
+    keys = ("url", "_seq", "_deleted")
+    assert t.read(point={"url": "u/2"}).collect() == []
+    assert reads and set(reads) == {keys}, reads
+    reads.clear()
+    rows = t.read(point={"url": "u/2"}, include_deleted=True).collect()
+    assert [(r["url"], r["n"], r["_seq"], r["_deleted"]) for r in rows] == [
+        ("u/2", None, 10, True)
+    ]
+    assert [c for c in reads if c != keys] == [("url", "n", "text", "_seq", "_deleted")]
+
+
+def test_point_hit_handoff_equals_fallback_outside_utc(spark, spark_jobs, spark_path, tmp_path):
+    """A hit's row reaches the JVM as an arrow stream (``_local_relation``)
+    and must read as the Spark fallback's row does under a non-UTC session
+    time zone: timestamp, date, float and double key parts (NaN and -0.0
+    among them), binary and NULL payload columns and a 4 MiB ``html``.
+    No driver-path hit runs a Spark job."""
+    cols = [("u", "string"), ("ts", "timestamp"), ("d", "date"), ("f", "float"),
+            ("x", "double"), ("html", "binary"), ("n", "int"), ("s", "string")]
+    key = ["u", "ts", "d", "f", "x"]
+    fs = [math.nan, -0.0, 0.1, math.inf, None, -2.5, 1e-45, 3.4e38]
+    xs = [-0.0, math.nan, 5e-324, -1e300, None, 0.1, math.inf, -math.inf]
+    big = bytes(range(256)) * (1 << 14)
+    html = [big, None, b"", b"\x00\xff"]
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        t = LakeTable.create(spark, str(tmp_path / "t"), cols, key=key, bucket_col="u",
+                             n_buckets=2)
+        ts, ds = EDGE_VALUES["timestamp"], EDGE_VALUES["date"]
+        rows = [
+            ("U", j, f"u{j % 2}", ts[j % len(ts)], ds[j % len(ds)], fs[j], xs[j],
+             html[j % len(html)], None if j % 2 else j, None if j % 3 == 0 else f"s{j}")
+            for j in range(len(fs))
+        ]
+        t.merge(_batch(spark, rows, ", ".join(f"{c} {d}" for c, d in cols)),
+                batch_key=("q", 0))
+        fb = spark_path(t)
+        scan = fb.read().collect()
+        assert len(scan) == len(rows) and any(r["html"] == big for r in scan)
+        for i, r in enumerate(scan):
+            p = {k: r[k] for k in key}
+            df = t.read(point=p)
+            got, jobs = spark_jobs(f"handoff-{i}", df.collect)
+            ref = fb.read(point=p)
+            assert jobs == 0 and df.dtypes == ref.dtypes, p
+            want = _canon([r.asDict()])
+            assert _canon([g.asDict() for g in got]) == want, p
+            assert _canon([g.asDict() for g in ref.collect()]) == want, p
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 def test_point_read_of_a_missing_bucket_dir_raises(spark, tmp_path):
