@@ -27,8 +27,7 @@ Layout:
                   exactly-once offset ledger, time travel
 - ``operators``   the query registry's operators: LWW and salted two-phase
                   dedup, near-dup clustering, LSH/IVF similarity search,
-                  corpus-prep passes; plus MinHash/SimHash/n-gram dedup
-                  (tests only)
+                  corpus-prep passes
 - ``streaming``   Structured Streaming pipeline: binlog tail → foreachBatch
                   MERGE with checkpointed exactly-once and lineage metrics
 - ``plans``       handler registry (event fan-out O1) and the oracle-backed

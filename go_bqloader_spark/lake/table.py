@@ -30,9 +30,7 @@ interface (SURVEY.md §7 names this exact fallback):
   base+deltas with the same LWW rule; ``compact()`` folds a bucket's
   entries back to a single key-sorted base file, the read-optimized
   layout (run it every N batches or when ``entries_per_bucket`` exceeds
-  a threshold). Tables written by the copy-on-write mode of earlier
-  releases hold one resolved entry per bucket, a valid MoR layout, and
-  take merges unchanged.
+  a threshold).
 - **One LWW rule** — a key's newest ``_seq`` wins; on a ``_seq`` tie the
   tombstone wins. The merge's in-batch dedup, the scan window, both
   point paths and the compaction/rebucket rewrite all order by
@@ -483,8 +481,7 @@ class LakeTable:
         parquet-mr writes no Bloom for a fully dictionary-encoded chunk;
         its dictionary filter answers the same equality there. The
         filters are built inside the write job, so merges still take
-        their stats from the footers with no read-back. ``bloom`` fields
-        that older versions stored on manifest entries are ignored.
+        their stats from the footers with no read-back.
         """
         key = key or ["url", "warc_ts"]
         if bucket_col not in key:
@@ -500,8 +497,7 @@ class LakeTable:
         fields.append({"id": -1, "name": DELETED_COL, "type": "boolean"})
         manifest = {
             # 3 = bucket entries live in immutable per-commit GROUP files
-            # (manifest lists them; commit metadata is O(delta)); format-2
-            # manifests with inline "buckets" are still readable
+            # (manifest lists them; commit metadata is O(delta))
             "format_version": 3,
             "version": 0,
             "parent": None,
@@ -510,9 +506,6 @@ class LakeTable:
             "key": key,
             "bucket_col": bucket_col,
             "n_buckets": n_buckets,
-            # always "mor": earlier releases read a missing field as
-            # copy-on-write; this release never reads it
-            "write_mode": "mor",
             "buckets": {},
             "ledger": {},
             # all batch ids <= ledger_floor[qid] are committed (compacted
@@ -584,17 +577,25 @@ class LakeTable:
             self._gcache[gname] = g
         return g
 
-    def _resolve_manifest(self, mj: dict[str, Any]) -> dict[str, Any]:
-        if "buckets" in mj:  # format-2 / hand-inlined manifest
-            return mj
+    def _fold_groups(self, names: list[str]) -> dict[str, list]:
+        """The bucket -> entries map the groups ``names`` fold to, in
+        order: a group's replaces drop earlier entries, its adds append."""
         buckets: dict[str, list] = {}
-        for gname in mj.get("groups", []):
+        for gname in names:
             g = self._load_group(gname)
             for b in g.get("replaces", []):
                 buckets.pop(str(b), None)
             for b, es in g.get("adds", {}).items():
                 buckets.setdefault(b, []).extend(es)
-        return dict(mj, buckets=buckets)
+        return buckets
+
+    def _resolve_manifest(self, mj: dict[str, Any]) -> dict[str, Any]:
+        if mj.get("format_version") != 3:
+            raise ValueError(
+                f"manifest v{mj.get('version')} has format_version "
+                f"{mj.get('format_version')!r}; only format 3 is readable"
+            )
+        return dict(mj, buckets=self._fold_groups(mj["groups"]))
 
     @staticmethod
     def _diff_buckets(
@@ -643,13 +644,7 @@ class LakeTable:
         and are GC'd by expire_snapshots once no retained manifest lists
         them."""
         prefix, tail = groups[:-keep_tail], groups[-keep_tail:]
-        buckets: dict[str, list] = {}
-        for gname in prefix:
-            g = self._load_group(gname)
-            for b in g.get("replaces", []):
-                buckets.pop(str(b), None)
-            for b, es in g.get("adds", {}).items():
-                buckets.setdefault(b, []).extend(es)
+        buckets = self._fold_groups(prefix)
         if not buckets:
             return tail
         g = {"adds": buckets, "replaces": []}
@@ -684,23 +679,11 @@ class LakeTable:
         parent = manifest.get("parent")
         if parent is None:
             parent_buckets: dict[str, list] = {}
-            parent_groups: list[str] = []
+            groups: list[str] = []
         else:
             pm = self.manifest(parent)
-            parent_buckets = pm["buckets"]
-            parent_groups = list(pm.get("groups", []))
-            if "groups" not in pm:
-                # legacy format-2 parent (ADVICE r5, high): its entries
-                # live ONLY inline in the parent manifest file — there is
-                # no group file a cold reader could resolve them from.
-                # Diff against {} so this first format-3 commit captures
-                # the parent's full resolved state as the migration group;
-                # diffing against the inline buckets would serialize only
-                # the delta and silently drop every pre-existing entry for
-                # any reader without this writer's warm cache.
-                parent_buckets = {}
+            parent_buckets, groups = pm["buckets"], list(pm["groups"])
         adds, replaces = self._diff_buckets(parent_buckets, manifest["buckets"])
-        groups = parent_groups
         if adds or replaces:
             gname = f"g{manifest['version']:08d}_{uuid.uuid4().hex[:12]}.json"
             g = {"adds": adds, "replaces": replaces}
@@ -816,9 +799,11 @@ class LakeTable:
             # publish_if_newer re-checks under the pointer lock, so if a
             # concurrent writer raced us past `version` between the
             # current_version() read and here, LATEST is left alone
-            # instead of being rolled backward (ADVICE r3 TOCTOU).
+            # instead of being rolled backward (ADVICE r3 TOCTOU). Resolved
+            # first: a manifest this reader cannot read is never published.
+            resolved = self._resolve_manifest(existing)
             self.fs.publish_if_newer(latest, version)
-            self._mcache[version] = self._resolve_manifest(existing)
+            self._mcache[version] = resolved
             return "published"
         return "committed"
 
@@ -999,9 +984,10 @@ class LakeTable:
         An entry's bounds are recorded under its own schema version, so
         they are found by field id (a renamed column keeps its bounds) and
         used only if the column's type since then kept their value.
-        Missing or unusable bounds (legacy entries, all-null columns, a
-        ``date`` widened to ``timestamp``) keep the file — pruning is only
-        ever an optimization, never a correctness filter."""
+        Missing or unusable bounds (entries written without zones,
+        all-null columns, a ``date`` widened to ``timestamp``) keep the
+        file — pruning is only ever an optimization, never a correctness
+        filter."""
         ez = entry.get("zones") or {}
         if not ez:
             return True
@@ -1937,25 +1923,20 @@ class LakeTable:
         The spill is JSON lines, one object per row with the
         ``_METRICS_SCHEMA`` fields, one ``v<lo>_v<hi>.json`` file per
         expiry (``lo``..``hi`` = the expired versions it holds), read with
-        that fixed schema. Tables expired by earlier releases also hold
-        ``*.parquet`` spill files of the same schema; they are read too.
-        Spilled rows of versions the chain still holds (an expiry that
-        stopped between its spill and its manifest deletes) are counted
-        once, from the chain."""
+        that fixed schema. Spilled rows of versions the chain still holds
+        (an expiry that stopped between its spill and its manifest
+        deletes) are counted once, from the chain."""
         chain = list(self._walk_chain())
         rows = [tuple(r) for m in chain for r in m.get("metrics", [])]
         df = self.spark.createDataFrame(rows, self._METRICS_SCHEMA)
         spill = os.path.join(self.path, _LINEAGE)
-        files = self.fs.listdir(spill)
-        js = [os.path.join(spill, f) for f in files if f.endswith(".json")]
-        pq = [os.path.join(spill, f) for f in files if f.endswith(".parquet")]
-        parts = []
+        js = [os.path.join(spill, f) for f in self.fs.listdir(spill) if f.endswith(".json")]
         if js:
-            parts.append(self.spark.read.schema(self._METRICS_SCHEMA).json(js))
-        if pq:
-            parts.append(_read_parquet(self.spark, self._METRICS_SCHEMA, pq))
-        for p in parts:
-            df = p.where(f"commit_version < {int(chain[-1]['version'])}").unionByName(df)
+            df = (
+                self.spark.read.schema(self._METRICS_SCHEMA).json(js)
+                .where(f"commit_version < {int(chain[-1]['version'])}")
+                .unionByName(df)
+            )
         return df
 
     def resume_watermarks(self) -> dict[int, int]:
@@ -2062,7 +2043,7 @@ class LakeTable:
         # unresolvable snapshot.
         now = time.time()
         current = retained[0]["version"]
-        refg = {g for m in retained for g in m.get("groups", [])}
+        refg = {g for m in retained for g in m["groups"]}
         groups_removed = 0
         mdir = os.path.join(self.path, _MANIFESTS)
         for f in self.fs.listdir(mdir):

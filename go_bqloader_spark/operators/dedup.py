@@ -1,46 +1,23 @@
-"""Document deduplication operators for training-data pipelines.
+"""Document deduplication operators behind the query registry's near-dup
+leaves (``plans/queries.py``).
 
-All-JVM implementations (xxhash64-based, no Python in the row path) built
-to scale: cost is linear in tokens plus candidate-pair verification — never
-all-pairs. The oracle-checkable md5 variants live in ``plans/queries.py``;
-these are the parameterized library versions.
+All-JVM implementations (no Python in the row path) built to scale: cost
+is linear in candidate pairs — never all-pairs.
 
-- :func:`exact_dedup` — hash-groupBy on normalized content.
-- :func:`minhash_signatures` / :func:`minhash_candidates` /
-  :func:`minhash_dedup` — MinHash + banded LSH: shingle → k min-hashes →
-  b bands → bucket-join → signature-similarity filter. One shuffle per
-  stage; bands spread hot buckets.
-- :func:`simhash64` — 64-bit SimHash via per-bit majority vote over token
-  hashes (64 conditional sums inside one hash aggregate; whole-stage
-  codegen keeps it a single pass).
-- :func:`ngram_jaccard_pairs` — exact word-shingle Jaccard via
-  explode + equi-join + group (the verification baseline for MinHash).
+- :func:`blocked_self_join` — skew-proof within-bucket self-join
+  scaffolding; the ``minhash_lsh`` leaf generates its band-bucket
+  candidate pairs through it.
+- :func:`connected_components` — candidate-pair graph → duplicate
+  clusters (contract-then-iterate min-label propagation); the
+  ``dedup_clusters`` leaf ends in it.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-
-
-def _tokens(text_col: str, n_shingle: int = 1) -> Column:
-    toks = f"filter(split({text_col}, '\\\\s+'), x -> x <> '')"
-    if n_shingle <= 1:
-        return F.array_distinct(F.expr(toks))
-    # word n-gram shingles: join n consecutive tokens. Spark's
-    # sequence(1, 0) yields a DESCENDING [1, 0] (not empty), so docs with
-    # fewer than n tokens need the explicit guard or slice(toks, 0, n)
-    # throws under ANSI mode.
-    return F.array_distinct(
-        F.expr(
-            f"CASE WHEN size({toks}) >= {n_shingle} "
-            f"THEN transform(sequence(1, size({toks}) - {n_shingle - 1}), "
-            f"i -> array_join(slice({toks}, i, {n_shingle}), ' ')) "
-            f"ELSE CAST(array() AS array<string>) END"
-        )
-    )
 
 
 def blocked_self_join(
@@ -84,213 +61,6 @@ def blocked_self_join(
         .drop("__nch")
     )
     return left, right
-
-
-def exact_dedup(df: DataFrame, content_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact duplicate groups on normalized content; representative = min id."""
-    fp = F.md5(F.lower(F.trim(F.col(content_col))))
-    return (
-        df.groupBy(fp.alias("fp"))
-        .agg(
-            F.min(id_col).alias("rep"),
-            F.count(F.lit(1)).alias("n_dupes"),
-            F.collect_list(id_col).alias("members"),
-        )
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    n_shingle: int = 1,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, sig array<bigint>) — k min-hashes of the shingle set, computed
-    as one explode + one hash aggregate (map-side partial)."""
-    tok = df.select(F.col(id_col), F.explode(_tokens(text_col, n_shingle)).alias("tok"))
-    aggs = [
-        F.min(F.xxhash64(F.lit(seed), F.lit(i), F.col("tok"))).alias(f"h{i}")
-        for i in range(k)
-    ]
-    sig = tok.groupBy(id_col).agg(*aggs)
-    return sig.select(id_col, F.array(*[f"h{i}" for i in range(k)]).alias("sig"))
-
-
-def minhash_candidates(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 4,
-    neighbor_window: int | None = None,
-) -> DataFrame:
-    """Banded LSH: docs sharing any band bucket become a candidate pair.
-
-    ``neighbor_window=None`` pairs every co-bucketed doc (exact; O(size²)
-    per bucket). ``neighbor_window=W`` switches to sorted-neighborhood
-    pairing: within each bucket, members sorted by id pair only with
-    their next W neighbors — identical output for buckets of size <= W+1
-    and O(size × W) beyond, which is the bound that matters at 10^10
-    docs where dup-family bucket sizes are heavy-tailed (one 2.7k-doc
-    family is 3.7M pairs exact vs 21k at W=8). Windowed pairs chain
-    through a family, so downstream CONNECTED-COMPONENT clustering
-    recovers the same clusters whenever consecutive (id-sorted) members
-    stay above the verify threshold — the regime that creates mega-
-    buckets in the first place (near-identical docs). Pure top-k pair
-    listings should keep ``None``."""
-    k = bands  # slice count; rows-per-band derived from sig length at runtime
-    banded = sig.select(
-        id_col,
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), "
-                f"b -> xxhash64(b, array_join(slice(sig, b * (size(sig) div {k}) + 1, size(sig) div {k}), ',')))"
-            )
-        ).alias("band_idx", "bucket"),
-    )
-    if neighbor_window is not None:
-        w = W.partitionBy("band_idx", "bucket").orderBy(id_col)
-        nbrs = F.array(
-            *[F.lead(id_col, i).over(w) for i in range(1, neighbor_window + 1)]
-        )
-        return (
-            banded.withColumn("__nb", nbrs)
-            .select(
-                F.col(id_col).alias("d1"),
-                F.explode("__nb").alias("d2"),
-            )
-            .filter(F.col("d2").isNotNull())
-            .distinct()
-        )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, ["band_idx", "bucket"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2"))
-        .distinct()
-    )
-
-
-def minhash_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    bands: int = 4,
-    threshold: float = 0.7,
-    n_shingle: int = 1,
-    seed: int = 42,
-    neighbor_window: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs with estimated Jaccard ≥ threshold.
-
-    The estimate is the fraction of equal signature components — unbiased
-    for Jaccard; candidates come from banded LSH so only colliding pairs
-    are compared (broadcastable signature join per pair).
-    ``neighbor_window`` bounds per-bucket candidates for heavy-tailed
-    dup families (see :func:`minhash_candidates`)."""
-    sig = minhash_signatures(df, id_col, text_col, k, n_shingle, seed)
-    cand = minhash_candidates(sig, id_col, bands, neighbor_window)
-    s1 = sig.select(F.col(id_col).alias("d1"), F.col("sig").alias("sig1"))
-    s2 = sig.select(F.col(id_col).alias("d2"), F.col("sig").alias("sig2"))
-    est = F.expr(
-        "aggregate(zip_with(sig1, sig2, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (a, v) -> a + v)"
-    ) / F.lit(k)
-    return (
-        cand.join(s1, "d1")
-        .join(s2, "d2")
-        .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("d1", "d2", "est_jaccard")
-    )
-
-
-def simhash64(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", seed: int = 42
-) -> DataFrame:
-    """(id, simhash bigint): per-bit majority over token hashes — near-dups
-    have small Hamming distance; exact buckets via equality, radius-1/2
-    search via bit-flip probing."""
-    tok = df.select(F.col(id_col), F.explode(_tokens(text_col)).alias("tok"))
-    h = F.xxhash64(F.lit(seed), F.col("tok"))
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(64)
-    ]
-    agg = tok.groupBy(id_col).agg(*bit_sums)
-    sim = None
-    for i in range(64):
-        bit = F.when(F.col(f"b{i}") > 0, F.lit(1).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        term = bit * F.lit(1 << i).cast("bigint") if i < 63 else F.when(
-            F.col("b63") > 0, F.lit(-(1 << 63)).cast("bigint")
-        ).otherwise(F.lit(0).cast("bigint"))
-        sim = term if sim is None else sim + term
-    return agg.select(id_col, sim.alias("simhash"))
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit simhashes (popcount via
-    bit_count on the XOR)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    n_shingle: int = 3,
-    df_cap: int | None = 50,
-) -> DataFrame:
-    """Exact shingle-set Jaccard pairs ≥ threshold (explode + join + group;
-    shuffles on shingle then pair — no cross join).
-
-    Defaults are the scale-safe shape: 3-word shingles (a unigram equi-join
-    is quadratic on hot tokens — a token in D docs makes D²/2 join rows)
-    plus a document-frequency cap that drops shingles present in more than
-    ``df_cap`` docs from the candidate universe (they carry no near-dup
-    signal). Jaccard is computed over the capped universe. Pass
-    ``n_shingle=1, df_cap=None`` for the classic textbook formulation on
-    small corpora."""
-    tok = df.select(F.col(id_col), F.explode(_tokens(text_col, n_shingle)).alias("tok"))
-    if df_cap is not None:
-        rare = (
-            tok.groupBy("tok")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= df_cap)
-            .select("tok")
-        )
-        tok = tok.join(rare, "tok")
-    # per-doc set size as a window count riding the rows (a separate
-    # `sizes` aggregate joined back on d1 AND d2 re-evaluated the whole
-    # tokenize→DF-cap pipeline twice more); shuffle-hinted self-join so
-    # both sides share one Exchange hashpartitioning(tok) via AQE's
-    # ReuseExchange — the pipeline materializes ONCE (see q_minhash_lsh)
-    tok = tok.withColumn("sz", F.count(F.lit(1)).over(W.partitionBy(id_col)))
-    return (
-        tok.alias("a")
-        .hint("merge")
-        .join(tok.alias("b").hint("merge"), "tok")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.max(F.col("a.sz")).alias("s1"),
-            F.max(F.col("b.sz")).alias("s2"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("s1") + F.col("s2") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
-    )
 
 
 def _min_root_labels(rows) -> list[tuple]:
@@ -507,29 +277,3 @@ def connected_components(
             F.coalesce("__l2", "lbl").alias("cluster_id"),
         )
     )
-
-
-def near_dup_clusters(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    bands: int = 4,
-    threshold: float = 0.7,
-    n_shingle: int = 1,
-    seed: int = 42,
-    neighbor_window: int | None = None,
-) -> DataFrame:
-    """End-to-end near-dedup: MinHash-LSH pairs → connected components →
-    one representative per cluster. Returns ``(doc_id, cluster_id,
-    is_rep)``; downstream keeps ``is_rep`` rows (or joins back to drop
-    duplicates). Singleton documents are their own cluster. Set
-    ``neighbor_window`` (e.g. 8) on large corpora: candidate pairs chain
-    through each bucket instead of exploding quadratically, and the
-    component pass restores full clusters."""
-    pairs = minhash_dedup(df, id_col, text_col, k, bands, threshold, n_shingle, seed,
-                          neighbor_window)
-    comp = connected_components(
-        pairs, vertices=df.select(id_col), src="d1", dst="d2", id_col=id_col
-    )
-    return comp.withColumn("is_rep", F.col(id_col) == F.col("cluster_id"))

@@ -1,6 +1,6 @@
 """Corpus-preparation operators for LLM training-data pipelines.
 
-These extend the dedup/similarity family (``operators/dedup.py``,
+These extend the near-dup and similarity operators (``operators/dedup.py``,
 ``operators/similarity.py``) with the remaining standard passes a
 web-crawl → training-set pipeline runs between ingest and tokenization:
 
@@ -23,7 +23,7 @@ web-crawl → training-set pipeline runs between ingest and tokenization:
 
 The reference engine (go-bqloader) has no corpus operators — this module
 is part of the training-data-pipeline surface the build brief adds on
-top of the reference inventory (like ``operators/dedup.py``).
+top of the reference inventory.
 
 100 TB design notes, per operator, are in the docstrings; the common
 rules: everything is pure Catalyst (no Python in the row path), chunking

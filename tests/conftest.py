@@ -1,4 +1,3 @@
-import json
 import os
 import sys
 
@@ -54,26 +53,6 @@ def spark_path(spark):
     """``spark_path(t)`` opens table ``t`` through ``_SeamFS``, so its
     point reads run Spark's scan instead of the driver's pyarrow read."""
     return lambda t: LakeTable(spark, t.path, fs=_SeamFS())
-
-
-@pytest.fixture
-def legacy_manifest(spark):
-    """``legacy_manifest(t, mode)`` rewrites table ``t``'s LATEST manifest
-    as an earlier release left it: ``write_mode`` set to ``mode``, or
-    removed when ``mode`` is None (those releases read a missing field as
-    copy-on-write). Returns a fresh handle, with no manifest cached."""
-
-    def rewrite(t, mode):
-        path = t._manifest_path(t.current_version())  # noqa: SLF001
-        mj = json.loads(t.fs.read_text(path))
-        mj.pop("write_mode", None)
-        if mode is not None:
-            mj["write_mode"] = mode
-        with open(path, "w") as f:
-            json.dump(mj, f)
-        return LakeTable(spark, t.path)
-
-    return rewrite
 
 
 @pytest.fixture

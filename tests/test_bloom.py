@@ -1,15 +1,13 @@
 """Key Bloom filters: the parquet writer builds them on the key columns of
 every file a Bloom table writes, Spark's scan tests a pushed-down key
 equality against them per row group, and point lookups stay exact — no
-false negatives — through merges, compaction, rebucket, key widening and
-the manifest ``bloom`` fields older versions stored. The driver's point
-path (pyarrow) reads no Bloom, so the pruning checks run point lookups
-through the Spark fallback (the ``spark_path`` fixture).
+false negatives — through merges, compaction, rebucket and key widening.
+The driver's point path (pyarrow) reads no Bloom, so the pruning checks
+run point lookups through the Spark fallback (the ``spark_path``
+fixture).
 """
 
-import base64
 import datetime as dt
-import json
 from contextlib import contextmanager
 
 import pytest
@@ -300,24 +298,3 @@ def test_bloom_has_no_false_negatives_across_all_keys(spark, spark_path, tmp_pat
         for i in range(3):
             t.merge(changes.filter(F.pmod("seq", F.lit(3)) == i), batch_key=("b", i))
     _every_key_hits(t, spark_path)
-
-
-def test_legacy_manifest_blooms_are_ignored(spark, spark_path, tmp_path):
-    """Entries that an older version wrote with a manifest ``bloom``
-    bitset — here all zeros, which a reader honouring it would take as
-    "no key here" for every file — are read as if it were absent."""
-    t = _mk(spark, tmp_path / "t", n_buckets=2, bloom_bits=1024)
-    changes = gen_changes(spark, n_events=200, n_urls=50, n_hosts=5, seed=4)
-    for i in range(2):
-        t.merge(changes.filter(F.pmod("seq", F.lit(2)) == i), batch_key=("b", i))
-    zero = base64.b64encode(bytes(128)).decode()
-    for g in (tmp_path / "t" / "_manifests").glob("g*.json"):
-        doc = json.loads(g.read_text())
-        for es in doc.get("adds", {}).values():
-            for e in es:
-                e["bloom"] = zero
-        g.write_text(json.dumps(doc))
-    legacy = LakeTable(spark, str(tmp_path / "t"))
-    entries = [e for es in legacy.manifest()["buckets"].values() for e in es]
-    assert entries and all(e["bloom"] == zero for e in entries)
-    _every_key_hits(legacy, spark_path)

@@ -1,62 +1,11 @@
 """Dedup + similarity operator tests over the shared sf0.001 testdata
 documents/embeddings tables plus constructed near-dup corpora."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from go_bqloader_spark.operators.dedup import (
-    exact_dedup,
-    hamming64,
-    minhash_candidates,
-    minhash_dedup,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    simhash64,
-)
 from go_bqloader_spark.operators.similarity import cosine_topk, lsh_topk
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def near_dups(spark):
-    base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    rows = [
-        (1, base),
-        (2, base),  # exact dup
-        (3, base.replace("today", "tomorrow")),  # near dup (1 token differs)
-        (4, "completely different text about spark shuffles and memory bandwidth limits"),
-        (5, base + " extra tail words appended here"),  # superset near-dup
-    ]
-    return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
-def test_exact_dedup_groups(spark, near_dups):
-    out = exact_dedup(near_dups).collect()
-    groups = {r["rep"]: r["n_dupes"] for r in out}
-    assert groups[1] == 2  # docs 1 and 2 collapse
-    assert sum(groups.values()) == 5
-
-
-def test_minhash_signature_shape_and_determinism(spark, near_dups):
-    s1 = minhash_signatures(near_dups, k=16).orderBy("doc_id").collect()
-    s2 = minhash_signatures(near_dups, k=16).orderBy("doc_id").collect()
-    assert [r["sig"] for r in s1] == [r["sig"] for r in s2]
-    assert all(len(r["sig"]) == 16 for r in s1)
-    # identical docs → identical signatures
-    sigs = {r["doc_id"]: tuple(r["sig"]) for r in s1}
-    assert sigs[1] == sigs[2]
-    assert sigs[1] != sigs[4]
-
-
-def test_minhash_dedup_finds_near_dups(spark, near_dups):
-    pairs = {
-        (r["d1"], r["d2"]): r["est_jaccard"]
-        for r in minhash_dedup(near_dups, k=16, bands=8, threshold=0.5).collect()
-    }
-    assert pairs.get((1, 2)) == 1.0  # exact dup
-    assert (1, 4) not in pairs and (2, 4) not in pairs  # unrelated doc
-    assert any(d1 in (1, 2) and d2 == 3 for d1, d2 in pairs)  # near dup found
 
 
 def test_minhash_lsh_query_runs_signature_pipeline_once(spark):
@@ -90,39 +39,6 @@ def test_minhash_lsh_query_runs_signature_pipeline_once(spark):
         ).collect()
     }
     assert rows == ref
-
-
-def test_minhash_candidates_superset_of_exact_dups(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sig = minhash_signatures(docs, k=8)
-    cand = {
-        (r["d1"], r["d2"]) for r in minhash_candidates(sig, bands=4).collect()
-    }
-    exact = exact_dedup(docs).filter(F.col("n_dupes") > 1).collect()
-    for g in exact:
-        ms = sorted(g["members"])
-        for a, b in zip(ms, ms[1:]):
-            assert (a, b) in cand  # LSH must never miss an exact dup
-
-
-def test_simhash_near_dup_distance(spark, near_dups):
-    sh = {r["doc_id"]: r["simhash"] for r in simhash64(near_dups).collect()}
-    assert sh[1] == sh[2]
-    df = spark.createDataFrame(
-        [(sh[1], sh[3]), (sh[1], sh[4])], "a bigint, b bigint"
-    ).select(hamming64(F.col("a"), F.col("b")).alias("d"))
-    d_near, d_far = [r["d"] for r in df.collect()]
-    assert d_near < d_far
-    assert d_near <= 16  # one-token edit stays close in simhash space
-
-
-def test_ngram_jaccard_pairs_exact_values(spark, near_dups):
-    pairs = {
-        (r["d1"], r["d2"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(near_dups, threshold=0.4).collect()
-    }
-    assert pairs[(1, 2)] == 1.0
-    assert (1, 4) not in pairs
 
 
 def test_cosine_topk_exact(spark):
@@ -355,59 +271,6 @@ def test_connected_components_driver_finish_collects_each_edge_once(
     }
     assert seen == [[(1, 2), (2, 3), (5, 5), (7, 8)]]
     assert got == {1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 8: 7}
-
-
-def test_near_dup_clusters_end_to_end(spark):
-    """Duplicated docs cluster together with one representative; unique
-    docs stay singleton reps."""
-    from go_bqloader_spark.operators.dedup import near_dup_clusters
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [
-        (1, base), (2, base), (3, base + " extra"),
-        (4, "completely different content about spark engines and lakes"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = {r["doc_id"]: (r["cluster_id"], r["is_rep"])
-           for r in near_dup_clusters(df, threshold=0.5).collect()}
-    assert out[1] == (1, True) and out[2] == (1, False)
-    assert out[4] == (4, True)
-    assert len({c for c, _ in out.values()}) >= 2
-
-
-def test_neighbor_window_bounds_candidates_same_clusters(spark):
-    """Sorted-neighborhood candidate capping: pair count is O(size x W)
-    instead of O(size^2) on a mega-bucket, but the CLUSTERS that come out
-    of the component pass are identical for a near-identical family."""
-    from go_bqloader_spark.operators.dedup import (
-        minhash_dedup, minhash_signatures, minhash_candidates,
-        near_dup_clusters,
-    )
-
-    base = ("spark lakehouse change data capture merge upsert tombstone "
-            "snapshot ledger replay watermark bucket salt skew")
-    # one 40-doc duplicate family + unique docs
-    rows = [(i, base) for i in range(40)]
-    rows += [(100 + i, f"unique document number {i} about topic {i * 7}")
-             for i in range(5)]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-
-    sig = minhash_signatures(df)
-    exact_pairs = minhash_candidates(sig).count()
-    win_pairs = minhash_candidates(sig, neighbor_window=4).count()
-    assert exact_pairs >= 40 * 39 // 2  # quadratic in the family
-    assert win_pairs <= 4 * 45 * 4      # O(rows x W x bands)
-
-    exact_cl = {(r["doc_id"], r["cluster_id"])
-                for r in near_dup_clusters(df, threshold=0.5).collect()}
-    win_cl = {(r["doc_id"], r["cluster_id"])
-              for r in near_dup_clusters(df, threshold=0.5,
-                                         neighbor_window=4).collect()}
-    assert exact_cl == win_cl  # chaining + components restore the family
-
-    # windowed pair graph still verifies est_jaccard per emitted pair
-    p = minhash_dedup(df, threshold=0.5, neighbor_window=4)
-    assert p.filter(F.col("est_jaccard") < 0.5).count() == 0
 
 
 def test_ivf_topk_recall_and_exact_degeneracy(spark):

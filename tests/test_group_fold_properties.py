@@ -38,14 +38,9 @@ group = st.fixed_dictionaries(
 
 
 def fold(groups):
-    """Mirror of _resolve_manifest's group fold."""
-    buckets = {}
-    for g in groups:
-        for b in g.get("replaces", []):
-            buckets.pop(str(b), None)
-        for b, es in g.get("adds", {}).items():
-            buckets.setdefault(b, []).extend(es)
-    return buckets
+    """``LakeTable._fold_groups`` over ``groups``, served from memory."""
+    names = [f"g{i}" for i in range(len(groups))]
+    return _Stub(dict(zip(names, groups)))._fold_groups(names)
 
 
 def norm(buckets):
@@ -63,6 +58,7 @@ class _Stub:
         return self._groups[gname]
 
     _prune_groups = LakeTable._prune_groups
+    _fold_groups = LakeTable._fold_groups
 
 
 @given(parent=bucket_map, new=bucket_map)

@@ -1,10 +1,12 @@
 """Format-3 manifests: bucket entries live in immutable per-commit GROUP
 files so commit metadata is O(delta), not O(table) — a steady-state MoR
 append serializes one entry per touched bucket instead of re-writing every
-accumulated entry (zones + Bloom blobs included) on every commit."""
+accumulated entry (zone bounds included) on every commit."""
 
 import json
 import os
+
+import pytest
 
 from go_bqloader_spark.lake import LakeTable
 
@@ -111,34 +113,36 @@ def test_expire_gc_unreferenced_groups(spark, tmp_path):
     assert os.path.exists(orphan)
 
 
-def test_inline_format2_manifest_still_readable(spark, tmp_path):
-    """A hand-inlined (format-2 style) manifest with ``buckets`` in the
-    JSON resolves as-is, and the next commit diffs against it correctly."""
+@pytest.mark.parametrize("found", [2, None])
+def test_unsupported_manifest_format_is_rejected(spark, tmp_path, found):
+    """A LATEST manifest of format 2, or one with no ``format_version``,
+    raises naming the format it found instead of being misread."""
     t = _mk(spark, tmp_path)
     t.merge(_batch(spark, 0), batch_key=("q", 0))
     v = t.current_version()
-    inline = dict(t.manifest(), version=v + 1, parent=v,
-                  summary={"operation": "legacy"}, metrics=[])
-    inline.pop("groups", None)
-    t.fs.create_exclusive(t._manifest_path(v + 1), json.dumps(inline))
-    t.fs.publish_if_newer(
-        os.path.join(str(tmp_path / "tbl"), "_manifests", "LATEST"), v + 1
-    )
-    t2 = LakeTable(spark, str(tmp_path / "tbl"))
-    before = sorted(map(tuple, t2.read().collect()))
-    assert before  # resolves through the inline map
-    t2.merge(_batch(spark, 1), batch_key=("q", 1))
-    assert len(t2.read().collect()) == len(before)
-    assert set(t2.entries_per_bucket().values()) == {2}
-    # COLD reader (ADVICE r5, high): a fresh LakeTable must resolve the
-    # post-migration manifest from DISK alone — the first format-3 commit
-    # after a format-2 parent must have captured the parent's inline
-    # entries in a group file, not just its own delta (asserting through
-    # the writer's warm _mcache masked exactly that loss)
-    t3 = LakeTable(spark, str(tmp_path / "tbl"))
-    assert sorted(map(tuple, t3.read().collect())) == \
-        sorted(map(tuple, t2.read().collect()))
-    assert set(t3.entries_per_bucket().values()) == {2}
+    mj = _raw_manifest(t, v)
+    del mj["format_version"]
+    if found is not None:
+        mj["format_version"] = found
+    with open(t._manifest_path(v), "w") as f:
+        json.dump(mj, f)
+    cold = LakeTable(spark, t.path)
+    for read in (cold.manifest, cold.read):
+        with pytest.raises(ValueError, match=f"format_version {found}"):
+            read()
+
+
+def test_unsupported_orphan_manifest_is_not_published(spark, tmp_path):
+    """A commit that finds an unpublished next manifest of another format
+    raises and leaves LATEST where it was."""
+    t = _mk(spark, tmp_path)
+    t.merge(_batch(spark, 0), batch_key=("q", 0))
+    v = t.current_version()
+    orphan = dict(_raw_manifest(t, v), version=v + 1, parent=v, format_version=2)
+    t.fs.create_exclusive(t._manifest_path(v + 1), json.dumps(orphan))
+    with pytest.raises(ValueError, match="format_version 2"):
+        t.merge(_batch(spark, 1), batch_key=("q", 1))
+    assert t.current_version() == v
 
 
 def test_group_coalescing_bounds_live_list(spark, tmp_path):

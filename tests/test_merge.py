@@ -75,15 +75,8 @@ def _make_table(spark, tmp_path, **kw):
     )
 
 
-# The write_mode an earlier release recorded in a table's manifest ("cow"
-# meant copy-on-write merges there). Merges no longer read the field, so a
-# table marked either way takes the one merge path and must converge alike.
-MANIFEST_MODES = ["cow", "mor"]
-
-
-@pytest.mark.parametrize("mode", MANIFEST_MODES)
-def test_single_batch_merge_converges(spark, tmp_path, changes, mode, legacy_manifest):
-    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=8), mode)
+def test_single_batch_merge_converges(spark, tmp_path, changes):
+    t = _make_table(spark, tmp_path, n_buckets=8)
     t.merge(changes, batch_key=("q", 0))
     got = _sorted_state(t.read())
     exp = _sorted_state(expected_final_state(changes))
@@ -91,12 +84,9 @@ def test_single_batch_merge_converges(spark, tmp_path, changes, mode, legacy_man
 
 
 @pytest.mark.parametrize("n_batches", [3, 7])
-@pytest.mark.parametrize("mode", MANIFEST_MODES)
-def test_multi_batch_replay_converges(
-    spark, tmp_path, changes, n_batches, mode, legacy_manifest
-):
+def test_multi_batch_replay_converges(spark, tmp_path, changes, n_batches):
     """Any batch split of the log converges to the same final state."""
-    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=8), mode)
+    t = _make_table(spark, tmp_path, n_buckets=8)
     for i in range(n_batches):
         batch = changes.filter(F.pmod(F.col("seq"), n_batches) == i)
         t.merge(batch, batch_key=("q", i))
@@ -107,10 +97,9 @@ def test_multi_batch_replay_converges(
     assert got == exp
 
 
-@pytest.mark.parametrize("mode", MANIFEST_MODES)
-def test_idempotent_redelivery(spark, tmp_path, changes, mode, legacy_manifest):
+def test_idempotent_redelivery(spark, tmp_path, changes):
     """Re-merging an already-committed batch key is a no-op (exactly-once)."""
-    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=8), mode)
+    t = _make_table(spark, tmp_path, n_buckets=8)
     b0 = changes.filter(F.col("seq") < 2000)
     b1 = changes.filter(F.col("seq") >= 2000)
     t.merge(b0, batch_key=("q", 0))
@@ -132,8 +121,7 @@ def test_reapplying_older_changes_is_noop(spark, tmp_path, changes):
     assert _sorted_state(t.read()) == state
 
 
-@pytest.mark.parametrize("mode", MANIFEST_MODES)
-def test_delete_semantics(spark, tmp_path, mode, legacy_manifest):
+def test_delete_semantics(spark, tmp_path):
     rows = [
         ("I", 1, "2024-01-01 00:00:01", "https://a/x", "2024-01-01 00:00:00", b"<p>v1</p>", "v1", "en"),
         ("U", 2, "2024-01-01 00:00:02", "https://a/x", "2024-01-01 00:00:00", b"<p>v2</p>", "v2", "en"),
@@ -150,7 +138,7 @@ def test_delete_semantics(spark, tmp_path, mode, legacy_manifest):
         F.to_timestamp("warc_ts").alias("warc_ts"),
         "html", "text", "lang",
     )
-    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=4), mode)
+    t = _make_table(spark, tmp_path, n_buckets=4)
     t.merge(df, batch_key=("q", 0))
     got = _sorted_state(t.read())
     assert got == [("https://a/y", "2024-01-01 00:00:00", "y", "en", 4)]
@@ -279,11 +267,10 @@ def test_compaction_key_sorts_bucket_files(spark, tmp_path, changes):
     assert checked > 0
 
 
-@pytest.mark.parametrize("mode", MANIFEST_MODES)
-def test_empty_batch_commits_noop(spark, tmp_path, changes, mode, legacy_manifest):
+def test_empty_batch_commits_noop(spark, tmp_path, changes):
     """An empty change batch must commit a ledger no-op, not crash on the
     empty parquet read-back (round-2 regression from the verify drive)."""
-    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=8), mode)
+    t = _make_table(spark, tmp_path, n_buckets=8)
     t.merge(changes, batch_key=("q", 0))
     before = t.read().count()
     st = t.merge(changes.filter(F.lit(False)), batch_key=("q", 1))
@@ -545,16 +532,11 @@ def test_tie_goes_to_the_tombstone_across_batches(spark, spark_path, tmp_path, o
     assert [(r["_deleted"], r["_seq"]) for r in tomb] == [(True, 5)]
 
 
-@pytest.mark.parametrize("legacy", ["cow", None])
-def test_legacy_copy_on_write_table_takes_merges(
-    spark, tmp_path, changes, legacy_manifest, legacy
-):
-    """A table as the copy-on-write mode of earlier releases left it: one
-    key-sorted entry per bucket with full key zones, and a manifest whose
-    write_mode says "cow" (or, older still, is missing). It needs no
-    migration: a late older replay, a newer update, a tombstone and a
-    redelivered batch key converge to the LWW oracle, and point reads
-    agree with the scan."""
+def test_compacted_table_takes_merges(spark, tmp_path, changes):
+    """A compacted table, one key-sorted entry per bucket with full key
+    zones, takes merges: a late older replay, a newer update, a tombstone
+    and a redelivered batch key converge to the LWW oracle, and point
+    reads agree with the scan."""
     t = _make_table(spark, tmp_path, n_buckets=4)
     t.merge(changes.filter(F.col("seq") < 2000), batch_key=("q", 0))
     t.merge(changes.filter(F.col("seq") >= 2000), batch_key=("q", 1))
@@ -562,8 +544,6 @@ def test_legacy_copy_on_write_table_takes_merges(
     m = t.manifest()
     assert all(len(es) == 1 for es in m["buckets"].values())
     assert all(set(es[0]["zones"]) == {"url", "warc_ts"} for es in m["buckets"].values())
-    t = legacy_manifest(t, legacy)
-    assert t.manifest().get("write_mode") == legacy
 
     live = expected_final_state(changes).orderBy("url", "warc_ts").limit(2).collect()
     newer, dead = live[0], live[1]
@@ -583,7 +563,6 @@ def test_legacy_copy_on_write_table_takes_merges(
     want = _sorted_state(expected_final_state(applied))
     assert _sorted_state(t.read()) == want
 
-    assert t.manifest().get("write_mode") == legacy  # merges carry it over
     by_key = {(u, ts): (text, lang, seq) for u, ts, text, lang, seq in want}
     for r in [newer, dead, *expected_final_state(changes).limit(6).collect()]:
         got = t.read(point={"url": r["url"], "warc_ts": r["warc_ts"]}).collect()
@@ -682,15 +661,14 @@ def test_expire_snapshots_spares_inflight_commit_dirs(spark, tmp_path):
     assert os.path.exists(os.path.join(rebasing, "b=0"))
 
 
-@pytest.mark.parametrize("mode", MANIFEST_MODES)
-def test_zone_maps_prune_and_stay_exact(spark, tmp_path, mode, legacy_manifest):
+def test_zone_maps_prune_and_stay_exact(spark, tmp_path):
     """Manifest zone maps: every data-file entry records key-column
     min/max; read(zones=...) skips non-overlapping files at PLANNING time
     and still returns exactly the filtered table (MoR LWW resolution
     included, because zones are restricted to key columns)."""
     import datetime as dt
 
-    t = legacy_manifest(_make_table(spark, tmp_path, n_buckets=2), mode)
+    t = _make_table(spark, tmp_path, n_buckets=2)
 
     def batch(day, seq0):
         ts = f"2024-01-{day:02d} 00:00:00"

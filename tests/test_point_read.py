@@ -215,16 +215,8 @@ def _batch(spark, rows, ddl):
     return spark.createDataFrame(rows, "op string, seq bigint, " + ddl)
 
 
-# the write_mode an earlier release recorded in the manifest; merges no
-# longer read it (see tests/test_merge.py)
-MANIFEST_MODES = ["mor", "cow"]
-
-
 @pytest.mark.parametrize("path", ["driver", "fallback"])
-@pytest.mark.parametrize("mode", MANIFEST_MODES)
-def test_point_read_spark_jobs(
-    spark, spark_jobs, spark_path, legacy_manifest, tmp_path, mode, path
-):
+def test_point_read_spark_jobs(spark, spark_jobs, spark_path, tmp_path, path):
     """The driver path answers from the files with pyarrow and returns a
     local relation: collecting it runs no Spark job, also when the
     winning row lives in a file of an older schema version. The Spark
@@ -233,7 +225,6 @@ def test_point_read_spark_jobs(
         spark, str(tmp_path / "t"), [("url", "string"), ("n", "int")],
         key=["url"], n_buckets=2, bloom_bits=1024,
     )
-    t = legacy_manifest(t, mode)
     ddl = "url string, n int"
     t.merge(_batch(spark, [("U", i, f"u/{i}", i) for i in range(20)], ddl), batch_key=("q", 0))
     t.add_column("lang", "string")
@@ -250,22 +241,22 @@ def test_point_read_spark_jobs(
     cases = [("u/3", [(300, "en")]), ("u/4", []), ("u/5", [(5, None)]), ("u/x", [])]
     for i, (url, want) in enumerate(cases):
         rows, jobs = spark_jobs(
-            f"point-{mode}-{path}-{i}",
+            f"point-{path}-{i}",
             lambda: reader.read(point={"url": url}).collect(),
         )
         assert [(r["n"], r["lang"]) for r in rows] == want
         assert jobs == (0 if path == "driver" else 1), (url, jobs)
 
 
-def _evolving_table(spark, tmp_path, reopen):
+def _evolving_table(spark, tmp_path):
     """Four merges around add_column, rename_column and widen_column of a
-    key column into ``reopen(<the new table>)``; returns the table and the
-    expected live rows {(url, k): (body, lang, seq)} and the deleted keys."""
-    t = reopen(LakeTable.create(
+    key column into a new table; returns the table and the expected live
+    rows {(url, k): (body, lang, seq)} and the deleted keys."""
+    t = LakeTable.create(
         spark, str(tmp_path / "t"),
         [("url", "string"), ("k", "int"), ("text", "string")],
         key=["url", "k"], n_buckets=3, bloom_bits=2048,
-    ))
+    )
     want, dead = {}, set()
     batches = 0
 
@@ -300,15 +291,12 @@ def _evolving_table(spark, tmp_path, reopen):
     return t, want, dead
 
 
-@pytest.mark.parametrize("mode", MANIFEST_MODES)
-def test_point_and_scan_exact_across_schema_evolution(
-    spark, tmp_path, legacy_manifest, mode
-):
+def test_point_and_scan_exact_across_schema_evolution(spark, tmp_path):
     """Files of four schema versions (before add_column, before the
     rename, before the key widening, after it) read with their own
     explicit schemas reconcile to the current one: scans and point
     lookups equal the oracle."""
-    t, want, dead = _evolving_table(spark, tmp_path, lambda t: legacy_manifest(t, mode))
+    t, want, dead = _evolving_table(spark, tmp_path)
     assert t.manifest()["schema_version"] == 3
     got = {
         (r["url"], r["k"]): (r["body"], r["lang"], r["_seq"]) for r in t.read().collect()

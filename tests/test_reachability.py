@@ -60,14 +60,6 @@ KEEP_NAMES = {
     f"{PKG}.functions.urlnorm.canonicalize_projector": "URL-key projector "
     "for start_cdc_stream(projector=); tests/test_transforms.py, "
     "tests/test_streaming.py, tools/verify_drive.py",
-    **{
-        f"{PKG}.operators.dedup.{n}": "ROADMAP item 8"
-        for n in (
-            "exact_dedup", "minhash_signatures", "minhash_candidates",
-            "minhash_dedup", "simhash64", "hamming64",
-            "ngram_jaccard_pairs", "near_dup_clusters",
-        )
-    },
 }
 
 SCRIPTS = [

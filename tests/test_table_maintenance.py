@@ -1,5 +1,5 @@
 """Table maintenance: ``expire_snapshots`` spills lineage on the driver
-(no Spark job, crash-safe, legacy parquet spills still read), ``compact``
+(no Spark job, crash-safe, every JSON spill read back), ``compact``
 and ``rebucket`` resolve MoR files with one exchange and leave exactly the
 state ``read()`` resolved before them, and ``_no_aqe`` restores the
 caller's setting under overlapping users and applies to the session of
@@ -82,26 +82,17 @@ def test_expire_retry_after_crash_spills_once(spark, tmp_path):
     assert _rows(retry.metrics()) == before
 
 
-def test_metrics_reads_legacy_parquet_and_json_spill(spark, tmp_path):
-    """A table expired by a release that spilled parquet, then expired
-    again with the JSON spill: metrics() is still the complete history."""
+def test_metrics_reads_every_json_spill(spark, tmp_path):
+    """A table expired twice holds two JSON spill files: metrics() reads
+    both with the chain and is still the complete history."""
     t = _small_table(spark, tmp_path / "t", n_batches=6)
     before = _rows(t.metrics())
-    # the legacy spill: versions 1-2 appended as parquet, manifests gone
-    legacy = [tuple(r) for v in (1, 2) for r in t.manifest(v)["metrics"]]
-    spark.createDataFrame(legacy, LakeTable._METRICS_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(tmp_path / "t" / "_lineage"))
-    for v in (1, 2, 0):
-        os.remove(tmp_path / "t" / "_manifests" / f"v{v:08d}.json")
-    t = LakeTable(spark, str(tmp_path / "t"))
-    assert _rows(t.metrics()) == before
-
-    assert t.expire_snapshots(keep_n=2, orphan_grace_sec=0)["expired"] == 2
-    files = sorted(os.listdir(tmp_path / "t" / "_lineage"))
-    assert "v00000003_v00000004.json" in files
-    assert any(f.endswith(".parquet") for f in files)
-    assert _rows(t.metrics()) == before
+    assert t.expire_snapshots(keep_n=5, orphan_grace_sec=0)["expired"] == 2
+    assert t.expire_snapshots(keep_n=2, orphan_grace_sec=0)["expired"] == 3
+    assert sorted(os.listdir(tmp_path / "t" / "_lineage")) == [
+        "v00000000_v00000001.json", "v00000002_v00000004.json"
+    ]
+    assert _rows(LakeTable(spark, str(tmp_path / "t")).metrics()) == before
 
 
 # ------------------------------------------------------ compact / rebucket
