@@ -75,7 +75,13 @@ def _make_table(spark, tmp_path, **kw):
     )
 
 
-def test_single_batch_merge_converges(spark, tmp_path, changes):
+# Tables merge on read, by one merge path; the one-value parameter keeps
+# these tests' ids stable.
+MERGE_MODES = ["mor"]
+
+
+@pytest.mark.parametrize("mode", MERGE_MODES)
+def test_single_batch_merge_converges(spark, tmp_path, changes, mode):
     t = _make_table(spark, tmp_path, n_buckets=8)
     t.merge(changes, batch_key=("q", 0))
     got = _sorted_state(t.read())
@@ -84,7 +90,8 @@ def test_single_batch_merge_converges(spark, tmp_path, changes):
 
 
 @pytest.mark.parametrize("n_batches", [3, 7])
-def test_multi_batch_replay_converges(spark, tmp_path, changes, n_batches):
+@pytest.mark.parametrize("mode", MERGE_MODES)
+def test_multi_batch_replay_converges(spark, tmp_path, changes, n_batches, mode):
     """Any batch split of the log converges to the same final state."""
     t = _make_table(spark, tmp_path, n_buckets=8)
     for i in range(n_batches):
@@ -97,7 +104,8 @@ def test_multi_batch_replay_converges(spark, tmp_path, changes, n_batches):
     assert got == exp
 
 
-def test_idempotent_redelivery(spark, tmp_path, changes):
+@pytest.mark.parametrize("mode", MERGE_MODES)
+def test_idempotent_redelivery(spark, tmp_path, changes, mode):
     """Re-merging an already-committed batch key is a no-op (exactly-once)."""
     t = _make_table(spark, tmp_path, n_buckets=8)
     b0 = changes.filter(F.col("seq") < 2000)
@@ -121,7 +129,8 @@ def test_reapplying_older_changes_is_noop(spark, tmp_path, changes):
     assert _sorted_state(t.read()) == state
 
 
-def test_delete_semantics(spark, tmp_path):
+@pytest.mark.parametrize("mode", MERGE_MODES)
+def test_delete_semantics(spark, tmp_path, mode):
     rows = [
         ("I", 1, "2024-01-01 00:00:01", "https://a/x", "2024-01-01 00:00:00", b"<p>v1</p>", "v1", "en"),
         ("U", 2, "2024-01-01 00:00:02", "https://a/x", "2024-01-01 00:00:00", b"<p>v2</p>", "v2", "en"),
@@ -267,7 +276,8 @@ def test_compaction_key_sorts_bucket_files(spark, tmp_path, changes):
     assert checked > 0
 
 
-def test_empty_batch_commits_noop(spark, tmp_path, changes):
+@pytest.mark.parametrize("mode", MERGE_MODES)
+def test_empty_batch_commits_noop(spark, tmp_path, changes, mode):
     """An empty change batch must commit a ledger no-op, not crash on the
     empty parquet read-back (round-2 regression from the verify drive)."""
     t = _make_table(spark, tmp_path, n_buckets=8)
@@ -661,7 +671,8 @@ def test_expire_snapshots_spares_inflight_commit_dirs(spark, tmp_path):
     assert os.path.exists(os.path.join(rebasing, "b=0"))
 
 
-def test_zone_maps_prune_and_stay_exact(spark, tmp_path):
+@pytest.mark.parametrize("mode", MERGE_MODES)
+def test_zone_maps_prune_and_stay_exact(spark, tmp_path, mode):
     """Manifest zone maps: every data-file entry records key-column
     min/max; read(zones=...) skips non-overlapping files at PLANNING time
     and still returns exactly the filtered table (MoR LWW resolution

@@ -215,8 +215,14 @@ def _batch(spark, rows, ddl):
     return spark.createDataFrame(rows, "op string, seq bigint, " + ddl)
 
 
+# Tables merge on read, by one merge path; the one-value parameter keeps
+# these tests' ids stable.
+MERGE_MODES = ["mor"]
+
+
 @pytest.mark.parametrize("path", ["driver", "fallback"])
-def test_point_read_spark_jobs(spark, spark_jobs, spark_path, tmp_path, path):
+@pytest.mark.parametrize("mode", MERGE_MODES)
+def test_point_read_spark_jobs(spark, spark_jobs, spark_path, tmp_path, mode, path):
     """The driver path answers from the files with pyarrow and returns a
     local relation: collecting it runs no Spark job, also when the
     winning row lives in a file of an older schema version. The Spark
@@ -241,7 +247,7 @@ def test_point_read_spark_jobs(spark, spark_jobs, spark_path, tmp_path, path):
     cases = [("u/3", [(300, "en")]), ("u/4", []), ("u/5", [(5, None)]), ("u/x", [])]
     for i, (url, want) in enumerate(cases):
         rows, jobs = spark_jobs(
-            f"point-{path}-{i}",
+            f"point-{mode}-{path}-{i}",
             lambda: reader.read(point={"url": url}).collect(),
         )
         assert [(r["n"], r["lang"]) for r in rows] == want
@@ -291,7 +297,8 @@ def _evolving_table(spark, tmp_path):
     return t, want, dead
 
 
-def test_point_and_scan_exact_across_schema_evolution(spark, tmp_path):
+@pytest.mark.parametrize("mode", MERGE_MODES)
+def test_point_and_scan_exact_across_schema_evolution(spark, tmp_path, mode):
     """Files of four schema versions (before add_column, before the
     rename, before the key widening, after it) read with their own
     explicit schemas reconcile to the current one: scans and point
